@@ -34,7 +34,8 @@ def main() -> int:
     p.add_argument("--groups", type=int, default=64,
                    help="bucket-groups per run; each commits atomically")
     p.add_argument("--work-partitions", type=int, default=0,
-                   help="salted (doc_id, offset) partitions; 0 = session default")
+                   help="salted (doc_id, offset) partitions; "
+                   "0 = one per core slot (defaultParallelism)")
     p.add_argument("--rtl", action="store_true", help="right-to-left pages")
     p.add_argument("--psm", default="auto",
                    choices=["auto", "single_column", "single_block", "single_line"])

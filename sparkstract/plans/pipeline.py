@@ -4,7 +4,7 @@ Spark lifecycle (SURVEY.md §3.3 "Spark lifecycle (ours)"):
 
   docs → posexplode(spans) → split text/media
        → media ⨝ media-bytes (J7; broadcast at test scale, hash join at 100 TB)
-       → repartition on (doc_id, offset)        ← the axis-B salt: the work
+       → repartition(cores, doc_id, offset)     ← the axis-B salt: the work
          unit is one media span, so a doc with 10k pages spreads over 10k
          tasks instead of hot-spotting one
        → mapInPandas(page kernel)               ← F1-F8, C1-C13, W1-W3, A1-A8
@@ -15,7 +15,8 @@ Spark lifecycle (SURVEY.md §3.3 "Spark lifecycle (ours)"):
 
 Everything between the explode and the final window is partition-local; the
 plan has exactly two shuffles at scale (media join, doc reassembly) plus the
-salt repartition, which AQE may coalesce.
+salt repartition, which has an explicit partition count (one per core slot
+by default) so AQE cannot coalesce the kernel stage into one task.
 """
 
 from __future__ import annotations
@@ -226,23 +227,22 @@ def _work_frame(docs: DataFrame, media: DataFrame, cfg: ExtractConfig,
             "left")
     refs = exploded.filter(F.col("kind") == "media").select(
         "doc_id", "offset", "media_ref")
+    # an explicit partition count makes the salt a REPARTITION_BY_NUM
+    # shuffle, which AQE never coalesces: sized by its ~100-byte key rows it
+    # would merge the whole kernel stage into one task, since the optimizer
+    # cannot see what the Python kernel costs per row
+    n = cfg.work_partitions or docs.sparkSession.sparkContext.defaultParallelism
     if cfg.broadcast_media_max_rows:
         # salt-repartition the (doc_id, offset, media_ref) keys BEFORE the
-        # join: the shuffle then moves ~100-byte key rows, not page images —
-        # the broadcast join after it preserves the salted partitioning
-        if cfg.work_partitions:
-            refs = refs.repartition(cfg.work_partitions, "doc_id", "offset")
-        else:
-            refs = refs.repartition("doc_id", "offset")
-        work = refs.join(F.broadcast(media_side), "media_ref")
+        # join: the shuffle then moves key rows, not page images — the
+        # broadcast join after it preserves the salted partitioning
+        work = refs.repartition(n, "doc_id", "offset").join(
+            F.broadcast(media_side), "media_ref")
     else:
         # big-media path: the shuffle join on media_ref moves the bytes once
         # (unavoidable); salt afterwards to spread media-heavy docs
-        work = refs.join(media_side, "media_ref")
-        if cfg.work_partitions:
-            work = work.repartition(cfg.work_partitions, "doc_id", "offset")
-        else:
-            work = work.repartition("doc_id", "offset")
+        work = refs.join(media_side, "media_ref").repartition(
+            n, "doc_id", "offset")
     return work, text_pass
 
 

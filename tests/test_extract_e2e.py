@@ -83,12 +83,14 @@ def test_reassemble_docs_shape(spark, fixture_set):
 
 
 def test_explicit_work_partitions(spark, fixture_set):
+    """The spans do not depend on how the page work is partitioned: one
+    partition, one per core slot (the default 0) and more than the cores."""
     docs, media, truth = fixture_set.to_spark(spark)
-    docs = docs.filter(F.col("doc_id") == "d-skew")
-    res = extract(spark, docs, media, ExtractConfig(work_partitions=16)).toPandas()
-    want = truth.toPandas()
-    want = want[want["doc_id"] == "d-skew"]
-    pd.testing.assert_frame_equal(_norm(res), _norm(want))
+    want = _norm(truth.toPandas())
+    for n in (1, 0, 16):
+        res = extract(spark, docs, media,
+                      ExtractConfig(work_partitions=n)).toPandas()
+        pd.testing.assert_frame_equal(_norm(res), want)
 
 
 def test_crop_restricts_extraction(spark):

@@ -85,3 +85,20 @@ def test_minhash_match_scans_corpus_signatures_once(spark):
     out.collect()  # materialize the persist
     p = _plan(out)
     assert p.count("InMemoryTableScan") >= 2
+
+
+def test_default_work_frame_spreads_over_every_core_slot(spark, fixture_set):
+    """The kernel stage gets one partition per core slot at the default
+    config, on both media-join plans. Without an explicit count AQE sizes the
+    salt shuffle by its small key rows and coalesces it to one partition."""
+    from sparkstract.config import ExtractConfig
+    from sparkstract.plans.pipeline import _work_frame
+
+    docs, media, _ = fixture_set.to_spark(spark)
+    slots = spark.sparkContext.defaultParallelism
+    for cfg in (ExtractConfig(), ExtractConfig(broadcast_media_max_rows=0)):
+        work, _ = _work_frame(docs, media, cfg)
+        assert work.rdd.getNumPartitions() == slots
+        rows = work.count()
+        used = work.select(F.spark_partition_id()).distinct().count()
+        assert used >= min(rows, slots)
