@@ -126,10 +126,20 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
     return out
 
 
-def _decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol."""
-    return {(ln, code): sym
-            for sym, (code, ln) in _canonical_codes(bits, vals).items()}
+def _decode_table(bits: list[int], vals: list[int]) -> tuple[list, dict]:
+    """(lookahead, codes) for `_huff`. `codes` maps (length, code) ->
+    symbol; `lookahead[b]` is `length << 8 | symbol` for the code of at
+    most 8 bits that prefixes the byte b (0 if none). Built from `codes`,
+    so a malformed table's unreachable or overwritten codes stay
+    unreachable in both."""
+    codes = {(ln, code): sym
+             for sym, (code, ln) in _canonical_codes(bits, vals).items()}
+    look = [0] * 256
+    for (ln, code), sym in codes.items():
+        if ln <= 8 and code < (1 << ln):
+            lo = code << (8 - ln)
+            look[lo:lo + (1 << (8 - ln))] = [(ln << 8) | sym] * (1 << (8 - ln))
+    return look, codes
 
 
 # ---------------------------------------------------------------- encoder
@@ -513,35 +523,67 @@ def encode_progressive_jpeg(img: np.ndarray, quality: int = 90,
 # ---------------------------------------------------------------- decoder
 
 class _BitReader:
+    """MSB-first reader over one entropy segment (stuffing and RST markers
+    already removed); `acc` holds the `nbits` bits not yet consumed."""
+
+    __slots__ = ("data", "pos", "acc", "nbits")
+
     def __init__(self, data: bytes) -> None:
         self.data = data
         self.pos = 0
         self.acc = 0
         self.nbits = 0
 
-    def bit(self) -> int:
-        if self.nbits == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("invalid JPEG: truncated entropy data")
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
     def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
+        """The next n bits as one int (0 for n == 0)."""
+        nb = self.nbits
+        if nb < n:
+            need = (n - nb + 7) >> 3
+            pos = self.pos
+            if pos + need > len(self.data):
+                raise ValueError("invalid JPEG: truncated entropy data")
+            self.acc = (self.acc << (need << 3)) | int.from_bytes(
+                self.data[pos:pos + need], "big")
+            self.pos = pos + need
+            nb += need << 3
+        nb -= n
+        self.nbits = nb
+        v = self.acc >> nb
+        self.acc &= (1 << nb) - 1
         return v
 
 
-def _huff(reader: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for ln in range(1, 17):
-        code = (code << 1) | reader.bit()
-        sym = table.get((ln, code))
+def _huff(reader: _BitReader, table: tuple[list, dict]) -> int:
+    """One Huffman symbol: codes of up to 8 bits in one lookahead step,
+    longer ones by length on a window of up to 16 bits. The window takes
+    only bytes that exist (a short tail is zero-padded and must hold the
+    whole code), so truncated data and bad codes raise the errors a
+    bit-serial walk from the first bit raises."""
+    look, codes = table
+    data, pos = reader.data, reader.pos
+    nb, acc = reader.nbits, reader.acc
+    if nb < 8 and pos < len(data):
+        acc = (acc << 8) | data[pos]
+        pos += 1
+        nb += 8
+    e = look[acc >> (nb - 8) if nb >= 8 else acc << (8 - nb)]
+    if e and e >> 8 <= nb:
+        nb -= e >> 8
+        reader.pos, reader.nbits, reader.acc = pos, nb, acc & ((1 << nb) - 1)
+        return e & 0xFF
+    # no code of <= 8 bits prefixes the window: lengths 9..16
+    if nb < 16 and pos < len(data):
+        acc = (acc << 8) | data[pos]
+        pos += 1
+        nb += 8
+    reader.pos, reader.nbits, reader.acc = pos, nb, acc
+    for ln in range(9, 17):
+        if ln > nb:
+            raise ValueError("invalid JPEG: truncated entropy data")
+        sym = codes.get((ln, acc >> (nb - ln)))
         if sym is not None:
+            nb -= ln
+            reader.nbits, reader.acc = nb, acc & ((1 << nb) - 1)
             return sym
     raise ValueError("invalid JPEG: bad Huffman code")
 
@@ -648,7 +690,7 @@ def _dc_first(reader, dc_tbl, pred: int, al: int,
 
 
 def _dc_refine(reader, al: int, out: np.ndarray | None) -> None:
-    bit = reader.bit()
+    bit = reader.bits(1)
     if bit and out is not None:
         out[0] |= 1 << al
 
@@ -657,68 +699,86 @@ def _ac_first(reader, ac_tbl, zz: np.ndarray, ss: int, se: int, al: int,
               eobrun: int) -> int:
     if eobrun > 0:
         return eobrun - 1
+    z = zz.tolist()
     k = ss
-    while k <= se:
-        sym = _huff(reader, ac_tbl)
-        r, s = sym >> 4, sym & 0x0F
-        if s:
-            k += r
-            if k > se:
-                raise ValueError("invalid JPEG: AC index overflow")
-            zz[k] = _extend(reader.bits(s), s) << al
-            k += 1
-        elif r == 15:                               # ZRL
-            k += 16
-        else:                                       # EOBn
-            eobrun = (1 << r) - 1
-            if r:
-                eobrun += reader.bits(r)
-            break
+    try:
+        while k <= se:
+            sym = _huff(reader, ac_tbl)
+            r, s = sym >> 4, sym & 0x0F
+            if s:
+                k += r
+                if k > se:
+                    raise ValueError("invalid JPEG: AC index overflow")
+                z[k] = _extend(reader.bits(s), s) << al
+                k += 1
+            elif r == 15:                           # ZRL
+                k += 16
+            else:                                   # EOBn
+                eobrun = (1 << r) - 1
+                if r:
+                    eobrun += reader.bits(r)
+                break
+    except IndexError:
+        _past_block(zz, k)
+    zz[ss:se + 1] = z[ss:se + 1]
     return eobrun
 
 
 def _ac_refine(reader, ac_tbl, zz: np.ndarray, ss: int, se: int, al: int,
                eobrun: int) -> int:
     p1, m1 = 1 << al, -(1 << al)
-
-    def correct(k: int) -> None:
-        if reader.bit() and not (zz[k] & p1):
-            zz[k] += p1 if zz[k] >= 0 else m1
-
+    bits = reader.bits
+    z = zz.tolist()
     k = ss
-    if eobrun == 0:
-        while k <= se:
-            sym = _huff(reader, ac_tbl)
-            r, s = sym >> 4, sym & 0x0F
-            val = 0
-            if s:
-                val = p1 if reader.bit() else m1
-            elif r != 15:                           # EOBn
-                eobrun = 1 << r
-                if r:
-                    eobrun += reader.bits(r)
-                break
-            # advance past r zero-HISTORY coefficients, emitting correction
-            # bits for the nonzero-history ones passed over (ZRL: r == 15
-            # consumes 16 zero-history positions, val stays 0)
+    try:
+        if eobrun == 0:
             while k <= se:
-                if zz[k] != 0:
-                    correct(k)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
+                sym = _huff(reader, ac_tbl)
+                r, s = sym >> 4, sym & 0x0F
+                val = 0
+                if s:
+                    val = p1 if bits(1) else m1
+                elif r != 15:                       # EOBn
+                    eobrun = 1 << r
+                    if r:
+                        eobrun += bits(r)
+                    break
+                # advance past r zero-HISTORY coefficients, emitting
+                # correction bits for the nonzero-history ones passed over
+                # (ZRL: r == 15 consumes 16 zero-history positions, val
+                # stays 0)
+                while k <= se:
+                    c = z[k]
+                    if c:
+                        if bits(1) and not c & p1:
+                            z[k] = c + (p1 if c >= 0 else m1)
+                    else:
+                        if r == 0:
+                            break
+                        r -= 1
+                    k += 1
+                if val and k <= se:
+                    z[k] = val
                 k += 1
-            if val and k <= se:
-                zz[k] = val
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            if zz[k] != 0:
-                correct(k)
-            k += 1
-        eobrun -= 1
+        if eobrun > 0:
+            while k <= se:
+                c = z[k]
+                if c and bits(1) and not c & p1:
+                    z[k] = c + (p1 if c >= 0 else m1)
+                k += 1
+            eobrun -= 1
+    except IndexError:
+        _past_block(zz, k)
+    zz[ss:se + 1] = z[ss:se + 1]
     return eobrun
+
+
+def _past_block(zz: np.ndarray, k: int) -> None:
+    """A corrupt scan header (Se > 63) walked the band past the block's 64
+    coefficients: raise numpy's IndexError for position k, the error the
+    per-coefficient array walk raised there, then re-raise the list's."""
+    zz[k]  # noqa: B018 — raises for k >= 64
+    raise
 
 
 def decode_gray_jpeg(data: bytes) -> np.ndarray:

@@ -28,8 +28,8 @@ post-2008 encrypted PDF) rides the same empty-user-password derivation:
                 checked ("adb" marker) after decryption
 
 MD5/SHA-2 come from hashlib (standard library); RC4 is the 10-line
-KSA/PRGA from its public description; AES is functions/aes.py (from
-scratch against FIPS 197, vectorized CBC decrypt).
+KSA/PRGA from its public description; AES is functions/aes.py (the seam
+over OpenSSL through the `cryptography` package).
 
 Writer side (fixture-only, like encode_gray_tiff): make_encryption builds
 the /O, /U, /P entries and the file key for an R3 128-bit empty-password
@@ -138,7 +138,7 @@ def object_key(key: bytes, num: int, gen: int,
 
 def aes_decrypt_data(key: bytes, data: bytes) -> bytes:
     """PDF AES payload shape (§7.6.2): 16-byte IV prefix + CBC
-    ciphertext + PKCS#7. Vectorized across blocks (functions/aes.py)."""
+    ciphertext + PKCS#7 (functions/aes.py)."""
     from .aes import AES
 
     if not data:

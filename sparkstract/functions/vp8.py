@@ -33,6 +33,9 @@ from . import vp8_tables as T
 
 # ------------------------------------------------------------ bool coder
 
+# left shifts that bring a range in [1, 127] back to [128, 255]
+_NORM = tuple(8 - r.bit_length() if r else 0 for r in range(128))
+
 
 class _BoolReader:
     """RFC 6386 boolean arithmetic decoder (8-bit probabilities)."""
@@ -53,20 +56,29 @@ class _BoolReader:
         big = split << 8
         if self.value >= big:
             bit = 1
-            self.range -= split
+            rng = self.range - split
             self.value -= big
         else:
             bit = 0
-            self.range = split
-        while self.range < 128:
-            self.value <<= 1
-            self.range <<= 1
-            self._bits += 1
-            if self._bits == 8:
-                self._bits = 0
-                b = self._d[self._pos] if self._pos < len(self._d) else 0
-                self._pos += 1
-                self.value |= b
+            rng = split
+        if rng < 128:
+            # renormalise in one step: the shift that brings the range
+            # back to [128, 255] is at most 7, so at most one new byte
+            # enters the 16-bit window, landing where the one-bit-at-a-
+            # time loop would have put it
+            shift = _NORM[rng]
+            rng <<= shift
+            value = self.value << shift
+            bits = self._bits + shift
+            if bits >= 8:
+                bits -= 8
+                pos = self._pos
+                if pos < len(self._d):
+                    value |= self._d[pos] << bits
+                self._pos = pos + 1
+            self.value = value
+            self._bits = bits
+        self.range = rng
         return bit
 
     def literal(self, n: int) -> int:
@@ -321,59 +333,63 @@ def _parse_header(bd: _BoolReader) -> dict:
 
 
 def _parse_modes(bd: _BoolReader, h: dict, mb_w: int, mb_h: int) -> dict:
-    """Per-MB prediction records (first partition, after the header)."""
-    ymode = np.zeros((mb_h, mb_w), np.int32)
-    uvmode = np.zeros((mb_h, mb_w), np.int32)
-    skip = np.zeros((mb_h, mb_w), np.int32)
-    seg = np.zeros((mb_h, mb_w), np.int32)
-    bmodes = np.zeros((mb_h, mb_w, 4, 4), np.int32)
+    """Per-MB prediction records (first partition, after the header).
+    The walk runs on Python ints; the records become arrays at the end."""
+    ymode = [[0] * mb_w for _ in range(mb_h)]
+    uvmode = [[0] * mb_w for _ in range(mb_h)]
+    skip = [[0] * mb_w for _ in range(mb_h)]
+    seg = [[0] * mb_w for _ in range(mb_h)]
+    bmodes = [[None] * mb_w for _ in range(mb_h)]
+    kf_bmode_prob = T.KF_BMODE_PROB.tolist()
     # sub-mode context rows: above (per MB column) and left (current MB).
-    above_sub = np.full((mb_w, 4), T.B_DC, np.int32)
+    above_sub = [[T.B_DC] * 4 for _ in range(mb_w)]
     for my in range(mb_h):
-        left_sub = np.full(4, T.B_DC, np.int32)
+        left_sub = [T.B_DC] * 4
         for mx in range(mb_w):
             if h["update_map"]:
-                seg[my, mx] = bd.tree(T.SEGMENT_TREE,
+                seg[my][mx] = bd.tree(T.SEGMENT_TREE,
                                       h["segment_tree_probs"])
             if h["mb_no_skip"]:
-                skip[my, mx] = bd.read_bool(h["skip_prob"])
+                skip[my][mx] = bd.read_bool(h["skip_prob"])
             m = bd.tree(T.KF_YMODE_TREE, T.KF_YMODE_PROB)
-            ymode[my, mx] = m
+            ymode[my][mx] = m
             if m == T.B_PRED:
+                sub = []
                 for r in range(4):
+                    row = []
                     for c in range(4):
-                        a = above_sub[mx, c] if r == 0 else bmodes[my, mx,
-                                                                   r - 1, c]
-                        lf = left_sub[r] if c == 0 else bmodes[my, mx, r,
-                                                               c - 1]
-                        bm = bd.tree(T.BMODE_TREE,
-                                     T.KF_BMODE_PROB[a, lf])
-                        bmodes[my, mx, r, c] = bm
+                        a = above_sub[mx][c] if r == 0 else sub[r - 1][c]
+                        lf = left_sub[r] if c == 0 else row[c - 1]
+                        row.append(bd.tree(T.BMODE_TREE,
+                                           kf_bmode_prob[a][lf]))
+                    sub.append(row)
             else:
-                bmodes[my, mx, :, :] = T.MODE_TO_BMODE[m]
-            above_sub[mx] = bmodes[my, mx, 3, :]
-            left_sub = bmodes[my, mx, :, 3].copy()
-            uvmode[my, mx] = bd.tree(T.UV_MODE_TREE, T.KF_UV_MODE_PROB)
-    return {"ymode": ymode, "uvmode": uvmode, "skip": skip, "seg": seg,
-            "bmodes": bmodes}
+                sub = [[T.MODE_TO_BMODE[m]] * 4 for _ in range(4)]
+            bmodes[my][mx] = sub
+            above_sub[mx] = sub[3]
+            left_sub = [row[3] for row in sub]
+            uvmode[my][mx] = bd.tree(T.UV_MODE_TREE, T.KF_UV_MODE_PROB)
+    return {"ymode": np.array(ymode, np.int32),
+            "uvmode": np.array(uvmode, np.int32),
+            "skip": np.array(skip, np.int32), "seg": np.array(seg, np.int32),
+            "bmodes": np.array(bmodes, np.int32)}
 
 
 # ------------------------------------------------------------- tokens
 
 
-def _decode_coeffs(bd: _BoolReader, probs: np.ndarray, btype: int,
-                   first: int, ctx: int) -> tuple[np.ndarray, int]:
-    """One 4x4 block of quantized coefficients (natural order) plus its
-    nonzero flag.  Dequantization happens at the caller (Y2 vs Y vs UV
-    factors)."""
-    out = np.zeros(16, np.int64)
-    tp = probs[btype]
+def _decode_coeffs(bd: _BoolReader, tp: list, first: int, ctx: int,
+                   dcq: int, acq: int) -> tuple[list, int]:
+    """One 4x4 block of dequantized coefficients (natural order, a list of
+    16 ints) plus its nonzero flag.  `tp` is the block type's (band,
+    context, node) probabilities as nested lists; `dcq`/`acq` are the
+    plane's DC and AC dequantization factors."""
+    out = [0] * 16
     n = first
     start = 0        # after a ZERO token EOB is not codeable: start at 2
     nz = 0
     while n < 16:
-        p = tp[T.COEFF_BANDS[n]][ctx]
-        tok = bd.tree(T.TOKEN_TREE, p, start)
+        tok = bd.tree(T.TOKEN_TREE, tp[T.COEFF_BANDS[n]][ctx], start)
         if tok == T.DCT_EOB:
             break
         if tok == T.DCT_0:
@@ -389,10 +405,10 @@ def _decode_coeffs(bd: _BoolReader, probs: np.ndarray, btype: int,
             for pb in T.CAT_PROBS[tok]:
                 extra = (extra << 1) | bd.read_bool(pb)
             val = T.CAT_BASE[tok] + extra
+        ctx = 1 if val == 1 else 2
         if bd.read_bool(128):
             val = -val
-        out[T.ZIGZAG[n]] = val
-        ctx = 1 if abs(val) == 1 else 2
+        out[T.ZIGZAG[n]] = val * (acq if n else dcq)
         nz = 1
         n += 1
     return out, nz
@@ -730,6 +746,9 @@ def _loop_filter(y, u, v, h: dict, modes: dict, mb_nz: np.ndarray) -> None:
 
 # --------------------------------------------------------------- decode
 
+_ZERO8 = [0] * 8
+_ZERO16 = [0] * 16
+
 
 def decode_vp8(payload: bytes, rgb: bool = False) -> np.ndarray:
     """VP8 chunk payload -> (h, w) uint8 luma (default) or (h, w, 3)
@@ -783,58 +802,54 @@ def decode_vp8(payload: bytes, rgb: bool = False) -> np.ndarray:
     y = _padded_plane(mb_h * 16, mb_w * 16)
     u = _padded_plane(mb_h * 8, mb_w * 8)
     v = _padded_plane(mb_h * 8, mb_w * 8)
-    probs = hd["coeff_probs"]
+    # the token walk runs on Python ints: the probabilities and the
+    # per-MB records become nested lists once per frame
+    probs = hd["coeff_probs"].tolist()
+    seg, ymodes, skip = (modes[k].tolist() for k in ("seg", "ymode", "skip"))
 
     # nonzero-context state: above per MB column, left per current MB
-    above_nz = np.zeros((mb_w, 9), np.int64)   # 4 Y, 2 U, 2 V, 1 Y2
+    above_nz = [[0] * 9 for _ in range(mb_w)]   # 4 Y, 2 U, 2 V, 1 Y2
     mb_nz = np.zeros((mb_h, mb_w), np.int64)
     for my in range(mb_h):
-        left_nz = np.zeros(9, np.int64)
+        left_nz = [0] * 9
         td = parts[my % n_part]
         for mx in range(mb_w):
-            q = dq[modes["seg"][my, mx]]
-            ymode = modes["ymode"][my, mx]
-            has_y2 = ymode != T.B_PRED
-            coeffs = np.zeros((25, 16), np.int64)
-            any_nz = 0
-            if modes["skip"][my, mx]:
-                above_nz[mx, :8] = 0
-                left_nz[:8] = 0
+            q = dq[seg[my][mx]]
+            has_y2 = ymodes[my][mx] != T.B_PRED
+            anz = above_nz[mx]
+            if skip[my][mx]:
+                coeffs = np.zeros((25, 16), np.int64)
+                anz[:8] = left_nz[:8] = _ZERO8
                 if has_y2:
-                    above_nz[mx, 8] = 0
-                    left_nz[8] = 0
+                    anz[8] = left_nz[8] = 0
             else:
+                rows = [_ZERO16] * 25
+                any_nz = 0
                 if has_y2:
-                    ctx = int(above_nz[mx, 8] + left_nz[8])
-                    c2, nz = _decode_coeffs(td, probs, 1, 0, ctx)
-                    c2[0] *= q["y2dc"]
-                    c2[1:] *= q["y2ac"]
-                    coeffs[24] = c2
-                    above_nz[mx, 8] = left_nz[8] = nz
+                    rows[24], nz = _decode_coeffs(
+                        td, probs[1], 0, anz[8] + left_nz[8],
+                        q["y2dc"], q["y2ac"])
+                    anz[8] = left_nz[8] = nz
                     any_nz |= nz
-                btype = 0 if has_y2 else 3
+                tp = probs[0 if has_y2 else 3]
                 first = 1 if has_y2 else 0
                 for sb in range(16):
                     r, c = sb >> 2, sb & 3
-                    ctx = int(above_nz[mx, c] + left_nz[r])
-                    cf, nz = _decode_coeffs(td, probs, btype, first, ctx)
-                    cf[0] *= q["y1dc"]
-                    cf[1:] *= q["y1ac"]
-                    coeffs[sb] = cf
-                    above_nz[mx, c] = left_nz[r] = nz
+                    rows[sb], nz = _decode_coeffs(
+                        td, tp, first, anz[c] + left_nz[r],
+                        q["y1dc"], q["y1ac"])
+                    anz[c] = left_nz[r] = nz
                     any_nz |= nz
-                for pi, base in ((0, 16), (1, 20)):
+                for k, base in ((4, 16), (6, 20)):
                     for sb in range(4):
                         r, c = sb >> 1, sb & 1
-                        k = 4 + pi * 2
-                        ctx = int(above_nz[mx, k + c] + left_nz[k + r])
-                        cf, nz = _decode_coeffs(td, probs, 2, 0, ctx)
-                        cf[0] *= q["uvdc"]
-                        cf[1:] *= q["uvac"]
-                        coeffs[base + sb] = cf
-                        above_nz[mx, k + c] = left_nz[k + r] = nz
+                        rows[base + sb], nz = _decode_coeffs(
+                            td, probs[2], 0, anz[k + c] + left_nz[k + r],
+                            q["uvdc"], q["uvac"])
+                        anz[k + c] = left_nz[k + r] = nz
                         any_nz |= nz
-            mb_nz[my, mx] = any_nz
+                coeffs = np.array(rows, np.int64)
+                mb_nz[my, mx] = any_nz
             _recon_mb(y, u, v, my, mx, modes, coeffs, has_y2,
                       mb_w * 16)
     _loop_filter(y[1:, 1:mb_w * 16 + 1], u[1:, 1:mb_w * 8 + 1],
@@ -856,22 +871,22 @@ def decode_vp8(payload: bytes, rgb: bool = False) -> np.ndarray:
     return np.stack([r, g, b], axis=2).astype(np.uint8)
 
 
+def _tile(res: np.ndarray, n: int) -> np.ndarray:
+    """(n*n, 4, 4) subblock residuals in raster order -> one (4n, 4n)
+    block, so a macroblock plane adds, clips and stores once."""
+    return res.reshape(n, n, 4, 4).transpose(0, 2, 1, 3).reshape(4 * n, 4 * n)
+
+
 def _recon_mb(y, u, v, my, mx, modes, coeffs, has_y2, plane_w) -> None:
     """Reconstruct one macroblock into the padded planes (shared by the
     decoder and the mirror encoder's in-loop reconstruction)."""
     ymode = modes["ymode"][my, mx]
     yy, xx = my * 16, mx * 16
     if has_y2:
-        dcs = iwht4x4(coeffs[24])
-        for sb in range(16):
-            coeffs[sb, 0] = dcs[sb]
+        coeffs[:16, 0] = iwht4x4(coeffs[24])
         pred = _predict_block(y, yy, xx, 16, ymode)
-        res = idct4x4(coeffs[:16])
-        for sb in range(16):
-            r, c = (sb >> 2) * 4, (sb & 3) * 4
-            blk = pred[r:r + 4, c:c + 4] + res[sb]
-            y[yy + r + 1:yy + r + 5, xx + c + 1:xx + c + 5] = \
-                np.clip(blk, 0, 255)
+        y[yy + 1:yy + 17, xx + 1:xx + 17] = np.clip(
+            pred + _tile(idct4x4(coeffs[:16]), 4), 0, 255)
     else:
         res = idct4x4(coeffs[:16])
         for sb in range(16):
@@ -880,16 +895,7 @@ def _recon_mb(y, u, v, my, mx, modes, coeffs, has_y2, plane_w) -> None:
             pred = _predict_b(y, yy + r, xx + c, bm, yy, plane_w)
             y[yy + r + 1:yy + r + 5, xx + c + 1:xx + c + 5] = \
                 np.clip(pred + res[sb], 0, 255)
-    uvmode = modes["uvmode"][my, mx]
-    cy, cx = my * 8, mx * 8
-    for pi, (plane, base) in enumerate(((u, 16), (v, 20))):
-        pred = _predict_block(plane, cy, cx, 8, uvmode)
-        res = idct4x4(coeffs[base:base + 4])
-        for sb in range(4):
-            r, c = (sb >> 1) * 4, (sb & 1) * 4
-            blk = pred[r:r + 4, c:c + 4] + res[sb]
-            plane[cy + r + 1:cy + r + 5, cx + c + 1:cx + c + 5] = \
-                np.clip(blk, 0, 255)
+    _recon_chroma(u, v, my, mx, modes, coeffs)
 
 
 # --------------------------------------------------------------- encode
@@ -1169,14 +1175,10 @@ def _recon_chroma(u, v, my, mx, modes, coeffs) -> None:
     in-loop, subblock by subblock, so only chroma remains)."""
     uvmode = modes["uvmode"][my, mx]
     cy, cx = my * 8, mx * 8
-    for pi, (plane, base) in enumerate(((u, 16), (v, 20))):
+    for plane, base in ((u, 16), (v, 20)):
         pred = _predict_block(plane, cy, cx, 8, uvmode)
-        res = idct4x4(coeffs[base:base + 4])
-        for sb in range(4):
-            r, c = (sb >> 1) * 4, (sb & 1) * 4
-            blk = pred[r:r + 4, c:c + 4] + res[sb]
-            plane[cy + r + 1:cy + r + 5, cx + c + 1:cx + c + 5] = \
-                np.clip(blk, 0, 255)
+        plane[cy + 1:cy + 9, cx + 1:cx + 9] = np.clip(
+            pred + _tile(idct4x4(coeffs[base:base + 4]), 2), 0, 255)
 
 
 def encode_webp_vp8(img: np.ndarray, **kw) -> bytes:

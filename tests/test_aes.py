@@ -1,12 +1,20 @@
 """functions/aes.py + pdfcrypt AES handler — FIPS 197 known answers,
-CBC properties, the R6 KDF, and the encrypted-PDF read path."""
+CBC properties, the R6 KDF, and the encrypted-PDF read path.
+
+`AES` is the OpenSSL seam the pipeline runs; `OracleAES` is the
+from-scratch FIPS 197 implementation in tests/aes_oracle.py. Both answer
+the known-answer vectors, and they must agree on every key, length and
+padding mode."""
 
 import hashlib
 
 import numpy as np
 import pytest
+from aes_oracle import _SBOX
+from aes_oracle import AES as OracleAES
 
-from sparkstract.functions.aes import _SBOX, AES
+from sparkstract.functions import aes as aes_mod
+from sparkstract.functions.aes import AES
 from sparkstract.functions.pdfcrypt import (
     aes_decrypt_data,
     hash_2b,
@@ -75,8 +83,9 @@ def test_cbc_unaligned_rejected():
 
 
 def test_vectorized_decrypt_matches_scalar_encrypt_inverse():
-    # many blocks at once through the numpy path == block-by-block inverse
-    a = AES(hashlib.sha256(b"vec").digest())
+    # many blocks at once through the oracle's numpy path == block-by-block
+    # inverse of its scalar T-table encryptor
+    a = OracleAES(hashlib.sha256(b"vec").digest())
     rng = np.random.default_rng(7)
     pts = [bytes(rng.integers(0, 256, 16, dtype=np.uint8))
            for _ in range(64)]
@@ -84,6 +93,84 @@ def test_vectorized_decrypt_matches_scalar_encrypt_inverse():
     got = a._decrypt_blocks(
         np.frombuffer(cts, dtype=np.uint8).reshape(-1, 16))
     assert got.tobytes() == b"".join(pts)
+
+
+# ---------------------------------------------------- seam vs the oracle
+
+
+@pytest.mark.parametrize("klen", [16, 32])
+def test_oracle_fips197_appendix_c(klen):
+    a = OracleAES(bytes(range(klen)))
+    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+    want = {16: "69c4e0d86a7b0430d8cdb78070b4c55a",
+            32: "8ea2b7ca516745bfeafc49904b496089"}[klen]
+    assert a.encrypt_block(pt).hex() == want
+    assert a.decrypt_block(bytes.fromhex(want)) == pt
+
+
+def test_seam_matches_oracle_random_keys_and_lengths():
+    rng = np.random.default_rng(11)
+    lengths = sorted({0, 1, 15, 16, 17, 31, 32, 33, 255, 256, 4095, 4096}
+                     | set(int(n) for n in rng.integers(0, 4097, 24)))
+    for i, n in enumerate(lengths):
+        key = bytes(rng.integers(0, 256, 16 if i % 2 else 32,
+                                 dtype=np.uint8))
+        iv = bytes(rng.integers(0, 256, 16, dtype=np.uint8))
+        data = bytes(rng.integers(0, 256, n, dtype=np.uint8))
+        seam, oracle = AES(key), OracleAES(key)
+        # padded: PKCS#7 on both sides, any length
+        ct = seam.encrypt_cbc(iv, data)
+        assert ct == oracle.encrypt_cbc(iv, data)
+        assert seam.decrypt_cbc(iv, ct) == oracle.decrypt_cbc(iv, ct) == data
+        # unpadded: 16-aligned only, and both refuse the rest alike
+        if n % 16:
+            for a in (seam, oracle):
+                with pytest.raises(ValueError, match="16-aligned"):
+                    a.encrypt_cbc(iv, data, pad=False)
+                with pytest.raises(ValueError, match="16-aligned"):
+                    a.decrypt_cbc(iv, data, pad=False)
+            continue
+        ct = seam.encrypt_cbc(iv, data, pad=False)
+        assert ct == oracle.encrypt_cbc(iv, data, pad=False)
+        assert (seam.decrypt_cbc(iv, data, pad=False)
+                == oracle.decrypt_cbc(iv, data, pad=False))
+        if n:
+            assert seam.encrypt_block(data[:16]) \
+                == oracle.encrypt_block(data[:16])
+            assert seam.decrypt_block(data[:16]) \
+                == oracle.decrypt_block(data[:16])
+
+
+def test_seam_and_oracle_reject_the_same_padding():
+    rng = np.random.default_rng(12)
+    for _ in range(64):
+        key = bytes(rng.integers(0, 256, 16, dtype=np.uint8))
+        iv = bytes(16)
+        ct = bytes(rng.integers(0, 256, 32, dtype=np.uint8))
+        got = []
+        for a in (AES(key), OracleAES(key)):
+            try:
+                got.append(a.decrypt_cbc(iv, ct))
+            except ValueError as e:
+                got.append(str(e))
+        assert got[0] == got[1]
+
+
+def test_seam_rejects_24_byte_keys_like_the_oracle():
+    for cls in (AES, OracleAES):
+        with pytest.raises(ValueError, match="16 or 32"):
+            cls(bytes(24))
+
+
+@pytest.mark.parametrize("pw,salt,udata", [
+    (b"", b"saltsalt", b""),
+    (b"pw", b"saltsalt", b""),
+    (b"", b"vsaltvsa", bytes(range(48))),
+])
+def test_hash_2b_same_on_both_backends(monkeypatch, pw, salt, udata):
+    seam = hash_2b(pw, salt, udata)
+    monkeypatch.setattr(aes_mod, "AES", OracleAES)
+    assert hash_2b(pw, salt, udata) == seam
 
 
 # ---------------------------------------------------------- R6 KDF (2.B)

@@ -10,7 +10,17 @@ import numpy as np
 import pytest
 
 from sparkstract.functions.codecs import decode_pages
-from sparkstract.functions.jpeg import decode_gray_jpeg, encode_gray_jpeg
+from sparkstract.functions.jpeg import (
+    _AC_BITS,
+    _AC_VALS,
+    _DC_BITS,
+    _DC_VALS,
+    _BitReader,
+    _decode_table,
+    _huff,
+    decode_gray_jpeg,
+    encode_gray_jpeg,
+)
 
 
 def _gradient(h=37, w=53, seed=0):
@@ -347,3 +357,63 @@ def test_cmyk_no_app14_is_direct_ink():
     got = decode_gray_jpeg(data)
     err = np.abs(got.astype(np.float64) - _luma(rgb))
     assert err.max() <= 4.0, err.max()
+
+
+def _bit_serial(data: bytes, codes: dict) -> tuple[list, str]:
+    """Reference entropy walk, one bit at a time: each symbol, then its
+    low-nibble count of extra bits, until the first error."""
+    bits = [(b >> (7 - i)) & 1 for b in data for i in range(8)]
+    pos, out = 0, []
+    while True:
+        code = 0
+        for ln in range(1, 17):
+            if pos >= len(bits):
+                return out, "invalid JPEG: truncated entropy data"
+            code = (code << 1) | bits[pos]
+            pos += 1
+            sym = codes.get((ln, code))
+            if sym is not None:
+                break
+        else:
+            return out, "invalid JPEG: bad Huffman code"
+        extra = 0
+        for _ in range(sym & 0x0F):
+            if pos >= len(bits):
+                return out, "invalid JPEG: truncated entropy data"
+            extra = (extra << 1) | bits[pos]
+            pos += 1
+        out.append((sym, extra))
+
+
+def _table_driven(data: bytes, table) -> tuple[list, str]:
+    r, out = _BitReader(data), []
+    try:
+        while True:
+            sym = _huff(r, table)
+            out.append((sym, r.bits(sym & 0x0F)))
+    except ValueError as e:
+        return out, str(e)
+
+
+@pytest.mark.parametrize("bits,vals", [
+    (_DC_BITS, _DC_VALS),
+    (_AC_BITS, _AC_VALS),
+    # long codes only (9-16 bits), and a code space left partly unused
+    ([0] * 8 + [1, 2, 4, 8, 16, 32, 64, 120], list(range(247))),
+    # malformed: an overfull first length and a duplicated symbol
+    ([3, 1, 2] + [0] * 13, [0x11, 0x22, 0x11, 0x33, 0x44, 0x55]),
+])
+def test_table_huffman_matches_bit_serial_walk(bits, vals):
+    """Symbols, extra bits and the first error (truncated data or a bad
+    code) equal the bit-serial walk's on random and all-ones streams of
+    every short length."""
+    table = _decode_table(bits, vals)
+    codes = table[1]
+    rng = np.random.default_rng(len(vals))
+    streams = [b"\xff" * n for n in range(6)]
+    for n in range(14):
+        for _ in range(12):
+            streams.append(bytes(rng.integers(0, 256, n, dtype=np.uint8)))
+            streams.append(bytes(rng.integers(0xE0, 256, n, dtype=np.uint8)))
+    for data in streams:
+        assert _table_driven(data, table) == _bit_serial(data, codes)

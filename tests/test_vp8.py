@@ -47,6 +47,34 @@ def test_bool_coder_roundtrip_random():
         assert [r.read_bool(int(p)) for p in probs] == list(bits)
 
 
+def test_bool_decoder_matches_bitwise_renormalisation():
+    # the reader renormalises in one shift; the spec loop shifts one bit
+    # at a time and pulls a byte after every 8 — same bits, same state,
+    # also past the end of the data (zeros)
+    rng = np.random.default_rng(3)
+    for _ in range(60):
+        data = bytes(rng.integers(0, 256, int(rng.integers(0, 40)),
+                                  dtype=np.uint8))
+        r = _BoolReader(data)
+        value = (data[0] << 8 if data else 0) | (data[1] if len(data) > 1
+                                                  else 0)
+        rg, pos, nbits = 255, 2, 0
+        for p in rng.integers(1, 256, 400):
+            split = 1 + (((rg - 1) * int(p)) >> 8)
+            if value >= split << 8:
+                bit, rg, value = 1, rg - split, value - (split << 8)
+            else:
+                bit, rg = 0, split
+            while rg < 128:
+                value, rg, nbits = value << 1, rg << 1, nbits + 1
+                if nbits == 8:
+                    nbits = 0
+                    value |= data[pos] if pos < len(data) else 0
+                    pos += 1
+            assert r.read_bool(int(p)) == bit
+            assert (r.value, r.range) == (value, rg)
+
+
 def test_bool_decoder_first_bit_hand_math():
     # value = 0x8000, range 255, prob 128 -> split = 1 + (254*128>>8) =
     # 128, SPLIT = 0x8000; value >= SPLIT -> bit 1.
