@@ -2145,7 +2145,7 @@ def _pdf_truth() -> list[tuple]:
     run locally per fixture doc → (doc_id, sha256, n_bytes, n_pages)."""
     import hashlib
 
-    from sparkstract.functions.codecs import decode_pages
+    from sparkstract.functions.codecs import decode_pages, sniff
     from sparkstract.functions.pdf import blocks_from_pdf_page, parse_pdf
     from sparkstract.functions.pdfout import (assemble_pdf,
                                               compress_page_image,
@@ -2162,7 +2162,7 @@ def _pdf_truth() -> list[tuple]:
                 continue
             data = bytes(img_by_ref[span["media_ref"]])
             pages: list[tuple] = []  # (blocks, gray|None, w, h)
-            if data[:5] == b"%PDF-":
+            if sniff(data) == "pdf":
                 for pg in parse_pdf(data):
                     if pg.has_text:
                         pages.append((blocks_from_pdf_page(pg), None,
@@ -2258,8 +2258,8 @@ def _media_truth() -> tuple[list[tuple], list[tuple]]:
     for r in _fixture_set().media.itertuples():
         try:
             gray = decode_gray_any(bytes(r.image))
-        except ValueError:
-            continue  # non-raster media (PDF): same skip as the kernels
+        except Exception:  # noqa: BLE001 — same skip as the kernels
+            continue  # non-raster (PDF) or corrupt media
         ink = binarize(gray)
         feats.append((r.media_ref, gray.shape[1], gray.shape[0],
                       round(float(ink.mean()), 6), int(otsu_threshold(gray)),
@@ -2275,18 +2275,17 @@ def _decode_report_truth() -> list[tuple]:
     sniff + decode + shape-counter loop the distributed kernel runs
     (operators/multimodal.py), over the deterministic fixture media."""
     from sparkstract.functions import webp
-    from sparkstract.functions.codecs import decode_gray_any
-    from sparkstract.operators.multimodal import _sniff
+    from sparkstract.functions.codecs import decode_gray_any, sniff
 
     counts: dict[tuple[str, str], int] = {}
     for r in _fixture_set().media.itertuples():
         data = bytes(r.image)
-        fmt = _sniff(data)
+        fmt = sniff(data)
         webp.SHAPE_COUNTS.clear()
         try:
             decode_gray_any(data)
             shape = next(iter(webp.SHAPE_COUNTS), "") if fmt == "webp" else ""
-        except (ValueError, NotImplementedError) as e:
+        except Exception as e:  # noqa: BLE001 — counted, not raised
             shape = f"error: {str(e)[:60]}"
         counts[(fmt, shape)] = counts.get((fmt, shape), 0) + 1
     return sorted((f, sh, n) for (f, sh), n in counts.items())
@@ -2297,11 +2296,11 @@ def _local_page_blocks(data: bytes) -> list[tuple[list, int]]:
     the PDF born-digital rule — text-layer pages parse, image-only pages
     OCR), one (block list, page_h) per decoded page: the shared base for
     every single-process truth constant."""
-    from sparkstract.functions.codecs import decode_pages
+    from sparkstract.functions.codecs import decode_pages, sniff
     from sparkstract.functions.pdf import blocks_from_pdf_page, parse_pdf
     from sparkstract.operators.page import analyse_page
 
-    if data[:5] == b"%PDF-":
+    if sniff(data) == "pdf":
         out: list[tuple[list, int]] = []
         for pg in parse_pdf(data):
             if pg.has_text:

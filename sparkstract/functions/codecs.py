@@ -29,38 +29,65 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _JP2_SIG = b"\x00\x00\x00\x0cjP  \r\n\x87\n"
 
 
-def decode_pages(data: bytes) -> list[np.ndarray]:
-    """Encoded image bytes -> list of uint8 HxW grayscale pages."""
+def sniff(data: bytes) -> str:
+    """Container format from the magic bytes: png, tiff, pnm, bmp, jpeg,
+    gif, webp, jp2, pdf, ico or unknown. The one format table: decode_pages,
+    the page kernel and the decode report all dispatch on its name."""
     if data[:8] == _PNG_SIG:
-        return [decode_gray(data)]
+        return "png"
     if data[:4] in (b"II*\x00", b"MM\x00*"):
-        return decode_gray_tiff(data)
+        return "tiff"
     if data[:1] == b"P" and data[1:2] in b"123456":
-        return [decode_gray_pnm(data)]
+        return "pnm"
     if data[:2] == b"BM":
-        return [decode_gray_bmp(data)]
+        return "bmp"
     if data[:3] == b"\xff\xd8\xff":
-        return [decode_gray_jpeg(data)]
+        return "jpeg"
     if data[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gray_gif
-
-        return decode_gray_gif(data)
+        return "gif"
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from .webp import decode_webp
-
-        return [decode_webp(data)]
+        return "webp"
     if data[:12] == _JP2_SIG or data[:4] == b"\xff\x4f\xff\x51":
-        # JPEG 2000: JP2 box container or raw codestream (SOC+SIZ)
-        from .jp2 import decode_jp2
-
-        return [decode_jp2(data)]
+        return "jp2"  # JP2 box container or raw codestream (SOC+SIZ)
     if data[:5] == b"%PDF-":
-        raise ValueError("PDF is not a raster: parsed at the pipeline seam "
-                         "(functions/pdf.py born-digital path)")
+        return "pdf"
     if data[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00") \
             and len(data) >= 22:
         # ICO/CUR has no magic; the reserved+type prefix plus a sane
         # directory is the accepted sniff (checked LAST for that reason)
+        return "ico"
+    return "unknown"
+
+
+def decode_pages(data: bytes) -> list[np.ndarray]:
+    """Encoded image bytes -> list of uint8 HxW grayscale pages."""
+    fmt = sniff(data)
+    if fmt == "png":
+        return [decode_gray(data)]
+    if fmt == "tiff":
+        return decode_gray_tiff(data)
+    if fmt == "pnm":
+        return [decode_gray_pnm(data)]
+    if fmt == "bmp":
+        return [decode_gray_bmp(data)]
+    if fmt == "jpeg":
+        return [decode_gray_jpeg(data)]
+    if fmt == "gif":
+        from .gif import decode_gray_gif
+
+        return decode_gray_gif(data)
+    if fmt == "webp":
+        from .webp import decode_webp
+
+        return [decode_webp(data)]
+    if fmt == "jp2":
+        from .jp2 import decode_jp2
+
+        return [decode_jp2(data)]
+    if fmt == "pdf":
+        raise ValueError("PDF is not a raster: parsed at the pipeline seam "
+                         "(functions/pdf.py born-digital path)")
+    if fmt == "ico":
         from .raster import decode_gray_ico
 
         return [decode_gray_ico(data)]

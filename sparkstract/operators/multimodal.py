@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
-Images here are real (our PNG codec); audio/video decode is STUBBED behind
-NotImplementedError as the container has no codec libs — but the Spark-side
-plumbing (schema, mapInPandas batch shape, partitioning) is real and tested.
+Image lanes over the media column: pixel features, thumbnails and a
+decode-path report. Undecodable media is skipped (features, thumbnails) or
+counted (the report), never raised — these lanes run over untrusted bytes.
 
 Reference parity: SetImage ingests any raster (/root/reference/src/api/
 baseapi.cpp:906); thumbnail/rescale mirrors the source-resolution upscale
@@ -41,9 +41,9 @@ def image_features(media: DataFrame) -> DataFrame:
             for ref, png in zip(pdf["media_ref"], pdf["image"]):
                 try:
                     gray = decode_gray_any(bytes(png))
-                except ValueError:
-                    continue  # non-raster media (PDF containers) carry no
-                    # pixel features — parsed at the pipeline seam instead
+                except Exception:  # noqa: BLE001 — corrupt media is data
+                    continue  # non-raster (PDF) or corrupt media carries no
+                    # pixel features — PDFs parse at the pipeline seam
                 ink = binarize(gray)
                 out["media_ref"].append(ref)
                 out["width"].append(gray.shape[1])
@@ -69,8 +69,8 @@ def thumbnails(media: DataFrame, max_side: int = 64) -> DataFrame:
             for ref, png in zip(pdf["media_ref"], pdf["image"]):
                 try:
                     gray = decode_gray_any(bytes(png))
-                except ValueError:
-                    continue  # non-raster media: no thumbnail
+                except Exception:  # noqa: BLE001 — corrupt media is data
+                    continue  # non-raster or corrupt media: no thumbnail
                 h, w = gray.shape
                 f = max(1, int(np.ceil(max(h, w) / max_side)))
                 th, tw = h // f, w // f
@@ -101,19 +101,19 @@ def media_decode_report(media: DataFrame) -> DataFrame:
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions import webp
-        from ..functions.codecs import decode_gray_any
+        from ..functions.codecs import decode_gray_any, sniff
 
         for pdf in batches:
             counts: dict[tuple[str, str], int] = {}
             for blob in pdf["image"]:
                 data = bytes(blob)
-                fmt = _sniff(data)
+                fmt = sniff(data)
                 webp.SHAPE_COUNTS.clear()
                 try:
                     decode_gray_any(data)
                     shape = next(iter(webp.SHAPE_COUNTS), "") \
                         if fmt == "webp" else ""
-                except (ValueError, NotImplementedError) as e:
+                except Exception as e:  # noqa: BLE001 — counted, not raised
                     shape = f"error: {str(e)[:60]}"
                 key = (fmt, shape)
                 counts[key] = counts.get(key, 0) + 1
@@ -126,40 +126,3 @@ def media_decode_report(media: DataFrame) -> DataFrame:
     return (media.select("image").mapInPandas(kernel,
                                               schema=DECODE_REPORT_SCHEMA)
             .groupBy("format", "shape").agg(F.sum("n").alias("n")))
-
-
-def _sniff(data: bytes) -> str:
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        return "tiff"
-    if data[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif"
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        return "webp"
-    if data[:2] == b"BM":
-        return "bmp"
-    if data[:4] == b"\x00\x00\x00\x0c" and data[4:8] == b"jP  " \
-            or data[:4] == b"\xff\x4f\xff\x51":
-        return "jp2"
-    if data[:1] == b"P" and data[1:2] in b"123456":
-        return "pnm"
-    if data[:5] == b"%PDF-":
-        return "pdf"
-    return "unknown"
-
-
-def decode_audio(media: DataFrame) -> DataFrame:  # pragma: no cover - stub
-    """STUB: audio decode (no codec libs in this container). The production
-    shape: mapInPandas over (media_ref, bytes) → (media_ref, sample_rate,
-    pcm array<float>) with the same batch plumbing as image_features."""
-    raise NotImplementedError("audio codecs unavailable in this environment")
-
-
-def sample_video_frames(media: DataFrame, every_n: int = 30) -> DataFrame:  # pragma: no cover - stub
-    """STUB: video frame sampling. Production shape: mapInPandas emitting one
-    row per sampled frame (media_ref, frame_idx, png) — the fan-out side of
-    the same salted (media_ref, frame) partitioning the page pipeline uses."""
-    raise NotImplementedError("video codecs unavailable in this environment")

@@ -17,6 +17,12 @@ Everything between the explode and the final window is partition-local; the
 plan has exactly two shuffles at scale (media join, doc reassembly) plus the
 salt repartition, which has an explicit partition count (one per core slot
 by default) so AQE cannot coalesce the kernel stage into one task.
+
+Every output view (blocks/spans, words, symbols, tables, hierarchy,
+searchable-PDF pages) runs the same kernel: `_kernel` feeds each batch
+through the one page loop (`_iter_page_blocks`, a 10-tuple per decoded
+page) and a view's `_*_rows` generator flattens those pages into tuples in
+its schema's column order.
 """
 
 from __future__ import annotations
@@ -87,24 +93,19 @@ def _analyse_raster(cfg: ExtractConfig, gray, page_zones):
                                           recognizer=cfg.recognizer)
 
 
-def _iter_page_blocks(cfg: ExtractConfig, pdf: pd.DataFrame,
-                      with_images: bool = False):
-    """Shared kernel skeleton: decode each work row's media bytes (codec
-    dispatch, SetImage baseapi.cpp:881; a multipage TIFF yields several
+def _iter_page_blocks(cfg: ExtractConfig, pdf: pd.DataFrame):
+    """The page loop every view shares: decode each work row's media bytes
+    (codec dispatch, SetImage baseapi.cpp:881; a multipage TIFF yields several
     pages from ONE media span, ProcessPagesMultipageTiff baseapi.cpp:1657 —
     block order continues across its pages in file order), apply the
-    zone-override source or crop + analyse, and yield
-    (doc_id, offset, media_ref, crop_dx, crop_dy, base_order, blocks, page_h)
-    per decoded page — page_h is the page's pixel height (PDF unit height
-    for born-digital pages), the image_height_ the reference's GetBoxText
-    uses to flip symbol boxes to bottom-left origin (baseapi.cpp:2414).
-    The emitting kernels differ only in which Block fields they flatten.
-    `with_images=True` appends (gray, page_w) as elements 9-10: the decoded
-    gray page array (None for born-digital PDF text pages and decode
-    errors) and the page's unit width (PDF user-space width for text
-    pages, pixel width otherwise; 0 for decode errors) — only the
-    searchable-PDF renderer kernel asks for them; the other kernels keep
-    the 8-tuple shape and the arrays stay kernel-local either way.
+    zone-override source or crop + analyse, and yield one 10-tuple
+    (doc_id, offset, media_ref, crop_dx, crop_dy, base_order, blocks, page_h,
+    gray, page_w) per decoded page. page_h is the page's pixel height (PDF
+    unit height for born-digital pages), the image_height_ the reference's
+    GetBoxText uses to flip symbol boxes to bottom-left origin
+    (baseapi.cpp:2414); gray is the decoded page array (None for born-digital
+    PDF text pages and decode errors) and page_w its unit width (0 for decode
+    errors). The views differ only in which fields they flatten.
 
     PDF media takes the born-digital path: a page WITH a text layer parses
     straight from the content stream (functions/pdf.py) and never touches
@@ -112,7 +113,7 @@ def _iter_page_blocks(cfg: ExtractConfig, pdf: pd.DataFrame,
     layer". An image-only PDF page (a scan wrapped in PDF) feeds each
     embedded raster through the normal analysis, so one document can mix
     both per page."""
-    from ..functions.codecs import decode_pages
+    from ..functions.codecs import decode_pages, sniff
     from ..functions.pdf import blocks_from_pdf_page, parse_pdf
 
     from ..operators.page import Block
@@ -123,75 +124,46 @@ def _iter_page_blocks(cfg: ExtractConfig, pdf: pd.DataFrame,
         zones_col,
     ):
         data = bytes(png)
-        is_pdf = data[:5] == b"%PDF-"
+        is_pdf = sniff(data) == "pdf"
         try:
-            if is_pdf:
-                pdf_pages = parse_pdf(data)
-            else:
-                pages = decode_pages(data)
+            pages = parse_pdf(data) if is_pdf else decode_pages(data)
         except Exception as e:  # noqa: BLE001 — corrupt media is data, not a bug
             if cfg.decode_errors == "fail":
                 raise
-            err = (doc_id, offset, ref, 0, 0, 0,
+            yield (doc_id, offset, ref, 0, 0, 0,
                    [Block(0, "decode_error", f"{type(e).__name__}: {e}",
-                          0, 0, 0, 0)], 0)
-            yield (err + (None, 0)) if with_images else err
+                          0, 0, 0, 0)], 0, None, 0)
             continue
         base = 0
-        if is_pdf:
-            for pg in pdf_pages:
-                if pg.has_text:
-                    blocks = blocks_from_pdf_page(pg, crop=cfg.crop)
-                    row = (doc_id, offset, ref, 0, 0, base, blocks,
-                           int(round(pg.height)))
-                    yield (row + (None, int(round(pg.width)))) \
-                        if with_images else row
-                    base += len(blocks)
-                    continue
-                for it in pg.items:  # scanned page: OCR the embedded raster
-                    if it[0] != "image":
-                        continue
-                    dx, dy, blocks = _analyse_raster(cfg, it[1], page_zones)
-                    row = (doc_id, offset, ref, dx, dy, base, blocks,
-                           it[1].shape[0])
-                    yield (row + (it[1], it[1].shape[1])) \
-                        if with_images else row
-                    base += len(blocks)
-            continue
-        for gray in pages:
-            crop_dx, crop_dy, blocks = _analyse_raster(cfg, gray, page_zones)
-            row = (doc_id, offset, ref, crop_dx, crop_dy, base, blocks,
-                   gray.shape[0])
-            yield (row + (gray, gray.shape[1])) if with_images else row
-            base += len(blocks)
+        for pg in pages:
+            if is_pdf and pg.has_text:
+                blocks = blocks_from_pdf_page(pg, crop=cfg.crop)
+                yield (doc_id, offset, ref, 0, 0, base, blocks,
+                       int(round(pg.height)), None, int(round(pg.width)))
+                base += len(blocks)
+                continue
+            # a raster page, or the embedded rasters of a scanned PDF page
+            for gray in ([it[1] for it in pg.items if it[0] == "image"]
+                         if is_pdf else [pg]):
+                dx, dy, blocks = _analyse_raster(cfg, gray, page_zones)
+                yield (doc_id, offset, ref, dx, dy, base, blocks,
+                       gray.shape[0], gray, gray.shape[1])
+                base += len(blocks)
 
 
-def _page_kernel(cfg: ExtractConfig):
-    """Build the mapInPandas kernel: one Arrow batch of (doc_id, offset,
-    media_ref, image) rows in → extracted block rows out. All heavy work is
-    numpy inside analyse_page; the only Python loop is over pages in the
-    batch (the reference's page loop, ProcessPagesInternal baseapi.cpp:1731).
-    """
+def _kernel(cfg: ExtractConfig, schema: str, rows):
+    """Build the one mapInPandas page kernel: one Arrow batch of (doc_id,
+    offset, media_ref, image[, zones]) work rows in → one frame of `schema`
+    rows out, `rows(cfg, pages)` flattening the batch's pages into tuples in
+    the schema's column order. All heavy work is numpy inside analyse_page;
+    the only Python loop is over pages in the batch (the reference's page
+    loop, ProcessPagesInternal baseapi.cpp:1731)."""
+    columns = [c.split()[0] for c in schema.split(",")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                                    ("doc_id", "offset", "block_order", "kind",
-                                     "text", "media_ref",
-                                     "left", "top", "right", "bottom")}
-            for doc_id, offset, ref, dx, dy, base, blocks, _page_h \
-                    in _iter_page_blocks(cfg, pdf):
-                for blk in blocks:
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["block_order"].append(base + blk.order)
-                    out["kind"].append(blk.kind)
-                    out["text"].append(blk.text if cfg.recognize else None)
-                    out["media_ref"].append(ref)
-                    out["left"].append(blk.left + dx)
-                    out["top"].append(blk.top + dy)
-                    out["right"].append(blk.right + dx)
-                    out["bottom"].append(blk.bottom + dy)
-            yield pd.DataFrame(out)
+            yield pd.DataFrame.from_records(
+                rows(cfg, _iter_page_blocks(cfg, pdf)), columns=columns)
 
     return kernel
 
@@ -246,14 +218,24 @@ def _work_frame(docs: DataFrame, media: DataFrame, cfg: ExtractConfig,
     return work, text_pass
 
 
-def _extracted_blocks(docs: DataFrame, media: DataFrame,
-                      cfg: ExtractConfig,
-                      zones: DataFrame | None = None
-                      ) -> tuple[DataFrame, DataFrame]:
-    """(per-block kernel output incl. geometry, text pass-through spans)."""
-    work, text_pass = _work_frame(docs, media, cfg, zones)
-    extracted = work.mapInPandas(_page_kernel(cfg), schema=EXTRACTED_SCHEMA)
-    return extracted, text_pass
+def _view(docs: DataFrame, media: DataFrame, cfg: ExtractConfig | None,
+          zones: DataFrame | None, schema: str, rows) -> DataFrame:
+    """One kernel pass over the work frame, flattened by `rows` into
+    `schema` — every view shares the plan up to the kernel: same explode,
+    same salted media join, same partitioning."""
+    cfg = cfg or ExtractConfig()
+    work, _ = _work_frame(docs, media, cfg, zones)
+    return work.mapInPandas(_kernel(cfg, schema, rows), schema=schema)
+
+
+def _block_rows(cfg: ExtractConfig, pages):
+    """EXTRACTED_SCHEMA: one row per layout block."""
+    for doc_id, offset, ref, dx, dy, base, blocks, *_ in pages:
+        for blk in blocks:
+            yield (doc_id, offset, base + blk.order, blk.kind,
+                   blk.text if cfg.recognize else None, ref,
+                   blk.left + dx, blk.top + dy, blk.right + dx,
+                   blk.bottom + dy)
 
 
 def extract(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -264,7 +246,9 @@ def extract(spark: SparkSession, docs: DataFrame, media: DataFrame,
     `zones` (ZONES_SCHEMA) optionally overrides segmentation per media_ref
     (S10 zone-file source)."""
     cfg = cfg or ExtractConfig()
-    extracted, text_pass = _extracted_blocks(docs, media, cfg, zones)
+    work, text_pass = _work_frame(docs, media, cfg, zones)
+    extracted = work.mapInPandas(_kernel(cfg, EXTRACTED_SCHEMA, _block_rows),
+                                 schema=EXTRACTED_SCHEMA)
 
     unioned = extracted.drop("left", "top", "right", "bottom") \
         .unionByName(text_pass)
@@ -283,51 +267,21 @@ def extract_blocks(spark: SparkSession, docs: DataFrame, media: DataFrame,
     GetTSVText level/left/top/width/height; hocrrenderer.cpp:123 bbox).
     Text spans are not included; this is the page-geometry sidecar of
     `extract`, sharing the same plan up to the kernel."""
-    cfg = cfg or ExtractConfig()
-    extracted, _ = _extracted_blocks(docs, media, cfg)
-    return extracted.select(
-        "doc_id", "offset", "block_order", "kind", "text", "media_ref",
-        "left", "top", "right", "bottom")
+    return _view(docs, media, cfg, None, EXTRACTED_SCHEMA, _block_rows)
 
 
-def _word_kernel(cfg: ExtractConfig):
-    """mapInPandas kernel emitting one row per recognized WORD (the level-5
-    output of GetTSVText, baseapi.cpp:2205): paragraph/line/word numbering
-    comes from the page kernel's wired paragraph detector (W6,
+def _word_rows(cfg: ExtractConfig, pages):
+    """WORDS_SCHEMA: one row per recognized WORD (the level-5 output of
+    GetTSVText, baseapi.cpp:2205): paragraph/line/word numbering comes from
+    the page kernel's wired paragraph detector (W6,
     DetectParagraphs-in-Recognize, baseapi.cpp:1417)."""
-    cols = ("doc_id", "offset", "block_order", "para_num", "line_num",
-            "word_num", "word", "media_ref", "left", "top", "right",
-            "bottom", "conf", "x_size", "base_slope", "base_off")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, offset, ref, dx, dy, base, blocks, _page_h \
-                    in _iter_page_blocks(cfg, pdf):
-                for blk in blocks:
-                    if not blk.words:
-                        continue
-                    for (p, ln, wn, wtext, wl, wt, wr, wb, conf, _syms,
-                         (xs, bsl, boff)) in blk.words:
-                        out["doc_id"].append(doc_id)
-                        out["offset"].append(offset)
-                        out["block_order"].append(base + blk.order)
-                        out["para_num"].append(p)
-                        out["line_num"].append(ln)
-                        out["word_num"].append(wn)
-                        out["word"].append(wtext)
-                        out["media_ref"].append(ref)
-                        out["left"].append(wl + dx)
-                        out["top"].append(wt + dy)
-                        out["right"].append(wr + dx)
-                        out["bottom"].append(wb + dy)
-                        out["conf"].append(conf)
-                        out["x_size"].append(xs)
-                        out["base_slope"].append(bsl)
-                        out["base_off"].append(boff)
-            yield pd.DataFrame(out)
-
-    return kernel
+    for doc_id, offset, ref, dx, dy, base, blocks, *_ in pages:
+        for blk in blocks:
+            for (p, ln, wn, wtext, wl, wt, wr, wb, conf, _syms,
+                 (xs, bsl, boff)) in blk.words or ():
+                yield (doc_id, offset, base + blk.order, p, ln, wn, wtext,
+                       ref, wl + dx, wt + dy, wr + dx, wb + dy, conf,
+                       xs, bsl, boff)
 
 
 def extract_words(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -337,12 +291,10 @@ def extract_words(spark: SparkSession, docs: DataFrame, media: DataFrame,
     block/paragraph/line/word position and bounding box — the full renderer
     depth of the reference's TSV/hOCR (GetTSVText levels 3-5
     baseapi.cpp:2205; hOCR ocrx_word hocrrenderer.cpp:136). Shares the plan
-    with `extract` up to the kernel: same explode, same salted media join,
-    same partitioning — one kernel pass over the corpus. Zone-override
-    pages carry words too (inner sub-blocks number as paragraphs)."""
-    cfg = cfg or ExtractConfig()
-    work, _ = _work_frame(docs, media, cfg, zones)
-    return work.mapInPandas(_word_kernel(cfg), schema=WORDS_SCHEMA)
+    with `extract` up to the kernel — one kernel pass over the corpus.
+    Zone-override pages carry words too (inner sub-blocks number as
+    paragraphs)."""
+    return _view(docs, media, cfg, zones, WORDS_SCHEMA, _word_rows)
 
 
 # symbol-level sidecar (the RIL_SYMBOL depth of GetBoxText,
@@ -356,44 +308,18 @@ SYMBOLS_SCHEMA = (
 )
 
 
-def _symbol_kernel(cfg: ExtractConfig):
-    """mapInPandas kernel emitting one row per decoded SYMBOL (character) —
-    the RIL_SYMBOL iteration GetBoxText performs (baseapi.cpp:2391-2422).
+def _symbol_rows(cfg: ExtractConfig, pages):
+    """SYMBOLS_SCHEMA: one row per decoded SYMBOL (character) — the
+    RIL_SYMBOL iteration GetBoxText performs (baseapi.cpp:2391-2422).
     Symbol boxes come straight from the decode cells the kernel matched
     (page.py _decode_row), so char i of a word's text is row i's `ch`."""
-    cols = ("doc_id", "offset", "block_order", "para_num", "line_num",
-            "word_num", "sym_num", "ch", "media_ref", "left", "top",
-            "right", "bottom", "conf", "page_h")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, offset, ref, dx, dy, base, blocks, page_h \
-                    in _iter_page_blocks(cfg, pdf):
-                for blk in blocks:
-                    if not blk.words:
-                        continue
-                    for (p, ln, wn, _wtext, _wl, _wt, _wr, _wb, _conf,
-                         syms, _lmeta) in blk.words:
-                        for si, (ch, sl, st, sr, sb, sc) in enumerate(syms):
-                            out["doc_id"].append(doc_id)
-                            out["offset"].append(offset)
-                            out["block_order"].append(base + blk.order)
-                            out["para_num"].append(p)
-                            out["line_num"].append(ln)
-                            out["word_num"].append(wn)
-                            out["sym_num"].append(si)
-                            out["ch"].append(ch)
-                            out["media_ref"].append(ref)
-                            out["left"].append(sl + dx)
-                            out["top"].append(st + dy)
-                            out["right"].append(sr + dx)
-                            out["bottom"].append(sb + dy)
-                            out["conf"].append(sc)
-                            out["page_h"].append(page_h)
-            yield pd.DataFrame(out)
-
-    return kernel
+    for doc_id, offset, ref, dx, dy, base, blocks, page_h, *_ in pages:
+        for blk in blocks:
+            for (p, ln, wn, *_w, syms, _lmeta) in blk.words or ():
+                for si, (ch, sl, st, sr, sb, sc) in enumerate(syms):
+                    yield (doc_id, offset, base + blk.order, p, ln, wn, si,
+                           ch, ref, sl + dx, st + dy, sr + dx, sb + dy, sc,
+                           page_h)
 
 
 def extract_symbols(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -403,9 +329,7 @@ def extract_symbols(spark: SparkSession, docs: DataFrame, media: DataFrame,
     its decode-cell box — the data GetBoxText (baseapi.cpp:2391) walks to
     write .box training files. Same plan shape as extract_words: one kernel
     pass, partition-local until the consumer's own fold."""
-    cfg = cfg or ExtractConfig()
-    work, _ = _work_frame(docs, media, cfg, zones)
-    return work.mapInPandas(_symbol_kernel(cfg), schema=SYMBOLS_SCHEMA)
+    return _view(docs, media, cfg, zones, SYMBOLS_SCHEMA, _symbol_rows)
 
 
 # per-page searchable-PDF parts (S8 TessPDFRenderer, reference
@@ -417,47 +341,30 @@ PDF_PAGES_SCHEMA = ("doc_id string, offset int, page_seq int, w int, h int, "
                     "img binary, ops string")
 
 
-def _pdfout_kernel(cfg: ExtractConfig):
-    """mapInPandas kernel emitting one searchable-PDF page part per decoded
-    page: the AddImageHandler unit of the reference's TessPDFRenderer
-    (pdfrenderer.cpp:831) — backdrop image + invisible per-word text layer
+def _pdf_page_rows(cfg: ExtractConfig, pages):
+    """PDF_PAGES_SCHEMA: one searchable-PDF page part per decoded page — the
+    AddImageHandler unit of the reference's TessPDFRenderer
+    (pdfrenderer.cpp:831): backdrop image + invisible per-word text layer
     (3 Tr, pdfrenderer.cpp:375). Decode errors yield no page (there is
     nothing to re-render); page_seq orders a multipage media span's pages
     within its (doc_id, offset) work unit."""
     from ..functions.pdfout import compress_page_image, page_text_ops
 
-    cols = ("doc_id", "offset", "page_seq", "w", "h", "img", "ops")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            last_key, seq = None, 0
-            for doc_id, offset, ref, dx, dy, _base, blocks, page_h, gray, \
-                    page_w in _iter_page_blocks(cfg, pdf, with_images=True):
-                if page_h <= 0 or page_w <= 0:
-                    continue  # decode_error rows carry no renderable page
-                key = (doc_id, offset)
-                seq = seq + 1 if key == last_key else 0
-                last_key = key
-                words: list[tuple] = []
-                for blk in blocks:
-                    if not blk.words:
-                        continue
-                    for (_p, _ln, _wn, wtext, wl, wt, wr, wb, _conf,
-                         _syms, _lmeta) in blk.words:
-                        words.append((wtext, wl + dx, wt + dy,
-                                      wr + dx, wb + dy))
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["page_seq"].append(seq)
-                out["w"].append(page_w)
-                out["h"].append(page_h)
-                out["img"].append(
-                    compress_page_image(gray) if gray is not None else None)
-                out["ops"].append(page_text_ops(words, page_h))
-            yield pd.DataFrame(out)
-
-    return kernel
+    last_key, seq = None, 0
+    for doc_id, offset, _ref, dx, dy, _base, blocks, page_h, gray, \
+            page_w in pages:
+        if page_h <= 0 or page_w <= 0:
+            continue  # decode_error rows carry no renderable page
+        key = (doc_id, offset)
+        seq = seq + 1 if key == last_key else 0
+        last_key = key
+        words = [(wtext, wl + dx, wt + dy, wr + dx, wb + dy)
+                 for blk in blocks
+                 for (_p, _ln, _wn, wtext, wl, wt, wr, wb, *_w)
+                 in blk.words or ()]
+        yield (doc_id, offset, seq, page_w, page_h,
+               compress_page_image(gray) if gray is not None else None,
+               page_text_ops(words, page_h))
 
 
 def extract_pdf_pages(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -467,9 +374,7 @@ def extract_pdf_pages(spark: SparkSession, docs: DataFrame, media: DataFrame,
     pass — same explode/salted-join/partitioning plan as `extract`. Feed to
     sinks.render_pdf for the per-doc assembly; docs whose media all fail to
     decode (or that have no media at all) contribute no pages."""
-    cfg = cfg or ExtractConfig()
-    work, _ = _work_frame(docs, media, cfg, zones)
-    return work.mapInPandas(_pdfout_kernel(cfg), schema=PDF_PAGES_SCHEMA)
+    return _view(docs, media, cfg, zones, PDF_PAGES_SCHEMA, _pdf_page_rows)
 
 
 # structured table cells (C8 v3, StructuredTable semantics — reference
@@ -482,34 +387,16 @@ TABLES_SCHEMA = (
 )
 
 
-def _table_kernel(cfg: ExtractConfig):
-    """mapInPandas kernel emitting one row per structured table cell: the
+def _table_rows(cfg: ExtractConfig, pages):
+    """TABLES_SCHEMA: one row per structured table cell — the
     cell/column-segment view tablerecog.cpp recognizes after tablefind
-    detection — including merged cells, which the flat TAB-joined block
+    detection, including merged cells, which the flat TAB-joined block
     text cannot express."""
-    cols = ("doc_id", "offset", "block_order", "row_idx", "cell_idx",
-            "col_start", "col_span", "cell")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, offset, ref, _dx, _dy, base, blocks, _page_h \
-                    in _iter_page_blocks(cfg, pdf):
-                for blk in blocks:
-                    if not blk.cells:
-                        continue
-                    for (ri, ci, cs, span, text) in blk.cells:
-                        out["doc_id"].append(doc_id)
-                        out["offset"].append(offset)
-                        out["block_order"].append(base + blk.order)
-                        out["row_idx"].append(ri)
-                        out["cell_idx"].append(ci)
-                        out["col_start"].append(cs)
-                        out["col_span"].append(span)
-                        out["cell"].append(text)
-            yield pd.DataFrame(out)
-
-    return kernel
+    for doc_id, offset, _ref, _dx, _dy, base, blocks, *_ in pages:
+        for blk in blocks:
+            for ri, ci, cs, span, text in blk.cells or ():
+                yield (doc_id, offset, base + blk.order, ri, ci, cs, span,
+                       text)
 
 
 def extract_tables(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -519,64 +406,27 @@ def extract_tables(spark: SparkSession, docs: DataFrame, media: DataFrame,
     cell with grid column + span (TABLES_SCHEMA). Same plan shape as the
     other sidecars: one kernel pass, partition-local until the consumer's
     own fold."""
-    cfg = cfg or ExtractConfig()
-    work, _ = _work_frame(docs, media, cfg, zones)
-    return work.mapInPandas(_table_kernel(cfg), schema=TABLES_SCHEMA)
+    return _view(docs, media, cfg, zones, TABLES_SCHEMA, _table_rows)
 
 
-def _hier_kernel(cfg: ExtractConfig):
-    """mapInPandas kernel emitting BOTH hierarchy views in one decode pass:
-    a level='block' row per layout block and a level='word' row per
-    recognized word (see HIERARCHY_SCHEMA)."""
-    cols = ("doc_id", "offset", "block_order", "level", "kind", "text",
-            "media_ref", "left", "top", "right", "bottom",
-            "para_num", "line_num", "word_num", "conf",
-            "x_size", "base_slope", "base_off")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-
-            def emit(doc_id, offset, ref, level, order, kind, text,
-                     l, t, r, b, p=None, ln=None, wn=None, conf=None,
-                     xs=None, bsl=None, boff=None):
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["block_order"].append(order)
-                out["level"].append(level)
-                out["kind"].append(kind)
-                out["text"].append(text)
-                out["media_ref"].append(ref)
-                out["left"].append(l)
-                out["top"].append(t)
-                out["right"].append(r)
-                out["bottom"].append(b)
-                out["para_num"].append(p)
-                out["line_num"].append(ln)
-                out["word_num"].append(wn)
-                out["conf"].append(conf)
-                out["x_size"].append(xs)
-                out["base_slope"].append(bsl)
-                out["base_off"].append(boff)
-
-            for doc_id, offset, ref, dx, dy, base, blocks, _page_h \
-                    in _iter_page_blocks(cfg, pdf):
-                for blk in blocks:
-                    emit(doc_id, offset, ref, "block", base + blk.order,
-                         blk.kind, blk.text if cfg.recognize else None,
-                         blk.left + dx, blk.top + dy,
-                         blk.right + dx, blk.bottom + dy)
-                    if not (blk.words and cfg.recognize):
-                        continue
-                    for (p, ln, wn, wtext, wl, wt, wr, wb, conf, _syms,
-                         (xs, bsl, boff)) in blk.words:
-                        emit(doc_id, offset, ref, "word",
-                             base + blk.order, blk.kind, wtext,
-                             wl + dx, wt + dy, wr + dx, wb + dy,
-                             p, ln, wn, conf, xs, bsl, boff)
-            yield pd.DataFrame(out)
-
-    return kernel
+def _hier_rows(cfg: ExtractConfig, pages):
+    """HIERARCHY_SCHEMA: BOTH hierarchy views in one decode pass — a
+    level='block' row per layout block and a level='word' row per
+    recognized word."""
+    for doc_id, offset, ref, dx, dy, base, blocks, *_ in pages:
+        for blk in blocks:
+            order = base + blk.order
+            yield (doc_id, offset, order, "block", blk.kind,
+                   blk.text if cfg.recognize else None, ref,
+                   blk.left + dx, blk.top + dy, blk.right + dx,
+                   blk.bottom + dy) + (None,) * 7
+            if not cfg.recognize:
+                continue
+            for (p, ln, wn, wtext, wl, wt, wr, wb, conf, _syms,
+                 (xs, bsl, boff)) in blk.words or ():
+                yield (doc_id, offset, order, "word", blk.kind, wtext, ref,
+                       wl + dx, wt + dy, wr + dx, wb + dy,
+                       p, ln, wn, conf, xs, bsl, boff)
 
 
 def extract_hierarchy(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -587,9 +437,7 @@ def extract_hierarchy(spark: SparkSession, docs: DataFrame, media: DataFrame,
     `extract_words` each run their own kernel, so a consumer needing both
     would decode the corpus twice; this frame, persisted and filtered on
     `level`, decodes it once."""
-    cfg = cfg or ExtractConfig()
-    work, _ = _work_frame(docs, media, cfg, zones)
-    return work.mapInPandas(_hier_kernel(cfg), schema=HIERARCHY_SCHEMA)
+    return _view(docs, media, cfg, zones, HIERARCHY_SCHEMA, _hier_rows)
 
 
 def hierarchy_views(h: DataFrame) -> tuple[DataFrame, DataFrame]:

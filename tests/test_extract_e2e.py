@@ -188,3 +188,48 @@ def test_big_media_shuffle_join_path(spark, fixture_set):
     res = extract(spark, docs, media,
                   ExtractConfig(broadcast_media_max_rows=0)).toPandas()
     pd.testing.assert_frame_equal(_norm(res), _norm(truth.toPandas()))
+
+
+def test_views_share_one_page_kernel(spark, fixture_set):
+    """All views flatten the same page kernel: the hierarchy frame splits
+    into exactly the block and word views, the table view carries the
+    merged header cell, and a batch of wordless pages still yields a frame
+    with the view's columns."""
+    from sparkstract.plans.pipeline import (WORDS_SCHEMA, _kernel,
+                                            _word_rows, extract_blocks,
+                                            extract_hierarchy,
+                                            extract_tables, extract_words,
+                                            hierarchy_views)
+
+    docs, media, _ = fixture_set.to_spark(spark)
+    h = extract_hierarchy(spark, docs, media).persist()
+    try:
+        hb, hw = hierarchy_views(h)
+        for got, want, key in (
+                (hb, extract_blocks(spark, docs, media),
+                 ["doc_id", "offset", "block_order"]),
+                (hw, extract_words(spark, docs, media),
+                 ["doc_id", "offset", "block_order", "para_num", "line_num",
+                  "word_num"])):
+            got, want = (f.toPandas().sort_values(key).reset_index(drop=True)
+                         for f in (got, want))
+            assert len(got) > 0
+            pd.testing.assert_frame_equal(got, want)
+    finally:
+        h.unpersist()
+
+    cells = extract_tables(spark, docs, media).toPandas()
+    assert (cells["col_span"] > 1).any()
+
+    m = fixture_set.media
+    batch = pd.DataFrame({
+        "doc_id": ["d-empty_page"], "offset": [1],
+        "media_ref": ["m-empty_page-000007"],
+        "image": list(m[m["media_ref"] == "m-empty_page-000007"]["image"])})
+    (out,) = _kernel(ExtractConfig(), WORDS_SCHEMA, _word_rows)(iter([batch]))
+    assert len(out) == 0
+    assert list(out.columns) == [c.split()[0]
+                                 for c in WORDS_SCHEMA.split(",")]
+    empty = extract_words(spark, docs.filter(F.col("doc_id") == "d-empty_page"),
+                          media)
+    assert empty.count() == 0

@@ -139,28 +139,40 @@ def test_cosine_near_dup_bucketed(emb):
     assert all(a < b for a, b in pairs)
 
 
+def _corrupt_png() -> bytes:
+    """A PNG whose IDAT zlib header is flipped: decode raises zlib.error,
+    not ValueError."""
+    from sparkstract.functions.png import encode_gray
+
+    d = bytearray(encode_gray(np.tile(np.arange(64, dtype=np.uint8), (16, 1))))
+    d[d.index(b"IDAT") + 4] ^= 0xFF
+    return bytes(d)
+
+
 def test_image_features_and_thumbnails(spark, fixture_set):
+    import zlib
+
+    from sparkstract.functions.codecs import decode_gray_any
+
     _, media, _ = fixture_set.to_spark(spark)
-    media = media.limit(4)
+    # plus one corrupt PNG, skipped by both lanes rather than failing them
+    with pytest.raises(zlib.error):
+        decode_gray_any(_corrupt_png())
+    media = media.select("media_ref", "image").limit(4).union(
+        spark.createDataFrame([("m_zlib", bytearray(_corrupt_png()))],
+                              "media_ref string, image binary"))
     feats = multimodal.image_features(media).collect()
     assert len(feats) == 4
     for r in feats:
         assert r["width"] > 0 and r["height"] > 0
         assert 0.0 <= r["ink_ratio"] <= 1.0
     th = multimodal.thumbnails(media, max_side=32).collect()
+    assert len(th) == 4
     from sparkstract.functions.png import decode_gray
     for r in th:
         img = decode_gray(bytes(r["thumb"]))
         assert img.shape == (r["thumb_h"], r["thumb_w"])
         assert max(img.shape) <= 64
-
-
-def test_multimodal_stubs_raise(spark, fixture_set):
-    _, media, _ = fixture_set.to_spark(spark)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_audio(media)
-    with pytest.raises(NotImplementedError):
-        multimodal.sample_video_frames(media)
 
 
 def test_normalize_text_folds_unicode_variants(spark):
@@ -485,15 +497,19 @@ def test_html_metadata_fields(spark):
 
 
 def test_media_decode_report(spark, fixture_set):
+    from sparkstract.functions.raster import encode_gray_ico
     from sparkstract.functions.webp import encode_gray_webp
 
     _, media, _ = fixture_set.to_spark(spark)
     media = media.limit(4)
-    # add one webp (fast-shape) and one undecodable blob
     img = np.tile(np.arange(64, dtype=np.uint8), (16, 1))
+    # add one webp (fast-shape), one undecodable blob, one PNG whose decode
+    # raises zlib.error (not ValueError) and one ICO favicon
     extra = spark.createDataFrame(
         [("m_webp", bytearray(encode_gray_webp(img))),
-         ("m_bad", bytearray(b"\x00garbage-bytes"))],
+         ("m_bad", bytearray(b"\x00garbage-bytes")),
+         ("m_zlib", bytearray(_corrupt_png())),
+         ("m_ico", bytearray(encode_gray_ico(img)))],
         "media_ref string, image binary")
     rep = {(r["format"], r["shape"]): r["n"]
            for r in multimodal.media_decode_report(
@@ -501,4 +517,7 @@ def test_media_decode_report(spark, fixture_set):
     assert rep[("webp", "fast")] == 1
     assert any(f == "unknown" and s.startswith("error:")
                for (f, s) in rep)
-    assert sum(rep.values()) == 6
+    assert any(f == "png" and s.startswith("error: Error -3")
+               for (f, s) in rep)
+    assert rep[("ico", "")] == 1
+    assert sum(rep.values()) == 8
