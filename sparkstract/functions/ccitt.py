@@ -32,7 +32,7 @@ from bisect import bisect_right
 
 import numpy as np
 
-from .tiff import _BitWriter
+from .bits import MsbWriter
 
 # ITU-T T.4 §2.2.2.1 white run-length codes (terminating 0-63).
 _WHITE_TERM = [
@@ -115,11 +115,11 @@ _MAKEUP = (
 )
 _TERM = (_WHITE_TERM, _BLACK_TERM)
 
-def _emit(bw: _BitWriter, code: str) -> None:
+def _emit(bw: MsbWriter, code: str) -> None:
     bw.write(int(code, 2), len(code))
 
 
-def _emit_run(bw: _BitWriter, run: int, color: int) -> None:
+def _emit_run(bw: MsbWriter, run: int, color: int) -> None:
     """One run as (0+ makeup codes) + exactly one terminating code. Runs
     past 2560 repeat the largest extended makeup (T.4 §2.2.2.3 note)."""
     while run >= 64:
@@ -156,7 +156,7 @@ def g4_encode(bits: np.ndarray, align: bool = False) -> bytes:
     if bits.ndim != 2:
         raise ValueError("g4_encode expects an HxW bilevel array")
     h, w = bits.shape
-    bw = _BitWriter()
+    bw = MsbWriter()
     ref: list[int] = []      # imaginary all-white reference line above row 0
     for y in range(h):
         cur = _changes(bits[y])
@@ -485,7 +485,7 @@ def mh_encode(bits: np.ndarray) -> bytes:
     h, w = bits.shape
     out = bytearray()
     for y in range(h):
-        bw = _BitWriter()
+        bw = MsbWriter()
         pos, color = 0, 0
         changes = _changes(bits[y])
         for nxt in changes + [w]:
@@ -537,7 +537,7 @@ def g3_encode(bits: np.ndarray) -> bytes:
     if bits.ndim != 2:
         raise ValueError("g3_encode expects an HxW bilevel array")
     h, w = bits.shape
-    bw = _BitWriter()
+    bw = MsbWriter()
     for y in range(h):
         _emit(bw, _EOL)
         pos, color = 0, 0

@@ -9,8 +9,8 @@ the media column carries genuine encoded bytes, only the codec is minimal.
 Decoder: global/local color tables, interlaced row ordering, multi-frame
 streams (each frame composites onto the logical-screen canvas; transparent
 pixels per the 89a Graphic Control Extension leave the canvas unchanged),
-palette collapsed to BT.601 luma. GIF-LZW is LSB-first with the width bump
-at table-full (2^w), unlike TIFF-LZW's MSB-first early change.
+palette collapsed to BT.601 luma. GIF-LZW (functions/bits.py) is LSB-first
+with the width bump at table-full (2^w), unlike TIFF-LZW's early change.
 
 Encoder (fixture side): single- or multi-frame, optional interlace, one
 global palette — so tests carry genuine GIF bytes through the pipeline.
@@ -22,131 +22,8 @@ import struct
 
 import numpy as np
 
+from .bits import lzw_decode, lzw_encode
 from .png import _luma
-
-
-# ------------------------------------------------------------------- LZW
-
-
-class _LsbWriter:
-    def __init__(self) -> None:
-        self._acc = 0
-        self._nbits = 0
-        self._out = bytearray()
-
-    def write(self, code: int, width: int) -> None:
-        self._acc |= code << self._nbits
-        self._nbits += width
-        while self._nbits >= 8:
-            self._out.append(self._acc & 0xFF)
-            self._acc >>= 8
-            self._nbits -= 8
-
-    def bytes(self) -> bytes:
-        if self._nbits:
-            self._out.append(self._acc & 0xFF)
-            self._acc = self._nbits = 0
-        return bytes(self._out)
-
-
-class _LsbReader:
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0
-        self._acc = 0
-        self._nbits = 0
-
-    def read(self, width: int) -> int | None:
-        while self._nbits < width:
-            if self._pos >= len(self._data):
-                return None
-            self._acc |= self._data[self._pos] << self._nbits
-            self._pos += 1
-            self._nbits += 8
-        v = self._acc & ((1 << width) - 1)
-        self._acc >>= width
-        self._nbits -= width
-        return v
-
-
-def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    out = _LsbWriter()
-
-    def fresh():
-        return ({bytes([i]): i for i in range(1 << min_code_size)},
-                eoi + 1, min_code_size + 1)
-
-    table, next_code, width = fresh()
-    out.write(clear, width)
-    w = b""
-    for byte in indices:
-        c = bytes([byte])
-        wc = w + c
-        if wc in table:
-            w = wc
-            continue
-        out.write(table[w], width)
-        table[wc] = next_code
-        next_code += 1
-        if next_code == (1 << width) + 1 and width < 12:
-            # GIF width bump: the encoder emits at the OLD width until the
-            # table actually outgrows it (no TIFF-style early change)
-            width += 1
-        w = c
-        if next_code >= 4095:
-            out.write(table[w], width)
-            out.write(clear, width)
-            table, next_code, width = fresh()
-            w = b""
-    if w:
-        out.write(table[w], width)
-    out.write(eoi, width)
-    return out.bytes()
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int,
-                    max_out: int | None = None) -> bytes:
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    br = _LsbReader(data)
-    out = bytearray()
-
-    def fresh():
-        return ({i: bytes([i]) for i in range(1 << min_code_size)},
-                eoi + 1, min_code_size + 1)
-
-    table, next_code, width = fresh()
-    prev: bytes | None = None
-    while True:
-        code = br.read(width)
-        if code is None or code == eoi:
-            break
-        if code == clear:
-            table, next_code, width = fresh()
-            prev = None
-            continue
-        if prev is None:
-            if code not in table:
-                raise ValueError("corrupt GIF LZW stream")
-            entry = table[code]
-        else:
-            if code < next_code:
-                entry = table[code]
-            elif code == next_code:  # KwKwK
-                entry = prev + prev[:1]
-            else:
-                raise ValueError("corrupt GIF LZW stream")
-            if next_code < 4096:
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-        out += entry
-        prev = entry
-        if max_out is not None and len(out) > max_out:
-            # decompression-bomb guard: a crafted stream expands ~4096x
-            raise ValueError("GIF LZW output exceeds frame size")
-    return bytes(out)
 
 
 # --------------------------------------------------------------- encoder
@@ -190,7 +67,8 @@ def encode_gif(frames: list[np.ndarray] | np.ndarray,
         rows = img[_interlace_order(h)] if interlace else img
         min_code = max(2, bits)
         out.append(min_code)
-        enc = _gif_lzw_encode(rows.tobytes(), min_code)
+        enc = lzw_encode(rows.tobytes(), early=0, lsb=True,
+                         min_bits=min_code)
         for k in range(0, len(enc), 255):
             chunk = enc[k:k + 255]
             out.append(len(chunk))
@@ -272,8 +150,8 @@ def _decode_gray_gif(data: bytes) -> list[np.ndarray]:
             enc += data[pos:pos + size]
             pos += size
         idx = np.frombuffer(
-            _gif_lzw_decode(bytes(enc), min_code,
-                            max_out=fw * fh + 4096)[:fw * fh],
+            lzw_decode(bytes(enc), early=0, lsb=True, min_bits=min_code,
+                       max_out=fw * fh + 4096)[:fw * fh],
             dtype=np.uint8)
         if len(idx) < fw * fh:
             raise ValueError("truncated GIF frame")

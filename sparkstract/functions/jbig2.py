@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .bits import MsbWriter, canonical_codes
 from .ccitt import g4_decode, g4_encode
 from .jp2 import MQDecoder, MQEncoder
 
@@ -434,36 +435,6 @@ class _MsbReader:
         return b
 
 
-class _MsbWriter:
-    """Fixture-side mirror of _MsbReader."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                self.acc = 0
-                self.nbits = 0
-
-    def align(self) -> None:
-        while self.nbits:
-            self.write(0, 1)
-
-    def put_aligned(self, data: bytes) -> None:
-        self.align()
-        self.out += data
-
-    def bytes(self) -> bytes:
-        self.align()
-        return bytes(self.out)
-
-
 class _HuffTable:
     """One assigned Annex-B table: lines in SPEC order, each
     (preflen, rangelen, rangelow, kind) with kind 'n' normal /
@@ -473,19 +444,9 @@ class _HuffTable:
 
     def __init__(self, lines: tuple) -> None:
         self.lines = [ln for ln in lines if ln[0] > 0]
-        counts: dict[int, int] = {}
-        for ln in self.lines:
-            counts[ln[0]] = counts.get(ln[0], 0) + 1
-        self.maxlen = max(counts)
-        cur = {1: 0}
-        fc = 0
-        for length in range(1, self.maxlen + 1):
-            fc = (fc + counts.get(length - 1, 0)) << 1
-            cur[length] = fc
-        self.codes = []
-        for ln in self.lines:
-            self.codes.append((ln[0], cur[ln[0]], ln))
-            cur[ln[0]] += 1
+        self.maxlen = max(ln[0] for ln in self.lines)
+        self.codes = [(length, code, ln) for (code, length), ln in zip(
+            canonical_codes([ln[0] for ln in self.lines]), self.lines)]
         self.dec = {(length, code): ln for length, code, ln in self.codes}
 
     def decode(self, br: _MsbReader) -> int | None:
@@ -508,7 +469,7 @@ class _HuffTable:
                 return rangelow + br.read(32)
             return rangelow + br.read(rangelen)
 
-    def encode(self, bw: _MsbWriter, value: int | None) -> None:
+    def encode(self, bw: MsbWriter, value: int | None) -> None:
         """Fixture-side mirror: first matching line in table order."""
         if value is None:
             for length, code, ln in self.codes:
@@ -603,25 +564,12 @@ class _PrefixCode:
     __slots__ = ("dec", "enc", "maxlen")
 
     def __init__(self, lengths: list[int]) -> None:
-        counts: dict[int, int] = {}
-        for ln in lengths:
-            if ln:
-                counts[ln] = counts.get(ln, 0) + 1
-        if not counts:
+        if not any(lengths):
             raise ValueError("JBIG2 empty prefix code")
-        self.maxlen = max(counts)
-        cur = {}
-        fc = 0
-        for length in range(1, self.maxlen + 1):
-            fc = (fc + counts.get(length - 1, 0)) << 1
-            cur[length] = fc
-        self.dec = {}
-        self.enc = {}
-        for sym, ln in enumerate(lengths):
-            if ln:
-                self.dec[(ln, cur[ln])] = sym
-                self.enc[sym] = (cur[ln], ln)
-                cur[ln] += 1
+        self.maxlen = max(lengths)
+        self.enc = {sym: cl for sym, cl in enumerate(canonical_codes(lengths))
+                    if cl}
+        self.dec = {(ln, code): sym for sym, (code, ln) in self.enc.items()}
 
     def decode(self, br: _MsbReader) -> int:
         code = 0
@@ -1638,7 +1586,7 @@ def _encode_symbol_dict_huffman(number: int, syms: list,
     (BMSIZE=0) per `collective`."""
     dh, dw = _STD_TABLES["B4"], _STD_TABLES["B2"]
     b1 = _STD_TABLES["B1"]
-    bw = _MsbWriter()
+    bw = MsbWriter()
     hcheight = 0
     i = 0
     while i < len(syms):
@@ -1680,7 +1628,7 @@ def _encode_text_region_huffman(number: int, dict_seg: int, w: int, h: int,
     symbol the same length ceil(log2(n)) via a single run-code."""
     n = len(syms)
     fs, ds, dt = _STD_TABLES["B6"], _STD_TABLES["B8"], _STD_TABLES["B11"]
-    bw = _MsbWriter()
+    bw = MsbWriter()
     # §7.4.3.1.7 symbol ID code: one runcode (the shared length L) with a
     # 1-bit prefix; n occurrences of it spell the per-symbol lengths
     sym_len = max(1, (n - 1).bit_length())

@@ -39,6 +39,7 @@ import math
 
 import numpy as np
 
+from .bits import canonical_codes
 from .raster import apply_exif_orientation
 
 # ---------------------------------------------------------------- tables
@@ -113,17 +114,15 @@ def _scaled_quant(quality: int) -> np.ndarray:
     return np.clip(tbl, 1, 255).astype(np.int32)
 
 
-def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length) with JPEG canonical assignment."""
-    out: dict[int, tuple[int, int]] = {}
-    code, k = 0, 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            out[vals[k]] = (code, ln)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+    """symbol -> (code, length): BITS[i] codes of length i + 1, assigned
+    to the HUFFVAL symbols in order (T.81 Annex C)."""
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    return {vals[k]: cl for k, cl in enumerate(canonical_codes(lengths))}
+
+
+_DC_CODES = _huff_codes(_DC_BITS, _DC_VALS)
+_AC_CODES = _huff_codes(_AC_BITS, _AC_VALS)
 
 
 def _decode_table(bits: list[int], vals: list[int]) -> tuple[list, dict]:
@@ -133,7 +132,7 @@ def _decode_table(bits: list[int], vals: list[int]) -> tuple[list, dict]:
     so a malformed table's unreachable or overwritten codes stay
     unreachable in both."""
     codes = {(ln, code): sym
-             for sym, (code, ln) in _canonical_codes(bits, vals).items()}
+             for sym, (code, ln) in _huff_codes(bits, vals).items()}
     look = [0] * 256
     for (ln, code), sym in codes.items():
         if ln <= 8 and code < (1 << ln):
@@ -221,9 +220,6 @@ def encode_gray_jpeg(img: np.ndarray, quality: int = 90,
     q = np.round(coef / quant).astype(np.int32)
     zz = q.reshape(nby, nbx, 64)[:, :, _ZZ_FLAT]
 
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
-
     ncomp = 3 if color else 1
     out = bytearray(b"\xff\xd8")                                    # SOI
     out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
@@ -270,10 +266,10 @@ def encode_gray_jpeg(img: np.ndarray, quality: int = 90,
                 rst += 1
                 preds = [0] * ncomp
             preds[0] = _encode_block(bw, zz[by, bx], preds[0],
-                                     dc_codes, ac_codes)
+                                     _DC_CODES, _AC_CODES)
             for c in range(1, ncomp):
                 preds[c] = _encode_block(bw, zero_zz, preds[c],
-                                         dc_codes, ac_codes)
+                                         _DC_CODES, _AC_CODES)
             mcu += 1
     bw.pad_align()
     out += bw.out
@@ -310,8 +306,6 @@ def encode_cmyk_jpeg(cmyk: np.ndarray, quality: int = 90,
     else:
         planes = [stored[:, :, i] for i in range(4)]
     quant = _scaled_quant(quality)
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
     ph, pw = -h % 8, -w % 8
     zzs = []
     for plane in planes:
@@ -349,7 +343,7 @@ def encode_cmyk_jpeg(cmyk: np.ndarray, quality: int = 90,
         for bx in range(nbx):
             for c in range(4):
                 preds[c] = _encode_block(bw, zzs[c][by, bx], preds[c],
-                                         dc_codes, ac_codes)
+                                         _DC_CODES, _AC_CODES)
     bw.pad_align()
     out += bw.out
     out += b"\xff\xd9"                                              # EOI
@@ -456,8 +450,6 @@ def encode_progressive_jpeg(img: np.ndarray, quality: int = 90,
     q = np.round(coef / quant).astype(np.int32)
     zz = q.reshape(nby, nbx, 64)[:, :, _ZZ_FLAT].reshape(-1, 64)
 
-    dc_codes = _canonical_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _canonical_codes(_AC_BITS, _AC_VALS)
     script = list(_DEFAULT_SCRIPT if script is None else script)
     ncomp = 3 if color else 1
 
@@ -495,7 +487,7 @@ def encode_progressive_jpeg(img: np.ndarray, quality: int = 90,
                         diff = v - preds[c]
                         preds[c] = v
                         s = abs(diff).bit_length()
-                        code, ln = dc_codes[s]
+                        code, ln = _DC_CODES[s]
                         bw.put(code, ln)
                         if s:
                             bw.put(diff if diff >= 0
@@ -511,9 +503,9 @@ def encode_progressive_jpeg(img: np.ndarray, quality: int = 90,
                 for b in range(len(zz)):
                     blk = zz[b] if c == 0 else zero
                     if ah == 0:
-                        _enc_ac_first(bw, blk, ss, se, al, ac_codes)
+                        _enc_ac_first(bw, blk, ss, se, al, _AC_CODES)
                     else:
-                        _enc_ac_refine(bw, blk, ss, se, al, ac_codes)
+                        _enc_ac_refine(bw, blk, ss, se, al, _AC_CODES)
                 bw.pad_align()
                 out += bw.out
     out += b"\xff\xd9"

@@ -15,10 +15,10 @@ Scope (named errors at the seam for everything else, like codecs.py):
   (/W-field rows, /Index spans), /Prev chains, incremental updates,
   hybrid /XRefStm files, and object streams (/ObjStm) — the layout every
   modern producer writes
-- stream filters: none / FlateDecode (stdlib zlib) / LZWDecode (the
-  TIFF-LZW early-change variant) / ASCIIHexDecode / ASCII85Decode /
-  RunLengthDecode, chained per ISO 32000 §7.4, with /DecodeParms PNG
-  (10-15) and TIFF (2) predictors
+- stream filters: none / FlateDecode (stdlib zlib) / LZWDecode
+  (functions/bits.py, /EarlyChange 1 or 0) / ASCIIHexDecode /
+  ASCII85Decode / RunLengthDecode, chained per ISO 32000 §7.4, with
+  /DecodeParms PNG (10-15) and TIFF (2) predictors
 - text: BT/ET, Tf, TL, Td, TD, Tm, T*, Tj, ', ", TJ with kerning,
   Tc/Tw/Tz/Ts char-, word-spacing, horizontal scale and rise (§9.4.4);
   /FirstChar+/Widths proportional metrics with a fixed-advance
@@ -971,10 +971,10 @@ def _filter_chain(filters: list, raw: bytes, parms: list | None = None,
                 raise ValueError("PDF stream exceeds the inflate cap")
             raw = out
         elif f in ("/LZWDecode", "/LZW"):
-            from .tiff import _lzw_decode  # same MSB-first LZW machinery
+            from .bits import lzw_decode
 
-            early = not (pm and int(deref(pm.get("/EarlyChange", 1))) == 0)
-            raw = _lzw_decode(raw, max_out=_MAX_STREAM, early=early)
+            early = int(deref((pm or {}).get("/EarlyChange", 1))) != 0
+            raw = lzw_decode(raw, early=early, max_out=_MAX_STREAM)
         elif f in ("/ASCIIHexDecode", "/AHx"):
             raw = _ascii_hex_decode(raw)
         elif f in ("/ASCII85Decode", "/A85"):

@@ -27,143 +27,16 @@ import struct
 
 import numpy as np
 
+from .bits import lzw_decode, lzw_encode
 from .raster import apply_exif_orientation
 
-_CLEAR, _EOI = 256, 257
 _TYPE_SIZE = {1: 1, 3: 2, 4: 4, 7: 1}  # BYTE, SHORT, LONG, UNDEFINED
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self._acc = 0
-        self._nbits = 0
-        self._out = bytearray()
-
-    def write(self, code: int, width: int) -> None:
-        self._acc = (self._acc << width) | code
-        self._nbits += width
-        while self._nbits >= 8:
-            self._nbits -= 8
-            self._out.append((self._acc >> self._nbits) & 0xFF)
-
-    def align(self) -> None:
-        if self._nbits:
-            self.write(0, 8 - self._nbits)
-
-    def bytes(self) -> bytes:
-        if self._nbits:
-            self._out.append((self._acc << (8 - self._nbits)) & 0xFF)
-            self._acc = self._nbits = 0
-        return bytes(self._out)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0
-        self._acc = 0
-        self._nbits = 0
-
-    def read(self, width: int) -> int | None:
-        while self._nbits < width:
-            if self._pos >= len(self._data):
-                return None
-            self._acc = (self._acc << 8) | self._data[self._pos]
-            self._pos += 1
-            self._nbits += 8
-        self._nbits -= width
-        return (self._acc >> self._nbits) & ((1 << width) - 1)
-
-
-def _lzw_encode(data: bytes, early: bool = True) -> bytes:
-    """TIFF-LZW (TIFF6 §13): 9→12-bit codes, MSB-first, EARLY width change
-    (the encoder bumps the code width one entry before the table actually
-    needs it, because the decoder's table lags one entry behind).
-    `early=False` is the PDF /EarlyChange 0 variant: the bump comes one
-    entry later (at the true 2^w boundary)."""
-    out = _BitWriter()
-
-    def fresh() -> tuple[dict[bytes, int], int, int]:
-        return {bytes([i]): i for i in range(256)}, 258, 9
-
-    table, next_code, width = fresh()
-    out.write(_CLEAR, width)
-    w = b""
-    for byte in data:
-        c = bytes([byte])
-        wc = w + c
-        if wc in table:
-            w = wc
-            continue
-        out.write(table[w], width)
-        table[wc] = next_code
-        next_code += 1
-        if next_code == (1 << width) - (1 if early else 0) and width < 12:
-            width += 1
-        w = c
-        if next_code >= 4094:  # table nearly full → flush + reset
-            out.write(table[w], width)
-            out.write(_CLEAR, width)
-            table, next_code, width = fresh()
-            w = b""
-    if w:
-        out.write(table[w], width)
-    out.write(_EOI, width)
-    return out.bytes()
-
-
-def _lzw_decode(data: bytes, max_out: int | None = None,
-                early: bool = True) -> bytes:
-    """`max_out` caps the decoded size (callers know the raster size):
-    without it a crafted stream expands ~4096x — a decompression bomb
-    inside an executor task. `early=False` is PDF /EarlyChange 0: the
-    width bump comes one table entry later."""
-    br = _BitReader(data)
-    out = bytearray()
-
-    def fresh() -> tuple[dict[int, bytes], int, int]:
-        return {i: bytes([i]) for i in range(256)}, 258, 9
-
-    table, next_code, width = fresh()
-    prev: bytes | None = None
-    while True:
-        code = br.read(width)
-        if code is None or code == _EOI:
-            break
-        if code == _CLEAR:
-            table, next_code, width = fresh()
-            prev = None
-            continue
-        if prev is None:
-            entry = table[code]
-        else:
-            if code < next_code:
-                entry = table[code]
-            elif code == next_code:  # the KwKwK case
-                entry = prev + prev[:1]
-            else:
-                raise ValueError("corrupt LZW stream")
-            table[next_code] = prev + entry[:1]
-            next_code += 1
-            # early change, decoder side: the decoder's table lags the
-            # encoder's by exactly one entry (the first code after a clear
-            # adds nothing), so it must bump the width one entry earlier
-            # than the encoder's 2^w - 1 — at 510/1022/2046 (libtiff's
-            # maxcode-1 rule)
-            if next_code == (1 << width) - (2 if early else 1) \
-                    and width < 12:
-                width += 1
-        out += entry
-        prev = entry
-        if max_out is not None and len(out) > max_out:
-            raise ValueError("LZW output exceeds expected raster size")
-    return bytes(out)
 
 
 def _inflate(data: bytes, expect: int) -> bytes:
     """Deflate strip/tile (TIFF compression 8, Adobe; 32946 legacy alias):
     zlib-wrapped, capped at the declared raster size — the same
-    decompression-bomb guard as _lzw_decode."""
+    decompression-bomb guard as LZW's max_out."""
     import zlib
 
     dec = zlib.decompressobj()
@@ -262,7 +135,8 @@ def encode_gray_tiff(pages: list[np.ndarray] | np.ndarray,
                     else:
                         import zlib as _z
 
-                        blob = {1: lambda b: b, 5: _lzw_encode,
+                        blob = {1: lambda b: b,
+                                5: lambda b: lzw_encode(b, early=1),
                                 8: _z.compress,
                                 32773: _packbits_encode}[comp_id](
                                     t.tobytes())
@@ -320,7 +194,8 @@ def encode_gray_tiff(pages: list[np.ndarray] | np.ndarray,
             import zlib as _z
 
             raw = img.tobytes()
-            strip = {1: lambda b: b, 5: _lzw_encode,
+            strip = {1: lambda b: b,
+                     5: lambda b: lzw_encode(b, early=1),
                      8: _z.compress,
                      32773: _packbits_encode}[comp_id](raw)
         if comp_id == 7:
@@ -501,7 +376,8 @@ def _assemble_tiles(data: bytes, tags: dict, w: int, h: int, nsamp: int,
         else:
             expect = tl * stride if bilevel else tl * tw * nsamp
             undo = {1: lambda b: b,
-                    5: lambda b, _e=expect: _lzw_decode(b, max_out=_e),
+                    5: lambda b, _e=expect: lzw_decode(b, early=1,
+                                                       max_out=_e),
                     8: lambda b, _e=expect: _inflate(b, _e),
                     32773: _packbits_decode}[comp]
             body = undo(body)
@@ -658,7 +534,7 @@ def decode_gray_tiff(data: bytes) -> list[np.ndarray]:
             expect = (h * ((w + 7) // 8) if bilevel
                       else h * w * nsamp * (2 if deep else 1))
             undo = {1: lambda b: b,
-                    5: lambda b: _lzw_decode(b, max_out=expect),
+                    5: lambda b: lzw_decode(b, early=1, max_out=expect),
                     8: lambda b: _inflate(b, expect),
                     32773: _packbits_decode}[comp]
             raw = b"".join(undo(data[o : o + c]) for o, c in zip(offs, cnts))

@@ -49,6 +49,8 @@ from collections import Counter
 
 import numpy as np
 
+from .bits import LsbWriter, canonical_codes
+
 # Per-worker decode-shape telemetry: which entropy-image path each main
 # image took. "fast" is the bit-buffer loop; everything else falls back to
 # the per-pixel generic loop, whose cost is ~6x — a hostile crawl segment
@@ -90,34 +92,6 @@ class _LsbReader:
         return (chunk >> (b & 7)) & 0x7FFF
 
 
-class _LsbWriter:
-    __slots__ = ("_acc", "_n", "_out")
-
-    def __init__(self) -> None:
-        self._acc = 0
-        self._n = 0
-        self._out = bytearray()
-
-    def write(self, value: int, n: int) -> None:
-        self._acc |= (value & ((1 << n) - 1)) << self._n
-        self._n += n
-        while self._n >= 8:
-            self._out.append(self._acc & 0xFF)
-            self._acc >>= 8
-            self._n -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        """Prefix-code bits go to the stream MSB-first (DEFLATE rule)."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def bytes(self) -> bytes:
-        out = bytes(self._out)
-        if self._n:
-            out += bytes([self._acc & 0xFF])
-        return out
-
-
 # ------------------------------------------------------------ prefix codes
 
 # §5.2.2: order in which code-length-code lengths are stored
@@ -155,17 +129,8 @@ class _Prefix:
             self.mask = 0
             return
         self.single = None
-        # canonical assignment (DEFLATE): sort by (length, symbol)
         if max(ln for _, ln in live) > _MAX_CODE_LEN:
             raise ValueError("VP8L code length exceeds 15")
-        bl_count = [0] * (_MAX_CODE_LEN + 1)
-        for _, ln in live:
-            bl_count[ln] += 1
-        code = 0
-        next_code = [0] * (_MAX_CODE_LEN + 2)
-        for ln in range(1, _MAX_CODE_LEN + 1):
-            code = (code + bl_count[ln - 1]) << 1
-            next_code[ln] = code
         self.max_len = max(ln for _, ln in live)
         # Kraft check — an over-subscribed code is a corrupt stream
         kraft = sum(1 << (self.max_len - ln) for _, ln in live)
@@ -178,9 +143,8 @@ class _Prefix:
         size = 1 << self.max_len
         self.mask = size - 1
         table = [None] * size
-        for sym, ln in sorted(live, key=lambda t: (t[1], t[0])):
-            c = next_code[ln]
-            next_code[ln] += 1
+        codes = canonical_codes([ln for _, ln in live])
+        for (sym, ln), (c, _) in zip(live, codes):
             r = _rev(c, ln)
             step = 1 << ln
             for f in range(r, size, step):
@@ -1072,19 +1036,7 @@ def _huffman_lengths(freq: dict[int, int], max_len: int) -> dict[int, int]:
     return depth
 
 
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    last_len = 0
-    for sym, ln in sorted(lengths.items(), key=lambda t: (t[1], t[0])):
-        code <<= ln - last_len
-        out[sym] = (code, ln)
-        code += 1
-        last_len = ln
-    return out
-
-
-def _write_simple_code(bw: _LsbWriter, symbol: int) -> None:
+def _write_simple_code(bw: LsbWriter, symbol: int) -> None:
     bw.write(1, 1)          # simple
     bw.write(0, 1)          # one symbol
     if symbol < 2:
@@ -1095,7 +1047,7 @@ def _write_simple_code(bw: _LsbWriter, symbol: int) -> None:
         bw.write(symbol, 8)
 
 
-def _write_full_code(bw: _LsbWriter, lengths: dict[int, int],
+def _write_full_code(bw: LsbWriter, lengths: dict[int, int],
                      alphabet: int) -> None:
     """Code-length-coded prefix code (§5.2.2), 0-runs via 17/18."""
     seq: list[int] = []
@@ -1132,7 +1084,7 @@ def _write_full_code(bw: _LsbWriter, lengths: dict[int, int],
         # canonical code is well-formed at length 1
         only = next(iter(clc_freq))
         clc_len = {only: 1, (only + 1) % 19: 1}
-    clc_codes = _canonical_codes(clc_len)
+    clc_codes = canonical_codes([clc_len.get(i, 0) for i in range(19)])
     bw.write(0, 1)   # not simple
     n_clc = max(i for i, sym in enumerate(_CLC_ORDER)
                 if clc_len.get(sym, 0)) + 1
@@ -1159,7 +1111,7 @@ def _vp8l_gray_payload(img: np.ndarray, headerless: bool = False) -> bytes:
     h, w = img.shape
     if not (1 <= w <= 1 << 14 and 1 <= h <= 1 << 14):
         raise ValueError("encode_gray_webp dimensions out of range")
-    bw = _LsbWriter()
+    bw = LsbWriter()
     if not headerless:
         bw.write(0x2F, 8)
         bw.write(w - 1, 14)
@@ -1179,21 +1131,13 @@ def _vp8l_gray_payload(img: np.ndarray, headerless: bool = False) -> bytes:
         only = next(iter(glen))
         glen = {only: 1, (only + 1) % 256: 1}
     _write_full_code(bw, glen, green_alpha)
-    gcodes = _canonical_codes(glen)
+    gcodes = canonical_codes([glen.get(i, 0) for i in range(256)])
     _write_simple_code(bw, 0)     # red
     _write_simple_code(bw, 0)     # blue
     _write_simple_code(bw, 255)   # alpha
     _write_simple_code(bw, 0)     # distance
-    flat = img.ravel()
-    # chunked emission: look up (code, len) per pixel via vectorized
-    # tables, then pack — the python loop is per-RUN of equal bit counts
-    code_tab = np.zeros(256, dtype=np.int64)
-    len_tab = np.zeros(256, dtype=np.int64)
-    for sym, (c, ln) in gcodes.items():
-        code_tab[sym] = c
-        len_tab[sym] = ln
-    for v in flat.tolist():
-        bw.write_code(int(code_tab[v]), int(len_tab[v]))
+    for v in img.ravel().tolist():
+        bw.write_code(*gcodes[v])
     return bw.bytes()
 
 

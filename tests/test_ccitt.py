@@ -256,13 +256,14 @@ def test_g3_roundtrip_and_eol_sync():
 def test_g3_two_d_rows_decode_against_previous():
     """Hand-built T.4-2D stream: EOL+tag1 1D row, then EOL+tag0 2D row
     coded as two V(+1) modes and a terminating V0."""
+    from sparkstract.functions.bits import MsbWriter
     from sparkstract.functions.ccitt import (
-        _EOL, _BitWriter, _changes, _emit, _emit_run, g3_decode)
+        _EOL, _changes, _emit, _emit_run, g3_decode)
 
     bits = np.zeros((2, 40), np.uint8)
     bits[0, 10:20] = 1
     bits[1, 11:21] = 1
-    bw = _BitWriter()
+    bw = MsbWriter()
     _emit(bw, _EOL)
     _emit(bw, "1")
     pos, color = 0, 0
@@ -294,13 +295,13 @@ def test_g3_2d_tiff_with_t4options():
     tagged rows against the previous row."""
     import struct
 
-    from sparkstract.functions.ccitt import (
-        _EOL, _BitWriter, _changes, _emit, _emit_run)
+    from sparkstract.functions.bits import MsbWriter
+    from sparkstract.functions.ccitt import _EOL, _changes, _emit, _emit_run
 
     bits = np.zeros((2, 24), np.uint8)
     bits[0, 4:9] = 1
     bits[1, 5:10] = 1
-    bw = _BitWriter()
+    bw = MsbWriter()
     _emit(bw, _EOL)
     _emit(bw, "1")
     pos, color = 0, 0
@@ -364,11 +365,11 @@ def test_g3_missing_leading_eol_leniency():
     """libtiff tolerates compression-3 strips that omit the EOL before row
     0 (ADVICE r3): a 1D stream whose first row starts immediately must
     decode, with EOL syncing resuming from row 1."""
+    from sparkstract.functions.bits import MsbWriter
     from sparkstract.functions.ccitt import _EOL, _TERM, g3_decode
-    from sparkstract.functions.tiff import _BitWriter
 
     w = 8
-    bw = _BitWriter()
+    bw = MsbWriter()
     # row 0 WITHOUT the leading EOL: all-white (white run 8)
     bw.write(int(_TERM[0][8], 2), len(_TERM[0][8]))
     # row 1 with its EOL: 4 white, 4 black ink

@@ -1,5 +1,7 @@
 """Bit-exactness pins for the decode paths of the lossy WebP, JPEG and
-AES-encrypted PDF families.
+AES-encrypted PDF families, and of the families whose bit I/O lives in
+functions/bits.py: LZW TIFF, GIF, G4 TIFF, lossless WebP, Huffman JBIG2,
+and one PDF /LZWDecode stream.
 
 Each case builds one fixture page (or one encoder stream) and pins the
 sha256 of what the decoder returns, so a change to the entropy decoders
@@ -7,7 +9,8 @@ sha256 of what the decoder returns, so a change to the entropy decoders
 must reproduce every decoded value, not only stay close enough for the
 recognizer. The hashes were recorded with the pure-Python decoders that
 predate the table-driven Huffman path, the int-only VP8 token path and
-the OpenSSL AES seam.
+the OpenSSL AES seam; those of the bits.py families with the per-codec
+LZW codecs, bit writers and canonical-code loops that predate it.
 """
 
 from __future__ import annotations
@@ -74,6 +77,16 @@ FAMILY_PINS = {
         "d0c761b0f74a246402199462d27a95aede1c68b0888a0ab0badd90aa842f205e",
     "pdf_aes256_page":
         "d0c761b0f74a246402199462d27a95aede1c68b0888a0ab0badd90aa842f205e",
+    "tiff_page":
+        "0daf207562202fec66ad025e9ea93d7c013d2abfd11ef76ae27640390bf5f4e5",
+    "gif_page":
+        "0daf207562202fec66ad025e9ea93d7c013d2abfd11ef76ae27640390bf5f4e5",
+    "g4_tiff_page":
+        "0daf207562202fec66ad025e9ea93d7c013d2abfd11ef76ae27640390bf5f4e5",
+    "webp_page":
+        "0daf207562202fec66ad025e9ea93d7c013d2abfd11ef76ae27640390bf5f4e5",
+    "pdf_jbig2_huff_page":
+        "e765abf11b7d5fd82cbf492524f7809f565b5f1f60712d36b14c8d58a4ffed85",
 }
 
 
@@ -129,3 +142,24 @@ STREAM_PINS = {
 @pytest.mark.parametrize("kind", sorted(STREAM_PINS))
 def test_encoder_stream_decode_pinned(kind):
     assert _digest_arrays(decode_pages(_stream(kind))) == STREAM_PINS[kind]
+
+
+# A 12x16 page (`_page(11, 12, 16)`) under /Predictor 2, LZW-coded: 185
+# nine-bit codes, short of the first width switch, so the bytes mean the
+# same under every EarlyChange reading.
+_PDF_LZW_STREAM = bytes.fromhex(
+    "8005402117d00c040378035f008073ddea0d7b8980c027c01deafb050000c0977841"
+    "de060607016fc01031fc017d03002ec0180c0e087c8c1e2107c015e80a0380c00047"
+    "6045f2077b06806177fbc808fd7f04df8f2028281203770ae980203bf816fa7f03e0"
+    "a027b83dd625a4065d60a053f80aed063d40a1276838400808bc402fc093c812f500"
+    "856d0007d0ca5ced0a3adc60b03dcddd647cbdc6af2083c014ff77bedfcfc7d83804"
+    "ee0080462fc0283de40f693f01ef304bd20803760a8000dacbbdb2117902dea067a8"
+    "380cfb8080")
+
+
+def test_pdf_lzw_stream_decode_pinned():
+    from sparkstract.functions.pdf import _filter_chain
+
+    got = _filter_chain(["/LZWDecode"], _PDF_LZW_STREAM,
+                        [{"/Predictor": 2, "/Columns": 16}])
+    assert got == _page(11, 12, 16).tobytes()

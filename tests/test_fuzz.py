@@ -213,13 +213,13 @@ def test_gif_lzw_bomb_capped():
     import numpy as np
     import pytest
 
-    from sparkstract.functions.gif import (_gif_lzw_encode, decode_gray_gif,
-                                           encode_gif)
+    from sparkstract.functions.bits import lzw_encode
+    from sparkstract.functions.gif import decode_gray_gif, encode_gif
 
     img = np.zeros((4, 4), dtype=np.uint8)
     gif = bytearray(encode_gif(img))
     # replace the frame data with a stream that decodes to 1 MB of zeros
-    bomb = _gif_lzw_encode(b"\x00" * (1 << 20), 8)
+    bomb = lzw_encode(b"\x00" * (1 << 20), early=0, lsb=True, min_bits=8)
     at = gif.index(struct.pack("<BHHHHB", 0x2C, 0, 0, 4, 4, 0))
     out = bytearray(gif[:at])
     out += struct.pack("<BHHHHB", 0x2C, 0, 0, 4, 4, 0)
@@ -230,22 +230,22 @@ def test_gif_lzw_bomb_capped():
         out += chunk
     out.append(0)
     out.append(0x3B)
-    with pytest.raises(ValueError, match="exceeds frame size"):
+    with pytest.raises(ValueError, match="LZW output exceeds expected size"):
         decode_gray_gif(bytes(out))
 
 
 def test_tiff_lzw_bomb_capped():
     import pytest
 
-    from sparkstract.functions.tiff import (_lzw_encode, decode_gray_tiff,
-                                            encode_gray_tiff)
+    from sparkstract.functions.bits import lzw_encode
+    from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
     import numpy as np
 
     img = np.zeros((4, 4), dtype=np.uint8)
     enc = bytearray(encode_gray_tiff(img, "lzw"))
-    strip = _lzw_encode(img.tobytes())
+    strip = lzw_encode(img.tobytes(), early=1)
     at = enc.index(strip)
-    bomb = _lzw_encode(b"\x00" * (1 << 20))
+    bomb = lzw_encode(b"\x00" * (1 << 20), early=1)
     # swap the strip for the bomb and fix StripByteCounts (tag 279)
     out = enc[:at] + bomb + enc[at + len(strip):]
     import struct
@@ -259,8 +259,43 @@ def test_tiff_lzw_bomb_capped():
         (tag,) = struct.unpack_from("<H", out, pos)
         if tag == 279:
             struct.pack_into("<I", out, pos + 8, len(bomb))
-    with pytest.raises(ValueError, match="exceeds expected raster"):
+    with pytest.raises(ValueError, match="LZW output exceeds expected size"):
         decode_gray_tiff(bytes(out))
+
+
+# CLEAR, then code 300 before the table holds any entry past 257
+_LZW_BAD_FIRST_CODE = ((256 << 9 | 300) << 6).to_bytes(3, "big")
+
+
+def test_tiff_lzw_corrupt_first_code_is_value_error():
+    import struct
+
+    import numpy as np
+    import pytest
+
+    from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
+
+    data = bytearray(encode_gray_tiff(np.zeros((4, 4), np.uint8), "lzw"))
+    (ifd,) = struct.unpack_from("<I", data, 4)
+    (n,) = struct.unpack_from("<H", data, ifd)
+    for i in range(n):   # point the one strip at the corrupt stream
+        pos = ifd + 2 + 12 * i
+        tag = struct.unpack_from("<H", data, pos)[0]
+        if tag == 273:
+            struct.pack_into("<I", data, pos + 8, len(data))
+        if tag == 279:
+            struct.pack_into("<I", data, pos + 8, len(_LZW_BAD_FIRST_CODE))
+    with pytest.raises(ValueError, match="corrupt LZW stream"):
+        decode_gray_tiff(bytes(data) + _LZW_BAD_FIRST_CODE)
+
+
+def test_pdf_lzw_corrupt_first_code_is_value_error():
+    import pytest
+
+    from sparkstract.functions.pdf import _filter_chain
+
+    with pytest.raises(ValueError, match="corrupt LZW stream"):
+        _filter_chain(["/LZWDecode"], _LZW_BAD_FIRST_CODE)
 
 
 def test_png_idat_bomb_truncates_not_allocates():

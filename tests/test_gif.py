@@ -3,12 +3,8 @@
 import numpy as np
 import pytest
 
-from sparkstract.functions.gif import (
-    _gif_lzw_decode,
-    _gif_lzw_encode,
-    decode_gray_gif,
-    encode_gif,
-)
+from sparkstract.functions.bits import lzw_decode, lzw_encode
+from sparkstract.functions.gif import decode_gray_gif, encode_gif
 
 
 def _luma_ref(rgb):
@@ -24,7 +20,8 @@ def test_lzw_roundtrip_and_width_growth():
     for raw in cases:
         for mcs in (2, 4, 8):
             src = bytes(c % (1 << mcs) for c in raw)
-            assert _gif_lzw_decode(_gif_lzw_encode(src, mcs), mcs) == src
+            enc = lzw_encode(src, early=0, lsb=True, min_bits=mcs)
+            assert lzw_decode(enc, early=0, lsb=True, min_bits=mcs) == src
 
 
 def test_gray_palette_roundtrip():
@@ -67,15 +64,13 @@ def test_partial_frame_composites_and_transparency():
     gif = bytearray(encode_gif(base))
     assert gif[-1] == 0x3B
     patch = np.array([[0, 200, 0], [201, 0, 202]], dtype=np.uint8)
-    from sparkstract.functions.gif import _gif_lzw_encode as enc
-
     add = bytearray()
     add += b"\x21\xf9\x04\x01\x00\x00\x00\x00"  # GCE: transparent idx 0
     import struct
 
     add += struct.pack("<BHHHHB", 0x2C, 1, 1, 3, 2, 0)
     add.append(8)
-    data = enc(patch.tobytes(), 8)
+    data = lzw_encode(patch.tobytes(), early=0, lsb=True, min_bits=8)
     add.append(len(data))
     add += data
     add.append(0)

@@ -432,12 +432,12 @@ def test_table_b1_hand_decoded_vectors():
 
 
 def test_table_b8_oob_and_negative():
-    from sparkstract.functions.jbig2 import (_MsbReader, _MsbWriter,
-                                             _STD_TABLES)
+    from sparkstract.functions.bits import MsbWriter
+    from sparkstract.functions.jbig2 import _MsbReader, _STD_TABLES
 
     b8 = _STD_TABLES["B8"]
     for v in [-15, -3, -1, 0, 1, 4, 19, 700, 1669, 5000, -500, None]:
-        bw = _MsbWriter()
+        bw = MsbWriter()
         b8.encode(bw, v)
         assert b8.decode(_MsbReader(bw.bytes())) == v
 

@@ -190,9 +190,9 @@ def test_modern_fuzz_never_hangs():
 
 
 def test_lzw_filter_and_tiff_predictor():
-    """/LZWDecode (the TIFF early-change variant) + /DecodeParms
+    """/LZWDecode (default /EarlyChange 1) + /DecodeParms
     /Predictor 2 on a content stream."""
-    from sparkstract.functions.tiff import _lzw_encode
+    from sparkstract.functions.bits import lzw_encode
 
     cs = b"BT /F0 12 Tf 72 700 Td (LZW CONTENT) Tj ET"
     # predictor 2: horizontal differencing over Columns-wide rows
@@ -200,7 +200,7 @@ def test_lzw_filter_and_tiff_predictor():
     diff = bytearray(cs)
     for i in range(len(cs) - 1, 0, -1):
         diff[i] = (diff[i] - diff[i - 1]) & 0xFF
-    enc = _lzw_encode(bytes(diff))
+    enc = lzw_encode(bytes(diff), early=1)
     objs = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
@@ -894,11 +894,12 @@ def _decode_image_direct(parms: dict, raw: bytes, w=64, h=40, decode=None):
 def test_pdf_ccitt_k0_unaligned_rows():
     # /K 0 default: 1D rows packed back-to-back, NO EOLs, NO byte
     # alignment (§7.4.6 — EncodedByteAlign false)
-    from sparkstract.functions.ccitt import _BitWriter, _changes, _emit_run
+    from sparkstract.functions.bits import MsbWriter
+    from sparkstract.functions.ccitt import _changes, _emit_run
 
     img = _ccitt_img()
     bits = (img < 128).astype(np.uint8)
-    bw = _BitWriter()
+    bw = MsbWriter()
     for y in range(40):
         pos, color = 0, 0
         for nxt in _changes(bits[y]) + [64]:
@@ -912,8 +913,9 @@ def test_pdf_ccitt_k0_unaligned_rows():
 
 
 def test_pdf_ccitt_k0_with_eol_and_k_positive():
+    from sparkstract.functions.bits import MsbWriter
     from sparkstract.functions.ccitt import (
-        _EOL, _BitWriter, _changes, _emit, _emit_run, g3_encode)
+        _EOL, _changes, _emit, _emit_run, g3_encode)
 
     img = _ccitt_img()
     bits = (img < 128).astype(np.uint8)
@@ -923,7 +925,7 @@ def test_pdf_ccitt_k0_with_eol_and_k_positive():
         g3_encode(bits))
     assert (got == img).all()
     # /K > 0: mixed T.4 2D — every row EOL + tag bit (all tagged 1D here)
-    bw = _BitWriter()
+    bw = MsbWriter()
     for y in range(40):
         _emit(bw, _EOL)
         _emit(bw, "1")
@@ -1228,12 +1230,12 @@ def test_inline_image_mask_roundtrip():
 def test_pdf_lzw_early_change_zero():
     """/EarlyChange 0 streams decode through the late-bump LZW variant
     (previously a named error)."""
+    from sparkstract.functions.bits import lzw_encode
     from sparkstract.functions.pdf import _filter_chain
-    from sparkstract.functions.tiff import _lzw_encode
 
     rng = np.random.default_rng(21)
     data = bytes(rng.integers(0, 7, 9000).astype(np.uint8))
-    enc = _lzw_encode(data, early=False)
+    enc = lzw_encode(data, early=0)
     got = _filter_chain(["/LZWDecode"], enc, [{"/EarlyChange": 0}],
                         lambda v: v)
     assert got == data

@@ -1,19 +1,15 @@
 """TIFF codec: roundtrips (none/LZW, single/multipage), dispatch, and the
-LZW edge cases (width growth past 511/1023 entries, KwKwK, table reset)."""
+LZW edge cases (code-width switches, KwKwK, table reset)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
+from sparkstract.functions.bits import lzw_decode, lzw_encode
 from sparkstract.functions.codecs import decode_gray_any, decode_pages
 from sparkstract.functions.png import encode_gray
-from sparkstract.functions.tiff import (
-    _lzw_decode,
-    _lzw_encode,
-    decode_gray_tiff,
-    encode_gray_tiff,
-)
+from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
 
 
 def _img(seed: int, h: int = 40, w: int = 60) -> np.ndarray:
@@ -55,12 +51,12 @@ def test_multipage_roundtrip():
 def test_lzw_stream_edges():
     # KwKwK pattern (code == next_code on decode)
     data = b"ABABABABABABABA" * 3
-    assert _lzw_decode(_lzw_encode(data)) == data
+    assert lzw_decode(lzw_encode(data, early=1), early=1) == data
     # force a table reset: >4094 distinct entries
     rng = np.random.default_rng(6)
     big = bytes(rng.integers(0, 256, size=30000, dtype=np.uint8))
-    assert _lzw_decode(_lzw_encode(big)) == big
-    assert _lzw_decode(_lzw_encode(b"")) == b""
+    assert lzw_decode(lzw_encode(big, early=1), early=1) == big
+    assert lzw_decode(lzw_encode(b"", early=1), early=1) == b""
 
 
 def test_dispatch():
@@ -418,15 +414,13 @@ def test_tiled_gray_uncompressed_with_edge_crop():
 
 
 def test_tiled_lzw_with_predictor_per_tile():
-    from sparkstract.functions.tiff import _lzw_encode
-
     rng = np.random.default_rng(23)
     img = rng.integers(0, 256, (40, 48), dtype=np.uint8)
     blobs = []
     for t in _tiles_of(img, 16, 16):
         diff = np.diff(t.astype(np.int64), axis=1, prepend=0).astype(
             np.uint8)  # forward horizontal differencing, per tile row
-        blobs.append(_lzw_encode(diff.tobytes()))
+        blobs.append(lzw_encode(diff.tobytes(), early=1))
     data = _tiled_tiff(blobs, 48, 40, 16, 16, comp=5,
                        extra=[(317, 3, 1, 2)])
     (got,) = decode_gray_tiff(data)
@@ -645,23 +639,58 @@ def test_16bit_truncated_raster_raises():
 
 
 def test_lzw_early_change_variants():
-    """early=True is TIFF's one-entry-early width bump; early=False is
-    PDF /EarlyChange 0. Roundtrip both on data long enough to cross the
-    9->10->11-bit boundaries, and pin that decoding with the WRONG
-    variant diverges (the distinction is real)."""
-    from sparkstract.functions.tiff import _lzw_decode, _lzw_encode
-
+    """early=1 is TIFF's (and PDF's default) width bump one code before
+    the table fills; early=0 is PDF /EarlyChange 0, at table-full.
+    Roundtrip both on data long enough to cross the 9->10->11-bit
+    boundaries, and pin that decoding with the WRONG variant diverges
+    (the distinction is real)."""
     rng = np.random.default_rng(19)
     # low-entropy data grows the table fast enough to cross width bumps
     data = bytes(rng.integers(0, 7, 9000).astype(np.uint8))
-    for early in (True, False):
-        enc = _lzw_encode(data, early=early)
-        assert _lzw_decode(enc, early=early) == data
-    enc = _lzw_encode(data, early=False)
+    for early in (1, 0):
+        enc = lzw_encode(data, early=early)
+        assert lzw_decode(enc, early=early) == data
+    enc = lzw_encode(data, early=0)
     try:
-        assert _lzw_decode(enc, early=True) != data
+        assert lzw_decode(enc, early=1) != data
     except ValueError:
         pass
+
+
+def _distinct_pairs(n: int) -> bytes:
+    """n bytes whose adjacent pairs are all distinct (256-step runs of
+    one odd stride each), so LZW codes every byte as a literal."""
+    x, out = 0, [0]
+    for k in range(n - 1):
+        x = (x + 2 * (k // 256) + 1) % 256
+        out.append(x)
+    return bytes(out)
+
+
+@pytest.mark.parametrize("early,lsb", [(1, False), (0, False), (0, True)],
+                         ids=["tiff-pdf-early1", "pdf-early0", "gif"])
+def test_lzw_spec_vectors(early, lsb):
+    """Hand-packed streams, independent of the encoder: CLEAR, 2000
+    literal codes, EOI. libtiff (tif_lzw.c) and pdf.js (LZWStream) read
+    254 nine-bit codes after CLEAR with EarlyChange 1 and 255 with
+    EarlyChange 0 (as GIF does), then 512 ten-bit and 1024 eleven-bit
+    codes; the stream runs past all three width switches."""
+    data = _distinct_pairs(2000)
+    n9 = 255 - early
+    acc = nbits = 0
+    for i, code in enumerate([256] + list(data) + [257]):
+        k = i - 1          # codes since CLEAR; CLEAR itself is 9 bits
+        width = 9 + (k >= n9) + (k >= n9 + 512) + (k >= n9 + 1536)
+        if lsb:
+            acc |= code << nbits
+        else:
+            acc = acc << width | code
+        nbits += width
+    pad = -nbits % 8
+    packed = (acc.to_bytes((nbits + pad) // 8, "little") if lsb
+              else (acc << pad).to_bytes((nbits + pad) // 8, "big"))
+    assert lzw_decode(packed, early=early, lsb=lsb) == data
+    assert lzw_encode(data, early=early, lsb=lsb) == packed
 
 
 def test_old_style_jpeg_interchange_format():

@@ -10,12 +10,11 @@ self-roundtrip fuzz through the fixture encoder.
 import numpy as np
 import pytest
 
+from sparkstract.functions.bits import LsbWriter, canonical_codes
 from sparkstract.functions.webp import (
     _DIST_MAP,
     _LsbReader,
-    _LsbWriter,
     _Prefix,
-    _canonical_codes,
     _huffman_lengths,
     _inv_color_transform,
     _inv_predictor,
@@ -32,7 +31,7 @@ from sparkstract.functions.webp import (
 
 
 def test_lsb_reader_writer_roundtrip():
-    bw = _LsbWriter()
+    bw = LsbWriter()
     fields = [(0x2F, 8), (5, 14), (3, 14), (1, 1), (0, 3), (0b101, 3)]
     for v, n in fields:
         bw.write(v, n)
@@ -108,13 +107,13 @@ def test_lz77_value_mapping():
 
 
 def test_simple_code_one_and_two_symbols():
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _write_simple_code(bw, 7)          # 8-bit single-symbol form
     br = _LsbReader(bw.bytes())
     code = _read_prefix_code(br, 256)
     assert code.single == 7
 
-    bw = _LsbWriter()
+    bw = LsbWriter()
     bw.write(1, 1)   # simple
     bw.write(1, 1)   # two symbols
     bw.write(0, 1)   # first symbol is 1 bit
@@ -131,13 +130,14 @@ def test_simple_code_one_and_two_symbols():
 def test_full_code_roundtrip_with_zero_runs():
     # lengths with long zero gaps exercise the 17/18 run coding both ways
     lengths = {0: 2, 1: 2, 40: 3, 41: 3, 42: 3, 250: 3}
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _write_full_code(bw, lengths, 280)
     br = _LsbReader(bw.bytes())
     code = _read_prefix_code(br, 280)
-    codes = _canonical_codes(lengths)
-    for sym, (c, ln) in sorted(codes.items()):
-        probe = _LsbWriter()
+    codes = canonical_codes([lengths.get(i, 0) for i in range(280)])
+    for sym in sorted(lengths):
+        c, ln = codes[sym]
+        probe = LsbWriter()
         probe.write_code(c, ln)
         probe.write(0, 16)  # padding so peek15 never runs off the end
         assert code.read(_LsbReader(probe.bytes())) == sym
@@ -184,7 +184,7 @@ def _two_symbol_code(bw, s0, s1):
 def test_hand_stream_literal_pixels():
     """1x2 image, no transforms, literal ARGB pixels through simple codes.
     Every bit below is written per §3/§5.2.3 field order."""
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _header(bw, 2, 1)
     bw.write(0, 1)               # no transforms
     bw.write(0, 1)               # no color cache
@@ -207,7 +207,7 @@ def test_hand_stream_lz77_backref():
     """1x8 image: one literal then a length-7 copy at 2D distance (1, 0).
     Length 7 = green symbol 256+5 with one 0 extra bit (§4.2.1); distance
     code 2 -> map entry (1, 0) -> pixel distance 1 (§4.2.2)."""
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _header(bw, 8, 1)
     bw.write(0, 1)               # no transforms
     bw.write(0, 1)               # no color cache
@@ -216,7 +216,7 @@ def test_hand_stream_lz77_backref():
     # green alphabet is 280 wide but the simple form stores 8-bit symbols,
     # so the length symbol 261 must come from a full code instead:
     # rebuild the green code as code-length-coded with symbols 99 and 261
-    bw2 = _LsbWriter()
+    bw2 = LsbWriter()
     _header(bw2, 8, 1)
     bw2.write(0, 1)
     bw2.write(0, 1)
@@ -226,7 +226,9 @@ def test_hand_stream_lz77_backref():
     _write_simple_code(bw2, 0)      # blue
     _write_simple_code(bw2, 255)    # alpha
     _write_simple_code(bw2, 1)      # distance: always code 1 -> dcode 2
-    gcodes = _canonical_codes({99: 1, 261: 1})
+    glens = [0] * 280
+    glens[99] = glens[261] = 1
+    gcodes = canonical_codes(glens)
     c, ln = gcodes[99]
     bw2.write_code(c, ln)           # literal pixel green=99
     c, ln = gcodes[261]
@@ -243,7 +245,7 @@ def test_hand_stream_color_cache():
     via its cache slot (§4.2.3: index = (0x1e35a7bd * argb) >> 31)."""
     px = (255 << 24) | (7 << 16) | (77 << 8) | 3
     slot = (0x1E35A7BD * px & 0xFFFFFFFF) >> 31
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _header(bw, 3, 1)
     bw.write(0, 1)               # no transforms
     bw.write(1, 1)               # color cache present
@@ -255,7 +257,9 @@ def test_hand_stream_color_cache():
     _write_simple_code(bw, 3)    # blue
     _write_simple_code(bw, 255)  # alpha
     _write_simple_code(bw, 0)    # distance
-    gcodes = _canonical_codes({77: 1, 280 + slot: 1})
+    glens = [0] * 282
+    glens[77] = glens[280 + slot] = 1
+    gcodes = canonical_codes(glens)
     c, ln = gcodes[77]
     bw.write_code(c, ln)         # literal -> populates the cache
     c, ln = gcodes[280 + slot]
@@ -270,7 +274,7 @@ def test_hand_stream_color_cache():
 def test_hand_stream_palette_with_bundling():
     """2x2 image through the color-indexing transform with 2 palette
     entries: widths bundle 8 px/byte (§4.1.3), palette rows delta-coded."""
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _header(bw, 2, 2)
     bw.write(1, 1)               # a transform follows
     bw.write(3, 2)               # color indexing
@@ -312,7 +316,7 @@ def test_hand_stream_predictor_transform():
     pixel 0 adds the black seed (§4.1.1), later pixels add their left
     neighbor, so residuals are (v, v, v, -255-ish) then zeros."""
     v = 133
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _header(bw, 3, 1)
     bw.write(1, 1)               # a transform follows
     bw.write(0, 2)               # predictor
@@ -479,7 +483,7 @@ def test_truncated_stream_never_hangs():
 def test_color_luma_collapse():
     """A hand-built color VP8L (literal pixels, r != g) collapses to the
     family's BT.601 luma."""
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _header(bw, 1, 1)
     bw.write(0, 1)
     bw.write(0, 1)
@@ -576,7 +580,7 @@ def test_meta_prefix_group_count_guard():
     """A crafted meta image claiming 65536 code groups (group id 0xFFFF
     from a 1x1 meta image) must raise BEFORE building 5 prefix tables per
     group — the executor-hanging-DoS guard on the crawl-media path."""
-    bw = _LsbWriter()
+    bw = LsbWriter()
     _header(bw, 4, 4)
     bw.write(0, 1)               # no transforms
     bw.write(0, 1)               # no color cache
