@@ -400,17 +400,3 @@ def decode_glyph(bits: np.ndarray) -> str:
     flat = bits.astype(np.int8).ravel()
     dist = np.abs(DECODE_MATRIX - flat).sum(axis=1)
     return _CHARS[int(np.argmin(dist))]
-
-
-def decode_glyph_dist(bits: np.ndarray) -> tuple[str, int]:
-    """Like decode_glyph but also returns the hamming distance of the match,
-    so callers can compare candidate samplings (e.g. sub-cell offsets after
-    deskew) and keep the best-scoring one."""
-    key = bits.astype(bool).tobytes()
-    hit = _EXACT.get(key)
-    if hit is not None:
-        return hit, 0
-    flat = bits.astype(np.int8).ravel()
-    dist = np.abs(DECODE_MATRIX - flat).sum(axis=1)
-    k = int(np.argmin(dist))
-    return _CHARS[k], int(dist[k])

@@ -322,20 +322,3 @@ def estimate_warp(ink: np.ndarray, n_seg: int = 8,
     # sitting BELOW the anchor frame aligned at a negative offset
     f = -f
     return f - fast_median(f)
-
-
-def estimate_bow(cx: np.ndarray, cy: np.ndarray, bin_px: float, page_w: float,
-                 max_bow_px: float = 12.0, step_px: float = 0.5) -> float:
-    """Quadratic baseline curvature (A4 — the reference fits quadratic/spline
-    baselines, /root/reference/src/textord/baselinedetect.cpp:909, quadlsq.cpp):
-    bow depth b in px at the page edges relative to center, such that
-    y' = y - b*((x-xc)/(w/2))^2 gives the sharpest row histogram. Same
-    projection-profile criterion as estimate_skew, searched over curvature."""
-    if cx.shape[0] < 3:
-        return 0.0
-    bin_px = max(2.0, float(bin_px))
-    half = max(float(page_w) / 2.0, 1.0)
-    u = ((cx - float(page_w) / 2.0) / half) ** 2
-    bows = np.arange(-max_bow_px, max_bow_px + step_px / 2, step_px)
-    scores = _sharpness(cy[None, :] - bows[:, None] * u[None, :], bin_px)
-    return _plateau_center(bows, scores)

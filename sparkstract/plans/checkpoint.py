@@ -92,8 +92,7 @@ def _commit_group(result: DataFrame, out_dir: str, run_id: str, group: int) -> N
 def run_job(spark: SparkSession, docs: DataFrame, media: DataFrame,
             out_dir: str, cfg: ExtractConfig | None = None,
             run_id: str | None = None, n_groups: int = 8,
-            fail_after_groups: int | None = None,
-            persist_input: bool | None = None) -> DataFrame:
+            fail_after_groups: int | None = None) -> DataFrame:
     """Extract all docs into out_dir with per-group commits; resume-safe.
 
     Re-invoking on the same out_dir skips committed groups (exactly-once per
@@ -106,22 +105,20 @@ def run_job(spark: SparkSession, docs: DataFrame, media: DataFrame,
         `bucket(N, doc_id)` partition-spec count (sources/docs.py DDL uses
         1024) and the same hash — the group filter then IS partition
         pruning and each group scans only its own files;
-      * here (plain parquet, no bucketing metadata) the bucketed frame is
-        persisted once and every group filter reads the cached blocks, so
-        the input is scanned exactly once regardless of n_groups.
+      * here (plain parquet, no bucketing metadata) an input of at most
+        1024 partitions is persisted once and every group filter reads the
+        cached blocks, so it is scanned exactly once regardless of n_groups.
 
-    `persist_input` gates the cache (default auto: only small inputs).
-    Caching the FULL corpus at 100 TB would exhaust executor disk — at that
-    scale the Iceberg bucket-pruning path above is the scan defense, not the
-    cache, so a wide scan (many input partitions) skips the persist.
+    A wider input is not cached: caching the FULL corpus at 100 TB would
+    exhaust executor disk, and at that scale the Iceberg bucket-pruning
+    path above is the scan defense, not the cache.
     """
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     done = committed_groups(out_dir)
     shutil.rmtree(os.path.join(out_dir, "_tmp"), ignore_errors=True)
 
-    if persist_input is None:
-        persist_input = docs.rdd.getNumPartitions() <= 1024
+    persist_input = docs.rdd.getNumPartitions() <= 1024
     bucketed = docs.withColumn("_grp", _bucket_col(n_groups))
     if persist_input:
         bucketed = bucketed.persist()

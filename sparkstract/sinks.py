@@ -1,32 +1,59 @@
-"""Result renderers (sinks) over the extracted-spans DataFrame.
+"""Result renderers (sinks) over the extraction views.
 
-Mirrors the reference's renderer family (include/tesseract/renderer.h):
+Mirrors the reference's renderer family (include/tesseract/renderer.h).
+
+Flat renderers, one element per span. Input: `extract` spans, or
+`extract_blocks` rows with an `order` column, in which case hOCR and ALTO
+also print each block's geometry:
   render_text  — TessTextRenderer (renderer.h:160): the GetUTF8Text view of a
                  doc. Text spans joined in span order, separated by blank
-                 lines; image/line spans are skipped for text output exactly
-                 like PTIsTextType gating in GetUTF8Text
-                 (/root/reference/src/api/baseapi.cpp:2097-2127).
-  render_tsv   — TessTsvRenderer (renderer.h:221, baseapi.cpp:2205): one row
-                 per span with level/ids — our flat block-level analog of the
-                 page/block/para/line/word TSV.
-  render_hocr  — TessHOcrRenderer (renderer.h:171): minimal hOCR HTML, one
+                 lines; image/line spans are skipped exactly like the
+                 PTIsTextType gating in GetUTF8Text (baseapi.cpp:2097-2127).
+  render_tsv   — TessTsvRenderer (renderer.h:221): one row per span with
+                 order, kind, media_ref and text.
+  render_hocr  — TessHOcrRenderer (renderer.h:171): one
                  <div class='ocr_carea'> per span.
-  render_alto  — TessAltoRenderer (renderer.h:188, src/api/altorenderer.cpp:131):
-                 minimal ALTO XML — a <TextBlock> per text span (one <String>
-                 per span; CONTENT carries the text), <Illustration> per image
-                 span, <GraphicalElement> per rule span, in reading order
-                 inside <PrintSpace>.
-  render_page_xml — TessPAGERenderer (renderer.h:204, src/api/pagerenderer.cpp):
-                 minimal PAGE XML — a <TextRegion>/<ImageRegion>/<SeparatorRegion>
-                 per span with a <ReadingOrder> index.
+  render_alto  — TessAltoRenderer (renderer.h:188, altorenderer.cpp:131): a
+                 <TextBlock>/<Illustration>/<GraphicalElement> per span in
+                 reading order inside <PrintSpace>.
+  render_page_xml — TessPAGERenderer (renderer.h:204, pagerenderer.cpp): a
+                 <TextRegion>/<ImageRegion>/<SeparatorRegion> per span plus a
+                 <ReadingOrder> index.
 
-All are pure built-in DataFrame transforms (no UDFs): string escape /
-aggregation stays JVM-side, and the per-doc fold is one shuffle on doc_id.
+Full-depth renderers over the page → block → para → line → word tree.
+Input: the (blocks, words) pair of `hierarchy_views`:
+  render_tsv_levels     — GetTSVText levels 1-5 (baseapi.cpp:2205).
+  render_hocr_words     — ocr_page → ocr_carea → ocr_par → ocr_line →
+                          ocrx_word (hocrrenderer.cpp:136-250).
+  render_alto_words     — Page → TextBlock → TextLine → String
+                          (altorenderer.cpp:131).
+  render_page_xml_words — Page → TextRegion → TextLine → Word
+                          (pagerenderer.cpp).
+
+Symbol renderers. Input: the `extract_symbols` sidecar:
+  render_box   — GetBoxText (baseapi.cpp:2391).
+  render_unlv  — GetUNLVText (baseapi.cpp:2440).
+
+render_pdf assembles TessPDFRenderer files from `extract_pdf_pages`.
+
+Every other renderer is built-in DataFrame expressions (no UDFs): string
+escape and aggregation stay JVM-side. Like the reference's renderers, which
+all walk one ResultIterator, they share one vocabulary, and a new format
+should build on it too:
+  _fold         the one ordered fold: fragments sorted by keys, joined.
+  _by_kind      the one rule / image / text switch.
+  _node_id      element ids: offset_block[_par[_line[_word]]].
+  _group        one level up the hierarchy, carrying that level's bbox.
+  _page_nums    pages with their 1-based number within the doc.
+  _with_bodies, _paged   the block → page → doc folds.
+  _bbox, _alto_pos, _extent   geometry attributes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Span kinds that carry text into the plain-text rendering (PTIsTextType,
@@ -39,21 +66,185 @@ TEXT_KINDS = ("text", "flowing_text", "heading_text", "pullout_text",
 LINE_KINDS = ("horz_line", "vert_line")
 IMAGE_KINDS = ("flowing_image", "heading_image", "pullout_image")
 
+# Hierarchy keys of the block/word/symbol views, outermost first. A node at
+# depth d (1 page, 2 block, 3 par, 4 line, 5 word) is keyed within its doc
+# by the first d of them.
+LEVEL_KEYS = ("offset", "block_order", "para_num", "line_num", "word_num")
+# The RIL_SYMBOL walk order of the symbol sidecar.
+SYM_KEYS = LEVEL_KEYS + ("sym_num",)
+
+
+def _fold(frag, *keys, sep: str = "\n") -> Column:
+    """The one ordered fold, an aggregate: the group's `frag` values sorted
+    by `keys` (ties broken by the fragment itself) and joined by `sep`."""
+    frag = F.col(frag) if isinstance(frag, str) else frag
+    rows = F.array_sort(F.collect_list(F.struct(*keys, frag.alias("frag"))))
+    return F.array_join(F.transform(rows, lambda r: r["frag"]), sep)
+
+
+def _by_kind(rule: Column, image: Column, text: Column) -> Column:
+    """The one PTIsLineType / PTIsImageType switch (publictypes.h:74-92):
+    `rule` for line kinds, `image` for image kinds, `text` for the rest.
+
+    It branches on KIND, not text-nullness: layout-only output
+    (recognize=False) carries NULL text on genuine text blocks, and those
+    must stay text elements with empty content, exactly like the
+    reference's renderers type by PTIsTextType, never by whether
+    recognition ran."""
+    kind = F.col("kind")
+    return (F.when(kind.isin(*LINE_KINDS), rule)
+            .when(kind.isin(*IMAGE_KINDS), image).otherwise(text))
+
+
+def _or_empty(name: str) -> Column:
+    return F.coalesce(F.col(name), F.lit(""))
+
+
+def _escape_html(col):
+    out = F.regexp_replace(col, "&", "&amp;")
+    out = F.regexp_replace(out, "<", "&lt;")
+    return F.regexp_replace(out, ">", "&gt;")
+
+
+def _escape_xml(col):
+    return F.regexp_replace(_escape_html(col), "'", "&apos;")
+
+
+def _has_boxes(spans: DataFrame) -> bool:
+    """Geometry-bearing input (extract_blocks output) vs plain spans — the
+    renderers emit real coordinates when they have them, like the reference's
+    renderers always do (hocrrenderer.cpp:123 bbox; altorenderer HPOS/VPOS)."""
+    return {"left", "top", "right", "bottom"}.issubset(spans.columns)
+
+
+def _bbox() -> Column:
+    """The hOCR bbox value (hocrrenderer.cpp:123): 'left top right bottom'."""
+    return F.concat_ws(" ", *(F.col(c).cast("string")
+                              for c in ("left", "top", "right", "bottom")))
+
+
+def _extent() -> list[Column]:
+    """Width and height of the inclusive box, as strings."""
+    return [(F.col("right") - F.col("left") + 1).cast("string"),
+            (F.col("bottom") - F.col("top") + 1).cast("string")]
+
+
+def _alto_pos() -> Column:
+    """ALTO position attributes: top-left corner plus extent."""
+    width, height = _extent()
+    return F.concat(
+        F.lit(" HPOS='"), F.col("left").cast("string"),
+        F.lit("' VPOS='"), F.col("top").cast("string"),
+        F.lit("' WIDTH='"), width, F.lit("' HEIGHT='"), height, F.lit("'"))
+
+
+def _node_id(depth: int) -> Column:
+    """Element id of the depth-`depth` node (2 block, 3 par, 4 line,
+    5 word): its hierarchy keys joined by '_'."""
+    return F.concat_ws("_", *(F.col(k).cast("string")
+                              for k in LEVEL_KEYS[:depth]))
+
+
+def _group(df: DataFrame, depth: int, *aggs) -> DataFrame:
+    """Fold `df` into its depth-`depth` nodes (1 page … 4 line): the node
+    keys, the node bbox as the union of its rows' boxes, and `aggs`."""
+    return df.groupBy("doc_id", *LEVEL_KEYS[:depth]).agg(
+        F.min("left").alias("left"), F.min("top").alias("top"),
+        F.max("right").alias("right"), F.max("bottom").alias("bottom"),
+        *aggs)
+
+
+def _page_nums(df: DataFrame, *aggs) -> DataFrame:
+    """Pages of `df` (`_group` depth 1) plus page_num: the 1-based rank of
+    the media span within its doc (GetTSVText page counter)."""
+    w = Window.partitionBy("doc_id").orderBy("offset")
+    return _group(df, 1, *aggs).withColumn("page_num", F.row_number().over(w))
+
+
+def _ordered_join(spans: DataFrame, elem, out_name: str,
+                  prefix, suffix) -> DataFrame:
+    """Fold per-span fragments into one document string in span order."""
+    return spans.groupBy("doc_id").agg(
+        F.concat(prefix, _fold(elem, "order"), suffix).alias(out_name))
+
+
+def _with_bodies(blocks: DataFrame, bodies: DataFrame) -> DataFrame:
+    """`blocks` left-joined to the `wbody` of their word decode; blocks
+    with none (images, rules, layout-only runs) get NULL."""
+    keys = ["doc_id", *LEVEL_KEYS[:2]]
+    return blocks.join(bodies.select(*keys, "wbody"), keys, "left")
+
+
+def _paged(blk: DataFrame, block_elem: Column, page_elem: Column, out: str,
+           head: str, tail: str, *page_aggs) -> DataFrame:
+    """The block → page → doc folds of the word renderers: `block_elem`
+    folded in block order into each page's `body`, then `page_elem` (over
+    body, page_num, the page bbox and `page_aggs`) folded in page order
+    between `head` and `tail`."""
+    pages = _page_nums(blk, *page_aggs,
+                       _fold(block_elem, "block_order").alias("body"))
+    return pages.groupBy("doc_id").agg(
+        F.concat(F.lit(head), _fold(page_elem, "offset"),
+                 F.lit(tail)).alias(out))
+
+
+def _hocr_carea(bid: Column, boxes: bool, wbody: Column | None = None):
+    """One hOCR ocr_carea div, titled by kind (and bbox when `boxes`). Its
+    body is `wbody` when given and not NULL; otherwise image kinds embed
+    the media ref, line kinds are empty and text kinds show their (possibly
+    empty) text."""
+    title = F.concat(F.col("kind"), F.lit("; bbox "), _bbox()) if boxes \
+        else F.col("kind")
+    body = _by_kind(
+        F.lit(""),
+        F.concat(F.lit("<img src='"), _or_empty("media_ref"), F.lit("'/>")),
+        _escape_html(_or_empty("text")))
+    if wbody is not None:
+        body = F.coalesce(wbody, body)
+    return F.concat(F.lit("  <div class='ocr_carea' id='block_"), bid,
+                    F.lit("' title='"), title, F.lit("'>"), body,
+                    F.lit("</div>"))
+
+
+def _alto_block(bid: Column, pos: Column, wbody: Column | None = None):
+    """One ALTO block element: <GraphicalElement> for rules, <Illustration>
+    for images, and a <TextBlock> holding `wbody` (its TextLines) when given
+    and not NULL, else one <String> with the block's text. `pos` is
+    `_alto_pos()` or empty; kind is carried in TAGREFS."""
+    def open_(tag):
+        return F.concat(F.lit(f"    <{tag} ID='block_"), bid,
+                        F.lit("' TAGREFS='"), F.col("kind"), F.lit("'"), pos)
+
+    text = F.concat(
+        F.lit("><TextLine><String CONTENT='"),
+        _escape_xml(F.regexp_replace(_or_empty("text"), "\n", " ")),
+        F.lit("'/></TextLine></TextBlock>"))
+    if wbody is not None:
+        text = F.when(wbody.isNotNull(),
+                      F.concat(F.lit(">\n"), wbody,
+                               F.lit("\n    </TextBlock>"))).otherwise(text)
+    return _by_kind(
+        F.concat(open_("GraphicalElement"), F.lit("/>")),
+        F.concat(open_("Illustration"), F.lit(" FILEID='"),
+                 _escape_xml(_or_empty("media_ref")), F.lit("'/>")),
+        F.concat(open_("TextBlock"), text))
+
+
+def _page_text() -> Column:
+    """A region's text as a PAGE TextEquiv. Line breaks become char refs,
+    so each region stays on one line."""
+    return F.concat(
+        F.lit("<TextEquiv><Unicode>"),
+        F.regexp_replace(_escape_xml(_or_empty("text")), "\n", "&#10;"),
+        F.lit("</Unicode></TextEquiv>"))
+
 
 def render_text(spans: DataFrame, separator: str = "\n\n") -> DataFrame:
     """(doc_id, text): text spans in span order joined by `separator`."""
     return (
         spans.filter(F.col("kind").isin(*TEXT_KINDS) & F.col("text").isNotNull())
         .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("order", "text"))),
-                    lambda s: s["text"],
-                ),
-                separator,
-            ).alias("text")
-        )
+        .agg(_fold("text", "order", sep=separator).alias("text"))
     )
 
 
@@ -64,108 +255,27 @@ def render_tsv(spans: DataFrame) -> DataFrame:
         "\t",
         F.col("order").cast("string"),
         F.col("kind"),
-        F.coalesce(F.col("media_ref"), F.lit("")),
+        _or_empty("media_ref"),
         F.coalesce(F.regexp_replace(F.col("text"), "[\\t\\n]", " "), F.lit("")),
     )
-    return (
-        spans.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("order", line.alias("line")))),
-                    lambda s: s["line"],
-                ),
-                "\n",
-            ).alias("tsv")
-        )
-    )
+    return spans.groupBy("doc_id").agg(_fold(line, "order").alias("tsv"))
 
 
-def _escape_html(col):
-    out = F.regexp_replace(col, "&", "&amp;")
-    out = F.regexp_replace(out, "<", "&lt;")
-    return F.regexp_replace(out, ">", "&gt;")
-
-
-def _has_boxes(spans: DataFrame) -> bool:
-    """Geometry-bearing input (extract_blocks output) vs plain spans — the
-    renderers emit real coordinates when they have them, like the reference's
-    renderers always do (hocrrenderer.cpp:123 bbox; altorenderer HPOS/VPOS)."""
-    return {"left", "top", "right", "bottom"}.issubset(spans.columns)
-
-
-def _ordered_join(spans: DataFrame, elem, out_name: str,
-                  prefix, suffix) -> DataFrame:
-    """Fold per-span fragments into one document string in span order."""
-    return (
-        spans.groupBy("doc_id")
-        .agg(
-            F.concat(
-                prefix,
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("order", elem.alias("e")))
-                        ),
-                        lambda s: s["e"],
-                    ),
-                    "\n",
-                ),
-                suffix,
-            ).alias(out_name)
-        )
-    )
-
-
-def _escape_xml(col):
-    out = _escape_html(col)
-    return F.regexp_replace(out, "'", "&apos;")
+def render_hocr(spans: DataFrame) -> DataFrame:
+    """(doc_id, hocr): minimal hOCR document — a div per span with its kind
+    as the hOCR class annotation (and its bbox, given geometry)."""
+    div = _hocr_carea(F.col("order").cast("string"), _has_boxes(spans))
+    return _ordered_join(spans, div, "hocr", F.lit("<html><body>\n"),
+                         F.lit("\n</body></html>"))
 
 
 def render_alto(spans: DataFrame) -> DataFrame:
     """(doc_id, alto): minimal ALTO XML (altorenderer.cpp:131 writes one
     <TextBlock>/<Illustration>/<GraphicalElement> per block in iterator
-    order; we carry kind in TAGREFS since our spans keep no geometry)."""
-    sid = F.col("order").cast("string")
-    if _has_boxes(spans):
-        # real coordinates, ALTO-style top-left + extent attributes
-        pos = F.concat(
-            F.lit("' HPOS='"), F.col("left").cast("string"),
-            F.lit("' VPOS='"), F.col("top").cast("string"),
-            F.lit("' WIDTH='"), (F.col("right") - F.col("left") + 1).cast("string"),
-            F.lit("' HEIGHT='"), (F.col("bottom") - F.col("top") + 1).cast("string"),
-        )
-    else:
-        pos = F.lit("")
-    elem = (
-        F.when(
-            F.col("kind").isin(*LINE_KINDS),
-            F.concat(F.lit("    <GraphicalElement ID='block_"), sid,
-                     F.lit("' TAGREFS='"), F.col("kind"), pos, F.lit("'/>")),
-        )
-        .when(
-            # branch on KIND, not text-nullness: layout-only output
-            # (recognize=False) carries NULL text on genuine text blocks,
-            # and those must stay TextBlocks (empty CONTENT), exactly like
-            # the reference's renderers type by PTIsTextType, never by
-            # whether recognition ran (publictypes.h:74-92)
-            F.col("kind").isin(*IMAGE_KINDS),
-            F.concat(F.lit("    <Illustration ID='block_"), sid,
-                     F.lit("' TAGREFS='"), F.col("kind"), pos, F.lit("' FILEID='"),
-                     _escape_xml(F.coalesce(F.col("media_ref"), F.lit(""))),
-                     F.lit("'/>")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("    <TextBlock ID='block_"), sid,
-                F.lit("' TAGREFS='"), F.col("kind"), pos,
-                F.lit("'><TextLine><String CONTENT='"),
-                _escape_xml(F.regexp_replace(
-                    F.coalesce(F.col("text"), F.lit("")), "\n", " ")),
-                F.lit("'/></TextLine></TextBlock>"),
-            )
-        )
-    )
+    order; the kind rides in TAGREFS, and HPOS/VPOS/WIDTH/HEIGHT are
+    written when the input has geometry)."""
+    pos = _alto_pos() if _has_boxes(spans) else F.lit("")
+    elem = _alto_block(F.col("order").cast("string"), pos)
     return _ordered_join(
         spans, elem, "alto",
         F.concat(
@@ -180,114 +290,33 @@ def render_alto(spans: DataFrame) -> DataFrame:
 
 def render_page_xml(spans: DataFrame) -> DataFrame:
     """(doc_id, page_xml): minimal PAGE XML (pagerenderer.cpp): a typed
-    region per span plus a <ReadingOrder> listing region ids in span order."""
+    region per span plus a <ReadingOrder> listing region ids in span order.
+    Regions and refs are two folds of the same groupBy."""
     sid = F.col("order").cast("string")
-    region = (
-        F.when(
-            F.col("kind").isin(*LINE_KINDS),
-            F.concat(F.lit("    <SeparatorRegion id='r"), sid,
-                     F.lit("' custom='"), F.col("kind"), F.lit("'/>")),
-        )
-        .when(
-            # kind-typed, like render_alto: a layout-only text block (NULL
-            # text under recognize=False) is still a TextRegion
-            F.col("kind").isin(*IMAGE_KINDS),
-            F.concat(F.lit("    <ImageRegion id='r"), sid,
-                     F.lit("' custom='"), F.col("kind"), F.lit("' imageFilename='"),
-                     _escape_xml(F.coalesce(F.col("media_ref"), F.lit(""))),
-                     F.lit("'/>")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("    <TextRegion id='r"), sid,
-                F.lit("' custom='"), F.col("kind"),
-                F.lit("'><TextEquiv><Unicode>"),
-                # line breaks as char refs: the per-doc fold joins fragments
-                # with \n, so literal newlines inside a region are off-limits
-                F.regexp_replace(
-                    _escape_xml(F.coalesce(F.col("text"), F.lit(""))),
-                    "\n", "&#10;"),
-                F.lit("</Unicode></TextEquiv></TextRegion>"),
-            )
-        )
-    )
-    ordered_ref = F.concat(
-        F.lit("      <RegionRefIndexed index='"), sid,
-        F.lit("' regionRef='r"), sid, F.lit("'/>"),
-    )
-    elem = F.concat(region, F.lit("\x00"), ordered_ref)
-    folded = _ordered_join(spans, elem, "page_xml", F.lit(""), F.lit(""))
-    # split the interleaved fold into the two document sections
-    regions = F.array_join(F.transform(
-        F.split(F.col("page_xml"), "\n"),
-        lambda ln: F.split(ln, "\x00")[0]), "\n")
-    refs = F.array_join(F.transform(
-        F.split(F.col("page_xml"), "\n"),
-        lambda ln: F.split(ln, "\x00")[1]), "\n")
-    return folded.select(
-        "doc_id",
+
+    def region(tag, *tail):
+        return F.concat(F.lit(f"    <{tag} id='r"), sid, F.lit("' custom='"),
+                        F.col("kind"), *tail)
+
+    regions = _by_kind(
+        region("SeparatorRegion", F.lit("'/>")),
+        region("ImageRegion", F.lit("' imageFilename='"),
+               _escape_xml(_or_empty("media_ref")), F.lit("'/>")),
+        region("TextRegion", F.lit("'>"), _page_text(),
+               F.lit("</TextRegion>")))
+    ref = F.concat(F.lit("      <RegionRefIndexed index='"), sid,
+                   F.lit("' regionRef='r"), sid, F.lit("'/>"))
+    return spans.groupBy("doc_id").agg(
         F.concat(
             F.lit("<PcGts xmlns='http://schema.primaresearch.org/PAGE/gts/"
                   "pagecontent/2019-07-15'>\n  <Page imageFilename='"),
             _escape_xml(F.col("doc_id")),
             F.lit("'>\n    <ReadingOrder><OrderedGroup id='ro'>\n"),
-            refs,
+            _fold(ref, "order"),
             F.lit("\n    </OrderedGroup></ReadingOrder>\n"),
-            regions,
+            _fold(regions, "order"),
             F.lit("\n  </Page>\n</PcGts>"),
-        ).alias("page_xml"),
-    )
-
-
-def render_hocr(spans: DataFrame) -> DataFrame:
-    """(doc_id, hocr): minimal hOCR document — a div per span with its kind
-    as the hOCR class annotation."""
-    title = F.col("kind")
-    if _has_boxes(spans):
-        # hOCR bbox property (hocrrenderer.cpp:123): title='kind; bbox l t r b'
-        title = F.concat(
-            F.col("kind"), F.lit("; bbox "),
-            F.concat_ws(" ", F.col("left").cast("string"),
-                        F.col("top").cast("string"),
-                        F.col("right").cast("string"),
-                        F.col("bottom").cast("string")))
-    body_div = F.concat(
-        F.lit("  <div class='ocr_carea' id='block_"),
-        F.col("order").cast("string"),
-        F.lit("' title='"),
-        title,
-        F.lit("'>"),
-        # kind-typed like the XML sinks: image kinds embed the media ref,
-        # line kinds have no body, text kinds show their (possibly empty
-        # under recognize=False) text
-        F.when(
-            F.col("kind").isin(*IMAGE_KINDS),
-            F.concat(F.lit("<img src='"),
-                     F.coalesce(F.col("media_ref"), F.lit("")),
-                     F.lit("'/>")),
-        )
-        .when(F.col("kind").isin(*LINE_KINDS), F.lit(""))
-        .otherwise(_escape_html(F.coalesce(F.col("text"), F.lit("")))),
-        F.lit("</div>"),
-    )
-    return (
-        spans.groupBy("doc_id")
-        .agg(
-            F.concat(
-                F.lit("<html><body>\n"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("order", body_div.alias("div")))
-                        ),
-                        lambda s: s["div"],
-                    ),
-                    "\n",
-                ),
-                F.lit("\n</body></html>"),
-            ).alias("hocr")
-        )
-    )
+        ).alias("page_xml"))
 
 
 # ---------------------------------------------------------------------------
@@ -295,40 +324,19 @@ def render_hocr(spans: DataFrame) -> DataFrame:
 # line → word, fed by the extract_blocks + extract_words kernel outputs.
 # A "page" is one media span; a multipage container's pages are already
 # flattened into its block sequence (ProcessPagesMultipageTiff,
-# /root/reference/src/api/baseapi.cpp:1657).
+# baseapi.cpp:1657).
 # ---------------------------------------------------------------------------
-
-
-def _bbox_agg():
-    return [F.min("left").alias("left"), F.min("top").alias("top"),
-            F.max("right").alias("right"), F.max("bottom").alias("bottom")]
-
-
-def _page_nums(blocks: DataFrame) -> DataFrame:
-    """(doc_id, offset, page_num, page bbox): page_num is the 1-based rank
-    of the media span within its doc (GetTSVText page counter)."""
-    pages = blocks.groupBy("doc_id", "offset").agg(*_bbox_agg())
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return pages.withColumn("page_num", F.row_number().over(w))
-
-
-def _sort_struct(offset, block, par, line, word, level, text):
-    return F.struct(
-        offset.alias("o"), block.alias("b"), par.alias("p"),
-        line.alias("l"), word.alias("w"), F.lit(level).alias("lv"),
-        text.alias("line"))
 
 
 def render_tsv_levels(blocks: DataFrame, words: DataFrame) -> DataFrame:
     """(doc_id, tsv) at the reference's full TSV depth (GetTSVText,
-    /root/reference/src/api/baseapi.cpp:2205): one 12-column row per
-    hierarchy node — level page block par line word left top width height
-    conf text — level 1 page, 2 block, 3 paragraph, 4 line, 5 word.
-    Non-word levels carry conf -1 and empty text, exactly like the
-    reference. Inputs are the two kernel views (extract_blocks,
-    extract_words); all assembly is built-in aggregations — hierarchy
-    levels are groupBys over the word sidecar, the doc fold one sorted
-    array_join.
+    baseapi.cpp:2205): one 12-column row per hierarchy node — level page
+    block par line word left top width height conf text — level 1 page,
+    2 block, 3 paragraph, 4 line, 5 word. Non-word levels carry conf -1 and
+    empty text, exactly like the reference. Inputs are the two kernel views
+    (extract_blocks, extract_words); all assembly is built-in aggregations —
+    hierarchy levels are groupBys over the word sidecar, the doc fold one
+    sorted array_join over the union of the five level frames.
 
     Both inputs are PERSISTED here: the level frames consume the block view
     twice and the word view three times, and without a cache each branch
@@ -339,67 +347,34 @@ def render_tsv_levels(blocks: DataFrame, words: DataFrame) -> DataFrame:
     blocks = blocks.persist()
     words = words.persist()
     m1 = F.lit(-1)
-
-    def fmt(level, page, block, par, line, word, conf, text):
-        return F.concat_ws(
-            "\t", F.lit(str(level)), page.cast("string"),
-            block.cast("string"), par.cast("string"), line.cast("string"),
-            word.cast("string"), F.col("left").cast("string"),
-            F.col("top").cast("string"),
-            (F.col("right") - F.col("left") + 1).cast("string"),
-            (F.col("bottom") - F.col("top") + 1).cast("string"),
-            conf.cast("string"), text)
-
     pages = _page_nums(blocks)
     pnum = pages.select("doc_id", "offset", "page_num")
-    zero = F.lit(0)
-    page_rows = pages.select(
-        "doc_id",
-        _sort_struct(F.col("offset"), m1, m1, m1, m1, 1,
-                     fmt(1, F.col("page_num"), zero, zero, zero, zero, m1,
-                         F.lit(""))).alias("s"))
-    blk = blocks.join(pnum, ["doc_id", "offset"])
-    block_rows = blk.select(
-        "doc_id",
-        _sort_struct(F.col("offset"), F.col("block_order"), m1, m1, m1, 2,
-                     fmt(2, F.col("page_num"), F.col("block_order") + 1,
-                         zero, zero, zero, m1, F.lit(""))).alias("s"))
-    paras = (words.groupBy("doc_id", "offset", "block_order", "para_num")
-             .agg(*_bbox_agg()).join(pnum, ["doc_id", "offset"]))
-    para_rows = paras.select(
-        "doc_id",
-        _sort_struct(F.col("offset"), F.col("block_order"),
-                     F.col("para_num"), m1, m1, 3,
-                     fmt(3, F.col("page_num"), F.col("block_order") + 1,
-                         F.col("para_num") + 1, zero, zero, m1,
-                         F.lit(""))).alias("s"))
-    lines = (words.groupBy("doc_id", "offset", "block_order", "para_num",
-                           "line_num")
-             .agg(*_bbox_agg()).join(pnum, ["doc_id", "offset"]))
-    line_rows = lines.select(
-        "doc_id",
-        _sort_struct(F.col("offset"), F.col("block_order"),
-                     F.col("para_num"), F.col("line_num"), m1, 4,
-                     fmt(4, F.col("page_num"), F.col("block_order") + 1,
-                         F.col("para_num") + 1, F.col("line_num") + 1, zero,
-                         m1, F.lit(""))).alias("s"))
-    word_rows = words.join(pnum, ["doc_id", "offset"]).select(
-        "doc_id",
-        _sort_struct(F.col("offset"), F.col("block_order"),
-                     F.col("para_num"), F.col("line_num"), F.col("word_num"),
-                     5,
-                     fmt(5, F.col("page_num"), F.col("block_order") + 1,
-                         F.col("para_num") + 1, F.col("line_num") + 1,
-                         F.col("word_num") + 1, F.col("conf"),
-                         F.col("word"))).alias("s"))
-    allr = page_rows.unionByName(block_rows).unionByName(para_rows) \
-        .unionByName(line_rows).unionByName(word_rows)
-    return (
-        allr.groupBy("doc_id")
-        .agg(F.array_join(
-            F.transform(F.array_sort(F.collect_list("s")),
-                        lambda s: s["line"]), "\n").alias("tsv"))
-    )
+
+    def level(df: DataFrame, lv: int) -> DataFrame:
+        """One row per node of `df` at level `lv`. Nodes sort by their keys
+        with -1 past their depth, so a parent precedes its children."""
+        here = LEVEL_KEYS[:lv]
+        ids = [F.col("page_num")] + [F.col(k) + 1 if k in here else F.lit(0)
+                                     for k in LEVEL_KEYS[1:]]
+        is_word = lv == len(LEVEL_KEYS)
+        row = F.concat_ws(
+            "\t", F.lit(str(lv)), *(c.cast("string") for c in ids),
+            F.col("left").cast("string"), F.col("top").cast("string"),
+            *_extent(), (F.col("conf") if is_word else m1).cast("string"),
+            F.col("word") if is_word else F.lit(""))
+        return df.select("doc_id", *((F.col(k) if k in here else m1).alias(k)
+                                     for k in LEVEL_KEYS),
+                         F.lit(lv).alias("lv"), row.alias("row"))
+
+    def numbered(df):
+        return df.join(pnum, ["doc_id", "offset"])
+
+    frames = [pages, numbered(blocks), numbered(_group(words, 3)),
+              numbered(_group(words, 4)), numbered(words)]
+    rows = reduce(DataFrame.unionByName,
+                  (level(df, lv) for lv, df in enumerate(frames, 1)))
+    return rows.groupBy("doc_id").agg(
+        _fold("row", *LEVEL_KEYS, "lv").alias("tsv"))
 
 
 def render_hocr_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
@@ -413,118 +388,37 @@ def render_hocr_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
     The block view is persisted (consumed by the carea join and the page
     fold); the word chain is linear and needs no cache."""
     blocks = blocks.persist()
-
-    def bbox():
-        return F.concat_ws(" ", F.col("left").cast("string"),
-                           F.col("top").cast("string"),
-                           F.col("right").cast("string"),
-                           F.col("bottom").cast("string"))
-
-    wid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"),
-                      F.col("para_num").cast("string"),
-                      F.col("line_num").cast("string"),
-                      F.col("word_num").cast("string"))
-    frag = F.concat(
-        F.lit("<span class='ocrx_word' id='word_"), wid,
-        F.lit("' title='bbox "), bbox(), F.lit("; x_wconf "),
+    word = F.concat(
+        F.lit("<span class='ocrx_word' id='word_"), _node_id(5),
+        F.lit("' title='bbox "), _bbox(), F.lit("; x_wconf "),
         F.col("conf").cast("string"), F.lit("'>"),
         _escape_html(F.col("word")), F.lit("</span>"))
-    lines = (
-        words.select("doc_id", "offset", "block_order", "para_num",
-                     "line_num", "left", "top", "right", "bottom",
-                     "x_size", "base_slope", "base_off",
-                     F.struct(F.col("word_num").alias("w"),
-                              frag.alias("f")).alias("wf"))
-        .groupBy("doc_id", "offset", "block_order", "para_num", "line_num")
-        .agg(*_bbox_agg(),
-             # per-line typography is identical on every word of the line
-             # (the _attach_words contract), so first() is deterministic
-             F.first("x_size").alias("x_size"),
-             F.first("base_slope").alias("base_slope"),
-             F.first("base_off").alias("base_off"),
-             F.array_join(F.transform(F.array_sort(F.collect_list("wf")),
-                                      lambda s: s["f"]), " ").alias("body"))
-    )
-    lid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"),
-                      F.col("para_num").cast("string"),
-                      F.col("line_num").cast("string"))
+    # per-line typography is identical on every word of the line (the
+    # _attach_words contract), so first() is deterministic
+    lines = _group(words, 4,
+                   *(F.first(c).alias(c)
+                     for c in ("x_size", "base_slope", "base_off")),
+                   _fold(word, "word_num", sep=" ").alias("body"))
     # the reference's line title (hocrrenderer.cpp:163): baseline slope +
     # constant (relative to the line box's bottom-left corner) and x_size
-    line_html = F.concat(F.lit("<span class='ocr_line' id='line_"), lid,
-                         F.lit("' title='bbox "), bbox(),
-                         F.lit("; baseline "),
-                         F.format_string("%.3f", F.col("base_slope")),
-                         F.lit(" "), F.col("base_off").cast("string"),
-                         F.lit("; x_size "),
-                         F.col("x_size").cast("string"), F.lit("'>"),
-                         F.col("body"), F.lit("</span>"))
-    paras = (
-        lines.select("doc_id", "offset", "block_order", "para_num",
-                     "left", "top", "right", "bottom",
-                     F.struct(F.col("line_num").alias("l"),
-                              line_html.alias("h")).alias("lh"))
-        .groupBy("doc_id", "offset", "block_order", "para_num")
-        .agg(*_bbox_agg(),
-             F.array_join(F.transform(F.array_sort(F.collect_list("lh")),
-                                      lambda s: s["h"]), "\n").alias("body"))
-    )
-    pid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"),
-                      F.col("para_num").cast("string"))
-    para_html = F.concat(F.lit("<p class='ocr_par' id='par_"), pid,
-                         F.lit("' title='bbox "), bbox(), F.lit("'>"),
-                         F.col("body"), F.lit("</p>"))
-    block_bodies = (
-        paras.select("doc_id", "offset", "block_order",
-                     F.struct(F.col("para_num").alias("p"),
-                              para_html.alias("h")).alias("ph"))
-        .groupBy("doc_id", "offset", "block_order")
-        .agg(F.array_join(F.transform(F.array_sort(F.collect_list("ph")),
-                                      lambda s: s["h"]), "\n").alias("wbody"))
-    )
-    blk = blocks.join(block_bodies, ["doc_id", "offset", "block_order"],
-                      "left")
-    flat_body = (
-        F.when(F.col("kind").isin(*IMAGE_KINDS),
-               F.concat(F.lit("<img src='"),
-                        F.coalesce(F.col("media_ref"), F.lit("")),
-                        F.lit("'/>")))
-        .when(F.col("kind").isin(*LINE_KINDS), F.lit(""))
-        .otherwise(_escape_html(F.coalesce(F.col("text"), F.lit("")))))
-    bid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"))
-    block_html = F.concat(
-        F.lit("  <div class='ocr_carea' id='block_"), bid,
-        F.lit("' title='"), F.col("kind"), F.lit("; bbox "), bbox(),
-        F.lit("'>"), F.coalesce(F.col("wbody"), flat_body),
-        F.lit("</div>"))
-    pages = (
-        blk.select("doc_id", "offset", "left", "top", "right", "bottom",
-                   F.struct(F.col("block_order").alias("b"),
-                            block_html.alias("h")).alias("bh"))
-        .groupBy("doc_id", "offset")
-        .agg(*_bbox_agg(),
-             F.array_join(F.transform(F.array_sort(F.collect_list("bh")),
-                                      lambda s: s["h"]), "\n").alias("body"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    page_html = F.concat(F.lit(" <div class='ocr_page' id='page_"),
-                         F.col("page_num").cast("string"),
-                         F.lit("' title='bbox "), bbox(), F.lit("'>\n"),
-                         F.col("body"), F.lit("\n </div>"))
-    paged = pages.withColumn("page_num", F.row_number().over(w)).select(
-        "doc_id", F.struct(F.col("offset").alias("o"),
-                           page_html.alias("h")).alias("ph"))
-    return (
-        paged.groupBy("doc_id")
-        .agg(F.concat(
-            F.lit("<html><body>\n"),
-            F.array_join(F.transform(F.array_sort(F.collect_list("ph")),
-                                     lambda s: s["h"]), "\n"),
-            F.lit("\n</body></html>")).alias("hocr"))
-    )
+    line = F.concat(F.lit("<span class='ocr_line' id='line_"), _node_id(4),
+                    F.lit("' title='bbox "), _bbox(), F.lit("; baseline "),
+                    F.format_string("%.3f", F.col("base_slope")), F.lit(" "),
+                    F.col("base_off").cast("string"), F.lit("; x_size "),
+                    F.col("x_size").cast("string"), F.lit("'>"),
+                    F.col("body"), F.lit("</span>"))
+    paras = _group(lines, 3, _fold(line, "line_num").alias("body"))
+    para = F.concat(F.lit("<p class='ocr_par' id='par_"), _node_id(3),
+                    F.lit("' title='bbox "), _bbox(), F.lit("'>"),
+                    F.col("body"), F.lit("</p>"))
+    blk = _with_bodies(blocks,
+                       _group(paras, 2, _fold(para, "para_num").alias("wbody")))
+    page = F.concat(F.lit(" <div class='ocr_page' id='page_"),
+                    F.col("page_num").cast("string"),
+                    F.lit("' title='bbox "), _bbox(), F.lit("'>\n"),
+                    F.col("body"), F.lit("\n </div>"))
+    return _paged(blk, _hocr_carea(_node_id(2), True, F.col("wbody")), page,
+                  "hocr", "<html><body>\n", "\n</body></html>")
 
 
 def render_alto_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
@@ -537,113 +431,31 @@ def render_alto_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
     render_hocr_words; the block view is persisted (used by the typed-
     element join and the page fold)."""
     blocks = blocks.persist()
-
-    def pos():
-        return F.concat(
-            F.lit(" HPOS='"), F.col("left").cast("string"),
-            F.lit("' VPOS='"), F.col("top").cast("string"),
-            F.lit("' WIDTH='"), (F.col("right") - F.col("left") + 1).cast("string"),
-            F.lit("' HEIGHT='"), (F.col("bottom") - F.col("top") + 1).cast("string"),
-            F.lit("'"))
-
-    wid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"),
-                      F.col("para_num").cast("string"),
-                      F.col("line_num").cast("string"),
-                      F.col("word_num").cast("string"))
-    frag = F.concat(
-        F.lit("      <String ID='word_"), wid, F.lit("'"), pos(),
-        F.lit(" WC='"), F.format_string("%.2f", F.col("conf") / 100.0),
+    word = F.concat(
+        F.lit("      <String ID='word_"), _node_id(5), F.lit("'"),
+        _alto_pos(), F.lit(" WC='"),
+        F.format_string("%.2f", F.col("conf") / 100.0),
         F.lit("' CONTENT='"), _escape_xml(F.col("word")), F.lit("'/>"))
-    lines = (
-        words.select("doc_id", "offset", "block_order", "para_num",
-                     "line_num", "left", "top", "right", "bottom",
-                     "base_off",
-                     F.struct(F.col("word_num").alias("w"),
-                              frag.alias("f")).alias("wf"))
-        .groupBy("doc_id", "offset", "block_order", "para_num", "line_num")
-        .agg(*_bbox_agg(),
-             F.first("base_off").alias("base_off"),
-             F.array_join(F.transform(F.array_sort(F.collect_list("wf")),
-                                      lambda s: s["f"]), "\n").alias("body"))
-    )
-    lid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"),
-                      F.col("para_num").cast("string"),
-                      F.col("line_num").cast("string"))
+    lines = _group(words, 4, F.first("base_off").alias("base_off"),
+                   _fold(word, "word_num").alias("body"))
     # ALTO TextLine BASELINE (altorenderer.cpp writes the absolute y of the
     # fitted baseline): line bbox bottom + the bottom-relative offset
-    line_xml = F.concat(F.lit("     <TextLine ID='line_"), lid, F.lit("'"),
-                        pos(), F.lit(" BASELINE='"),
-                        (F.col("bottom") + F.col("base_off")).cast("string"),
-                        F.lit("'>\n"), F.col("body"),
-                        F.lit("\n     </TextLine>"))
-    block_bodies = (
-        lines.select("doc_id", "offset", "block_order",
-                     F.struct(F.col("para_num").alias("p"),
-                              F.col("line_num").alias("l"),
-                              line_xml.alias("h")).alias("lh"))
-        .groupBy("doc_id", "offset", "block_order")
-        .agg(F.array_join(F.transform(F.array_sort(F.collect_list("lh")),
-                                      lambda s: s["h"]), "\n").alias("wbody"))
-    )
-    blk = blocks.join(block_bodies, ["doc_id", "offset", "block_order"],
-                      "left")
-    bid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"))
-    elem = (
-        F.when(
-            F.col("kind").isin(*LINE_KINDS),
-            F.concat(F.lit("    <GraphicalElement ID='block_"), bid,
-                     F.lit("' TAGREFS='"), F.col("kind"), F.lit("'"), pos(),
-                     F.lit("/>")))
-        .when(
-            F.col("kind").isin(*IMAGE_KINDS),
-            F.concat(F.lit("    <Illustration ID='block_"), bid,
-                     F.lit("' TAGREFS='"), F.col("kind"), F.lit("'"), pos(),
-                     F.lit(" FILEID='"),
-                     _escape_xml(F.coalesce(F.col("media_ref"), F.lit(""))),
-                     F.lit("'/>")))
-        .otherwise(
-            F.concat(
-                F.lit("    <TextBlock ID='block_"), bid,
-                F.lit("' TAGREFS='"), F.col("kind"), F.lit("'"), pos(),
-                F.when(
-                    F.col("wbody").isNotNull(),
-                    F.concat(F.lit(">\n"), F.col("wbody"),
-                             F.lit("\n    </TextBlock>")))
-                .otherwise(F.concat(
-                    F.lit("><TextLine><String CONTENT='"),
-                    _escape_xml(F.regexp_replace(
-                        F.coalesce(F.col("text"), F.lit("")), "\n", " ")),
-                    F.lit("'/></TextLine></TextBlock>"))))))
-    pages = (
-        blk.select("doc_id", "offset", "left", "top", "right", "bottom",
-                   F.struct(F.col("block_order").alias("b"),
-                            elem.alias("h")).alias("bh"))
-        .groupBy("doc_id", "offset")
-        .agg(*_bbox_agg(),
-             F.array_join(F.transform(F.array_sort(F.collect_list("bh")),
-                                      lambda s: s["h"]), "\n").alias("body"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    page_xml = F.concat(
-        F.lit("  <Page ID='page_"), F.col("page_num").cast("string"),
-        F.lit("' PHYSICAL_IMG_NR='"), F.col("page_num").cast("string"),
-        F.lit("'"), pos(), F.lit(">\n   <PrintSpace>\n"), F.col("body"),
-        F.lit("\n   </PrintSpace>\n  </Page>"))
-    paged = pages.withColumn("page_num", F.row_number().over(w)).select(
-        "doc_id", F.struct(F.col("offset").alias("o"),
-                           page_xml.alias("h")).alias("ph"))
-    return (
-        paged.groupBy("doc_id")
-        .agg(F.concat(
-            F.lit("<alto xmlns='http://www.loc.gov/standards/alto/ns-v3#'>"
-                  "\n <Layout>\n"),
-            F.array_join(F.transform(F.array_sort(F.collect_list("ph")),
-                                     lambda s: s["h"]), "\n"),
-            F.lit("\n </Layout>\n</alto>")).alias("alto"))
-    )
+    line = F.concat(F.lit("     <TextLine ID='line_"), _node_id(4),
+                    F.lit("'"), _alto_pos(), F.lit(" BASELINE='"),
+                    (F.col("bottom") + F.col("base_off")).cast("string"),
+                    F.lit("'>\n"), F.col("body"), F.lit("\n     </TextLine>"))
+    blk = _with_bodies(blocks, _group(
+        lines, 2, _fold(line, "para_num", "line_num").alias("wbody")))
+    pn = F.col("page_num").cast("string")
+    page = F.concat(
+        F.lit("  <Page ID='page_"), pn, F.lit("' PHYSICAL_IMG_NR='"), pn,
+        F.lit("'"), _alto_pos(), F.lit(">\n   <PrintSpace>\n"),
+        F.col("body"), F.lit("\n   </PrintSpace>\n  </Page>"))
+    return _paged(
+        blk, _alto_block(_node_id(2), _alto_pos(), F.col("wbody")), page,
+        "alto",
+        "<alto xmlns='http://www.loc.gov/standards/alto/ns-v3#'>\n <Layout>\n",
+        "\n </Layout>\n</alto>")
 
 
 def render_page_xml_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
@@ -669,116 +481,54 @@ def render_page_xml_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
             F.lit(" "), x1, F.lit(","), y0, F.lit(" "), x1, F.lit(","), y1,
             F.lit(" "), x0, F.lit(","), y1, F.lit("'/>"))
 
-    wid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"),
-                      F.col("para_num").cast("string"),
-                      F.col("line_num").cast("string"),
-                      F.col("word_num").cast("string"))
-    wfrag = F.concat(
-        F.lit("    <Word id='w"), wid, F.lit("'>\n"), coords("     "),
+    text = _escape_xml(F.col("word"))
+    word = F.concat(
+        F.lit("    <Word id='w"), _node_id(5), F.lit("'>\n"), coords("     "),
         F.lit("\n     <TextEquiv conf='"),
         F.format_string("%.2f", F.col("conf") / 100.0),
-        F.lit("'><Unicode>"), _escape_xml(F.col("word")),
+        F.lit("'><Unicode>"), text,
         F.lit("</Unicode></TextEquiv>\n    </Word>"))
-    lines = (
-        words.select("doc_id", "offset", "block_order", "para_num",
-                     "line_num", "left", "top", "right", "bottom",
-                     F.struct(F.col("word_num").alias("w"),
-                              wfrag.alias("f"),
-                              _escape_xml(F.col("word")).alias("t"))
-                     .alias("wf"))
-        .groupBy("doc_id", "offset", "block_order", "para_num", "line_num")
-        .agg(*_bbox_agg(),
-             F.array_sort(F.collect_list("wf")).alias("ws"))
-        .withColumn("body", F.array_join(
-            F.transform(F.col("ws"), lambda s: s["f"]), "\n"))
-        .withColumn("plain", F.array_join(
-            F.transform(F.col("ws"), lambda s: s["t"]), " "))
-    )
-    lid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"),
-                      F.col("para_num").cast("string"),
-                      F.col("line_num").cast("string"))
-    line_xml = F.concat(
-        F.lit("   <TextLine id='l"), lid, F.lit("'>\n"), coords("    "),
-        F.lit("\n"), F.col("body"), F.lit("\n    <TextEquiv><Unicode>"),
-        F.col("plain"), F.lit("</Unicode></TextEquiv>\n   </TextLine>"))
-    block_bodies = (
-        lines.select("doc_id", "offset", "block_order",
-                     F.struct(F.col("para_num").alias("p"),
-                              F.col("line_num").alias("l"),
-                              line_xml.alias("h")).alias("lh"))
-        .groupBy("doc_id", "offset", "block_order")
-        .agg(F.array_join(F.transform(F.array_sort(F.collect_list("lh")),
-                                      lambda s: s["h"]), "\n").alias("wbody"))
-    )
-    blk = blocks.join(block_bodies, ["doc_id", "offset", "block_order"],
-                      "left")
-    rid = F.concat_ws("_", F.col("offset").cast("string"),
-                      F.col("block_order").cast("string"))
-    region = (
-        F.when(
-            F.col("kind").isin(*LINE_KINDS),
-            F.concat(F.lit("  <SeparatorRegion id='r"), rid,
-                     F.lit("' custom='"), F.col("kind"), F.lit("'>\n"),
-                     coords("   "), F.lit("\n  </SeparatorRegion>")))
-        .when(
-            F.col("kind").isin(*IMAGE_KINDS),
-            F.concat(F.lit("  <ImageRegion id='r"), rid,
-                     F.lit("' custom='"), F.col("kind"),
-                     F.lit("' imageFilename='"),
-                     _escape_xml(F.coalesce(F.col("media_ref"), F.lit(""))),
-                     F.lit("'>\n"), coords("   "),
-                     F.lit("\n  </ImageRegion>")))
-        .otherwise(
-            F.concat(
-                F.lit("  <TextRegion id='r"), rid, F.lit("' custom='"),
-                F.col("kind"), F.lit("'>\n"), coords("   "), F.lit("\n"),
-                F.when(F.col("wbody").isNotNull(), F.col("wbody"))
-                .otherwise(F.concat(
-                    F.lit("   <TextEquiv><Unicode>"),
-                    F.regexp_replace(
-                        _escape_xml(F.coalesce(F.col("text"), F.lit(""))),
-                        "\n", "&#10;"),
-                    F.lit("</Unicode></TextEquiv>"))),
-                F.lit("\n  </TextRegion>"))))
+    lines = _group(words, 4, _fold(word, "word_num").alias("body"),
+                   _fold(text, "word_num", sep=" ").alias("plain"))
+    line = F.concat(
+        F.lit("   <TextLine id='l"), _node_id(4), F.lit("'>\n"),
+        coords("    "), F.lit("\n"), F.col("body"),
+        F.lit("\n    <TextEquiv><Unicode>"), F.col("plain"),
+        F.lit("</Unicode></TextEquiv>\n   </TextLine>"))
+    blk = _with_bodies(blocks, _group(
+        lines, 2, _fold(line, "para_num", "line_num").alias("wbody")))
+    rid = _node_id(2)
+
+    def region(tag, attrs, *body):
+        return F.concat(F.lit(f"  <{tag} id='r"), rid, F.lit("' custom='"),
+                        F.col("kind"), F.lit("'"), *attrs, F.lit(">\n"),
+                        coords("   "), *body, F.lit(f"\n  </{tag}>"))
+
+    regions = _by_kind(
+        region("SeparatorRegion", []),
+        region("ImageRegion", [F.lit(" imageFilename='"),
+                               _escape_xml(_or_empty("media_ref")),
+                               F.lit("'")]),
+        region("TextRegion", [], F.lit("\n"), F.coalesce(
+            F.col("wbody"), F.concat(F.lit("   "), _page_text()))))
     ref = F.concat(F.lit("   <RegionRefIndexed index='"),
                    F.col("block_order").cast("string"),
                    F.lit("' regionRef='r"), rid, F.lit("'/>"))
-    pages = (
-        blk.select("doc_id", "offset", "media_ref",
-                   F.struct(F.col("block_order").alias("b"),
-                            region.alias("h")).alias("bh"),
-                   F.struct(F.col("block_order").alias("b"),
-                            ref.alias("h")).alias("rh"))
-        .groupBy("doc_id", "offset")
-        .agg(F.max("media_ref").alias("page_ref"),
-             F.array_join(F.transform(F.array_sort(F.collect_list("bh")),
-                                      lambda s: s["h"]), "\n").alias("body"),
-             F.array_join(F.transform(F.array_sort(F.collect_list("rh")),
-                                      lambda s: s["h"]), "\n").alias("refs"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("offset")
     pn = F.col("page_num").cast("string")
-    page_xml = F.concat(
+    page = F.concat(
         F.lit(" <Page id='page_"), pn, F.lit("' imageFilename='"),
-        _escape_xml(F.coalesce(F.col("page_ref"), F.lit(""))),
+        _escape_xml(_or_empty("page_ref")),
         F.lit("'>\n  <ReadingOrder><OrderedGroup id='ro_"), pn,
         F.lit("'>\n"), F.col("refs"),
         F.lit("\n  </OrderedGroup></ReadingOrder>\n"), F.col("body"),
         F.lit("\n </Page>"))
-    paged = pages.withColumn("page_num", F.row_number().over(w)).select(
-        "doc_id", F.struct(F.col("offset").alias("o"),
-                           page_xml.alias("h")).alias("ph"))
-    return (
-        paged.groupBy("doc_id")
-        .agg(F.concat(
-            F.lit("<PcGts xmlns='http://schema.primaresearch.org/PAGE/gts/"
-                  "pagecontent/2019-07-15'>\n"),
-            F.array_join(F.transform(F.array_sort(F.collect_list("ph")),
-                                     lambda s: s["h"]), "\n"),
-            F.lit("\n</PcGts>")).alias("page_xml"))
-    )
+    return _paged(
+        blk, regions, page,
+        "page_xml",
+        "<PcGts xmlns='http://schema.primaresearch.org/PAGE/gts/"
+        "pagecontent/2019-07-15'>\n", "\n</PcGts>",
+        F.max("media_ref").alias("page_ref"),
+        _fold(ref, "block_order").alias("refs"))
 
 
 # GetUNLVText's latin fold table (kUniChs → kLatinChs, baseapi.cpp:2431-2434):
@@ -789,23 +539,17 @@ UNLV_REJECT = "~"   # kUNLVReject / kTesseractReject (tessedit.h)
 UNLV_SUSPECT = "^"  # kUNLVSuspect
 
 
-def _sym_order():
-    """The RIL_SYMBOL walk order of the symbol sidecar."""
-    return (F.col("offset"), F.col("block_order"), F.col("para_num"),
-            F.col("line_num"), F.col("word_num"), F.col("sym_num"))
-
-
 def render_box(symbols: DataFrame) -> DataFrame:
     """(doc_id, box): the reference's .box training-file format — one line
     per SYMBOL, `char left (H-bottom) right (H-top) page`, y flipped to the
     box file's bottom-left origin via the page height (GetBoxText,
-    /root/reference/src/api/baseapi.cpp:2391-2422, TessBoxTextRenderer
-    renderer.h:298). A space decode is rewritten to the reject char '~'
-    exactly like GetBoxText's kTesseractReject fix (baseapi.cpp:2407-2411);
-    the page column is the media span's offset (the reference's
-    page_number argument). Coordinates are inclusive on both edges, so the
-    flip is H-1-y. Input: the extract_symbols sidecar. One shuffle (the
-    per-doc fold); the line assembly is all built-in expressions."""
+    baseapi.cpp:2391-2422, TessBoxTextRenderer renderer.h:298). A space
+    decode is rewritten to the reject char '~' exactly like GetBoxText's
+    kTesseractReject fix (baseapi.cpp:2407-2411); the page column is the
+    media span's offset (the reference's page_number argument). Coordinates
+    are inclusive on both edges, so the flip is H-1-y. Input: the
+    extract_symbols sidecar. One shuffle (the per-doc fold); the line
+    assembly is all built-in expressions."""
     ch = F.when(F.col("ch") == " ", UNLV_REJECT).otherwise(F.col("ch"))
     line = F.concat_ws(
         " ", ch,
@@ -814,27 +558,20 @@ def render_box(symbols: DataFrame) -> DataFrame:
         F.col("right").cast("string"),
         (F.col("page_h") - 1 - F.col("top")).cast("string"),
         F.col("offset").cast("string"))
-    rec = F.struct(*_sym_order(), line.alias("line"))
-    return (
-        symbols.groupBy("doc_id")
-        .agg(F.array_join(
-            F.transform(F.array_sort(F.collect_list(rec)),
-                        lambda s: s["line"]), "\n").alias("box"))
-    )
+    return symbols.groupBy("doc_id").agg(_fold(line, *SYM_KEYS).alias("box"))
 
 
 def render_unlv(symbols: DataFrame, suspect_conf: int = 80) -> DataFrame:
     """(doc_id, unlv): UNLV-format Latin-1 text with reject and suspect
-    codes (GetUNLVText, /root/reference/src/api/baseapi.cpp:2440,
-    TessUnlvRenderer renderer.h:276): the kUniChs→kLatinChs fold maps the
-    common non-Latin-1 punctuation into Latin-1 (baseapi.cpp:2428-2434);
-    any character still above U+00FF becomes the reject '~'
-    (baseapi.cpp:2508-2515); a character whose decode confidence is below
-    `suspect_conf` is prefixed with the suspect marker '^' — the per-char
-    reject_map marking of set_unlv_suspects (baseapi.cpp:2500-2503), driven
-    here by the template-decode hamming confidence. Words are joined by a
-    space within a line, lines/blocks by newline (the reference's
-    word->space()/BOL walk).
+    codes (GetUNLVText, baseapi.cpp:2440, TessUnlvRenderer renderer.h:276):
+    the kUniChs→kLatinChs fold maps the common non-Latin-1 punctuation into
+    Latin-1 (baseapi.cpp:2428-2434); any character still above U+00FF
+    becomes the reject '~' (baseapi.cpp:2508-2515); a character whose
+    decode confidence is below `suspect_conf` is prefixed with the suspect
+    marker '^' — the per-char reject_map marking of set_unlv_suspects
+    (baseapi.cpp:2500-2503), driven here by the template-decode hamming
+    confidence. Words are joined by a space within a line, lines/blocks by
+    newline (the reference's word->space()/BOL walk).
 
     One shuffle: the lag window and the per-doc fold share the doc_id hash
     partitioning. All character work is built-in expressions."""
@@ -844,27 +581,19 @@ def render_unlv(symbols: DataFrame, suspect_conf: int = 80) -> DataFrame:
           .otherwise(folded))
     ch = F.when(F.col("conf") < suspect_conf,
                 F.concat(F.lit(UNLV_SUSPECT), ch)).otherwise(ch)
-    w = Window.partitionBy("doc_id").orderBy(*_sym_order())
-    same_word = (
-        (F.lag("offset").over(w) == F.col("offset"))
-        & (F.lag("block_order").over(w) == F.col("block_order"))
-        & (F.lag("para_num").over(w) == F.col("para_num"))
-        & (F.lag("line_num").over(w) == F.col("line_num"))
-        & (F.lag("word_num").over(w) == F.col("word_num")))
-    same_line = (
-        (F.lag("offset").over(w) == F.col("offset"))
-        & (F.lag("block_order").over(w) == F.col("block_order"))
-        & (F.lag("para_num").over(w) == F.col("para_num"))
-        & (F.lag("line_num").over(w) == F.col("line_num")))
+    w = Window.partitionBy("doc_id").orderBy(*SYM_KEYS)
+
+    def same(depth):
+        """The previous symbol sits in the same depth-`depth` node."""
+        return reduce(lambda a, b: a & b, (F.lag(k).over(w) == F.col(k)
+                                           for k in LEVEL_KEYS[:depth]))
+
     sep = (F.when(F.lag("ch").over(w).isNull(), "")
-           .when(same_word, "").when(same_line, " ").otherwise("\n"))
-    rec = F.struct(*_sym_order(), F.concat(sep, ch).alias("piece"))
+           .when(same(5), "").when(same(4), " ").otherwise("\n"))
     return (
-        symbols.select("doc_id", rec.alias("rec"))
+        symbols.select("doc_id", *SYM_KEYS, F.concat(sep, ch).alias("piece"))
         .groupBy("doc_id")
-        .agg(F.array_join(
-            F.transform(F.array_sort(F.collect_list("rec")),
-                        lambda s: s["piece"]), "").alias("unlv"))
+        .agg(_fold("piece", *SYM_KEYS, sep="").alias("unlv"))
     )
 
 
@@ -873,7 +602,7 @@ PDF_SCHEMA = "doc_id string, pdf binary, n_pages int"
 
 def render_pdf(pages: DataFrame) -> DataFrame:
     """(doc_id, pdf, n_pages): one searchable PDF per document — the S8
-    TessPDFRenderer (/root/reference/src/api/pdfrenderer.cpp, renderer.h:244):
+    TessPDFRenderer (src/api/pdfrenderer.cpp, renderer.h:244):
     per page the gray backdrop image as an XObject and an INVISIBLE text
     layer (3 Tr) whose Tz-stretched words exactly cover their image boxes,
     so the file is viewable as the original scan yet selectable/searchable.

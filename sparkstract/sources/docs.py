@@ -45,10 +45,6 @@ def write_docs(docs: DataFrame, path: str) -> None:
     docs.write.mode("overwrite").parquet(path)
 
 
-def write_media(media: DataFrame, path: str) -> None:
-    media.write.mode("overwrite").parquet(path)
-
-
 def read_docs(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(DOCS_SCHEMA).parquet(path)
 

@@ -71,6 +71,25 @@ def test_render_page_xml_multiline_text(spark):
     assert "CONTENT='AB CD'" in alto
 
 
+def test_render_page_xml_nul_text_and_newline_ref(spark):
+    """Regions and reading-order refs are folded separately, so a NUL in a
+    span's text or a newline in a media_ref cannot cut one into the other."""
+    rows = [("d4", 0, "flowing_text", "A\x00B", None),
+            ("d4", 1, "flowing_image", None, "m\n1"),
+            ("d4", 2, "caption_text", "C", None)]
+    xml = render_page_xml(spark.createDataFrame(rows, SCHEMA)) \
+        .collect()[0]["page_xml"]
+    refs = [f"<RegionRefIndexed index='{i}' regionRef='r{i}'/>"
+            for i in range(3)]
+    assert all(r in xml for r in refs), xml
+    assert [xml.index(r) for r in refs] == sorted(xml.index(r) for r in refs)
+    assert "<TextRegion id='r0' custom='flowing_text'><TextEquiv><Unicode>" \
+        "A\x00B</Unicode></TextEquiv></TextRegion>" in xml
+    assert "<ImageRegion id='r1' custom='flowing_image' " \
+        "imageFilename='m\n1'/>" in xml
+    assert "<Unicode>C</Unicode>" in xml
+
+
 def test_render_hocr_escapes(spark):
     out = {r["doc_id"]: r["hocr"] for r in render_hocr(_spans(spark)).collect()}
     assert out["d2"].count("LONE &amp; &lt;b&gt;") == 1
@@ -101,6 +120,17 @@ def test_box_aware_renderers(spark, fixture_set):
     assert all(int(r) >= int(l) and int(b) >= int(t) for l, t, r, b in boxes)
     alto = render_alto(blocks).collect()[0]["alto"]
     assert re.search(r"HPOS='\d+' VPOS='\d+' WIDTH='\d+' HEIGHT='\d+'", alto)
+
+    # exact values on a hand-built block: bbox is inclusive (l t r b), ALTO
+    # carries the top-left corner and the inclusive extent
+    one = spark.createDataFrame(
+        [("g", 0, "flowing_text", "T", None, 10, 20, 29, 39)],
+        "doc_id string, order int, kind string, text string, "
+        "media_ref string, left int, top int, right int, bottom int")
+    hocr = render_hocr(one).collect()[0]["hocr"]
+    assert "title='flowing_text; bbox 10 20 29 39'" in hocr, hocr
+    alto = render_alto(one).collect()[0]["alto"]
+    assert "HPOS='10' VPOS='20' WIDTH='20' HEIGHT='20'" in alto, alto
 
 
 def test_hierarchy_renderers(spark, fixture_set):
