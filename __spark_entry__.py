@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import functools
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -667,11 +668,11 @@ def q_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_table_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED table view (C8 v3): grid column + span per visible cell
-    through the extract_tables sidecar kernel — the merged header cell
+    through the page table's cell projection — the merged header cell
     must come out once with col_span 2 (StructuredTable,
     tablerecog.cpp:62)."""
     from sparkstract.fixtures.gen import DOCS_SCHEMA, MEDIA_SCHEMA
-    from sparkstract.plans.pipeline import extract_tables
+    from sparkstract.plans.pipeline import extract_pages, page_cells
 
     png, shape = _table_fixture()
     docs = spark.createDataFrame(
@@ -680,7 +681,7 @@ def q_table_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = spark.createDataFrame(
         [("m-table", shape[1], shape[0], png)], MEDIA_SCHEMA)
     return (
-        extract_tables(spark, docs, media)
+        page_cells(extract_pages(spark, docs, media))
         .select("doc_id", "row_idx", "cell_idx", "col_start", "col_span",
                 "cell")
         .orderBy("doc_id", "row_idx", "cell_idx")
@@ -2027,10 +2028,10 @@ def q_extract_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recognize baseapi.cpp:1417; the para_page family splits [0,0,0,1,1]) —
     and its bounding box + confidence. Oracle: VALUES from the identical
     kernel run single-process over the deterministic fixture media."""
-    from sparkstract.plans.pipeline import extract_words
+    from sparkstract.plans.pipeline import extract_pages, page_words
 
     docs, media, _ = _fixture_frames(spark)
-    return extract_words(spark, docs, media).orderBy(
+    return page_words(extract_pages(spark, docs, media)).orderBy(
         "doc_id", "offset", "block_order", "para_num", "line_num", "word_num")
 
 
@@ -2039,10 +2040,10 @@ def q_extract_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseapi.cpp:2391): one row per decoded character with its decode-cell
     box, per-char confidence, and the page height the box renderer flips
     with. Oracle: VALUES from the identical kernel run single-process."""
-    from sparkstract.plans.pipeline import extract_symbols
+    from sparkstract.plans.pipeline import extract_pages, page_symbols
 
     docs, media, _ = _fixture_frames(spark)
-    return extract_symbols(spark, docs, media).orderBy(
+    return page_symbols(extract_pages(spark, docs, media)).orderBy(
         "doc_id", "offset", "block_order", "para_num", "line_num",
         "word_num", "sym_num")
 
@@ -2052,11 +2053,12 @@ def q_render_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     TessBoxTextRenderer renderer.h:298): one `char l (H-bottom) r (H-top)
     page` line per symbol, y flipped to bottom-left origin. Oracle: the
     identical string assembled single-process from the symbols truth."""
-    from sparkstract.plans.pipeline import extract_symbols
+    from sparkstract.plans.pipeline import extract_pages, page_symbols
     from sparkstract.sinks import render_box
 
     docs, media, _ = _fixture_frames(spark)
-    return render_box(extract_symbols(spark, docs, media)).orderBy("doc_id")
+    return render_box(page_symbols(extract_pages(spark, docs, media))) \
+        .orderBy("doc_id")
 
 
 def q_render_unlv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2064,62 +2066,71 @@ def q_render_unlv(spark: SparkSession, sf_dir: str) -> DataFrame:
     TessUnlvRenderer renderer.h:276): Latin-1 text with the kUniChs fold,
     '~' rejects for non-Latin-1 decodes and '^' suspect marks on low-
     confidence characters. Oracle: single-process twin of the fold."""
-    from sparkstract.plans.pipeline import extract_symbols
+    from sparkstract.plans.pipeline import extract_pages, page_symbols
     from sparkstract.sinks import render_unlv
 
     docs, media, _ = _fixture_frames(spark)
-    return render_unlv(extract_symbols(spark, docs, media)).orderBy("doc_id")
+    return render_unlv(page_symbols(extract_pages(spark, docs, media))) \
+        .orderBy("doc_id")
 
 
 def q_render_tsv_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-hierarchy TSV (GetTSVText levels 1-5, baseapi.cpp:2205) over the
-    fixture corpus — both input views from ONE kernel pass
-    (extract_hierarchy, persisted). Oracle: the identical string assembled
+    fixture corpus — both input views projected from ONE persisted page
+    table, so one kernel pass. Oracle: the identical string assembled
     single-process from the kernel truth tables — pins the distributed
     5-level fold."""
-    from sparkstract.plans.pipeline import extract_hierarchy, hierarchy_views
+    from sparkstract.plans.pipeline import (extract_pages, page_blocks,
+                                            page_words)
     from sparkstract.sinks import render_tsv_levels
 
     docs, media, _ = _fixture_frames(spark)
-    h = extract_hierarchy(spark, docs, media).persist()
-    return render_tsv_levels(*hierarchy_views(h)).orderBy("doc_id")
+    pages = extract_pages(spark, docs, media).persist()
+    return render_tsv_levels(page_blocks(pages), page_words(pages)) \
+        .orderBy("doc_id")
 
 
 def q_render_hocr_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """hOCR with the reference's full nesting (ocr_page → ocr_carea →
     ocr_par → ocr_line → ocrx_word, hocrrenderer.cpp:136-250), word boxes
-    and x_wconf included; one kernel pass via extract_hierarchy."""
-    from sparkstract.plans.pipeline import extract_hierarchy, hierarchy_views
+    and x_wconf included; one kernel pass via a persisted page table."""
+    from sparkstract.plans.pipeline import (extract_pages, page_blocks,
+                                            page_words)
     from sparkstract.sinks import render_hocr_words
 
     docs, media, _ = _fixture_frames(spark)
-    h = extract_hierarchy(spark, docs, media).persist()
-    return render_hocr_words(*hierarchy_views(h)).orderBy("doc_id")
+    pages = extract_pages(spark, docs, media).persist()
+    return render_hocr_words(page_blocks(pages), page_words(pages)) \
+        .orderBy("doc_id")
 
 
 def q_render_alto_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALTO at the reference's full depth (altorenderer.cpp:131: TextBlock →
     TextLine → String per word with HPOS/VPOS/WIDTH/HEIGHT + WC), one
-    <Page> per media span; single kernel pass via extract_hierarchy."""
-    from sparkstract.plans.pipeline import extract_hierarchy, hierarchy_views
+    <Page> per media span; one kernel pass via a persisted page table."""
+    from sparkstract.plans.pipeline import (extract_pages, page_blocks,
+                                            page_words)
     from sparkstract.sinks import render_alto_words
 
     docs, media, _ = _fixture_frames(spark)
-    h = extract_hierarchy(spark, docs, media).persist()
-    return render_alto_words(*hierarchy_views(h)).orderBy("doc_id")
+    pages = extract_pages(spark, docs, media).persist()
+    return render_alto_words(page_blocks(pages), page_words(pages)) \
+        .orderBy("doc_id")
 
 
 def q_render_page_xml_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PAGE XML at the reference's full depth (pagerenderer.cpp: TextRegion
     → TextLine → Word with Coords polygons, word/line TextEquiv, and a
-    per-page ReadingOrder of RegionRefIndexed refs); one kernel pass via
-    extract_hierarchy."""
-    from sparkstract.plans.pipeline import extract_hierarchy, hierarchy_views
+    per-page ReadingOrder of RegionRefIndexed refs); one kernel pass via a
+    persisted page table."""
+    from sparkstract.plans.pipeline import (extract_pages, page_blocks,
+                                            page_words)
     from sparkstract.sinks import render_page_xml_words
 
     docs, media, _ = _fixture_frames(spark)
-    h = extract_hierarchy(spark, docs, media).persist()
-    return render_page_xml_words(*hierarchy_views(h)).orderBy("doc_id")
+    pages = extract_pages(spark, docs, media).persist()
+    return render_page_xml_words(page_blocks(pages), page_words(pages)) \
+        .orderBy("doc_id")
 
 
 def q_render_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2199,10 +2210,10 @@ def q_layout_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     page kernel single-process over the deterministic fixture media — the
     check pins the *distributed* path (explode, media join, Arrow batching,
     kernel, schema) to the single-process ground truth."""
-    from sparkstract.plans.pipeline import extract_blocks
+    from sparkstract.plans.pipeline import extract_pages, page_blocks
 
     docs, media, _ = _fixture_frames(spark)
-    return extract_blocks(spark, docs, media) \
+    return page_blocks(extract_pages(spark, docs, media)) \
         .orderBy("doc_id", "offset", "block_order")
 
 
@@ -2441,7 +2452,31 @@ def _esc_html(s: str) -> str:
 
 
 def _esc_xml(s: str) -> str:
+    s = re.sub("[\x00-\x08\x0b\x0c\x0e-\x1f]", "", s)
     return _esc_html(s).replace("'", "&apos;")
+
+
+def _esc_attr(s: str) -> str:
+    return _esc_xml(s).replace("\t", "&#9;").replace("\n", "&#10;") \
+        .replace("\r", "&#13;")
+
+
+def _dd_esc_xml(expr: str) -> str:
+    """DuckDB twin of _esc_xml over the SQL expression `expr`."""
+    out = (f"regexp_replace({expr}, "
+           "'[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]', '', 'g')")
+    for ch, ref in (("'&'", "&amp;"), ("'<'", "&lt;"), ("'>'", "&gt;"),
+                    ("chr(39)", "&apos;")):
+        out = f"replace({out}, {ch}, '{ref}')"
+    return out
+
+
+def _dd_esc_attr(expr: str) -> str:
+    """DuckDB twin of _esc_attr."""
+    out = _dd_esc_xml(expr)
+    for code, ref in ((9, "&#9;"), (10, "&#10;"), (13, "&#13;")):
+        out = f"replace({out}, chr({code}), '{ref}')"
+    return out
 
 
 def _alto_pos(l: int, t: int, r: int, b: int) -> str:
@@ -2548,7 +2583,7 @@ def _hier_render_truth() -> tuple[
                                     f"      <String ID='word_{off}_{bo}_{p}"
                                     f"_{ln}_{wn}'{_alto_pos(wl, wt, wr, wb)}"
                                     f" WC='{conf / 100.0:.2f}' CONTENT='"
-                                    f"{_esc_xml(wtext)}'/>")
+                                    f"{_esc_attr(wtext)}'/>")
                                 pg_wfrags.append(
                                     f"    <Word id='w{off}_{bo}_{p}_{ln}"
                                     f"_{wn}'>\n"
@@ -2587,7 +2622,7 @@ def _hier_render_truth() -> tuple[
                 else:
                     if kind in ("flowing_image", "heading_image",
                                 "pullout_image"):
-                        content = f"<img src='{ref or ''}'/>"
+                        content = f"<img src='{_esc_attr(ref or '')}'/>"
                     elif kind in ("horz_line", "vert_line"):
                         content = ""
                     else:
@@ -2604,14 +2639,15 @@ def _hier_render_truth() -> tuple[
                               "pullout_image"):
                     block_altos.append(
                         f"    <Illustration ID='block_{off}_{bo}' "
-                        f"TAGREFS='{kind}'{bpos} FILEID='{ref or ''}'/>")
+                        f"TAGREFS='{kind}'{bpos} "
+                        f"FILEID='{_esc_attr(ref or '')}'/>")
                 elif alto_lines:
                     block_altos.append(
                         f"    <TextBlock ID='block_{off}_{bo}' "
                         f"TAGREFS='{kind}'{bpos}>\n"
                         + "\n".join(alto_lines) + "\n    </TextBlock>")
                 else:
-                    flat = _esc_xml((text or "").replace("\n", " "))
+                    flat = _esc_attr((text or "").replace("\n", " "))
                     block_altos.append(
                         f"    <TextBlock ID='block_{off}_{bo}' "
                         f"TAGREFS='{kind}'{bpos}><TextLine><String "
@@ -2625,7 +2661,7 @@ def _hier_render_truth() -> tuple[
                               "pullout_image"):
                     pg_regions.append(
                         f"  <ImageRegion id='r{off}_{bo}' custom='{kind}' "
-                        f"imageFilename='{ref or ''}'>\n{pgc}\n"
+                        f"imageFilename='{_esc_attr(ref or '')}'>\n{pgc}\n"
                         f"  </ImageRegion>")
                 elif pg_lines:
                     pg_regions.append(
@@ -2647,7 +2683,8 @@ def _hier_render_truth() -> tuple[
                 + "\n".join(block_altos) + "\n   </PrintSpace>\n  </Page>")
             page_ref = max((r[5] for r in pblocks if r[5]), default="")
             page_pagexml.append(
-                f" <Page id='page_{pnum}' imageFilename='{page_ref}'>\n"
+                f" <Page id='page_{pnum}' "
+                f"imageFilename='{_esc_attr(page_ref)}'>\n"
                 f"  <ReadingOrder><OrderedGroup id='ro_{pnum}'>\n"
                 + "\n".join(pg_refs)
                 + "\n  </OrderedGroup></ReadingOrder>\n"
@@ -3061,6 +3098,12 @@ def oracle_sql() -> dict[str, str]:
     from sparkstract.sinks import TEXT_KINDS
 
     text_kinds_sql = ", ".join(f"'{k}'" for k in TEXT_KINDS)
+    # the flat renderers' escapes (sinks._escape_xml / _escape_attr)
+    hocr_src = _dd_esc_attr("coalesce(media_ref, '')")
+    emedia = hocr_src
+    edoc = _dd_esc_attr("doc_id")
+    alto_text = _dd_esc_attr("coalesce(replace(text, chr(10), ' '), '')")
+    page_text = _dd_esc_xml("coalesce(text, '')")
     para_rows = ",\n".join(
         f"('{doc}', '{blk}', {i}, {exp[0]}, "
         f"{_sql_quote(exp[1]) if exp[1] is not None else 'CAST(NULL AS VARCHAR)'}, "
@@ -3408,7 +3451,7 @@ def oracle_sql() -> dict[str, str]:
                      CASE
                        WHEN kind IN ('flowing_image', 'heading_image',
                                      'pullout_image')
-                       THEN '<img src=''' || coalesce(media_ref, '') || '''/>'
+                       THEN '<img src=''' || {hocr_src} || '''/>'
                        WHEN kind IN ('horz_line', 'vert_line') THEN ''
                        ELSE replace(replace(replace(coalesce(text, ''),
                             '&', '&amp;'), '<', '&lt;'), '>', '&gt;')
@@ -3421,18 +3464,12 @@ def oracle_sql() -> dict[str, str]:
             WITH truth AS ({_truth_values_sql()}),
             esc AS (
               SELECT doc_id, "order", kind, media_ref,
-                     replace(replace(replace(replace(
-                       coalesce(replace(text, chr(10), ' '), ''),
-                       '&', '&amp;'), '<', '&lt;'), '>', '&gt;'),
-                       chr(39), '&apos;') AS etext,
-                     replace(replace(replace(replace(
-                       coalesce(media_ref, ''),
-                       '&', '&amp;'), '<', '&lt;'), '>', '&gt;'),
-                       chr(39), '&apos;') AS emedia
+                     {alto_text} AS etext, {emedia} AS emedia,
+                     {edoc} AS edoc
               FROM truth)
             SELECT doc_id,
                    '<alto xmlns=''http://www.loc.gov/standards/alto/ns-v3#''>'
-                   || '<Layout><Page ID=''' || doc_id || '''><PrintSpace>'
+                   || '<Layout><Page ID=''' || edoc || '''><PrintSpace>'
                    || chr(10) ||
                    string_agg(
                      CASE
@@ -3452,25 +3489,19 @@ def oracle_sql() -> dict[str, str]:
                      END,
                      chr(10) ORDER BY "order") ||
                    chr(10) || '</PrintSpace></Page></Layout></alto>' AS alto
-            FROM esc GROUP BY doc_id ORDER BY doc_id
+            FROM esc GROUP BY doc_id, edoc ORDER BY doc_id
         """,
         "render_page_xml": f"""
             WITH truth AS ({_truth_values_sql()}),
             esc AS (
               SELECT doc_id, "order", kind, media_ref,
-                     replace(replace(replace(replace(replace(
-                       coalesce(text, ''),
-                       '&', '&amp;'), '<', '&lt;'), '>', '&gt;'),
-                       chr(39), '&apos;'), chr(10), '&#10;') AS etext,
-                     replace(replace(replace(replace(
-                       coalesce(media_ref, ''),
-                       '&', '&amp;'), '<', '&lt;'), '>', '&gt;'),
-                       chr(39), '&apos;') AS emedia
+                     replace({page_text}, chr(10), '&#10;') AS etext,
+                     {emedia} AS emedia, {edoc} AS edoc
               FROM truth)
             SELECT doc_id,
                    '<PcGts xmlns=''http://schema.primaresearch.org/PAGE/gts/'
                    || 'pagecontent/2019-07-15''>' || chr(10) ||
-                   '  <Page imageFilename=''' || doc_id || '''>' || chr(10) ||
+                   '  <Page imageFilename=''' || edoc || '''>' || chr(10) ||
                    '    <ReadingOrder><OrderedGroup id=''ro''>' || chr(10) ||
                    string_agg(
                      '      <RegionRefIndexed index=''' ||
@@ -3496,7 +3527,7 @@ def oracle_sql() -> dict[str, str]:
                      END,
                      chr(10) ORDER BY "order") || chr(10) ||
                    '  </Page>' || chr(10) || '</PcGts>' AS page_xml
-            FROM esc GROUP BY doc_id ORDER BY doc_id
+            FROM esc GROUP BY doc_id, edoc ORDER BY doc_id
         """,
         "paragraphs": f"""
             SELECT * FROM (VALUES

@@ -23,7 +23,7 @@ import struct
 import numpy as np
 
 from .bits import lzw_decode, lzw_encode
-from .png import _luma
+from .raster import luma
 
 
 # --------------------------------------------------------------- encoder
@@ -105,7 +105,7 @@ def _decode_gray_gif(data: bytes) -> list[np.ndarray]:
         gpal = np.frombuffer(data[pos:pos + 3 * n],
                              dtype=np.uint8).reshape(-1, 3)
         pos += 3 * n
-    bg_gray = int(_luma(gpal[bg].reshape(1, 1, 3))[0, 0]) \
+    bg_gray = int(luma(gpal[bg].reshape(1, 1, 3))[0, 0]) \
         if gpal is not None and bg < len(gpal) else 255
     canvas = np.full((sh, sw), bg_gray, dtype=np.uint8)
     pages: list[np.ndarray] = []
@@ -162,7 +162,7 @@ def _decode_gray_gif(data: bytes) -> list[np.ndarray]:
             idx = upright
         if int(idx.max(initial=0)) >= len(pal):
             raise ValueError("GIF index out of palette range")
-        gray = _luma(pal[idx])
+        gray = luma(pal[idx])
         if left + fw > sw or top + fh > sh:
             raise ValueError("GIF frame exceeds logical screen")
         target = canvas[top:top + fh, left:left + fw]

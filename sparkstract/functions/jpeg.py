@@ -40,7 +40,7 @@ import math
 import numpy as np
 
 from .bits import canonical_codes
-from .raster import apply_exif_orientation
+from .raster import apply_exif_orientation, luma
 
 # ---------------------------------------------------------------- tables
 
@@ -943,9 +943,7 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
                      0, 255).astype(np.int32)
         bi = np.clip(np.round(np.clip(c, 0, 255) * k / 255.0),
                      0, 255).astype(np.int32)
-        # the family's integer luma idiom ((...+128)>>8, like png/webp) —
-        # identical gray for identical RGB across every codec
-        img = ((77 * ri + 150 * gi + 29 * bi + 128) >> 8).astype(np.uint8)
+        img = luma(ri, gi, bi)
         return apply_exif_orientation(img, orientation)
 
     img = np.clip(np.round(recon(0)), 0, 255).astype(np.uint8)

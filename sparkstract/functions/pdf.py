@@ -63,6 +63,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .jpeg import decode_gray_jpeg
+from .raster import luma
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -1159,9 +1160,7 @@ def _decode_image(d: dict, raw: bytes, deref) -> np.ndarray:
             raise ValueError("PDF /Indexed lookup shorter than hival+1")
         if ncomp == 1:
             return table[idx]
-        from .png import _luma
-
-        return _luma(table.reshape(-1, 3)[idx])
+        return luma(table.reshape(-1, 3)[idx])
     if isinstance(cs, list) and cs and deref(cs[0]) == "/ICCBased":
         # §8.6.5.5: the ICC profile itself is irrelevant for luma — the
         # component count (/N on the profile stream) picks the device
@@ -1187,13 +1186,11 @@ def _decode_image(d: dict, raw: bytes, deref) -> np.ndarray:
         # gray = (255 - K) scaled by (255 - gray-component ink)
         px = np.frombuffer(raw[:w * h * 4], dtype=np.uint8)             .reshape(h, w, 4).astype(np.int32)
         c, m, y_, k = px[:, :, 0], px[:, :, 1], px[:, :, 2], px[:, :, 3]
-        gray_ink = (77 * c + 150 * m + 29 * y_ + 128) >> 8
+        gray_ink = luma(c, m, y_).astype(np.int32)
         return (((255 - gray_ink) * (255 - k)) // 255).astype(np.uint8)
     if cs == "/DeviceRGB":
-        from .png import _luma
-
-        return _luma(np.frombuffer(raw[:w * h * 3],
-                                   dtype=np.uint8).reshape(h, w, 3))
+        return luma(np.frombuffer(raw[:w * h * 3],
+                                  dtype=np.uint8).reshape(h, w, 3))
     return np.frombuffer(raw[:w * h], dtype=np.uint8).reshape(h, w)
 
 

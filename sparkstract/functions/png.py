@@ -28,6 +28,8 @@ import zlib
 
 import numpy as np
 
+from .raster import luma
+
 _SIG = b"\x89PNG\r\n\x1a\n"
 
 # samples per pixel by color type (0 gray, 2 RGB, 3 palette, 4 GA, 6 RGBA)
@@ -78,14 +80,6 @@ def encode_rgb(img: np.ndarray) -> bytes:
     raw[:, 1:] = img.reshape(h, 3 * w)
     idat = zlib.compress(raw.tobytes(), 6)
     return _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
-
-
-def _luma(rgb: np.ndarray) -> np.ndarray:
-    """HxWx3 uint8 -> HxW uint8 BT.601 luma, integer arithmetic."""
-    r = rgb[:, :, 0].astype(np.int32)
-    g = rgb[:, :, 1].astype(np.int32)
-    b = rgb[:, :, 2].astype(np.int32)
-    return ((77 * r + 150 * g + 29 * b + 128) >> 8).astype(np.uint8)
 
 
 def decode_gray(data: bytes) -> np.ndarray:
@@ -163,7 +157,7 @@ def decode_gray(data: bytes) -> np.ndarray:
             raise ValueError("palette PNG missing PLTE")
         if int(samples.max(initial=0)) >= len(plte):
             raise ValueError("palette index out of range")
-        return _luma(plte[samples])
+        return luma(plte[samples])
     if interlace:
         out = _deinterlace_adam7(body, w, h, bpp)
     else:
@@ -182,10 +176,10 @@ def decode_gray(data: bytes) -> np.ndarray:
         idx = out[:, :, 0]
         if int(idx.max(initial=0)) >= len(plte):
             raise ValueError("palette index out of range")
-        return _luma(plte[idx])
+        return luma(plte[idx])
     if color == 4:
         return out[:, :, 0].copy()  # gray, alpha dropped
-    return _luma(out[:, :, :3])  # 2 / 6: RGB(A)
+    return luma(out[:, :, :3])  # 2 / 6: RGB(A)
 
 
 # Adam7 pass grid (PNG spec §8.2): (x0, y0, dx, dy) per pass — passes 4

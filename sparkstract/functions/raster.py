@@ -97,9 +97,7 @@ def decode_gray_pnm(data: bytes) -> np.ndarray:
         img = img * (255.0 / maxval)
     img = np.clip(np.rint(img), 0, 255).astype(np.uint8)
     if nsamp == 3:
-        rgb = img.reshape(h, w, 3).astype(np.int32)
-        return ((77 * rgb[:, :, 0] + 150 * rgb[:, :, 1]
-                 + 29 * rgb[:, :, 2] + 128) >> 8).astype(np.uint8)
+        return luma(img.reshape(h, w, 3))
     return img.reshape(h, w)
 
 
@@ -383,8 +381,9 @@ def decode_gray_bmp(data: bytes) -> np.ndarray:
         pal = np.frombuffer(data[pal_off : pal_off + 4 * n_colors],
                             dtype=np.uint8).reshape(-1, 4)
         # BGR -> ITU-R 601 luma (a gray palette maps to identity)
-        luma = np.clip(np.rint(0.114 * pal[:, 0] + 0.587 * pal[:, 1]
-                               + 0.299 * pal[:, 2]), 0, 255).astype(np.uint8)
+        pal_gray = np.clip(np.rint(0.114 * pal[:, 0] + 0.587 * pal[:, 1]
+                                   + 0.299 * pal[:, 2]),
+                           0, 255).astype(np.uint8)
         if comp == 1:
             raw = _bmp_rle8(data[data_off:], w, h)
             if top_down:
@@ -412,9 +411,9 @@ def decode_gray_bmp(data: bytes) -> np.ndarray:
                 raw = (raw << 1) | bits[:, b::bpp][:, :w]
             if not top_down:
                 raw = raw[::-1]
-        if int(raw.max(initial=0)) >= len(luma):
+        if int(raw.max(initial=0)) >= len(pal_gray):
             raise ValueError("BMP palette index out of range")
-        return luma[raw].copy()
+        return pal_gray[raw].copy()
     nb = bpp // 8
     stride = (w * nb + 3) & ~3
     raw = np.frombuffer(data[data_off : data_off + h * stride],
@@ -437,14 +436,25 @@ def decode_gray_bmp(data: bytes) -> np.ndarray:
             .reshape(h, w).astype(np.uint32)
         if not top_down:
             px = px[::-1]
-        r = _mask_channel(px, rm).astype(np.int32)
-        g = _mask_channel(px, gm).astype(np.int32)
-        b = _mask_channel(px, bm).astype(np.int32)
-        return ((77 * r + 150 * g + 29 * b + 128) >> 8).astype(np.uint8)
+        return luma(_mask_channel(px, rm), _mask_channel(px, gm),
+                    _mask_channel(px, bm))
     px = raw.reshape(h, stride)[:, : w * nb].reshape(h, w, nb)
     if not top_down:
         px = px[::-1]
-    b, g, r = (px[:, :, i].astype(np.int32) for i in range(3))  # BGR order
+    return luma(px[:, :, 2], px[:, :, 1], px[:, :, 0])  # BGR order
+
+
+# ------------------------------------------------------------------ luma
+
+
+def luma(r, g=None, b=None) -> np.ndarray:
+    """BT.601 luma in the one integer form every codec shares,
+    (77 R + 150 G + 29 B + 128) >> 8 as uint8, so equal RGB decodes to equal
+    gray in every format. Takes three integer channel planes, or one array
+    whose last axis holds R, G, B (any further channel is ignored)."""
+    if g is None:
+        r, g, b = r[..., 0], r[..., 1], r[..., 2]
+    r, g, b = (np.asarray(c, dtype=np.int32) for c in (r, g, b))
     return ((77 * r + 150 * g + 29 * b + 128) >> 8).astype(np.uint8)
 
 

@@ -28,7 +28,7 @@ import struct
 import numpy as np
 
 from .bits import lzw_decode, lzw_encode
-from .raster import apply_exif_orientation
+from .raster import apply_exif_orientation, luma
 
 _TYPE_SIZE = {1: 1, 3: 2, 4: 4, 7: 1}  # BYTE, SHORT, LONG, UNDEFINED
 
@@ -570,9 +570,7 @@ def decode_gray_tiff(data: bytes) -> list[np.ndarray]:
             img = (np.cumsum(img.reshape(h, w, nsamp).astype(np.int64),
                              axis=1).astype(np.uint8).reshape(h, w * nsamp))
         if nsamp > 1:
-            rgb = img.reshape(h, w, nsamp)[:, :, :3].astype(np.int32)
-            img = ((77 * rgb[:, :, 0] + 150 * rgb[:, :, 1]
-                    + 29 * rgb[:, :, 2] + 128) >> 8).astype(np.uint8)
+            img = luma(img.reshape(h, w, nsamp))
         else:
             img = img.reshape(h, w)
         photometric = tags.get(262, [1])[0]
@@ -584,10 +582,10 @@ def decode_gray_tiff(data: bytes) -> list[np.ndarray]:
             cm = np.asarray(tags[320], dtype=np.int64)
             n = cm.shape[0] // 3  # R then G then B planes, 16-bit values
             r, g, b = cm[:n] >> 8, cm[n:2 * n] >> 8, cm[2 * n:3 * n] >> 8
-            luma = ((77 * r + 150 * g + 29 * b + 128) >> 8).astype(np.uint8)
+            gray = luma(r, g, b)
             if int(img.max(initial=0)) >= n:
                 raise ValueError("palette TIFF index out of range")
-            img = luma[img]
+            img = gray[img]
         # Orientation tag 274: un-rotate to upright BEFORE analysis, the
         # way Leptonica's read path does on ingest (SetImage baseapi.cpp:881)
         img = apply_exif_orientation(img, tags.get(274, [1])[0])

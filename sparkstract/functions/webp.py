@@ -50,6 +50,7 @@ from collections import Counter
 import numpy as np
 
 from .bits import LsbWriter, canonical_codes
+from .raster import luma
 
 # Per-worker decode-shape telemetry: which entropy-image path each main
 # image took. "fast" is the bit-buffer loop; everything else falls back to
@@ -894,7 +895,7 @@ def decode_webp(data: bytes) -> np.ndarray:
             a, r, g, b = (argb[:, :, i].astype(np.int32) for i in range(4))
             if ((r == g) & (g == b)).all():
                 return g.astype(np.uint8)
-            return ((77 * r + 150 * g + 29 * b + 128) >> 8).astype(np.uint8)
+            return luma(r, g, b)
         if tag == b"VP8 ":
             from .vp8 import decode_vp8
 
@@ -930,8 +931,7 @@ def _frame_from_chunks(rest: bytes, w: int, h: int
             if ((r == g) & (g == b)).all():
                 gray = g.astype(np.uint8)
             else:
-                gray = ((77 * r + 150 * g + 29 * b + 128) >> 8
-                        ).astype(np.uint8)
+                gray = luma(r, g, b)
         # ICCP / EXIF / XMP / unknown chunks: skipped
         pos += 8 + size + (size & 1)
     return gray, alpha
@@ -960,8 +960,8 @@ def _decode_vp8x(rest: bytes, header: bytes) -> np.ndarray:
             if len(body) < 6:
                 raise ValueError("ANIM chunk truncated")
             bb, gg, rr, aa = body[0], body[1], body[2], body[3]  # BGRA
-            luma = (77 * rr + 150 * gg + 29 * bb + 128) >> 8
-            anim_bg = (luma * aa + 255 * (255 - aa) + 127) // 255
+            y = int(luma(rr, gg, bb))
+            anim_bg = (y * aa + 255 * (255 - aa) + 127) // 255
         elif tag == b"ANMF":
             if frame is None:         # first frame = the still
                 if len(body) < 16:

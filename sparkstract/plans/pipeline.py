@@ -1,4 +1,4 @@
-"""The extraction plan: docs ⨝ media → page kernel → ordered span reassembly.
+"""The extraction plan: docs ⨝ media → page kernel → page table → views.
 
 Spark lifecycle (SURVEY.md §3.3 "Spark lifecycle (ours)"):
 
@@ -8,7 +8,8 @@ Spark lifecycle (SURVEY.md §3.3 "Spark lifecycle (ours)"):
          unit is one media span, so a doc with 10k pages spreads over 10k
          tasks instead of hot-spotting one
        → mapInPandas(page kernel)               ← F1-F8, C1-C13, W1-W3, A1-A8
-       → union text pass-through spans
+         = the page table, one row per decoded page (`extract_pages`)
+       → inline(blocks) ∪ text pass-through spans
        → row_number() over (doc_id ORDER BY offset, block_order)  ← A11, the
          one true shuffle aggregation (GetUTF8Text ordered walk,
          /root/reference/src/api/baseapi.cpp:2097)
@@ -18,11 +19,17 @@ plan has exactly two shuffles at scale (media join, doc reassembly) plus the
 salt repartition, which has an explicit partition count (one per core slot
 by default) so AQE cannot coalesce the kernel stage into one task.
 
-Every output view (blocks/spans, words, symbols, tables, hierarchy,
-searchable-PDF pages) runs the same kernel: `_kernel` feeds each batch
-through the one page loop (`_iter_page_blocks`, a 10-tuple per decoded
-page) and a view's `_*_rows` generator flattens those pages into tuples in
-its schema's column order.
+The reference recognizes a page once, and GetUTF8Text, GetTSVText and
+GetBoxText all walk the same result tree (baseapi.cpp:2097, :2205, :2414).
+Here the page kernel (`_kernel` over the one page loop `_iter_page_blocks`)
+writes that tree once, as the page table (PAGES_SCHEMA): per decoded page
+its size and its blocks, each block with its table cells and its words,
+each word with its symbols. Every view is an `inline` projection of a page
+table — `page_blocks`, `page_words`, `page_symbols`, `page_cells` — and
+`extract` is the text pass-through unioned with `page_blocks`. Persist the
+page table to read several views from one decode-and-analyse pass. Only
+the searchable-PDF parts (`extract_pdf_pages`) run a pass of their own,
+because they carry the page pixels.
 """
 
 from __future__ import annotations
@@ -32,6 +39,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from ..config import ExtractConfig
 from ..operators.page import analyse_page, analyse_zones
@@ -39,35 +47,38 @@ from ..operators.page import analyse_page, analyse_zones
 ZONES_SCHEMA = ("media_ref string, zones array<struct<left:int,top:int,"
                 "right:int,bottom:int,kind:string>>")
 
-EXTRACTED_SCHEMA = (
-    "doc_id string, offset int, block_order int, kind string, "
-    "text string, media_ref string, "
-    "left int, top int, right int, bottom int"
+# The page table: one row per decoded page. page_h is the page's pixel
+# height (PDF unit height for born-digital pages; 0 for a decode error), the
+# image_height_ GetBoxText flips symbol boxes with (baseapi.cpp:2414).
+# Nested fields, all boxes top-down in original-image coordinates:
+#   blocks   one per layout block, block_order running on across the pages
+#            of a multipage item (ProcessPagesMultipageTiff,
+#            baseapi.cpp:1657)
+#   cells    structured table cells (C8 v3, StructuredTable,
+#            tablerecog.cpp:62): one per VISIBLE cell, so a merged header
+#            cell appears once with col_span > 1
+#   words    the GetTSVText levels 3-5 (baseapi.cpp:2205): para/line/word
+#            numbering from the wired paragraph detector (W6,
+#            DetectParagraphs-in-Recognize baseapi.cpp:1417). x_size (row
+#            glyph height) and the baseline slope + offset vs the line box's
+#            bottom-left corner are per LINE, equal on each of its words
+#            (hocrrenderer.cpp:163; _line_metrics)
+#   symbols  one per decoded character, char i of the word's text (the
+#            RIL_SYMBOL walk of GetBoxText, baseapi.cpp:2391)
+# Layout-only runs (recognize=False) carry NULL text, cells and words.
+_BOX = "left:int, top:int, right:int, bottom:int"
+_SYMBOL = f"struct<ch:string, {_BOX}, conf:int>"
+_WORD = (f"struct<para_num:int, line_num:int, word_num:int, word:string, "
+         f"{_BOX}, conf:int, x_size:int, base_slope:double, base_off:int, "
+         f"symbols:array<{_SYMBOL}>>")
+_CELL = ("struct<row_idx:int, cell_idx:int, col_start:int, col_span:int, "
+         "cell:string>")
+PAGES_SCHEMA = (
+    "doc_id string, offset int, media_ref string, page_w int, page_h int, "
+    f"blocks array<struct<block_order:int, kind:string, text:string, {_BOX}, "
+    f"cells:array<{_CELL}>, words:array<{_WORD}>>>"
 )
 SPANS_SCHEMA = "doc_id string, order int, kind string, text string, media_ref string"
-
-# word-level sidecar (GetTSVText levels 3-5, baseapi.cpp:2205; hOCR
-# ocr_par/ocr_line/ocrx_word, hocrrenderer.cpp:136): one row per recognized
-# word with its paragraph/line/word position inside the block and its box
-WORDS_SCHEMA = (
-    "doc_id string, offset int, block_order int, para_num int, line_num int, "
-    "word_num int, word string, media_ref string, "
-    "left int, top int, right int, bottom int, conf int, "
-    # per-LINE typography (identical on every word of a line): x_size =
-    # row glyph height, baseline slope + offset vs the line bbox's
-    # bottom-left corner (hocrrenderer.cpp:163 contract; _line_metrics)
-    "x_size int, base_slope double, base_off int"
-)
-
-# combined view: block rows AND word rows from ONE kernel pass (level =
-# 'block' | 'word') — the scale path for consumers that need both (the
-# hierarchy renderers), instead of decoding the corpus twice
-HIERARCHY_SCHEMA = (
-    "doc_id string, offset int, block_order int, level string, kind string, "
-    "text string, media_ref string, left int, top int, right int, "
-    "bottom int, para_num int, line_num int, word_num int, conf int, "
-    "x_size int, base_slope double, base_off int"
-)
 
 
 def _analyse_raster(cfg: ExtractConfig, gray, page_zones):
@@ -105,7 +116,8 @@ def _iter_page_blocks(cfg: ExtractConfig, pdf: pd.DataFrame):
     GetBoxText uses to flip symbol boxes to bottom-left origin
     (baseapi.cpp:2414); gray is the decoded page array (None for born-digital
     PDF text pages and decode errors) and page_w its unit width (0 for decode
-    errors). The views differ only in which fields they flatten.
+    errors). `_page_rows` and `_pdf_page_rows` differ only in which fields
+    they keep.
 
     PDF media takes the born-digital path: a page WITH a text layer parses
     straight from the content stream (functions/pdf.py) and never touches
@@ -158,7 +170,7 @@ def _kernel(cfg: ExtractConfig, schema: str, rows):
     the schema's column order. All heavy work is numpy inside analyse_page;
     the only Python loop is over pages in the batch (the reference's page
     loop, ProcessPagesInternal baseapi.cpp:1731)."""
-    columns = [c.split()[0] for c in schema.split(",")]
+    columns = DataType.fromDDL(schema).names
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -168,28 +180,19 @@ def _kernel(cfg: ExtractConfig, schema: str, rows):
     return kernel
 
 
+def _spans(docs: DataFrame, kind: str) -> DataFrame:
+    """The docs' spans of one kind: (doc_id, kind, text, media_ref,
+    offset)."""
+    return docs.select("doc_id", F.inline("spans")) \
+        .filter(F.col("kind") == kind)
+
+
 def _work_frame(docs: DataFrame, media: DataFrame, cfg: ExtractConfig,
-                zones: DataFrame | None = None
-                ) -> tuple[DataFrame, DataFrame]:
-    """Shared plumbing up to the kernel: (work frame of media rows ready for
-    a page kernel, text pass-through spans). `zones` (ZONES_SCHEMA)
+                zones: DataFrame | None = None) -> DataFrame:
+    """Shared plumbing up to the kernel: the media spans joined to their
+    bytes, salted and ready for a page kernel. `zones` (ZONES_SCHEMA)
     optionally overrides segmentation per media_ref — the S10 zone-file
     source; pages without a zones row fall through to full analysis."""
-    exploded = docs.select("doc_id", F.explode("spans").alias("span")).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-
-    text_pass = (
-        exploded.filter(F.col("kind") == "text")
-        .select("doc_id", "offset", F.lit(0).alias("block_order"),
-                F.lit("text").alias("kind"), "text",
-                F.lit(None).cast("string").alias("media_ref"))
-    )
-
     media_side = media.select("media_ref", "image")
     if zones is not None:
         # zone tables are segmentation hints — tiny relative to media bytes,
@@ -197,8 +200,7 @@ def _work_frame(docs: DataFrame, media: DataFrame, cfg: ExtractConfig,
         media_side = media_side.join(
             F.broadcast(zones.select("media_ref", "zones")), "media_ref",
             "left")
-    refs = exploded.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref")
+    refs = _spans(docs, "media").select("doc_id", "offset", "media_ref")
     # an explicit partition count makes the salt a REPARTITION_BY_NUM
     # shuffle, which AQE never coalesces: sized by its ~100-byte key rows it
     # would merge the whole kernel stage into one task, since the optimizer
@@ -215,27 +217,95 @@ def _work_frame(docs: DataFrame, media: DataFrame, cfg: ExtractConfig,
         # (unavoidable); salt afterwards to spread media-heavy docs
         work = refs.join(media_side, "media_ref").repartition(
             n, "doc_id", "offset")
-    return work, text_pass
+    return work
 
 
-def _view(docs: DataFrame, media: DataFrame, cfg: ExtractConfig | None,
-          zones: DataFrame | None, schema: str, rows) -> DataFrame:
-    """One kernel pass over the work frame, flattened by `rows` into
-    `schema` — every view shares the plan up to the kernel: same explode,
-    same salted media join, same partitioning."""
+def _page_rows(cfg: ExtractConfig, pages):
+    """PAGES_SCHEMA: one row per decoded page, its block tree moved back to
+    original-image coordinates (the crop offset added back, as the
+    reference does on every BoundingBox call, pageiterator.cpp:366) and its
+    block order continued across the pages of a multipage item."""
+    rec = cfg.recognize
+    for doc_id, offset, ref, dx, dy, base, blocks, page_h, _gray, \
+            page_w in pages:
+
+        def box(left, top, right, bottom):
+            return left + dx, top + dy, right + dx, bottom + dy
+
+        yield (doc_id, offset, ref, page_w, page_h, [
+            (base + blk.order, blk.kind, blk.text if rec else None,
+             *box(blk.left, blk.top, blk.right, blk.bottom),
+             list(blk.cells or ()) if rec else None,
+             [(p, ln, wn, wtext, *box(wl, wt, wr, wb), conf, xs, bsl, boff,
+               [(ch, *box(sl, st, sr, sb), sc)
+                for ch, sl, st, sr, sb, sc in syms])
+              for (p, ln, wn, wtext, wl, wt, wr, wb, conf, syms,
+                   (xs, bsl, boff)) in blk.words or ()] if rec else None)
+            for blk in blocks])
+
+
+def extract_pages(spark: SparkSession, docs: DataFrame, media: DataFrame,
+                  cfg: ExtractConfig | None = None,
+                  zones: DataFrame | None = None) -> DataFrame:
+    """The page table (PAGES_SCHEMA): every media span decoded and analysed
+    once, one row per decoded page. `zones` (ZONES_SCHEMA) optionally
+    overrides segmentation per media_ref (S10 zone-file source); zone pages
+    carry words too, their inner sub-blocks numbered as paragraphs. Every
+    view below is a projection of this frame; persist it to read several."""
     cfg = cfg or ExtractConfig()
-    work, _ = _work_frame(docs, media, cfg, zones)
-    return work.mapInPandas(_kernel(cfg, schema, rows), schema=schema)
+    return _work_frame(docs, media, cfg, zones).mapInPandas(
+        _kernel(cfg, PAGES_SCHEMA, _page_rows), schema=PAGES_SCHEMA)
 
 
-def _block_rows(cfg: ExtractConfig, pages):
-    """EXTRACTED_SCHEMA: one row per layout block."""
-    for doc_id, offset, ref, dx, dy, base, blocks, *_ in pages:
-        for blk in blocks:
-            yield (doc_id, offset, base + blk.order, blk.kind,
-                   blk.text if cfg.recognize else None, ref,
-                   blk.left + dx, blk.top + dy, blk.right + dx,
-                   blk.bottom + dy)
+def _blocks(pages: DataFrame) -> DataFrame:
+    return pages.select("doc_id", "offset", "media_ref", "page_h",
+                        F.inline("blocks"))
+
+
+def _words(pages: DataFrame) -> DataFrame:
+    return _blocks(pages).select("doc_id", "offset", "block_order",
+                                 "media_ref", "page_h", F.inline("words"))
+
+
+def page_blocks(pages: DataFrame) -> DataFrame:
+    """One row per layout block with its box — the level of detail of the
+    reference's TSV/hOCR block rows (GetTSVText level 2, baseapi.cpp:2205;
+    hOCR ocr_carea bbox, hocrrenderer.cpp:123)."""
+    return _blocks(pages).select(
+        "doc_id", "offset", "block_order", "kind", "text", "media_ref",
+        "left", "top", "right", "bottom")
+
+
+def page_words(pages: DataFrame) -> DataFrame:
+    """One row per recognized word with its block/para/line/word position,
+    box, confidence and line typography (GetTSVText level 5; hOCR
+    ocrx_word, hocrrenderer.cpp:136)."""
+    return _words(pages).select(
+        "doc_id", "offset", "block_order", "para_num", "line_num",
+        "word_num", "word", "media_ref", "left", "top", "right", "bottom",
+        "conf", "x_size", "base_slope", "base_off")
+
+
+def page_symbols(pages: DataFrame) -> DataFrame:
+    """One row per decoded character with its decode-cell box, confidence
+    and page height: the data GetBoxText (baseapi.cpp:2391) walks to write
+    .box training files."""
+    sym = _words(pages).select(
+        "doc_id", "offset", "block_order", "para_num", "line_num",
+        "word_num", "media_ref", "page_h",
+        F.posexplode("symbols").alias("sym_num", "s"))
+    return sym.select(
+        "doc_id", "offset", "block_order", "para_num", "line_num",
+        "word_num", "sym_num", "s.ch", "media_ref", "s.left", "s.top",
+        "s.right", "s.bottom", "s.conf", "page_h")
+
+
+def page_cells(pages: DataFrame) -> DataFrame:
+    """One row per visible table cell with its grid column and span — the
+    cell structure tablerecog.cpp recognizes, merged cells included, which
+    the flat TAB-joined block text cannot express."""
+    return _blocks(pages).select("doc_id", "offset", "block_order",
+                                 F.inline("cells"))
 
 
 def extract(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -243,93 +313,18 @@ def extract(spark: SparkSession, docs: DataFrame, media: DataFrame,
             zones: DataFrame | None = None) -> DataFrame:
     """Run the full pipeline; returns flat spans (doc_id, order, kind, text,
     media_ref) — `order` dense 0-based per doc, the north-rule invariant key.
-    `zones` (ZONES_SCHEMA) optionally overrides segmentation per media_ref
-    (S10 zone-file source)."""
-    cfg = cfg or ExtractConfig()
-    work, text_pass = _work_frame(docs, media, cfg, zones)
-    extracted = work.mapInPandas(_kernel(cfg, EXTRACTED_SCHEMA, _block_rows),
-                                 schema=EXTRACTED_SCHEMA)
-
-    unioned = extracted.drop("left", "top", "right", "bottom") \
+    `zones` as in `extract_pages`."""
+    text_pass = _spans(docs, "text").select(
+        "doc_id", "offset", F.lit(0).alias("block_order"), "kind", "text",
+        F.lit(None).cast("string").alias("media_ref"))
+    blocks = page_blocks(extract_pages(spark, docs, media, cfg, zones))
+    unioned = blocks.drop("left", "top", "right", "bottom") \
         .unionByName(text_pass)
     w = Window.partitionBy("doc_id").orderBy("offset", "block_order")
     return (
         unioned.withColumn("order", F.row_number().over(w) - 1)
         .select("doc_id", "order", "kind", "text", "media_ref")
     )
-
-
-def extract_blocks(spark: SparkSession, docs: DataFrame, media: DataFrame,
-                   cfg: ExtractConfig | None = None) -> DataFrame:
-    """Per-block geometry view: one row per layout block with its bounding
-    box (top-down y) — the level of detail the reference's TSV/hOCR
-    renderers emit (S7, /root/reference/src/api/baseapi.cpp:2205
-    GetTSVText level/left/top/width/height; hocrrenderer.cpp:123 bbox).
-    Text spans are not included; this is the page-geometry sidecar of
-    `extract`, sharing the same plan up to the kernel."""
-    return _view(docs, media, cfg, None, EXTRACTED_SCHEMA, _block_rows)
-
-
-def _word_rows(cfg: ExtractConfig, pages):
-    """WORDS_SCHEMA: one row per recognized WORD (the level-5 output of
-    GetTSVText, baseapi.cpp:2205): paragraph/line/word numbering comes from
-    the page kernel's wired paragraph detector (W6,
-    DetectParagraphs-in-Recognize, baseapi.cpp:1417)."""
-    for doc_id, offset, ref, dx, dy, base, blocks, *_ in pages:
-        for blk in blocks:
-            for (p, ln, wn, wtext, wl, wt, wr, wb, conf, _syms,
-                 (xs, bsl, boff)) in blk.words or ():
-                yield (doc_id, offset, base + blk.order, p, ln, wn, wtext,
-                       ref, wl + dx, wt + dy, wr + dx, wb + dy, conf,
-                       xs, bsl, boff)
-
-
-def extract_words(spark: SparkSession, docs: DataFrame, media: DataFrame,
-                  cfg: ExtractConfig | None = None,
-                  zones: DataFrame | None = None) -> DataFrame:
-    """Word-level sidecar of `extract`: one row per recognized word with its
-    block/paragraph/line/word position and bounding box — the full renderer
-    depth of the reference's TSV/hOCR (GetTSVText levels 3-5
-    baseapi.cpp:2205; hOCR ocrx_word hocrrenderer.cpp:136). Shares the plan
-    with `extract` up to the kernel — one kernel pass over the corpus.
-    Zone-override pages carry words too (inner sub-blocks number as
-    paragraphs)."""
-    return _view(docs, media, cfg, zones, WORDS_SCHEMA, _word_rows)
-
-
-# symbol-level sidecar (the RIL_SYMBOL depth of GetBoxText,
-# baseapi.cpp:2391): one row per decoded CHARACTER with its own cell box
-# and per-char confidence; page_h carries the page pixel height the box
-# renderer needs to flip y to the box-file's bottom-left origin
-SYMBOLS_SCHEMA = (
-    "doc_id string, offset int, block_order int, para_num int, line_num int, "
-    "word_num int, sym_num int, ch string, media_ref string, "
-    "left int, top int, right int, bottom int, conf int, page_h int"
-)
-
-
-def _symbol_rows(cfg: ExtractConfig, pages):
-    """SYMBOLS_SCHEMA: one row per decoded SYMBOL (character) — the
-    RIL_SYMBOL iteration GetBoxText performs (baseapi.cpp:2391-2422).
-    Symbol boxes come straight from the decode cells the kernel matched
-    (page.py _decode_row), so char i of a word's text is row i's `ch`."""
-    for doc_id, offset, ref, dx, dy, base, blocks, page_h, *_ in pages:
-        for blk in blocks:
-            for (p, ln, wn, *_w, syms, _lmeta) in blk.words or ():
-                for si, (ch, sl, st, sr, sb, sc) in enumerate(syms):
-                    yield (doc_id, offset, base + blk.order, p, ln, wn, si,
-                           ch, ref, sl + dx, st + dy, sr + dx, sb + dy, sc,
-                           page_h)
-
-
-def extract_symbols(spark: SparkSession, docs: DataFrame, media: DataFrame,
-                    cfg: ExtractConfig | None = None,
-                    zones: DataFrame | None = None) -> DataFrame:
-    """Symbol-level sidecar of `extract`: one row per decoded character with
-    its decode-cell box — the data GetBoxText (baseapi.cpp:2391) walks to
-    write .box training files. Same plan shape as extract_words: one kernel
-    pass, partition-local until the consumer's own fold."""
-    return _view(docs, media, cfg, zones, SYMBOLS_SCHEMA, _symbol_rows)
 
 
 # per-page searchable-PDF parts (S8 TessPDFRenderer, reference
@@ -371,87 +366,13 @@ def extract_pdf_pages(spark: SparkSession, docs: DataFrame, media: DataFrame,
                       cfg: ExtractConfig | None = None,
                       zones: DataFrame | None = None) -> DataFrame:
     """Per-page searchable-PDF parts (PDF_PAGES_SCHEMA) from one kernel
-    pass — same explode/salted-join/partitioning plan as `extract`. Feed to
-    sinks.render_pdf for the per-doc assembly; docs whose media all fail to
-    decode (or that have no media at all) contribute no pages."""
-    return _view(docs, media, cfg, zones, PDF_PAGES_SCHEMA, _pdf_page_rows)
-
-
-# structured table cells (C8 v3, StructuredTable semantics — reference
-# src/textord/tablerecog.cpp:62): one row per VISIBLE table cell with its
-# grid position; a merged cell (header spanning several body columns)
-# appears once with col_span > 1
-TABLES_SCHEMA = (
-    "doc_id string, offset int, block_order int, row_idx int, "
-    "cell_idx int, col_start int, col_span int, cell string"
-)
-
-
-def _table_rows(cfg: ExtractConfig, pages):
-    """TABLES_SCHEMA: one row per structured table cell — the
-    cell/column-segment view tablerecog.cpp recognizes after tablefind
-    detection, including merged cells, which the flat TAB-joined block
-    text cannot express."""
-    for doc_id, offset, _ref, _dx, _dy, base, blocks, *_ in pages:
-        for blk in blocks:
-            for ri, ci, cs, span, text in blk.cells or ():
-                yield (doc_id, offset, base + blk.order, ri, ci, cs, span,
-                       text)
-
-
-def extract_tables(spark: SparkSession, docs: DataFrame, media: DataFrame,
-                   cfg: ExtractConfig | None = None,
-                   zones: DataFrame | None = None) -> DataFrame:
-    """Structured-table sidecar of `extract`: one row per visible table
-    cell with grid column + span (TABLES_SCHEMA). Same plan shape as the
-    other sidecars: one kernel pass, partition-local until the consumer's
-    own fold."""
-    return _view(docs, media, cfg, zones, TABLES_SCHEMA, _table_rows)
-
-
-def _hier_rows(cfg: ExtractConfig, pages):
-    """HIERARCHY_SCHEMA: BOTH hierarchy views in one decode pass — a
-    level='block' row per layout block and a level='word' row per
-    recognized word."""
-    for doc_id, offset, ref, dx, dy, base, blocks, *_ in pages:
-        for blk in blocks:
-            order = base + blk.order
-            yield (doc_id, offset, order, "block", blk.kind,
-                   blk.text if cfg.recognize else None, ref,
-                   blk.left + dx, blk.top + dy, blk.right + dx,
-                   blk.bottom + dy) + (None,) * 7
-            if not cfg.recognize:
-                continue
-            for (p, ln, wn, wtext, wl, wt, wr, wb, conf, _syms,
-                 (xs, bsl, boff)) in blk.words or ():
-                yield (doc_id, offset, order, "word", blk.kind, wtext, ref,
-                       wl + dx, wt + dy, wr + dx, wb + dy,
-                       p, ln, wn, conf, xs, bsl, boff)
-
-
-def extract_hierarchy(spark: SparkSession, docs: DataFrame, media: DataFrame,
-                      cfg: ExtractConfig | None = None,
-                      zones: DataFrame | None = None) -> DataFrame:
-    """Block AND word rows from ONE kernel pass (HIERARCHY_SCHEMA) — the
-    scale path for the hierarchy renderers: `extract_blocks` +
-    `extract_words` each run their own kernel, so a consumer needing both
-    would decode the corpus twice; this frame, persisted and filtered on
-    `level`, decodes it once."""
-    return _view(docs, media, cfg, zones, HIERARCHY_SCHEMA, _hier_rows)
-
-
-def hierarchy_views(h: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split an extract_hierarchy frame into the (blocks, words) views the
-    renderers take. Persist `h` first when both views feed one job."""
-    blocks = h.filter(F.col("level") == "block").select(
-        "doc_id", "offset", "block_order", "kind", "text", "media_ref",
-        "left", "top", "right", "bottom")
-    words = h.filter(F.col("level") == "word").select(
-        "doc_id", "offset", "block_order", "para_num", "line_num",
-        "word_num", F.col("text").alias("word"), "media_ref",
-        "left", "top", "right", "bottom", "conf",
-        "x_size", "base_slope", "base_off")
-    return blocks, words
+    pass — same explode/salted-join/partitioning plan as `extract_pages`.
+    Feed to sinks.render_pdf for the per-doc assembly; docs whose media all
+    fail to decode (or that have no media at all) contribute no pages."""
+    cfg = cfg or ExtractConfig()
+    return _work_frame(docs, media, cfg, zones).mapInPandas(
+        _kernel(cfg, PDF_PAGES_SCHEMA, _pdf_page_rows),
+        schema=PDF_PAGES_SCHEMA)
 
 
 def analyse_layout(spark: SparkSession, docs: DataFrame, media: DataFrame,

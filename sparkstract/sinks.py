@@ -1,9 +1,12 @@
 """Result renderers (sinks) over the extraction views.
 
 Mirrors the reference's renderer family (include/tesseract/renderer.h).
+Every view is a projection of one page table (`plans.pipeline
+.extract_pages`), as the reference's renderers all walk one recognized
+page; persist the page table when a job renders from several views.
 
 Flat renderers, one element per span. Input: `extract` spans, or
-`extract_blocks` rows with an `order` column, in which case hOCR and ALTO
+`page_blocks` rows with an `order` column, in which case hOCR and ALTO
 also print each block's geometry:
   render_text  — TessTextRenderer (renderer.h:160): the GetUTF8Text view of a
                  doc. Text spans joined in span order, separated by blank
@@ -21,7 +24,7 @@ also print each block's geometry:
                  <ReadingOrder> index.
 
 Full-depth renderers over the page → block → para → line → word tree.
-Input: the (blocks, words) pair of `hierarchy_views`:
+Input: `page_blocks(p)` and `page_words(p)` of one page table `p`:
   render_tsv_levels     — GetTSVText levels 1-5 (baseapi.cpp:2205).
   render_hocr_words     — ocr_page → ocr_carea → ocr_par → ocr_line →
                           ocrx_word (hocrrenderer.cpp:136-250).
@@ -30,14 +33,16 @@ Input: the (blocks, words) pair of `hierarchy_views`:
   render_page_xml_words — Page → TextRegion → TextLine → Word
                           (pagerenderer.cpp).
 
-Symbol renderers. Input: the `extract_symbols` sidecar:
+Symbol renderers. Input: `page_symbols(p)`:
   render_box   — GetBoxText (baseapi.cpp:2391).
   render_unlv  — GetUNLVText (baseapi.cpp:2440).
 
 render_pdf assembles TessPDFRenderer files from `extract_pdf_pages`.
 
 Every other renderer is built-in DataFrame expressions (no UDFs): string
-escape and aggregation stay JVM-side. Like the reference's renderers, which
+escape and aggregation stay JVM-side. Text goes through `_escape_xml`
+(or `_escape_html` in hOCR text) and every attribute value through
+`_escape_attr`. Like the reference's renderers, which
 all walk one ResultIterator, they share one vocabulary, and a new format
 should build on it too:
   _fold         the one ordered fold: fragments sorted by keys, joined.
@@ -107,11 +112,24 @@ def _escape_html(col):
 
 
 def _escape_xml(col):
+    """Markup escaped, and the C0 control characters XML 1.0 forbids (all
+    but tab, newline and carriage return) dropped."""
+    col = F.regexp_replace(col, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]", "")
     return F.regexp_replace(_escape_html(col), "'", "&apos;")
 
 
+def _escape_attr(col):
+    """`_escape_xml` for an attribute value: tab, newline and carriage
+    return become character references, since a parser normalises the raw
+    characters in an attribute to spaces."""
+    out = _escape_xml(col)
+    for ch, ref in (("\t", "&#9;"), ("\n", "&#10;"), ("\r", "&#13;")):
+        out = F.regexp_replace(out, ch, ref)
+    return out
+
+
 def _has_boxes(spans: DataFrame) -> bool:
-    """Geometry-bearing input (extract_blocks output) vs plain spans — the
+    """Geometry-bearing input (page_blocks output) vs plain spans — the
     renderers emit real coordinates when they have them, like the reference's
     renderers always do (hocrrenderer.cpp:123 bbox; altorenderer HPOS/VPOS)."""
     return {"left", "top", "right", "bottom"}.issubset(spans.columns)
@@ -197,7 +215,8 @@ def _hocr_carea(bid: Column, boxes: bool, wbody: Column | None = None):
         else F.col("kind")
     body = _by_kind(
         F.lit(""),
-        F.concat(F.lit("<img src='"), _or_empty("media_ref"), F.lit("'/>")),
+        F.concat(F.lit("<img src='"), _escape_attr(_or_empty("media_ref")),
+                 F.lit("'/>")),
         _escape_html(_or_empty("text")))
     if wbody is not None:
         body = F.coalesce(wbody, body)
@@ -217,7 +236,7 @@ def _alto_block(bid: Column, pos: Column, wbody: Column | None = None):
 
     text = F.concat(
         F.lit("><TextLine><String CONTENT='"),
-        _escape_xml(F.regexp_replace(_or_empty("text"), "\n", " ")),
+        _escape_attr(F.regexp_replace(_or_empty("text"), "\n", " ")),
         F.lit("'/></TextLine></TextBlock>"))
     if wbody is not None:
         text = F.when(wbody.isNotNull(),
@@ -226,7 +245,7 @@ def _alto_block(bid: Column, pos: Column, wbody: Column | None = None):
     return _by_kind(
         F.concat(open_("GraphicalElement"), F.lit("/>")),
         F.concat(open_("Illustration"), F.lit(" FILEID='"),
-                 _escape_xml(_or_empty("media_ref")), F.lit("'/>")),
+                 _escape_attr(_or_empty("media_ref")), F.lit("'/>")),
         F.concat(open_("TextBlock"), text))
 
 
@@ -281,7 +300,7 @@ def render_alto(spans: DataFrame) -> DataFrame:
         F.concat(
             F.lit("<alto xmlns='http://www.loc.gov/standards/alto/ns-v3#'>"
                   "<Layout><Page ID='"),
-            _escape_xml(F.col("doc_id")),
+            _escape_attr(F.col("doc_id")),
             F.lit("'><PrintSpace>\n"),
         ),
         F.lit("\n</PrintSpace></Page></Layout></alto>"),
@@ -301,7 +320,7 @@ def render_page_xml(spans: DataFrame) -> DataFrame:
     regions = _by_kind(
         region("SeparatorRegion", F.lit("'/>")),
         region("ImageRegion", F.lit("' imageFilename='"),
-               _escape_xml(_or_empty("media_ref")), F.lit("'/>")),
+               _escape_attr(_or_empty("media_ref")), F.lit("'/>")),
         region("TextRegion", F.lit("'>"), _page_text(),
                F.lit("</TextRegion>")))
     ref = F.concat(F.lit("      <RegionRefIndexed index='"), sid,
@@ -310,7 +329,7 @@ def render_page_xml(spans: DataFrame) -> DataFrame:
         F.concat(
             F.lit("<PcGts xmlns='http://schema.primaresearch.org/PAGE/gts/"
                   "pagecontent/2019-07-15'>\n  <Page imageFilename='"),
-            _escape_xml(F.col("doc_id")),
+            _escape_attr(F.col("doc_id")),
             F.lit("'>\n    <ReadingOrder><OrderedGroup id='ro'>\n"),
             _fold(ref, "order"),
             F.lit("\n    </OrderedGroup></ReadingOrder>\n"),
@@ -321,7 +340,7 @@ def render_page_xml(spans: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Full-hierarchy renderers (S5/S7 at reference depth): page → block → para →
-# line → word, fed by the extract_blocks + extract_words kernel outputs.
+# line → word, fed by the page_blocks + page_words views of a page table.
 # A "page" is one media span; a multipage container's pages are already
 # flattened into its block sequence (ProcessPagesMultipageTiff,
 # baseapi.cpp:1657).
@@ -333,15 +352,15 @@ def render_tsv_levels(blocks: DataFrame, words: DataFrame) -> DataFrame:
     baseapi.cpp:2205): one 12-column row per hierarchy node — level page
     block par line word left top width height conf text — level 1 page,
     2 block, 3 paragraph, 4 line, 5 word. Non-word levels carry conf -1 and
-    empty text, exactly like the reference. Inputs are the two kernel views
-    (extract_blocks, extract_words); all assembly is built-in aggregations —
-    hierarchy levels are groupBys over the word sidecar, the doc fold one
+    empty text, exactly like the reference. Inputs are the two page-table
+    views (page_blocks, page_words); all assembly is built-in aggregations —
+    hierarchy levels are groupBys over the word view, the doc fold one
     sorted array_join over the union of the five level frames.
 
     Both inputs are PERSISTED here: the level frames consume the block view
     twice and the word view three times, and without a cache each branch
-    re-executes the page kernel (9 kernel passes measured) — the persist
-    collapses that to one pass per view. Both views are text+geometry only
+    re-executes its lineage (9 kernel passes measured over unpersisted
+    views) — the persist collapses that to one read per view. Both views are text+geometry only
     (no image bytes), so the cache is corpus-text-sized and spillable;
     long-running callers can unpersist after the action."""
     blocks = blocks.persist()
@@ -435,7 +454,7 @@ def render_alto_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
         F.lit("      <String ID='word_"), _node_id(5), F.lit("'"),
         _alto_pos(), F.lit(" WC='"),
         F.format_string("%.2f", F.col("conf") / 100.0),
-        F.lit("' CONTENT='"), _escape_xml(F.col("word")), F.lit("'/>"))
+        F.lit("' CONTENT='"), _escape_attr(F.col("word")), F.lit("'/>"))
     lines = _group(words, 4, F.first("base_off").alias("base_off"),
                    _fold(word, "word_num").alias("body"))
     # ALTO TextLine BASELINE (altorenderer.cpp writes the absolute y of the
@@ -507,7 +526,7 @@ def render_page_xml_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
     regions = _by_kind(
         region("SeparatorRegion", []),
         region("ImageRegion", [F.lit(" imageFilename='"),
-                               _escape_xml(_or_empty("media_ref")),
+                               _escape_attr(_or_empty("media_ref")),
                                F.lit("'")]),
         region("TextRegion", [], F.lit("\n"), F.coalesce(
             F.col("wbody"), F.concat(F.lit("   "), _page_text()))))
@@ -517,7 +536,7 @@ def render_page_xml_words(blocks: DataFrame, words: DataFrame) -> DataFrame:
     pn = F.col("page_num").cast("string")
     page = F.concat(
         F.lit(" <Page id='page_"), pn, F.lit("' imageFilename='"),
-        _escape_xml(_or_empty("page_ref")),
+        _escape_attr(_or_empty("page_ref")),
         F.lit("'>\n  <ReadingOrder><OrderedGroup id='ro_"), pn,
         F.lit("'>\n"), F.col("refs"),
         F.lit("\n  </OrderedGroup></ReadingOrder>\n"), F.col("body"),
@@ -548,7 +567,7 @@ def render_box(symbols: DataFrame) -> DataFrame:
     kTesseractReject fix (baseapi.cpp:2407-2411); the page column is the
     media span's offset (the reference's page_number argument). Coordinates
     are inclusive on both edges, so the flip is H-1-y. Input: the
-    extract_symbols sidecar. One shuffle (the per-doc fold); the line
+    page_symbols view. One shuffle (the per-doc fold); the line
     assembly is all built-in expressions."""
     ch = F.when(F.col("ch") == " ", UNLV_REJECT).otherwise(F.col("ch"))
     line = F.concat_ws(

@@ -72,6 +72,23 @@ def test_analyse_layout_no_text(spark, fixture_set):
     assert list(ext["kind"]) == ["flowing_text"]  # kinds still classified
 
 
+def test_layout_only_page_table_has_no_recognition(spark, fixture_set):
+    """recognize=False is one rule over the page table: every block keeps
+    its kind and box but carries NULL text, words and cells, so the word
+    and cell views are empty."""
+    from sparkstract.plans.pipeline import (extract_pages, page_cells,
+                                            page_words)
+
+    docs, media, _ = fixture_set.to_spark(spark)
+    docs = docs.filter(F.col("doc_id").isin("d-table_page", "d-para_page"))
+    pages = extract_pages(spark, docs, media, ExtractConfig(recognize=False))
+    blocks = [b for r in pages.collect() for b in r["blocks"]]
+    assert {b["kind"] for b in blocks} >= {"table", "flowing_text"}
+    assert all(b["text"] is None and b["words"] is None
+               and b["cells"] is None for b in blocks)
+    assert page_words(pages).count() == 0 and page_cells(pages).count() == 0
+
+
 def test_reassemble_docs_shape(spark, fixture_set):
     docs, media, _ = fixture_set.to_spark(spark)
     docs = docs.filter(F.col("doc_id") == "d-multi")
@@ -131,23 +148,23 @@ def test_crop_geometry_in_original_coordinates(spark):
     from sparkstract.config import ExtractConfig
     from sparkstract.fixtures.gen import _Builder
     from sparkstract.functions.png import decode_gray
-    from sparkstract.plans.pipeline import extract_blocks
+    from sparkstract.plans.pipeline import extract_pages, page_blocks
 
     b = _Builder(seed=99)
     b.add_doc("d-cropgeo", [("media", "single_column")])
     fs = b.build()
     docs, media, _ = fs.to_spark(spark)
 
-    full = extract_blocks(spark, docs, media).collect()
+    full = page_blocks(extract_pages(spark, docs, media)).collect()
     assert len(full) == 1
     blk = full[0]
 
     # crop with a non-zero origin that still contains the whole text block
     img = decode_gray(bytes(fs.media["image"][0]))
     cl, ct = blk["left"] - 4, blk["top"] - 4
-    cropped = extract_blocks(
+    cropped = page_blocks(extract_pages(
         spark, docs, media,
-        ExtractConfig(crop=(cl, ct, img.shape[1], img.shape[0]))).collect()
+        ExtractConfig(crop=(cl, ct, img.shape[1], img.shape[0])))).collect()
     assert len(cropped) == 1
     got = cropped[0]
     assert got["text"] == blk["text"]
@@ -156,14 +173,14 @@ def test_crop_geometry_in_original_coordinates(spark):
 
 
 def test_extract_blocks_geometry(spark, fixture_set):
-    """extract_blocks exposes per-block bounding boxes (reference TSV/hOCR
+    """page_blocks exposes per-block bounding boxes (reference TSV/hOCR
     level): kinds mirror the span truth and the geometry obeys the layout
     invariants of layout_test.cc:122 (caption below image, boxes in-page)."""
-    from sparkstract.plans.pipeline import extract_blocks
+    from sparkstract.plans.pipeline import extract_pages, page_blocks
 
     docs, media, truth = fixture_set.to_spark(spark)
     docs = docs.filter(F.col("doc_id") == "d-interleaved_order")
-    got = extract_blocks(spark, docs, media).toPandas() \
+    got = page_blocks(extract_pages(spark, docs, media)).toPandas() \
         .sort_values("block_order").reset_index(drop=True)
     want = truth.toPandas()
     want = want[(want["doc_id"] == "d-interleaved_order")
@@ -191,45 +208,44 @@ def test_big_media_shuffle_join_path(spark, fixture_set):
 
 
 def test_views_share_one_page_kernel(spark, fixture_set):
-    """All views flatten the same page kernel: the hierarchy frame splits
-    into exactly the block and word views, the table view carries the
-    merged header cell, and a batch of wordless pages still yields a frame
-    with the view's columns."""
-    from sparkstract.plans.pipeline import (WORDS_SCHEMA, _kernel,
-                                            _word_rows, extract_blocks,
-                                            extract_hierarchy,
-                                            extract_tables, extract_words,
-                                            hierarchy_views)
+    """The page table is the page kernel's output and nothing else: the
+    distributed extract_pages frame equals the kernel function run locally
+    on the same pandas work batch (the pandas-UDF test pattern: Spark's
+    result vs the UDF's own function on the pandas frame). The batch
+    covers a multipage TIFF, a PDF, the spanned table, whose merged header
+    cell comes out once with col_span 2, and the empty page, whose page
+    row has no blocks and so no word rows. A batch with no pages still
+    yields a frame with the table's columns."""
+    from pyspark.sql.types import DataType
+
+    from sparkstract.plans.pipeline import (PAGES_SCHEMA, _kernel,
+                                            _page_rows, _work_frame,
+                                            extract_pages, page_cells,
+                                            page_words)
 
     docs, media, _ = fixture_set.to_spark(spark)
-    h = extract_hierarchy(spark, docs, media).persist()
+    docs = docs.filter(F.col("doc_id").isin(
+        "d-empty_page", "d-spanned_table_page", "d-tiff_multipage",
+        "d-pdf_page", "d-para_page"))
+    cfg = ExtractConfig()
+    kernel = _kernel(cfg, PAGES_SCHEMA, _page_rows)
+    pages = extract_pages(spark, docs, media, cfg).persist()
     try:
-        hb, hw = hierarchy_views(h)
-        for got, want, key in (
-                (hb, extract_blocks(spark, docs, media),
-                 ["doc_id", "offset", "block_order"]),
-                (hw, extract_words(spark, docs, media),
-                 ["doc_id", "offset", "block_order", "para_num", "line_num",
-                  "word_num"])):
-            got, want = (f.toPandas().sort_values(key).reset_index(drop=True)
-                         for f in (got, want))
-            assert len(got) > 0
-            pd.testing.assert_frame_equal(got, want)
+        batch = _work_frame(docs, media, cfg).toPandas()
+        (local,) = kernel(iter([batch]))
+        want = spark.createDataFrame(local, PAGES_SCHEMA)
+        got = pages.collect()
+        assert len(got) > len(batch)  # the multipage item adds pages
+        assert sorted(map(repr, got)) == sorted(map(repr, want.collect()))
+
+        empty = pages.filter(F.col("doc_id") == "d-empty_page")
+        assert [len(r["blocks"]) for r in empty.collect()] == [0]
+        assert page_words(empty).count() == 0
+        cells = page_cells(pages).toPandas()
+        assert (cells["col_span"] == 2).sum() == 1
     finally:
-        h.unpersist()
+        pages.unpersist()
 
-    cells = extract_tables(spark, docs, media).toPandas()
-    assert (cells["col_span"] > 1).any()
-
-    m = fixture_set.media
-    batch = pd.DataFrame({
-        "doc_id": ["d-empty_page"], "offset": [1],
-        "media_ref": ["m-empty_page-000007"],
-        "image": list(m[m["media_ref"] == "m-empty_page-000007"]["image"])})
-    (out,) = _kernel(ExtractConfig(), WORDS_SCHEMA, _word_rows)(iter([batch]))
-    assert len(out) == 0
-    assert list(out.columns) == [c.split()[0]
-                                 for c in WORDS_SCHEMA.split(",")]
-    empty = extract_words(spark, docs.filter(F.col("doc_id") == "d-empty_page"),
-                          media)
-    assert empty.count() == 0
+    (none,) = kernel(iter([batch.iloc[:0]]))
+    assert len(none) == 0
+    assert list(none.columns) == DataType.fromDDL(PAGES_SCHEMA).names

@@ -64,7 +64,8 @@ def test_rgb_png_family_tint_luma_exact():
     import numpy as np
 
     from sparkstract.fixtures.gen import _Builder
-    from sparkstract.functions.png import _luma, decode_gray
+    from sparkstract.functions.png import decode_gray
+    from sparkstract.functions.raster import luma
 
     b = _Builder(seed=7)
     ref, _blocks = b.add_page("rgb_png_page")
@@ -74,5 +75,5 @@ def test_rgb_png_family_tint_luma_exact():
     assert gray.min() >= 77 and gray.max() <= 226
     from sparkstract.functions.png import encode_rgb  # noqa: F401
     # decode path == direct luma of the stored RGB (consistency)
-    assert (_luma(np.stack([gray + 29, gray, gray - 77],
-                           axis=2).astype(np.uint8)) == gray).all()
+    assert (luma(np.stack([gray + 29, gray, gray - 77],
+                          axis=2).astype(np.uint8)) == gray).all()

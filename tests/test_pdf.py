@@ -472,8 +472,8 @@ def test_rgb_image_xobject_luma():
     (page,) = parse_pdf(pdf)
     imgs = [it for it in page.items if it[0] == "image"]
     assert len(imgs) == 1
-    from sparkstract.functions.png import _luma
-    assert (imgs[0][1] == _luma(rgb)).all()
+    from sparkstract.functions.raster import luma
+    assert (imgs[0][1] == luma(rgb)).all()
 
 
 # --------------------------------------------------------- Type0/CID fonts
@@ -663,8 +663,8 @@ def test_inline_rgb_image_luma():
     cs = (b"q 6 0 0 4 10 100 cm BI /W 6 /H 4 /BPC 8 /CS /RGB ID "
           + rgb.tobytes() + b" EI Q")
     (page,) = parse_pdf(_raw_pdf(cs))
-    from sparkstract.functions.png import _luma
-    assert (page.items[0][1] == _luma(rgb)).all()
+    from sparkstract.functions.raster import luma
+    assert (page.items[0][1] == luma(rgb)).all()
 
 
 def test_char_and_word_spacing_advances():
@@ -996,9 +996,9 @@ def test_indexed_8bit_rgb_palette():
     pal = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255])
     idx = np.array([[0, 1], [2, 3]], np.uint8)
     out = _indexed_decode(2, 2, 8, "/DeviceRGB", 3, pal, idx.tobytes())
-    from sparkstract.functions.png import _luma
+    from sparkstract.functions.raster import luma
 
-    exp = _luma(np.frombuffer(pal, np.uint8).reshape(4, 3)[idx])
+    exp = luma(np.frombuffer(pal, np.uint8).reshape(4, 3)[idx])
     assert np.array_equal(out, exp)
 
 
@@ -1140,9 +1140,9 @@ def test_iccbased_resolves_by_component_count():
     rgb_prof = ("stream", {"/N": 3}, b"")
     out = _cs_decode(["/ICCBased", rgb_prof],
                      bytes([255, 0, 0, 0, 255, 0]))
-    from sparkstract.functions.png import _luma
+    from sparkstract.functions.raster import luma
 
-    exp = _luma(np.array([[[255, 0, 0], [0, 255, 0]]], np.uint8))
+    exp = luma(np.array([[[255, 0, 0], [0, 255, 0]]], np.uint8))
     assert np.array_equal(out, exp)
 
 

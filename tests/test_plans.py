@@ -97,8 +97,37 @@ def test_default_work_frame_spreads_over_every_core_slot(spark, fixture_set):
     docs, media, _ = fixture_set.to_spark(spark)
     slots = spark.sparkContext.defaultParallelism
     for cfg in (ExtractConfig(), ExtractConfig(broadcast_media_max_rows=0)):
-        work, _ = _work_frame(docs, media, cfg)
+        work = _work_frame(docs, media, cfg)
         assert work.rdd.getNumPartitions() == slots
         rows = work.count()
         used = work.select(F.spark_partition_id()).distinct().count()
         assert used >= min(rows, slots)
+
+
+def test_extract_runs_one_page_kernel(spark, fixture_set):
+    """`extract` projects the page table: one page-kernel node, and the same
+    Exchanges as before the page table (salt repartition, media broadcast,
+    reassembly window)."""
+    from sparkstract.plans.pipeline import extract
+
+    docs, media, _ = fixture_set.to_spark(spark)
+    p = _plan(extract(spark, docs, media))
+    assert p.count("MapInPandas") == 1
+    assert p.count("Exchange") == 3 and p.count("BroadcastExchange") == 1
+
+
+def test_views_of_a_persisted_page_table_add_no_kernel(spark, fixture_set):
+    """Views over one persisted page table read the cache: the only
+    page-kernel node is the one inside the cached relation."""
+    from sparkstract.plans.pipeline import (extract_pages, page_blocks,
+                                            page_words)
+
+    docs, media, _ = fixture_set.to_spark(spark)
+    pages = extract_pages(spark, docs, media).persist()
+    try:
+        for view in (page_words(pages), page_blocks(pages)):
+            above, cached = _plan(view).split("InMemoryRelation", 1)
+            assert "MapInPandas" not in above
+            assert cached.count("MapInPandas") == 1
+    finally:
+        pages.unpersist()

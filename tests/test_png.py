@@ -289,11 +289,11 @@ def test_png_2bit_and_4bit_gray_scaling():
 def test_png_4bit_palette():
     plte = bytes([0, 0, 0, 255, 0, 0, 0, 255, 0, 0, 0, 255])
     png = _make_png(3, 1, 4, 3, [bytes([0x01, 0x20])], plte)
-    from sparkstract.functions.png import _luma
+    from sparkstract.functions.raster import luma
 
     out = decode_gray(png)
     idx = np.array([[0, 1, 2]])
-    exp = _luma(np.frombuffer(plte, np.uint8).reshape(4, 3)[idx])
+    exp = luma(np.frombuffer(plte, np.uint8).reshape(4, 3)[idx])
     assert np.array_equal(out, exp)
 
 

@@ -73,7 +73,9 @@ def test_render_page_xml_multiline_text(spark):
 
 def test_render_page_xml_nul_text_and_newline_ref(spark):
     """Regions and reading-order refs are folded separately, so a NUL in a
-    span's text or a newline in a media_ref cannot cut one into the other."""
+    span's text or a newline in a media_ref cannot cut one into the other.
+    The NUL, which XML 1.0 forbids, is dropped; the newline in the
+    attribute is written as a character reference."""
     rows = [("d4", 0, "flowing_text", "A\x00B", None),
             ("d4", 1, "flowing_image", None, "m\n1"),
             ("d4", 2, "caption_text", "C", None)]
@@ -84,15 +86,72 @@ def test_render_page_xml_nul_text_and_newline_ref(spark):
     assert all(r in xml for r in refs), xml
     assert [xml.index(r) for r in refs] == sorted(xml.index(r) for r in refs)
     assert "<TextRegion id='r0' custom='flowing_text'><TextEquiv><Unicode>" \
-        "A\x00B</Unicode></TextEquiv></TextRegion>" in xml
+        "AB</Unicode></TextEquiv></TextRegion>" in xml
     assert "<ImageRegion id='r1' custom='flowing_image' " \
-        "imageFilename='m\n1'/>" in xml
+        "imageFilename='m&#10;1'/>" in xml
     assert "<Unicode>C</Unicode>" in xml
 
 
+def test_xml_renderers_parse_control_characters(spark):
+    """Each XML renderer's output parses for text with a NUL and a tab and
+    a media_ref with a newline, and reads back the input minus the NUL:
+    character references keep the tab and newline in attribute values,
+    where a parser would turn the raw characters into spaces."""
+    import xml.etree.ElementTree as ET
+
+    from sparkstract.sinks import (render_alto_words, render_hocr_words,
+                                   render_page_xml_words)
+
+    def parse(doc):
+        root = ET.fromstring(doc)
+        return {e.tag.split("}")[-1]: e for e in root.iter()}, root
+
+    spans = spark.createDataFrame(
+        [("d", 0, "table", "A\x00B\tC", None),
+         ("d", 1, "flowing_image", None, "m\n1")], SCHEMA)
+    el, _ = parse(render_alto(spans).collect()[0]["alto"])
+    assert el["String"].get("CONTENT") == "AB\tC"
+    assert el["Illustration"].get("FILEID") == "m\n1"
+    el, _ = parse(render_page_xml(spans).collect()[0]["page_xml"])
+    assert el["TextRegion"].find("*/*").text == "AB\tC"
+    assert el["ImageRegion"].get("imageFilename") == "m\n1"
+
+    box = "left int, top int, right int, bottom int"
+    blocks = spark.createDataFrame(
+        [("d", 0, 0, "table", "A\x00B\tC", None, 0, 0, 9, 9),
+         ("d", 0, 1, "flowing_image", None, "m\n1", 0, 10, 9, 19),
+         ("d", 0, 2, "flowing_text", "D\x00E", None, 0, 20, 9, 29)],
+        "doc_id string, offset int, block_order int, kind string, "
+        f"text string, media_ref string, {box}")
+    words = spark.createDataFrame(
+        [("d", 0, 2, 0, 0, 0, "D\x00E", None, 0, 20, 9, 29, 90, 10, 0.0,
+          0)],
+        "doc_id string, offset int, block_order int, para_num int, "
+        f"line_num int, word_num int, word string, media_ref string, {box}, "
+        "conf int, x_size int, base_slope double, base_off int")
+    _, root = parse(render_alto_words(blocks, words).collect()[0]["alto"])
+    strings = [e.get("CONTENT") for e in root.iter()
+               if e.tag.endswith("String")]
+    assert strings == ["AB\tC", "DE"]
+    assert [e.get("FILEID") for e in root.iter()
+            if e.tag.endswith("Illustration")] == ["m\n1"]
+    el, root = parse(render_page_xml_words(blocks, words)
+                     .collect()[0]["page_xml"])
+    assert el["Page"].get("imageFilename") == "m\n1"
+    assert el["ImageRegion"].get("imageFilename") == "m\n1"
+    assert [e.text for e in root.iter()
+            if e.tag.endswith("Unicode")] == ["AB\tC", "DE", "DE"]
+    hocr = render_hocr_words(blocks, words).collect()[0]["hocr"]
+    assert "<img src='m&#10;1'/>" in hocr
+
+
 def test_render_hocr_escapes(spark):
-    out = {r["doc_id"]: r["hocr"] for r in render_hocr(_spans(spark)).collect()}
+    edge = spark.createDataFrame(
+        [("d5", 0, "flowing_image", None, "m'&<1>")], SCHEMA)
+    out = {r["doc_id"]: r["hocr"]
+           for r in render_hocr(_spans(spark).unionByName(edge)).collect()}
     assert out["d2"].count("LONE &amp; &lt;b&gt;") == 1
+    assert "<img src='m&apos;&amp;&lt;1&gt;'/>" in out["d5"]
     assert out["d1"].startswith("<html><body>")
     assert "<img src='m-1'/>" in out["d1"]
     # reading order preserved
@@ -100,19 +159,19 @@ def test_render_hocr_escapes(spark):
 
 
 def test_box_aware_renderers(spark, fixture_set):
-    """Fed extract_blocks output (geometry present), hOCR titles carry real
+    """Fed page_blocks output (geometry present), hOCR titles carry real
     bbox properties and ALTO elements carry HPOS/VPOS/WIDTH/HEIGHT — like
     the reference renderers (hocrrenderer.cpp:123, altorenderer.cpp)."""
     import re
 
     from pyspark.sql import functions as F
 
-    from sparkstract.plans.pipeline import extract_blocks
+    from sparkstract.plans.pipeline import extract_pages, page_blocks
     from sparkstract.sinks import render_alto, render_hocr
 
     docs, media, _ = fixture_set.to_spark(spark)
     docs = docs.filter(F.col("doc_id") == "d-interleaved_order")
-    blocks = extract_blocks(spark, docs, media) \
+    blocks = page_blocks(extract_pages(spark, docs, media)) \
         .withColumn("order", F.col("block_order"))
     hocr = render_hocr(blocks).collect()[0]["hocr"]
     boxes = re.findall(r"bbox (\d+) (\d+) (\d+) (\d+)", hocr)
@@ -138,13 +197,14 @@ def test_hierarchy_renderers(spark, fixture_set):
     the wired paragraph detector must show up as par rows / ocr_par divs."""
     from pyspark.sql import functions as F
 
-    from sparkstract.plans.pipeline import extract_blocks, extract_words
+    from sparkstract.plans.pipeline import (extract_pages, page_blocks,
+                                            page_words)
     from sparkstract.sinks import render_hocr_words, render_tsv_levels
 
     docs, media, _ = fixture_set.to_spark(spark)
     docs = docs.filter(F.col("doc_id") == "d-para_page")
-    blocks = extract_blocks(spark, docs, media)
-    words = extract_words(spark, docs, media)
+    pages = extract_pages(spark, docs, media)
+    blocks, words = page_blocks(pages), page_words(pages)
 
     tsv = render_tsv_levels(blocks, words).collect()[0]["tsv"]
     lines = tsv.split("\n")
@@ -177,13 +237,14 @@ def test_render_page_xml_words(spark, fixture_set):
 
     from pyspark.sql import functions as F
 
-    from sparkstract.plans.pipeline import extract_blocks, extract_words
+    from sparkstract.plans.pipeline import (extract_pages, page_blocks,
+                                            page_words)
     from sparkstract.sinks import render_page_xml_words
 
     docs, media, _ = fixture_set.to_spark(spark)
     docs = docs.filter(F.col("doc_id") == "d-para_page")
-    blocks = extract_blocks(spark, docs, media)
-    words = extract_words(spark, docs, media)
+    pages = extract_pages(spark, docs, media)
+    blocks, words = page_blocks(pages), page_words(pages)
 
     xml = render_page_xml_words(blocks, words).collect()[0]["page_xml"]
     assert xml.startswith("<PcGts") and xml.endswith("</PcGts>")

@@ -52,11 +52,13 @@ def test_symbol_confidence_tracks_damage():
 
 
 def test_extract_symbols_matches_words(spark, fixture_set):
-    from sparkstract.plans.pipeline import extract_symbols, extract_words
+    from sparkstract.plans.pipeline import (extract_pages, page_symbols,
+                                            page_words)
 
     docs, media, _ = fixture_set.to_spark(spark)
-    syms = extract_symbols(spark, docs, media).persist()
-    words = extract_words(spark, docs, media)
+    pages = extract_pages(spark, docs, media).persist()
+    syms = page_symbols(pages)
+    words = page_words(pages)
     got = {}
     for r in syms.orderBy("doc_id", "offset", "block_order", "para_num",
                           "line_num", "word_num", "sym_num").collect():
@@ -71,15 +73,15 @@ def test_extract_symbols_matches_words(spark, fixture_set):
         assert got[key] == w.word
         n += 1
     assert n > 50 and len(got) == n
-    syms.unpersist()
+    pages.unpersist()
 
 
 def test_render_box_format(spark, fixture_set):
-    from sparkstract.plans.pipeline import extract_symbols
+    from sparkstract.plans.pipeline import extract_pages, page_symbols
     from sparkstract.sinks import render_box
 
     docs, media, _ = fixture_set.to_spark(spark)
-    syms = extract_symbols(spark, docs, media).persist()
+    syms = page_symbols(extract_pages(spark, docs, media)).persist()
     one = syms.limit(1).collect()[0]
     out = render_box(syms.filter(syms.doc_id == one.doc_id)).collect()
     assert len(out) == 1
@@ -124,12 +126,14 @@ def test_render_unlv_text_and_codes(spark):
 def test_render_unlv_pins_fixture_text(spark, fixture_set):
     """UNLV of a clean all-Latin fixture page is its plain text with
     single-space word joins and newline lines."""
-    from sparkstract.plans.pipeline import extract, extract_symbols
+    from sparkstract.plans.pipeline import (extract, extract_pages,
+                                            page_symbols)
     from sparkstract.sinks import render_unlv
 
     docs, media, _ = fixture_set.to_spark(spark)
     did = "d-ragged_page"
-    syms = extract_symbols(spark, docs.filter(docs.doc_id == did), media)
+    syms = page_symbols(
+        extract_pages(spark, docs.filter(docs.doc_id == did), media))
     unlv = render_unlv(syms).collect()[0].unlv
     spans = extract(spark, docs.filter(docs.doc_id == did), media) \
         .orderBy("order").collect()

@@ -101,7 +101,8 @@ def test_zone_override_words(spark):
     from sparkstract.fixtures.gen import DOCS_SCHEMA, MEDIA_SCHEMA
     from sparkstract.fixtures.render import PageSpec, Text, render_page
     from sparkstract.functions.png import encode_gray
-    from sparkstract.plans.pipeline import ZONES_SCHEMA, extract_words
+    from sparkstract.plans.pipeline import (ZONES_SCHEMA, extract_pages,
+                                            page_words)
 
     img, _ = render_page(PageSpec(elements=[Text(["FOX DOG", "CAT RAT"])],
                                   scale=2))
@@ -114,7 +115,7 @@ def test_zone_override_words(spark):
     zones = spark.createDataFrame(
         [("mz", [dict(left=0, top=0, right=w - 1, bottom=h - 1,
                       kind="flowing_text")])], ZONES_SCHEMA)
-    rows = extract_words(spark, docs, media, zones=zones) \
+    rows = page_words(extract_pages(spark, docs, media, zones=zones)) \
         .orderBy("line_num", "word_num").collect()
     assert [r["word"] for r in rows] == ["FOX", "DOG", "CAT", "RAT"]
     # page coordinates: margin 8s = 16
