@@ -2448,11 +2448,11 @@ def _layout_geometry_truth() -> list[tuple]:
 
 
 def _esc_html(s: str) -> str:
+    s = re.sub("[\x00-\x08\x0b\x0c\x0e-\x1f]", "", s)
     return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
 def _esc_xml(s: str) -> str:
-    s = re.sub("[\x00-\x08\x0b\x0c\x0e-\x1f]", "", s)
     return _esc_html(s).replace("'", "&apos;")
 
 
@@ -2461,14 +2461,18 @@ def _esc_attr(s: str) -> str:
         .replace("\r", "&#13;")
 
 
-def _dd_esc_xml(expr: str) -> str:
-    """DuckDB twin of _esc_xml over the SQL expression `expr`."""
+def _dd_esc_html(expr: str) -> str:
+    """DuckDB twin of _esc_html over the SQL expression `expr`."""
     out = (f"regexp_replace({expr}, "
            "'[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]', '', 'g')")
-    for ch, ref in (("'&'", "&amp;"), ("'<'", "&lt;"), ("'>'", "&gt;"),
-                    ("chr(39)", "&apos;")):
+    for ch, ref in (("'&'", "&amp;"), ("'<'", "&lt;"), ("'>'", "&gt;")):
         out = f"replace({out}, {ch}, '{ref}')"
     return out
+
+
+def _dd_esc_xml(expr: str) -> str:
+    """DuckDB twin of _esc_xml."""
+    return f"replace({_dd_esc_html(expr)}, chr(39), '&apos;')"
 
 
 def _dd_esc_attr(expr: str) -> str:
@@ -3098,8 +3102,10 @@ def oracle_sql() -> dict[str, str]:
     from sparkstract.sinks import TEXT_KINDS
 
     text_kinds_sql = ", ".join(f"'{k}'" for k in TEXT_KINDS)
-    # the flat renderers' escapes (sinks._escape_xml / _escape_attr)
+    # the flat renderers' escapes (sinks._escape_html / _escape_xml /
+    # _escape_attr)
     hocr_src = _dd_esc_attr("coalesce(media_ref, '')")
+    hocr_text = _dd_esc_html("coalesce(text, '')")
     emedia = hocr_src
     edoc = _dd_esc_attr("doc_id")
     alto_text = _dd_esc_attr("coalesce(replace(text, chr(10), ' '), '')")
@@ -3453,8 +3459,7 @@ def oracle_sql() -> dict[str, str]:
                                      'pullout_image')
                        THEN '<img src=''' || {hocr_src} || '''/>'
                        WHEN kind IN ('horz_line', 'vert_line') THEN ''
-                       ELSE replace(replace(replace(coalesce(text, ''),
-                            '&', '&amp;'), '<', '&lt;'), '>', '&gt;')
+                       ELSE {hocr_text}
                      END || '</div>',
                      chr(10) ORDER BY "order") ||
                    chr(10) || '</body></html>' AS hocr

@@ -32,7 +32,9 @@ def main() -> int:
     p.add_argument("--media", required=True, help="media side-table path")
     p.add_argument("--out", required=True, help="output dir (commit + lineage)")
     p.add_argument("--groups", type=int, default=64,
-                   help="bucket-groups per run; each commits atomically")
+                   help="bucket groups (doc_id hash buckets): the run makes "
+                   "one extraction and one write, then commits each group "
+                   "atomically; a rerun skips the committed groups")
     p.add_argument("--work-partitions", type=int, default=0,
                    help="salted (doc_id, offset) partitions; "
                    "0 = one per core slot (defaultParallelism)")

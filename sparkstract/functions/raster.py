@@ -380,10 +380,8 @@ def decode_gray_bmp(data: bytes) -> np.ndarray:
         pal_off = 14 + hdr_size
         pal = np.frombuffer(data[pal_off : pal_off + 4 * n_colors],
                             dtype=np.uint8).reshape(-1, 4)
-        # BGR -> ITU-R 601 luma (a gray palette maps to identity)
-        pal_gray = np.clip(np.rint(0.114 * pal[:, 0] + 0.587 * pal[:, 1]
-                                   + 0.299 * pal[:, 2]),
-                           0, 255).astype(np.uint8)
+        # BGRA entries (a gray palette maps to identity)
+        pal_gray = luma(pal[:, 2], pal[:, 1], pal[:, 0])
         if comp == 1:
             raw = _bmp_rle8(data[data_off:], w, h)
             if top_down:

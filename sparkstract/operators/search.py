@@ -49,11 +49,11 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], topk: int = 20,
     # Both the df aggregate and the scoring branch read `matched`; without
     # a persist Catalyst duplicates the subtree and the corpus is
     # scanned+exploded twice. But a stop-word query term makes `matched`
-    # corpus-sized, so blanket-persisting it is the disk-exhaustion
-    # pattern run_job gates against (checkpoint.py) — same gate here:
-    # persist only when the input is small enough that the frame is known
-    # to be cache-safe; at scale eat the second scan (and get df from the
-    # ingest-time vocab table instead — see vocab_topk).
+    # corpus-sized, and a persisted corpus-sized frame exhausts executor
+    # memory and disk at 100 TB. So persist only an input of at most 1024
+    # partitions, small enough that the frame is known to be cache-safe;
+    # at scale eat the second scan (and get df from the ingest-time vocab
+    # table instead — see vocab_topk).
     if docs.rdd.getNumPartitions() <= 1024:
         matched = matched.persist()
     dfs = (matched.groupBy("tok")

@@ -1,12 +1,12 @@
 """Resumable job runner: bucketed commits + lineage + metrics.
 
 North-rule requirement: "resumable from checkpoint with per-partition lineage
-+ metrics". In production this is Iceberg: each bucket-group's results, its
-lineage row, and its metric row commit in ONE snapshot, and resume anti-joins
-committed lineage. This container has no Iceberg runtime jars, so we
-implement the same protocol over a parquet directory with POSIX-atomic
-rename as the commit primitive — the seam to swap in Iceberg `MERGE INTO` is
-`_commit_group`.
++ metrics". In production this is Iceberg: a run writes its data files once,
+then each bucket group's files, lineage row and metric row commit in ONE
+snapshot, and resume anti-joins committed lineage. Without an Iceberg
+runtime the same protocol runs over a parquet directory: one `partitionBy`
+write is staged, and a POSIX-atomic rename per group is the commit — the
+seam to swap in Iceberg `MERGE INTO` is `_commit_group`.
 
 The reference's closest analog is per-page retry + the progress monitor
 (ProcessPages retry_config, /root/reference/include/tesseract/baseapi.h:732;
@@ -17,6 +17,7 @@ adds on top.
 Layout:
   out_dir/data/group=<g>/...parquet   results for bucket group g
   out_dir/_lineage/group-<g>.json     commit record (rename = atomic commit)
+  out_dir/_tmp/<uuid>/_grp=<g>/       a run's staged, uncommitted output
 """
 
 from __future__ import annotations
@@ -55,30 +56,16 @@ def committed_groups(out_dir: str) -> dict[int, dict]:
     return out
 
 
-def _commit_group(result: DataFrame, out_dir: str, run_id: str, group: int) -> None:
-    """Write one bucket-group's results + lineage atomically.
-
-    Metrics are computed FROM the written files, not from the logical plan —
-    running an aggregate on `result` before writing would execute the whole
-    extraction twice per group (once for the agg, once for the write).
-
+def _commit_group(staged: str, out_dir: str, run_id: str, group: int,
+                  metrics: dict) -> None:
+    """Move one group's staged files into place, then record its lineage.
     Iceberg seam: replace with a single transaction appending the data files,
-    the lineage row, and the metrics row to three tables in one snapshot.
-    """
+    the lineage row, and the metrics row to three tables in one snapshot."""
     data_dir = os.path.join(out_dir, "data", f"group={group}")
-    tmp_dir = os.path.join(out_dir, "_tmp", f"{group}-{uuid.uuid4().hex}")
-    result.write.mode("overwrite").parquet(tmp_dir)
-    stats = result.sparkSession.read.parquet(tmp_dir).agg(
-        F.countDistinct("doc_id").alias("docs"),
-        F.count(F.lit(1)).alias("spans_out"),
-        F.sum((F.col("kind") != "text").cast("long")).alias("extracted_spans"),
-    ).collect()[0]
-    metrics = dict(docs=stats["docs"] or 0, spans_out=stats["spans_out"] or 0,
-                   extracted_spans=int(stats["extracted_spans"] or 0))
     if os.path.isdir(data_dir):
         shutil.rmtree(data_dir)  # leftover from a killed, uncommitted attempt
     os.makedirs(os.path.dirname(data_dir), exist_ok=True)
-    os.rename(tmp_dir, data_dir)
+    os.rename(staged, data_dir)
 
     lin_dir = os.path.join(out_dir, "_lineage")
     os.makedirs(lin_dir, exist_ok=True)
@@ -87,6 +74,19 @@ def _commit_group(result: DataFrame, out_dir: str, run_id: str, group: int) -> N
     with open(tmp, "w") as f:
         json.dump(rec, f)
     os.rename(tmp, os.path.join(lin_dir, f"group-{group}.json"))  # THE commit
+
+
+def _group_metrics(spark: SparkSession, stage: str) -> dict[int, dict]:
+    """Every staged group's metrics in ONE aggregate over the written files
+    (aggregating the plan instead would run the extraction twice)."""
+    rows = spark.read.parquet(stage).groupBy("_grp").agg(
+        F.countDistinct("doc_id").alias("docs"),
+        F.count(F.lit(1)).alias("spans_out"),
+        F.sum((F.col("kind") != "text").cast("long")).alias("extracted_spans"),
+    ).collect()
+    return {r["_grp"]: dict(docs=r["docs"], spans_out=r["spans_out"],
+                            extracted_spans=r["extracted_spans"])
+            for r in rows}
 
 
 def run_job(spark: SparkSession, docs: DataFrame, media: DataFrame,
@@ -98,46 +98,45 @@ def run_job(spark: SparkSession, docs: DataFrame, media: DataFrame,
     Re-invoking on the same out_dir skips committed groups (exactly-once per
     doc: buckets partition doc_ids). Returns the full committed result.
 
-    Scan discipline: `pmod(xxhash64(doc_id))` filters do NOT prune a plain
-    parquet scan, so a naive loop re-reads the full input once per group —
-    an n_groups× read tax at 100 TB. Two defenses, layered:
-      * on Iceberg, set n_groups equal to (a divisor of) the table's
-        `bucket(N, doc_id)` partition-spec count (sources/docs.py DDL uses
-        1024) and the same hash — the group filter then IS partition
-        pruning and each group scans only its own files;
-      * here (plain parquet, no bucketing metadata) an input of at most
-        1024 partitions is persisted once and every group filter reads the
-        cached blocks, so it is scanned exactly once regardless of n_groups.
+    Scan discipline: one run is one extraction and one write. ONE `extract`
+    runs over the docs of the pending groups; its output is written once,
+    `partitionBy` group, into a staging directory; one aggregate over the
+    staged files gives every group's metrics; then the groups commit in
+    ascending order. The input is scanned once and the kernel stage runs
+    once, whatever n_groups is. On Iceberg, set n_groups to (a divisor of)
+    the table's `bucket(N, doc_id)` partition count (sources/docs.py DDL
+    uses 1024) with the same hash: the pending-group filter is then
+    partition pruning, and a resumed run reads only uncommitted groups.
 
-    A wider input is not cached: caching the FULL corpus at 100 TB would
-    exhaust executor disk, and at that scale the Iceberg bucket-pruning
-    path above is the scan defense, not the cache.
+    Trade-off: a kill during the single write loses that run's uncommitted
+    work, and at most that (a kill between commits keeps the committed
+    groups). Bound the work at risk by the input a run is given.
     """
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
-    done = committed_groups(out_dir)
     shutil.rmtree(os.path.join(out_dir, "_tmp"), ignore_errors=True)
+    pending = sorted(set(range(n_groups)) - set(committed_groups(out_dir)))
+    if not pending:
+        return read_result(spark, out_dir)
 
-    persist_input = docs.rdd.getNumPartitions() <= 1024
-    bucketed = docs.withColumn("_grp", _bucket_col(n_groups))
-    if persist_input:
-        bucketed = bucketed.persist()
-    try:
-        committed_count = 0
-        for g in range(n_groups):
-            if g in done:
-                continue
-            sub = bucketed.filter(F.col("_grp") == g).drop("_grp")
-            result = extract(spark, sub, media, cfg)
-            _commit_group(result, out_dir, run_id, g)
-            committed_count += 1
-            if fail_after_groups is not None and committed_count >= fail_after_groups:
-                raise InjectedFailure(
-                    f"injected failure after {committed_count} groups")
-    finally:
-        if persist_input:
-            bucketed.unpersist()
-
+    result = extract(spark, docs.filter(_bucket_col(n_groups).isin(pending)),
+                     media, cfg)
+    stage = os.path.join(out_dir, "_tmp", uuid.uuid4().hex)
+    result.withColumn("_grp", _bucket_col(n_groups)) \
+        .write.partitionBy("_grp").parquet(stage)
+    staged = {g: os.path.join(stage, f"_grp={g}") for g in pending}
+    empty = [g for g in pending if not os.path.isdir(staged[g])]
+    if empty:  # Spark writes no directory for a group without rows
+        spark.createDataFrame([], result.schema).write.parquet(staged[empty[0]])
+        for g in empty[1:]:
+            shutil.copytree(staged[empty[0]], staged[g])
+    metrics = _group_metrics(spark, stage)
+    for k, g in enumerate(pending, 1):
+        _commit_group(staged[g], out_dir, run_id, g, metrics.get(
+            g, dict(docs=0, spans_out=0, extracted_spans=0)))
+        if fail_after_groups is not None and k >= fail_after_groups:
+            raise InjectedFailure(f"injected failure after {k} groups")
+    shutil.rmtree(stage, ignore_errors=True)
     return read_result(spark, out_dir)
 
 

@@ -106,15 +106,16 @@ def _or_empty(name: str) -> Column:
 
 
 def _escape_html(col):
-    out = F.regexp_replace(col, "&", "&amp;")
+    """Markup escaped, and the C0 control characters XML 1.0 forbids (all
+    but tab, newline and carriage return) dropped: hOCR is XHTML."""
+    out = F.regexp_replace(col, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]", "")
+    out = F.regexp_replace(out, "&", "&amp;")
     out = F.regexp_replace(out, "<", "&lt;")
     return F.regexp_replace(out, ">", "&gt;")
 
 
 def _escape_xml(col):
-    """Markup escaped, and the C0 control characters XML 1.0 forbids (all
-    but tab, newline and carriage return) dropped."""
-    col = F.regexp_replace(col, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]", "")
+    """`_escape_html` with the apostrophe escaped too."""
     return F.regexp_replace(_escape_html(col), "'", "&apos;")
 
 

@@ -183,6 +183,32 @@ def test_bmp_4bit_and_1bit_uncompressed():
     assert img.tolist() == [[255, 0, 255, 0]]
 
 
+def test_bmp_colour_palette_uses_shared_luma():
+    """A colored 8-bit palette decodes to the gray `raster.luma` gives its
+    RGB pixels, as every other colour codec does; a gray palette stays
+    the identity."""
+    import struct
+
+    import numpy as np
+
+    from sparkstract.functions.raster import luma
+
+    rng = np.random.default_rng(29)
+    pal = rng.integers(0, 256, (256, 3), dtype=np.uint8)  # R, G, B
+    idx = rng.permutation(256).astype(np.uint8).reshape(8, 32)
+    body = idx[::-1].tobytes()  # bottom-up rows, 32 bytes: no padding
+    pal_b = b"".join(bytes([b, g, r, 0]) for r, g, b in pal)
+    info = struct.pack("<IiiHHIIiiII", 40, 32, 8, 1, 8, 0, len(body),
+                       2835, 2835, 256, 0)
+    off = 14 + 40 + len(pal_b)
+    hdr = b"BM" + struct.pack("<IHHI", off + len(body), 0, 0, off)
+    got = decode_gray_bmp(hdr + info + pal_b + body)
+    assert (got == luma(pal[idx])).all()
+    gray = list(range(256))
+    img = decode_gray_bmp(_mkbmp(256, 1, 8, 0, gray, bytes(gray)))
+    assert img.tolist() == [gray]
+
+
 def test_bmp_rle4_runs_absolute():
     # bottom row: run of 5 alternating nibbles (0xA,0x3) + absolute [1,2,3]
     # (word-padded); top row: run of 8 alternating (0xF,0x0)

@@ -143,6 +143,13 @@ def test_xml_renderers_parse_control_characters(spark):
             if e.tag.endswith("Unicode")] == ["AB\tC", "DE", "DE"]
     hocr = render_hocr_words(blocks, words).collect()[0]["hocr"]
     assert "<img src='m&#10;1'/>" in hocr
+    _, root = parse(hocr)
+    assert [e.text for e in root.iter() if e.get("class") in
+            ("ocr_carea", "ocrx_word")] == ["AB\tC", None, None, "DE"]
+    _, root = parse(render_hocr(spans).collect()[0]["hocr"])
+    careas = [e for e in root.iter() if e.get("class") == "ocr_carea"]
+    assert careas[0].text == "AB\tC"
+    assert careas[1].find("img").get("src") == "m\n1"
 
 
 def test_render_hocr_escapes(spark):
