@@ -1515,8 +1515,8 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself."""
     import pandas as pd
 
-    from sparkstract.sources.warc import (WARC_SCHEMA, encode_warc,
-                                          warc_kernel)
+    from sparkstract.fixtures.encoders.warc import encode_warc
+    from sparkstract.sources.warc import WARC_SCHEMA, warc_kernel
 
     data = encode_warc(_WARC_RECS, gzip_members=True)
     frame = spark.createDataFrame(

@@ -18,6 +18,7 @@ import numpy as np
 import pandas as pd
 
 from ..functions.png import encode_gray
+from ..sources.docs import DOCS_SCHEMA, MEDIA_SCHEMA
 from .render import (
     DiscImage,
     ImageRect,
@@ -37,11 +38,6 @@ from .render import (
 # the wordlist its language pack shipped
 from .lexicon import WORDS as _VOCAB  # noqa: E402
 
-DOCS_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
-MEDIA_SCHEMA = "media_ref string, width int, height int, image binary"
 TRUTH_SCHEMA = "doc_id string, order int, kind string, text string, media_ref string"
 
 
@@ -542,12 +538,12 @@ class _Builder:
         # tiff_multipage packs TWO pages into one media ref — truth blocks
         # run page 1 then page 2 (ProcessPagesMultipageTiff baseapi.cpp:1657).
         if family == "tiff_page":
-            from ..functions.tiff import encode_gray_tiff
+            from .encoders.tiff import encode_gray_tiff
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_tiff(img, "lzw")
         elif family == "tiff_multipage":
-            from ..functions.tiff import encode_gray_tiff
+            from .encoders.tiff import encode_gray_tiff
 
             img, b1 = render_page(page_spec("single_column", self.rng))
             img2, b2 = render_page(page_spec("interleaved_order", self.rng))
@@ -559,7 +555,7 @@ class _Builder:
             # decoder must un-rotate before analysis (Leptonica applies
             # the tag on read; SetImage baseapi.cpp:881). Truth blocks are
             # the UPRIGHT page's — identical to an untagged upright scan.
-            from ..functions.tiff import encode_gray_tiff
+            from .encoders.tiff import encode_gray_tiff
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_tiff(
@@ -567,7 +563,7 @@ class _Builder:
         elif family == "exif_jpeg_page":
             # same contract through the JPEG APP1 Exif path (phone-camera
             # scans arrive rotated-with-tag)
-            from ..functions.jpeg import encode_gray_jpeg
+            from .encoders.jpeg import encode_gray_jpeg
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_jpeg(
@@ -578,7 +574,7 @@ class _Builder:
             # stream (functions/pdf.py) — no OCR, so the vocabulary is NOT
             # limited to the raster fixture font (mixed case proves it);
             # an embedded image XObject interleaves as flowing_image
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -600,7 +596,7 @@ class _Builder:
             # the 1.5+ file layout every current producer writes: objects
             # packed in an /ObjStm, cross-reference STREAM with the PNG
             # up-predictor — same content contract as pdf_page
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -614,7 +610,7 @@ class _Builder:
             # composite-font PDF: Type0 Identity-H with /ToUnicode — how
             # every real-world PDF with an embedded subset font encodes
             # text; same content contract as pdf_page
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -629,7 +625,7 @@ class _Builder:
             # reference's own pdfrenderer.cpp WRITES (text layer over the
             # page image). The text layer is the content; the near-full-
             # page backdrop is suppressed, so truth is text-only.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -647,7 +643,7 @@ class _Builder:
             # columns into single lines; the gutter-split + x-overlap
             # chaining + XY-cut ordering must yield header, left column,
             # right column (the W2 reading-order contract on the PDF path)
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -669,7 +665,7 @@ class _Builder:
             # parse), page 2 is a wrapped scan (image-only → falls through
             # to the raster OCR kernel) — the per-page "OCR only what has
             # no text layer" rule, block order continuing across pages
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -689,7 +685,7 @@ class _Builder:
             # the READER must normalize before analysis (walk/_read_page
             # compose the display rotation; ISO 32000 §14.11.2 table 378).
             # Truth is the upright page's blocks.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             stored = np.ascontiguousarray(np.rot90(img, 1))
@@ -702,7 +698,7 @@ class _Builder:
             # emit): same content contract as pdf_page, but every stream
             # is encrypted with its per-object key and the reader must
             # derive + authenticate the file key (functions/pdfcrypt.py)
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -719,7 +715,7 @@ class _Builder:
             # algorithm-2.B KDF), both with the EMPTY user password; the
             # reader must authenticate /U, unwrap the file key, and CBC-
             # decrypt every IV-prefixed stream (functions/pdfcrypt.py)
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -735,7 +731,7 @@ class _Builder:
             # the small-decoration shape real documents carry inside the
             # content stream itself, not as an XObject — same interleave
             # contract as pdf_page
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
             from .render import TruthBlock
 
             cap = lambda s: " ".join(w.capitalize() for w in s.split())  # noqa: E731
@@ -760,17 +756,17 @@ class _Builder:
             # bilevel (fax files ARE bilevel); the fixture page is pure
             # two-level ink, so the decoded raster binarizes to the same
             # blobs and truth is the plain page's.
-            from ..functions.tiff import encode_gray_tiff
+            from .encoders.tiff import encode_gray_tiff
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_tiff(img, "g4")
         elif family == "pnm_page":
-            from ..functions.raster import encode_gray_pnm
+            from .encoders.raster import encode_gray_pnm
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_pnm(img, binary=True)
         elif family == "bmp_page":
-            from ..functions.raster import encode_gray_bmp
+            from .encoders.raster import encode_gray_bmp
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_bmp(img)
@@ -783,7 +779,7 @@ class _Builder:
             # wrap below 77 and silently brighten ink) — so the decoded
             # gray equals the contrast-compressed rendering and truth is
             # the plain page's (exactness pinned by test_fixtures).
-            from ..functions.png import encode_rgb
+            from .encoders.png import encode_rgb
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             y = 77 + img.astype(np.int32) * 149 // 255
@@ -795,7 +791,7 @@ class _Builder:
             # glyphs Otsu-separable like jpeg_page; truth is the plain
             # page's (the coefficient pipeline is identical to baseline,
             # pinned bit-equal by test_jpeg.py).
-            from ..functions.jpeg import encode_progressive_jpeg
+            from .encoders.jpeg import encode_progressive_jpeg
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_progressive_jpeg(img, quality=95)
@@ -804,7 +800,7 @@ class _Builder:
             # GIF too (SetImage baseapi.cpp:881). The identity (v,v,v)
             # palette makes luma collapse exact, so truth is the plain
             # page's.
-            from ..functions.gif import encode_gif
+            from .encoders.gif import encode_gif
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gif(img, interlace=True)
@@ -812,7 +808,7 @@ class _Builder:
             # LOSSY container: q=95 keeps glyph bitmaps Otsu-separable (the
             # codec roundtrip test pins bilevel fidelity), so the decode
             # truth is unchanged from the PNG rendering of the same page
-            from ..functions.jpeg import encode_gray_jpeg
+            from .encoders.jpeg import encode_gray_jpeg
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_jpeg(img, quality=95)
@@ -821,7 +817,7 @@ class _Builder:
             # archival systems store large scans. G4-compressed 64x64
             # tiles, each an independent coding block; truth is the plain
             # page's (bit-exact on two-level ink).
-            from ..functions.tiff import encode_gray_tiff
+            from .encoders.tiff import encode_gray_tiff
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_tiff(img, "g4", tile=(64, 64))
@@ -831,7 +827,7 @@ class _Builder:
             # so it falls through to the raster OCR kernel; the G4
             # roundtrip is bit-exact on two-level ink, truth is the plain
             # page's.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_simple_pdf(
@@ -843,7 +839,7 @@ class _Builder:
             # (c=m=y=0), values stored inverted per the Adobe convention;
             # q=95 keeps glyphs Otsu-separable like jpeg_page, so truth is
             # the plain page's.
-            from ..functions.jpeg import encode_cmyk_jpeg
+            from .encoders.jpeg import encode_cmyk_jpeg
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             cmyk = np.zeros(img.shape + (4,), dtype=np.uint8)
@@ -860,7 +856,7 @@ class _Builder:
             # (Leptonica sniffs WEBP through the same pixReadMem dispatch,
             # SetImage baseapi.cpp:881). Lossless roundtrip, so truth is
             # the plain page's.
-            from ..functions.webp import encode_gray_webp
+            from .encoders.webp import encode_gray_webp
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_webp(img)
@@ -870,7 +866,7 @@ class _Builder:
             # regions with the page-info segment in a /JBIG2Globals
             # stream. Bit-exact on two-level ink, truth is the plain
             # page's.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_simple_pdf(
@@ -880,7 +876,7 @@ class _Builder:
             # /JBIG2Decode with MQ-coded generic regions + TPGDON — the
             # coding family real scanner stacks default to over MMR.
             # Bit-exact on two-level ink, truth is the plain page's.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_simple_pdf(
@@ -892,7 +888,7 @@ class _Builder:
             # shape: deduplicated glyph symbols placed by instance. The
             # dictionary rides /JBIG2Globals. Bit-exact, truth is the
             # plain page's.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_simple_pdf(
@@ -905,7 +901,7 @@ class _Builder:
             # MMR collective bitmaps — the pre-MQ encoder generation
             # still present in archival corpora. Bit-exact, truth is the
             # plain page's.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_simple_pdf(
@@ -917,7 +913,7 @@ class _Builder:
             # text-stamp/logo/bilevel-scan shape. Sample 0 paints, so
             # roundtrip is bit-exact on two-level ink; truth is the
             # plain page's.
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_simple_pdf(
@@ -929,8 +925,8 @@ class _Builder:
             # bitplane halftone region — how archival scanners encode the
             # PHOTOS on a bilevel page. The decoded dot lattice must read
             # as ONE image block (F7 texture mask), no ghost text.
-            from ..functions.jbig2 import encode_jbig2_halftone
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.jbig2 import encode_jbig2_halftone
+            from .encoders.pdf import encode_simple_pdf
             from .render import FLOWING_IMAGE, TruthBlock
 
             yy, xx = np.mgrid[0:220, 0:300]
@@ -953,7 +949,7 @@ class _Builder:
             # the page as the LARGEST entry — a 32-bit BGRA DIB with
             # doubled biHeight + empty AND mask — behind a smaller decoy
             # entry, so largest-entry selection is exercised.
-            from ..functions.raster import encode_gray_ico
+            from .encoders.raster import encode_gray_ico
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_ico(img, entry="dib32", decoys=1)
@@ -963,7 +959,7 @@ class _Builder:
             # strips sharing one tag-347 JPEGTables stream. q=95 keeps
             # glyphs Otsu-separable (same tolerance class as jpeg_page),
             # so truth is the plain page's.
-            from ..functions.tiff import encode_gray_tiff
+            from .encoders.tiff import encode_gray_tiff
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_gray_tiff(
@@ -974,7 +970,7 @@ class _Builder:
             # archival/born-digital shape: a JPEG 2000 JP2 container with
             # the reversible 5/3 path. Lossless, so truth is the plain
             # page's (functions/jp2.py decodes it from scratch).
-            from ..functions.pdf import encode_simple_pdf
+            from .encoders.pdf import encode_simple_pdf
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_simple_pdf(
@@ -984,7 +980,7 @@ class _Builder:
             # standalone .jp2 raster — Leptonica ingests it through the
             # same pixReadMem sniff when built with OpenJPEG
             # (SetImage baseapi.cpp:881). Lossless 5/3 roundtrip.
-            from ..functions.jp2 import encode_jp2
+            from .encoders.jp2 import encode_jp2
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_jp2(img, levels=3, reversible=True)
@@ -994,7 +990,7 @@ class _Builder:
             # user-defined precincts, raw SPP/MRP segments, per-pass
             # context reset, vertically-causal contexts, two quality
             # layers. Lossless, so truth is the plain page's.
-            from ..functions.jp2 import encode_jp2
+            from .encoders.jp2 import encode_jp2
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_jp2(img, levels=3, reversible=True,
@@ -1006,7 +1002,7 @@ class _Builder:
             # keeps glyphs Otsu-separable like jpeg_page's q=95, so truth
             # is the plain page's; B_PRED/skip/loop-filter paths are all
             # exercised at these settings.
-            from ..functions.vp8 import encode_webp_vp8
+            from .encoders.vp8 import encode_webp_vp8
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             payload = encode_webp_vp8(img, qi=8, filter_level=8)
@@ -1014,7 +1010,7 @@ class _Builder:
             # extended (VP8X) WEBP: lossy VP8 frame + raw ALPH alpha that
             # blanks a border strip (composited onto white) + a skipped
             # EXIF chunk — the feature-flag container layout.
-            from ..functions.vp8 import encode_webp_vp8x
+            from .encoders.vp8 import encode_webp_vp8x
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             alpha = np.full(img.shape, 255, np.uint8)
@@ -1029,7 +1025,7 @@ class _Builder:
             # vignette keeps every glyph at full opacity so truth is the
             # plain page's; the margin fade exercises the filter + the
             # white composite.
-            from ..functions.vp8 import encode_webp_vp8x
+            from .encoders.vp8 import encode_webp_vp8x
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             alpha = np.full(img.shape, 255, np.uint8)
@@ -1044,7 +1040,7 @@ class _Builder:
             # media. Frame 1 carries the page (the still the decoder
             # extracts, like Leptonica's frame-1 read); frame 2 is a
             # decoy block that must NOT leak into the page.
-            from ..functions.vp8 import encode_webp_anim
+            from .encoders.vp8 import encode_webp_anim
 
             img, blocks = render_page(page_spec("single_column", self.rng))
             decoy = np.zeros((16, 16), np.uint8)

@@ -29,6 +29,32 @@ from .font import (ARABIC_NORM, CELL_H, CELL_W, GLYPH_H, GLYPH_W, GLYPHS,
 WHITE = np.uint8(255)
 INK = np.uint8(0)
 
+
+def rotate_nn(img: np.ndarray, deg: float, fill) -> np.ndarray:
+    """Rotate `img` by `deg` (counterclockwise, about the center) with
+    nearest-neighbor sampling; output expands to contain the rotated frame,
+    background = `fill`."""
+    if abs(deg) < 1e-9:
+        return img
+    h, w = img.shape[:2]
+    rad = np.deg2rad(deg)
+    c, s = np.cos(rad), np.sin(rad)
+    out_w = int(np.ceil(abs(w * c) + abs(h * s)))
+    out_h = int(np.ceil(abs(w * s) + abs(h * c)))
+    cy_in, cx_in = (h - 1) / 2.0, (w - 1) / 2.0
+    cy_out, cx_out = (out_h - 1) / 2.0, (out_w - 1) / 2.0
+    yy, xx = np.meshgrid(np.arange(out_h), np.arange(out_w), indexing="ij")
+    # inverse map: output pixel -> source pixel (rotate by -deg)
+    dx = xx - cx_out
+    dy = yy - cy_out
+    sx = np.rint(c * dx - s * dy + cx_in).astype(np.int64)
+    sy = np.rint(s * dx + c * dy + cy_in).astype(np.int64)
+    ok = (sx >= 0) & (sx < w) & (sy >= 0) & (sy < h)
+    out = np.full((out_h, out_w) + img.shape[2:], fill, dtype=img.dtype)
+    out[ok] = img[sy[ok], sx[ok]]
+    return out
+
+
 # kind vocabulary (PolyBlockType-derived, publictypes.h:53-70)
 FLOWING_TEXT = "flowing_text"
 HEADING_TEXT = "heading_text"
@@ -576,8 +602,6 @@ def render_page(spec: PageSpec) -> tuple[np.ndarray, list[TruthBlock]]:
                     * np.arange(page_w) / page_w)
         canvas = shift_columns(canvas, np.rint(spec.wave_px * ph), WHITE)
     if spec.skew_deg:
-        from ..functions.geometry import rotate_nn
-
         canvas = rotate_nn(canvas, spec.skew_deg, WHITE)
     if spec.rot90 % 4:
         canvas = np.rot90(canvas, spec.rot90 % 4).copy()

@@ -1,4 +1,4 @@
-"""Geometry kernels: nearest-neighbor rotation + projection-profile skew
+"""Geometry kernels: integer column shears + projection-profile skew
 estimation (C6 in SURVEY.md §2.8).
 
 The reference estimates page skew twice — from row LMS fits
@@ -30,31 +30,6 @@ def fast_median(a) -> float:
         return float(np.partition(a, m)[m])
     p = np.partition(a, [m - 1, m])
     return (float(p[m - 1]) + float(p[m])) / 2.0
-
-
-def rotate_nn(img: np.ndarray, deg: float, fill) -> np.ndarray:
-    """Rotate `img` by `deg` (counterclockwise, about the center) with
-    nearest-neighbor sampling; output expands to contain the rotated frame,
-    background = `fill`."""
-    if abs(deg) < 1e-9:
-        return img
-    h, w = img.shape[:2]
-    rad = np.deg2rad(deg)
-    c, s = np.cos(rad), np.sin(rad)
-    out_w = int(np.ceil(abs(w * c) + abs(h * s)))
-    out_h = int(np.ceil(abs(w * s) + abs(h * c)))
-    cy_in, cx_in = (h - 1) / 2.0, (w - 1) / 2.0
-    cy_out, cx_out = (out_h - 1) / 2.0, (out_w - 1) / 2.0
-    yy, xx = np.meshgrid(np.arange(out_h), np.arange(out_w), indexing="ij")
-    # inverse map: output pixel -> source pixel (rotate by -deg)
-    dx = xx - cx_out
-    dy = yy - cy_out
-    sx = np.rint(c * dx - s * dy + cx_in).astype(np.int64)
-    sy = np.rint(s * dx + c * dy + cy_in).astype(np.int64)
-    ok = (sx >= 0) & (sx < w) & (sy >= 0) & (sy < h)
-    out = np.full((out_h, out_w) + img.shape[2:], fill, dtype=img.dtype)
-    out[ok] = img[sy[ok], sx[ok]]
-    return out
 
 
 def shear_y(img: np.ndarray, slope: float, fill) -> np.ndarray:
@@ -113,45 +88,6 @@ def profile_sharpness(y: np.ndarray, bin_px: float) -> float:
     corrections (quadratic vs piecewise) on the same centroids before
     paying an image-space shift + relabel for either."""
     return float(_sharpness(y[None, :], max(2.0, float(bin_px)))[0])
-
-
-def _profile_scores(cx: np.ndarray, cy: np.ndarray, bin_px: float,
-                    angles: np.ndarray) -> np.ndarray:
-    yp_all = cy[None, :] - np.outer(np.tan(np.deg2rad(angles)), cx)
-    return _sharpness(yp_all, bin_px)
-
-
-def _plateau_center(angles: np.ndarray, scores: np.ndarray) -> float:
-    # The criterion plateaus while the residual drift stays inside one bin:
-    # return the CENTER of the contiguous near-max plateau around the argmax,
-    # not its first edge.
-    best = int(np.argmax(scores))
-    thresh = scores[best] * 0.995
-    lo = best
-    while lo > 0 and scores[lo - 1] >= thresh:
-        lo -= 1
-    hi = best
-    while hi < angles.shape[0] - 1 and scores[hi + 1] >= thresh:
-        hi += 1
-    return float(angles[(lo + hi) // 2])
-
-
-def estimate_skew(cx: np.ndarray, cy: np.ndarray, bin_px: float,
-                  max_deg: float = 3.0, step_deg: float = 0.05) -> float:
-    """Page skew angle in degrees from blob centroids: the angle whose
-    deprojection y' = y - x*tan(a) gives the sharpest row histogram
-    (sum of squared bin counts — Postl's projection-profile criterion).
-    Coarse-to-fine: 0.5° sweep to localize the peak (its plateau is wider
-    than 1° at text-row bin sizes), then `step_deg` refinement around it."""
-    if cx.shape[0] < 3:
-        return 0.0
-    bin_px = max(2.0, float(bin_px))
-    coarse = np.arange(-max_deg, max_deg + 0.25, 0.5)
-    c_best = float(coarse[int(np.argmax(_profile_scores(cx, cy, bin_px, coarse)))])
-    # fine window must contain the WHOLE plateau (coarse error 0.5° + plateau
-    # half-width ~0.7° at text bin sizes) or its center estimate is biased
-    fine = np.arange(c_best - 1.25, c_best + 1.25 + step_deg / 2, step_deg)
-    return _plateau_center(fine, _profile_scores(cx, cy, bin_px, fine))
 
 
 def estimate_skew_bow(cx: np.ndarray, cy: np.ndarray, bin_px: float,

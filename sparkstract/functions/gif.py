@@ -12,8 +12,7 @@ pixels per the 89a Graphic Control Extension leave the canvas unchanged),
 palette collapsed to BT.601 luma. GIF-LZW (functions/bits.py) is LSB-first
 with the width bump at table-full (2^w), unlike TIFF-LZW's early change.
 
-Encoder (fixture side): single- or multi-frame, optional interlace, one
-global palette — so tests carry genuine GIF bytes through the pipeline.
+Mirror encoder: sparkstract/fixtures/encoders/gif.py.
 """
 
 from __future__ import annotations
@@ -22,11 +21,8 @@ import struct
 
 import numpy as np
 
-from .bits import lzw_decode, lzw_encode
+from .bits import lzw_decode
 from .raster import luma
-
-
-# --------------------------------------------------------------- encoder
 
 
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
@@ -37,45 +33,6 @@ def _interlace_order(h: int) -> list[int]:
     for start, step in _INTERLACE_PASSES:
         order.extend(range(start, h, step))
     return order
-
-
-def encode_gif(frames: list[np.ndarray] | np.ndarray,
-               palette: np.ndarray | None = None,
-               interlace: bool = False) -> bytes:
-    """Index frame(s) (uint8 HxW) + palette (Nx3 uint8, default 256-gray)
-    -> GIF89a bytes. All frames share the global palette and cover the full
-    logical screen (fixture side; the decoder handles partial frames)."""
-    if isinstance(frames, np.ndarray):
-        frames = [frames]
-    assert frames, "at least one frame"
-    if palette is None:
-        palette = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-    npal = len(palette)
-    bits = max(1, int(npal - 1).bit_length())
-    h, w = frames[0].shape
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += palette.astype(np.uint8).tobytes()
-    out += b"\x00" * ((1 << bits) - npal) * 3
-    for img in frames:
-        if img.dtype != np.uint8 or img.shape != (h, w):
-            raise ValueError("encode_gif frames must be uint8 and same size")
-        if int(img.max(initial=0)) >= npal:
-            raise ValueError("index out of palette range")
-        out += struct.pack("<BHHHHB", 0x2C, 0, 0, w, h,
-                           0x40 if interlace else 0)
-        rows = img[_interlace_order(h)] if interlace else img
-        min_code = max(2, bits)
-        out.append(min_code)
-        enc = lzw_encode(rows.tobytes(), early=0, lsb=True,
-                         min_bits=min_code)
-        for k in range(0, len(enc), 255):
-            chunk = enc[k:k + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)  # block terminator
-    out.append(0x3B)  # trailer
-    return bytes(out)
 
 
 # --------------------------------------------------------------- decoder

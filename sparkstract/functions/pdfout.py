@@ -17,7 +17,7 @@ contract over the extraction kernel's word table:
 Byte-deterministic on purpose: the driver oracle pins the distributed
 assembly to a single-process run of the same code, and resumed jobs must
 re-emit identical files. Distinct from the fixture-side writer
-(functions/pdf.py encode_simple_pdf), which exists to feed the PARSER
+(fixtures/encoders/pdf.py encode_simple_pdf), which exists to feed the PARSER
 genuine bytes; this one is a product sink.
 """
 

@@ -9,7 +9,9 @@ The point is that the media column holds genuine encoded image bytes — the
 Spark-side plumbing (BinaryType column → numpy in an Arrow batch) is the real
 thing; only the codec is minimal.
 
-Encoder: filter 0 (None) rows, one zlib stream; grayscale-8 or RGB-8.
+Encoder: filter 0 (None) rows, one zlib stream; grayscale-8 (`encode_gray`,
+which thumbnails call at run time). The RGB-8 mirror encoder is
+sparkstract/fixtures/encoders/png.py.
 Decoder: all five standard PNG filters, color types 0/2/3/4/6 (gray, RGB,
 palette, gray+alpha, RGBA) at bit depth 8, 16-bit gray/RGB/RGBA (high
 byte taken — the pipeline is 8-bit grayscale), and sub-byte 1/2/4-bit
@@ -65,20 +67,6 @@ def encode_gray(img: np.ndarray, interlace: bool = False) -> bytes:
         raw[:, 0] = 0  # filter type None per scanline
         raw[:, 1:] = img
         idat = zlib.compress(raw.tobytes(), 6)
-    return _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
-
-
-def encode_rgb(img: np.ndarray) -> bytes:
-    """uint8 HxWx3 array -> truecolor-8 PNG bytes (fixture side, so tests
-    carry genuine color PNGs through the gray pipeline)."""
-    if img.dtype != np.uint8 or img.ndim != 3 or img.shape[2] != 3:
-        raise ValueError("encode_rgb expects an HxWx3 uint8 array")
-    h, w, _ = img.shape
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # bitdepth 8, RGB
-    raw = np.empty((h, 1 + 3 * w), dtype=np.uint8)
-    raw[:, 0] = 0
-    raw[:, 1:] = img.reshape(h, 3 * w)
-    idat = zlib.compress(raw.tobytes(), 6)
     return _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 

@@ -13,7 +13,7 @@ codec), so the pack is split by provenance, entry by entry:
 - ``[PACK]`` — large probability / quantizer tables whose exact spec
   values are NOT reproducible in-container.  They are synthesized by the
   documented deterministic rules below, used SYMMETRICALLY by the
-  fixture encoder (vp8.encode_gray_vp8) and the decoder, and isolated in
+  fixture encoder (fixtures/encoders/vp8.py) and the decoder, and isolated in
   this module so the real RFC 6386 pack is a drop-in replacement (same
   names, same shapes, same dtypes) before pointing the decoder at
   externally-encoded files.  In-repo streams decode bit-exactly either

@@ -15,7 +15,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..fixtures.gen import DOCS_SCHEMA, MEDIA_SCHEMA
+DOCS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
+MEDIA_SCHEMA = "media_ref string, width int, height int, image binary"
 
 ICEBERG_DDL = {
     "docs": """

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import ExtractConfig
-from ..fixtures.gen import DOCS_SCHEMA
+from ..sources.docs import DOCS_SCHEMA
 from ..plans.pipeline import extract
 
 

@@ -15,11 +15,13 @@ from aes_oracle import AES as OracleAES
 
 from sparkstract.functions import aes as aes_mod
 from sparkstract.functions.aes import AES
+from sparkstract.fixtures.encoders.pdfcrypt import (
+    make_encryption_aes128,
+    make_encryption_aes256,
+)
 from sparkstract.functions.pdfcrypt import (
     aes_decrypt_data,
     hash_2b,
-    make_encryption_aes128,
-    make_encryption_aes256,
     object_key,
     reader_key,
 )
@@ -268,7 +270,8 @@ def test_unknown_cfm_named_error():
 
 @pytest.mark.parametrize("mode", ["aes128", "aes256"])
 def test_encrypted_pdf_roundtrip(mode):
-    from sparkstract.functions.pdf import encode_simple_pdf, parse_pdf
+    from sparkstract.fixtures.encoders.pdf import encode_simple_pdf
+    from sparkstract.functions.pdf import parse_pdf
 
     lines = ["Aes Encrypted Page", "Second Line Here"]
     pdf = encode_simple_pdf(
@@ -282,7 +285,8 @@ def test_encrypted_pdf_roundtrip(mode):
 
 
 def test_aes_image_pdf_roundtrip():
-    from sparkstract.functions.pdf import encode_simple_pdf, parse_pdf
+    from sparkstract.fixtures.encoders.pdf import encode_simple_pdf
+    from sparkstract.functions.pdf import parse_pdf
 
     img = (np.outer(np.arange(40), np.arange(60)) % 251).astype(np.uint8)
     pdf = encode_simple_pdf([[("image", img, 0, 0)]],

@@ -8,9 +8,9 @@ so G4 media must flow through decode_pages like PNG/LZW-TIFF do.
 import numpy as np
 import pytest
 
+from sparkstract.fixtures.encoders.ccitt import g4_encode
 from sparkstract.functions.ccitt import (
-    _BLACK_TERM, _EXT_MAKEUP, _MAKEUP, _TERM, _WHITE_TERM,
-    g4_decode, g4_encode,
+    _BLACK_TERM, _EXT_MAKEUP, _MAKEUP, _TERM, _WHITE_TERM, g4_decode,
 )
 
 # (bit-length, code-value) -> run inversion, built HERE from the encode
@@ -22,7 +22,8 @@ for _color in (0, 1):
         _RUN_DEC[_color][(len(_code), int(_code, 2))] = _run
     for _run, _code in _MAKEUP[_color].items():
         _RUN_DEC[_color][(len(_code), int(_code, 2))] = _run
-from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
+from sparkstract.fixtures.encoders.tiff import encode_gray_tiff
+from sparkstract.functions.tiff import decode_gray_tiff
 
 
 def _bitstr(data: bytes) -> str:
@@ -218,7 +219,8 @@ def test_codec_dispatch_g4():
 
 
 def test_mh_roundtrip_fuzz():
-    from sparkstract.functions.ccitt import mh_decode, mh_encode
+    from sparkstract.fixtures.encoders.ccitt import mh_encode
+    from sparkstract.functions.ccitt import mh_decode
 
     rng = np.random.default_rng(21)
     for trial in range(80):
@@ -232,7 +234,7 @@ def test_mh_roundtrip_fuzz():
 def test_mh_rows_are_byte_aligned():
     """TIFF compression 2 requires every row to start on a byte boundary;
     a single-pixel row still occupies whole bytes."""
-    from sparkstract.functions.ccitt import mh_encode
+    from sparkstract.fixtures.encoders.ccitt import mh_encode
 
     bits = np.ones((5, 1), np.uint8)
     enc = mh_encode(bits)
@@ -241,7 +243,8 @@ def test_mh_rows_are_byte_aligned():
 
 
 def test_g3_roundtrip_and_eol_sync():
-    from sparkstract.functions.ccitt import g3_decode, g3_encode
+    from sparkstract.fixtures.encoders.ccitt import g3_encode
+    from sparkstract.functions.ccitt import g3_decode
 
     rng = np.random.default_rng(23)
     bits = (rng.random((12, 90)) < 0.2).astype(np.uint8)
@@ -257,8 +260,10 @@ def test_g3_two_d_rows_decode_against_previous():
     """Hand-built T.4-2D stream: EOL+tag1 1D row, then EOL+tag0 2D row
     coded as two V(+1) modes and a terminating V0."""
     from sparkstract.functions.bits import MsbWriter
-    from sparkstract.functions.ccitt import (
-        _EOL, _changes, _emit, _emit_run, g3_decode)
+    from sparkstract.fixtures.encoders.ccitt import (
+        _EOL, _changes, _emit, _emit_run,
+    )
+    from sparkstract.functions.ccitt import g3_decode
 
     bits = np.zeros((2, 40), np.uint8)
     bits[0, 10:20] = 1
@@ -296,7 +301,9 @@ def test_g3_2d_tiff_with_t4options():
     import struct
 
     from sparkstract.functions.bits import MsbWriter
-    from sparkstract.functions.ccitt import _EOL, _changes, _emit, _emit_run
+    from sparkstract.fixtures.encoders.ccitt import (
+        _EOL, _changes, _emit, _emit_run,
+    )
 
     bits = np.zeros((2, 24), np.uint8)
     bits[0, 4:9] = 1
@@ -366,7 +373,8 @@ def test_g3_missing_leading_eol_leniency():
     0 (ADVICE r3): a 1D stream whose first row starts immediately must
     decode, with EOL syncing resuming from row 1."""
     from sparkstract.functions.bits import MsbWriter
-    from sparkstract.functions.ccitt import _EOL, _TERM, g3_decode
+    from sparkstract.fixtures.encoders.ccitt import _EOL
+    from sparkstract.functions.ccitt import _TERM, g3_decode
 
     w = 8
     bw = MsbWriter()
@@ -379,7 +387,7 @@ def test_g3_missing_leading_eol_leniency():
     got = g3_decode(bw.bytes(), w, 2)
     assert (got == np.array([[0] * 8, [0, 0, 0, 0, 1, 1, 1, 1]])).all()
     # a spec-conforming stream (leading EOL) still decodes identically
-    from sparkstract.functions.ccitt import g3_encode
+    from sparkstract.fixtures.encoders.ccitt import g3_encode
 
     bits = (np.arange(24).reshape(3, 8) % 3 == 0).astype(np.uint8)
     assert (g3_decode(g3_encode(bits), 8, 3) == bits).all()

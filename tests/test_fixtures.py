@@ -73,7 +73,7 @@ def test_rgb_png_family_tint_luma_exact():
     gray = decode_gray(payload)
     # identical tint reconstruction: luma(y+29, y, y-77) == y exactly
     assert gray.min() >= 77 and gray.max() <= 226
-    from sparkstract.functions.png import encode_rgb  # noqa: F401
+    from sparkstract.fixtures.encoders.png import encode_rgb  # noqa: F401
     # decode path == direct luma of the stored RGB (consistency)
     assert (luma(np.stack([gray + 29, gray, gray - 77],
                           axis=2).astype(np.uint8)) == gray).all()

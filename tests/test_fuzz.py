@@ -5,8 +5,9 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from sparkstract.fixtures.render import rotate_nn
 from sparkstract.functions.cclabel import label_blobs
-from sparkstract.functions.geometry import rotate_nn, shear_y
+from sparkstract.functions.geometry import shear_y
 from sparkstract.functions.otsu import binarize
 from sparkstract.operators.bidi import textline_order, word_indices_only
 from sparkstract.operators.page import analyse_page
@@ -214,7 +215,8 @@ def test_gif_lzw_bomb_capped():
     import pytest
 
     from sparkstract.functions.bits import lzw_encode
-    from sparkstract.functions.gif import decode_gray_gif, encode_gif
+    from sparkstract.fixtures.encoders.gif import encode_gif
+    from sparkstract.functions.gif import decode_gray_gif
 
     img = np.zeros((4, 4), dtype=np.uint8)
     gif = bytearray(encode_gif(img))
@@ -238,7 +240,8 @@ def test_tiff_lzw_bomb_capped():
     import pytest
 
     from sparkstract.functions.bits import lzw_encode
-    from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
+    from sparkstract.fixtures.encoders.tiff import encode_gray_tiff
+    from sparkstract.functions.tiff import decode_gray_tiff
     import numpy as np
 
     img = np.zeros((4, 4), dtype=np.uint8)
@@ -273,7 +276,8 @@ def test_tiff_lzw_corrupt_first_code_is_value_error():
     import numpy as np
     import pytest
 
-    from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
+    from sparkstract.fixtures.encoders.tiff import encode_gray_tiff
+    from sparkstract.functions.tiff import decode_gray_tiff
 
     data = bytearray(encode_gray_tiff(np.zeros((4, 4), np.uint8), "lzw"))
     (ifd,) = struct.unpack_from("<I", data, 4)
@@ -354,7 +358,8 @@ def test_jp2_corruption_is_total():
     untrusted-crawl contract every codec in functions/ carries)."""
     import numpy as np
 
-    from sparkstract.functions.jp2 import decode_jp2, encode_j2k
+    from sparkstract.fixtures.encoders.jp2 import encode_j2k
+    from sparkstract.functions.jp2 import decode_jp2
 
     img = (np.arange(400, dtype=np.uint8).reshape(20, 20) * 3) % 256
     base = bytearray(encode_j2k(img.astype(np.uint8), levels=1))
@@ -377,7 +382,8 @@ def test_jp2_tile_part_length_underflow_rejected():
     loop backwards forever."""
     import numpy as np
 
-    from sparkstract.functions.jp2 import decode_jp2, encode_j2k
+    from sparkstract.fixtures.encoders.jp2 import encode_j2k
+    from sparkstract.functions.jp2 import decode_jp2
 
     cs = bytearray(encode_j2k(np.zeros((8, 8), np.uint8), levels=0))
     i = cs.index(b"\xff\x90")         # SOT
@@ -389,7 +395,8 @@ def test_jp2_tile_part_length_underflow_rejected():
 def test_jpeg_tiff_corruption_is_total():
     import numpy as np
 
-    from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
+    from sparkstract.fixtures.encoders.tiff import encode_gray_tiff
+    from sparkstract.functions.tiff import decode_gray_tiff
 
     img = (np.arange(600, dtype=np.uint8).reshape(20, 30) * 5) % 256
     base = bytearray(encode_gray_tiff(img.astype(np.uint8),
@@ -413,8 +420,10 @@ def test_jbig2_arith_corruption_is_total():
     never hang or out-allocate (the untrusted-crawl codec contract)."""
     import numpy as np
 
-    from sparkstract.functions.jbig2 import (decode_jbig2, encode_jbig2,
-                                             encode_jbig2_text)
+    from sparkstract.fixtures.encoders.jbig2 import (
+        encode_jbig2, encode_jbig2_text,
+    )
+    from sparkstract.functions.jbig2 import decode_jbig2
 
     rng = np.random.default_rng(23)
     ink = (rng.random((30, 44)) < 0.25).astype(np.uint8)
@@ -440,7 +449,8 @@ def test_jp2_bypass_corruption_is_total():
     length walk included."""
     import numpy as np
 
-    from sparkstract.functions.jp2 import decode_jp2, encode_j2k
+    from sparkstract.fixtures.encoders.jp2 import encode_j2k
+    from sparkstract.functions.jp2 import decode_jp2
 
     img = (np.arange(400, dtype=np.uint8).reshape(20, 20) * 7) % 256
     bases = [

@@ -4,7 +4,8 @@ import numpy as np
 import pytest
 
 from sparkstract.functions.bits import lzw_decode, lzw_encode
-from sparkstract.functions.gif import decode_gray_gif, encode_gif
+from sparkstract.fixtures.encoders.gif import encode_gif
+from sparkstract.functions.gif import decode_gray_gif
 
 
 def _luma_ref(rgb):

@@ -8,12 +8,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from sparkstract.functions.jbig2 import (
-    _segment_header,
-    decode_jbig2,
-    encode_jbig2,
-)
-from sparkstract.functions.pdf import encode_simple_pdf, parse_pdf
+from sparkstract.fixtures.encoders.jbig2 import _segment_header, encode_jbig2
+from sparkstract.functions.jbig2 import decode_jbig2
+from sparkstract.fixtures.encoders.pdf import encode_simple_pdf
+from sparkstract.functions.pdf import parse_pdf
 
 
 def _bits(seed: int = 2, shape=(137, 211)) -> np.ndarray:
@@ -53,7 +51,7 @@ def test_composition_operators():
 
     def region(bits, op):
         h, w = bits.shape
-        from sparkstract.functions.ccitt import g4_encode
+        from sparkstract.fixtures.encoders.ccitt import g4_encode
 
         body = (w.to_bytes(4, "big") + h.to_bytes(4, "big")
                 + (0).to_bytes(8, "big") + bytes([op, 0x01])
@@ -195,10 +193,10 @@ def test_arith_striped_regions():
 def test_arith_non_nominal_at_roundtrip(template, at):
     # moved AT pixels force the general per-pixel path; the encoder uses
     # the same slot layout, so a mismatch in either direction breaks this
-    from sparkstract.functions.jbig2 import (_CTX_BITS, _bank,
-                                             _decode_generic,
-                                             _encode_generic)
-    from sparkstract.functions.jp2 import MQDecoder, MQEncoder
+    from sparkstract.fixtures.encoders.jbig2 import _encode_generic
+    from sparkstract.functions.jbig2 import _CTX_BITS, _bank, _decode_generic
+    from sparkstract.fixtures.encoders.jp2 import MQEncoder
+    from sparkstract.functions.jp2 import MQDecoder
 
     bits = _bits(seed=13, shape=(40, 57))
     enc = MQEncoder()
@@ -223,8 +221,10 @@ def test_arith_at_must_be_causal():
 
 
 def test_arith_int_coder_roundtrip():
-    from sparkstract.functions.jbig2 import _bank, _int_decode, _int_encode
-    from sparkstract.functions.jp2 import MQDecoder, MQEncoder
+    from sparkstract.fixtures.encoders.jbig2 import _int_encode
+    from sparkstract.functions.jbig2 import _bank, _int_decode
+    from sparkstract.fixtures.encoders.jp2 import MQEncoder
+    from sparkstract.functions.jp2 import MQDecoder
 
     values = [0, 1, -1, 3, 4, 19, 20, 83, 84, 339, 340, 4435, 4436,
               100000, -4436, -340, -77, None, 2, None, -2]
@@ -254,7 +254,7 @@ def _glyph_page() -> np.ndarray:
 @pytest.mark.parametrize("refcorner", [0, 1, 2, 3])
 @pytest.mark.parametrize("transposed", [0, 1])
 def test_text_region_roundtrip_all_corners(refcorner, transposed):
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     page = _glyph_page()
     stream, glob = encode_jbig2_text(page, refcorner=refcorner,
@@ -264,7 +264,7 @@ def test_text_region_roundtrip_all_corners(refcorner, transposed):
 
 
 def test_text_region_random_ink_roundtrip():
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     bits = _bits(seed=31, shape=(70, 110))
     stream, glob = encode_jbig2_text(bits)
@@ -275,7 +275,7 @@ def test_text_region_random_ink_roundtrip():
 def test_symbol_dict_deduplicates_repeated_glyphs():
     # 5 instances of glyph a + 2 of glyph b -> exactly 2 symbols coded
     from sparkstract.functions.jbig2 import _parse_segment_header, _Cursor
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     stream, glob = encode_jbig2_text(_glyph_page())
     c = _Cursor(glob)
@@ -293,7 +293,7 @@ def test_symbol_dict_arith_body_with_huffman_flag_raises_cleanly():
     """Flipping SDHUFF on an ARITHMETIC-coded body yields garbage for the
     Huffman reader — it must fail with a ValueError (any parse/guard
     error), never hang or return a bitmap."""
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     stream, glob = encode_jbig2_text(_glyph_page())
     g = bytearray(glob)
@@ -306,7 +306,7 @@ def test_symbol_dict_refagg_flag_on_generic_body_fails_cleanly():
     """SDREFAGG flipped onto a generic-coded body desynchronizes the
     parse (the refinement AT eats into the counts) — clean failure or
     garbage, never a hang; Huffman+refagg stays a NAMED combination."""
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     stream, glob = encode_jbig2_text(_glyph_page())
     g = bytearray(glob)
@@ -322,7 +322,7 @@ def test_symbol_dict_refagg_flag_on_generic_body_fails_cleanly():
 
 
 def test_text_region_huffman_and_refine_named_errors():
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     stream, glob = encode_jbig2_text(_glyph_page())
     # text-region flags sit after its 12-byte header (incl. one referred
@@ -349,7 +349,7 @@ def test_text_region_huffman_and_refine_named_errors():
 
 
 def test_text_region_without_symbols_named_error():
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     stream, glob = encode_jbig2_text(_glyph_page())
     # drop the symbol dictionary from the globals: page info only
@@ -358,7 +358,7 @@ def test_text_region_without_symbols_named_error():
 
 
 def test_blank_page_falls_back_to_generic():
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     blank = np.zeros((20, 30), np.uint8)
     stream, glob = encode_jbig2_text(blank)
@@ -444,7 +444,7 @@ def test_table_b8_oob_and_negative():
 
 @pytest.mark.parametrize("collective", ["mmr", "raw"])
 def test_huffman_text_roundtrip(collective):
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     rng = np.random.default_rng(3)
     page = np.zeros((60, 90), np.uint8)
@@ -461,7 +461,7 @@ def test_huffman_text_roundtrip(collective):
 @pytest.mark.parametrize("refcorner", [0, 1, 2, 3])
 @pytest.mark.parametrize("transposed", [0, 1])
 def test_huffman_text_corners(refcorner, transposed):
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     rng = np.random.default_rng(9)
     page = np.zeros((40, 70), np.uint8)
@@ -478,7 +478,7 @@ def test_huffman_text_corners(refcorner, transposed):
 def test_huffman_custom_table_selector_named_error():
     """Selector 3 (custom table) in the symbol-dict DH field raises the
     named error instead of misdecoding."""
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     page = np.zeros((20, 30), np.uint8)
     page[5:10, 5:9] = 1
@@ -512,7 +512,7 @@ def test_pdf_jbig2_huff_family_roundtrip():
 def test_huffman_fuzz_never_hangs():
     """Random byte mutations of a Huffman-organization stream: clean
     decode or exception, never a hang — crawl media is untrusted."""
-    from sparkstract.functions.jbig2 import encode_jbig2_text
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_text
 
     rng = np.random.default_rng(23)
     page = np.zeros((30, 50), np.uint8)
@@ -537,7 +537,7 @@ def test_huffman_fuzz_never_hangs():
 def test_halftone_roundtrip_block_densities(pattern_coder):
     """The halftone mirror: decoded block ink density equals the encoder's
     quantized inverted gray level EXACTLY (pattern k has k ink cells)."""
-    from sparkstract.functions.jbig2 import encode_jbig2_halftone
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_halftone
 
     yy, xx = np.mgrid[0:64, 0:96]
     gray = (60 + 120 * xx / 95).astype(np.uint8)
@@ -554,7 +554,7 @@ def test_halftone_roundtrip_block_densities(pattern_coder):
 def test_halftone_gray_code_planes_are_real():
     """17 levels -> 5 gray-code bitplanes; a mid-gradient exercises plane
     transitions (values crossing power-of-two boundaries)."""
-    from sparkstract.functions.jbig2 import encode_jbig2_halftone
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_halftone
 
     gray = np.tile(np.linspace(0, 255, 96).astype(np.uint8), (16, 1))
     out = decode_jbig2(encode_jbig2_halftone(gray))
@@ -565,7 +565,7 @@ def test_halftone_gray_code_planes_are_real():
 
 
 def test_halftone_named_errors():
-    from sparkstract.functions.jbig2 import encode_jbig2_halftone
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_halftone
 
     gray = np.full((16, 16), 128, np.uint8)
     data = bytearray(encode_jbig2_halftone(gray))
@@ -598,7 +598,7 @@ def test_pdf_jbig2_halftone_family_is_one_image_block():
 def test_halftone_family_density_window_always_one_image():
     """The fixture family's whole lo window classifies as exactly one
     image block (no ghost text at any density it can draw)."""
-    from sparkstract.functions.jbig2 import encode_jbig2_halftone
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_halftone
     from sparkstract.operators.page import analyse_page
 
     yy, xx = np.mgrid[0:220, 0:300]
@@ -620,7 +620,7 @@ def test_halftone_family_density_window_always_one_image():
 def test_refinement_roundtrip_exact(template):
     """Lossy generic pass + immediate refinement region (REPLACE) — the
     progressive-transmission shape — reconstructs the page exactly."""
-    from sparkstract.functions.jbig2 import encode_jbig2_refined
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_refined
 
     rng = np.random.default_rng(3)
     bits = (rng.random((57, 83)) < 0.25).astype(np.uint8)
@@ -632,7 +632,7 @@ def test_refinement_reference_matters():
     """The refinement stream decodes against the page's CURRENT content —
     zeroing the first-pass region breaks reconstruction (proves the
     reference plumbing is real, not a fresh decode)."""
-    from sparkstract.functions.jbig2 import encode_jbig2_refined
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_refined
 
     rng = np.random.default_rng(5)
     bits = (rng.random((40, 60)) < 0.3).astype(np.uint8)
@@ -648,7 +648,7 @@ def test_refinement_reference_matters():
 
 
 def test_refinement_named_errors():
-    from sparkstract.functions.jbig2 import encode_jbig2_refined
+    from sparkstract.fixtures.encoders.jbig2 import encode_jbig2_refined
 
     bits = np.zeros((16, 16), np.uint8)
     bits[4:9, 4:9] = 1
@@ -674,11 +674,13 @@ def test_refined_text_region_instances():
     """SBREFINE (§6.4.11): IARI-selected instances decode a refinement of
     the dictionary symbol — pixel flips AND a grown bitmap (RDW/RDH > 0,
     centered reference) — while unrefined instances pass through."""
-    from sparkstract.functions.jbig2 import (_encode_symbol_dict,
-                                             _encode_text_region,
-                                             _page_info_segment,
-                                             _segment_header,
-                                             _T_END_OF_PAGE)
+    from sparkstract.fixtures.encoders.jbig2 import (
+        _encode_symbol_dict,
+        _encode_text_region,
+        _page_info_segment,
+        _segment_header,
+    )
+    from sparkstract.functions.jbig2 import _T_END_OF_PAGE
 
     rng = np.random.default_rng(3)
     s0 = (rng.random((7, 5)) < 0.4).astype(np.uint8)
@@ -712,11 +714,13 @@ def test_aggregate_symbol_dict_single_instance_refinement():
     """SDREFAGG=1 (§6.5.8.2.2): new symbols decode as single-instance
     refinements of symbols from the REFERRED dictionary — the
     near-duplicate-glyph shape real encoders emit."""
-    from sparkstract.functions.jbig2 import (_encode_symbol_dict,
-                                             _encode_symbol_dict_refagg,
-                                             _encode_text_region,
-                                             _page_info_segment,
-                                             _T_END_OF_PAGE)
+    from sparkstract.fixtures.encoders.jbig2 import (
+        _encode_symbol_dict,
+        _encode_symbol_dict_refagg,
+        _encode_text_region,
+        _page_info_segment,
+    )
+    from sparkstract.functions.jbig2 import _T_END_OF_PAGE
 
     rng = np.random.default_rng(3)
     s0 = (rng.random((7, 5)) < 0.4).astype(np.uint8)

@@ -2,8 +2,8 @@
 
 No independent JPEG 2000 implementation exists in this container, so the
 strategy mirrors test_webp.py: (a) heavy randomized roundtrips through
-the module's own spec-shaped encoder (MQ, tag trees, Tier-1, DWT, full
-codestream), (b) hand-walked bit-level vectors pinning the decode side
+the mirror encoder in fixtures/encoders/jp2.py (MQ, tag trees, Tier-1,
+DWT, full codestream), (b) hand-walked bit-level vectors pinning the decode side
 against the spec's algorithms independently of the encoder, (c) named
 out-of-scope errors and decode-bomb guards, (d) the PDF /JPXDecode and
 raster-sniff integration seams.
@@ -18,10 +18,12 @@ import numpy as np
 import pytest
 
 import sparkstract.functions.jp2 as jp2
+from sparkstract.fixtures.encoders.jp2 import (
+    _JP2_SIG, MQEncoder, _HdrWriter, encode_j2k, encode_jp2, fwd53_1d,
+    fwd97_1d, t1_encode,
+)
 from sparkstract.functions.jp2 import (
-    MQDecoder, MQEncoder, TagTree, _HdrReader, _HdrWriter,
-    decode_jp2, encode_j2k, encode_jp2, fwd53_1d, fwd97_1d,
-    inv53_1d, inv97_1d, t1_decode, t1_encode,
+    MQDecoder, TagTree, _HdrReader, decode_jp2, inv53_1d, inv97_1d, t1_decode,
 )
 
 
@@ -370,7 +372,7 @@ def test_rgb_ict_lossy_close():
 def test_jp2_container_roundtrip():
     img = _page_img()
     data = encode_jp2(img, levels=3)
-    assert data[:12] == jp2._JP2_SIG
+    assert data[:12] == _JP2_SIG
     assert np.array_equal(decode_jp2(data), img)
 
 
@@ -462,7 +464,8 @@ def test_bypass_with_quality_layers(layers):
 def test_bypass_raw_bitstuffing_roundtrip():
     # data crafted to drive raw segments through the FF-stuffing path:
     # all-ones magnitudes make raw refinement bits mostly 1s
-    from sparkstract.functions.jp2 import t1_decode, t1_encode
+    from sparkstract.fixtures.encoders.jp2 import t1_encode
+    from sparkstract.functions.jp2 import t1_decode
 
     coeffs = np.full((24, 24), 0x7FF, np.int32)
     coeffs[::3, ::2] = -0x7FF
@@ -525,7 +528,8 @@ def test_truncated_packet_body():
 # ---------------------------------------------------------------------------
 
 def test_pdf_jpx_image_roundtrip_exact():
-    from sparkstract.functions.pdf import encode_simple_pdf, parse_pdf
+    from sparkstract.fixtures.encoders.pdf import encode_simple_pdf
+    from sparkstract.functions.pdf import parse_pdf
 
     img = _page_img(shape=(40, 64))
     data = encode_simple_pdf([[("jpx_image", img, 0, 0)]],
@@ -552,7 +556,7 @@ def test_fixture_families_registered():
     assert "jp2_page" in gen.PAGE_FAMILIES
     b = gen._Builder(123)
     ref, blocks = b.add_page("jp2_page")
-    assert b.media[-1]["image"][:12] == jp2._JP2_SIG
+    assert b.media[-1]["image"][:12] == _JP2_SIG
     ref, blocks = b.add_page("pdf_jpx_page")
     assert b.media[-1]["image"][:5] == b"%PDF-"
     assert b"/JPXDecode" in bytes(b.media[-1]["image"])

@@ -10,16 +10,18 @@ import numpy as np
 import pytest
 
 from sparkstract.functions.codecs import decode_pages
-from sparkstract.functions.jpeg import (
+from sparkstract.fixtures.encoders.jpeg import (
     _AC_BITS,
     _AC_VALS,
     _DC_BITS,
     _DC_VALS,
+    encode_gray_jpeg,
+)
+from sparkstract.functions.jpeg import (
     _BitReader,
     _decode_table,
     _huff,
     decode_gray_jpeg,
-    encode_gray_jpeg,
 )
 
 
@@ -172,7 +174,7 @@ def test_exif_malformed_blob_is_ignored():
 def test_progressive_matches_baseline():
     """Same image, same quality: progressive and baseline streams carry
     identical quantized coefficients, so the decodes must be bit-equal."""
-    from sparkstract.functions.jpeg import encode_progressive_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_progressive_jpeg
 
     rng = np.random.default_rng(41)
     img = (rng.random((75, 93)) * 255).astype(np.uint8)
@@ -182,7 +184,7 @@ def test_progressive_matches_baseline():
 
 
 def test_progressive_page_like_text():
-    from sparkstract.functions.jpeg import encode_progressive_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_progressive_jpeg
 
     img = np.full((64, 160), 235, dtype=np.uint8)
     img[20:28, 16:120] = 15  # a fat dark bar, glyph-ish contrast
@@ -192,7 +194,7 @@ def test_progressive_page_like_text():
 
 
 def test_progressive_color_skips_chroma_scans():
-    from sparkstract.functions.jpeg import encode_progressive_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_progressive_jpeg
 
     rng = np.random.default_rng(42)
     img = (rng.random((40, 56)) * 255).astype(np.uint8)
@@ -205,7 +207,7 @@ def test_progressive_color_skips_chroma_scans():
 def test_progressive_spectral_only_script():
     """Spectral selection without successive approximation (Al=0
     everywhere) — a common libjpeg -scans shape."""
-    from sparkstract.functions.jpeg import encode_progressive_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_progressive_jpeg
 
     rng = np.random.default_rng(43)
     img = (rng.random((33, 41)) * 255).astype(np.uint8)
@@ -219,8 +221,8 @@ def test_progressive_spectral_only_script():
 def test_eobrun_multi_block_decode():
     """EOBn with n>0 (run spanning blocks) — not emitted by our per-block
     encoder, so pin the decoder path with a handcrafted table + stream."""
-    from sparkstract.functions.jpeg import (_ac_first, _BitReader,
-                                            _BitWriter, _decode_table)
+    from sparkstract.fixtures.encoders.jpeg import _BitWriter
+    from sparkstract.functions.jpeg import _ac_first, _BitReader, _decode_table
 
     # custom AC table: 0x10 (EOB1) -> '0', 0x01 (run0,size1) -> '10'
     bits = [1, 1] + [0] * 14
@@ -244,7 +246,7 @@ def test_eobrun_multi_block_decode():
 
 
 def test_progressive_fuzz_never_hangs():
-    from sparkstract.functions.jpeg import encode_progressive_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_progressive_jpeg
 
     rng = np.random.default_rng(44)
     img = (np.outer(np.arange(24), np.arange(24)) % 211).astype(np.uint8)
@@ -261,7 +263,7 @@ def test_progressive_fuzz_never_hangs():
 
 def test_codec_dispatch_progressive():
     from sparkstract.functions.codecs import decode_pages
-    from sparkstract.functions.jpeg import encode_progressive_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_progressive_jpeg
 
     img = np.full((16, 16), 99, dtype=np.uint8)
     (got,) = decode_pages(encode_progressive_jpeg(img, quality=95))
@@ -284,7 +286,7 @@ def _luma(rgb):
 
 
 def test_cmyk_and_ycck_decode_to_luma():
-    from sparkstract.functions.jpeg import encode_cmyk_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_cmyk_jpeg
 
     rgb = np.zeros((40, 56, 3))
     rgb[:, :, 0] = np.linspace(20, 220, 56)[None, :]
@@ -302,7 +304,7 @@ def test_cmyk_and_ycck_decode_to_luma():
 def test_cmyk_pure_black_channel():
     # page-ink shape: c = m = y = 0, K carries the image — gray must be
     # ~255 - K (through the RGB collapse all three channels equal 255-K)
-    from sparkstract.functions.jpeg import encode_cmyk_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_cmyk_jpeg
 
     rng = np.random.default_rng(17)
     img = (rng.random((32, 48)) < 0.12).astype(np.uint8) * 255
@@ -317,7 +319,7 @@ def test_cmyk_pure_black_channel():
 
 
 def test_progressive_cmyk_named_out_of_scope():
-    from sparkstract.functions.jpeg import encode_cmyk_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_cmyk_jpeg
 
     data = bytearray(encode_cmyk_jpeg(
         np.zeros((8, 8, 4), dtype=np.uint8), transform=0))
@@ -330,7 +332,7 @@ def test_progressive_cmyk_named_out_of_scope():
 def test_app14_transform_byte_parsed():
     # transform 0 vs 2 on the same CMYK input must both reconstruct the
     # same gray (the byte changes interpretation, not content)
-    from sparkstract.functions.jpeg import encode_cmyk_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_cmyk_jpeg
 
     rng = np.random.default_rng(9)
     cmyk = rng.integers(0, 256, (24, 24, 4), dtype=np.uint8)
@@ -345,7 +347,7 @@ def test_cmyk_no_app14_is_direct_ink():
     """4-component JPEG WITHOUT an APP14 marker: non-Adobe convention
     stores ink DIRECT (not inverted) — the decoder must not apply the
     Adobe inversion, or every such file comes out luma-flipped."""
-    from sparkstract.functions.jpeg import encode_cmyk_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_cmyk_jpeg
 
     rgb = np.zeros((40, 56, 3))
     rgb[:, :, 0] = np.linspace(20, 220, 56)[None, :]

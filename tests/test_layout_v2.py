@@ -4,8 +4,8 @@ import numpy as np
 import pytest
 
 from sparkstract.fixtures.gen import page_spec
-from sparkstract.fixtures.render import render_page
-from sparkstract.functions.geometry import estimate_skew, rotate_nn, shear_y
+from sparkstract.fixtures.render import render_page, rotate_nn
+from sparkstract.functions.geometry import estimate_skew_bow, shear_y
 from sparkstract.operators.page import analyse_page
 
 
@@ -38,15 +38,17 @@ def test_estimate_skew_recovers_known_slope():
     theta = 1.3
     xs = np.tile(np.arange(20) * 18.0, 5)
     ys = np.repeat(np.arange(5) * 36.0, 20) - xs * np.tan(np.deg2rad(theta))
-    est = estimate_skew(xs, ys, bin_px=4.0)
+    est, bow = estimate_skew_bow(xs, ys, bin_px=4.0, page_w=xs.max() + 18)
     # the deprojection angle that flattens the rows is -theta
     assert abs(est - (-theta)) < 0.15, est
+    assert abs(bow) < 0.1, bow
 
 
 def test_estimate_skew_straight_page_is_zero():
     xs = np.tile(np.arange(20) * 18.0, 5)
     ys = np.repeat(np.arange(5) * 36.0, 20)
-    assert abs(estimate_skew(xs, ys, bin_px=4.0)) < 0.1
+    est, bow = estimate_skew_bow(xs, ys, bin_px=4.0, page_w=xs.max() + 18)
+    assert abs(est) < 0.1 and abs(bow) < 0.1, (est, bow)
 
 
 def test_shear_preserves_ink_count():

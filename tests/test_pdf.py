@@ -4,11 +4,8 @@ born-digital block layer, and the named out-of-scope seams."""
 import numpy as np
 import pytest
 
-from sparkstract.functions.pdf import (
-    blocks_from_pdf_page,
-    encode_simple_pdf,
-    parse_pdf,
-)
+from sparkstract.fixtures.encoders.pdf import encode_simple_pdf
+from sparkstract.functions.pdf import blocks_from_pdf_page, parse_pdf
 
 
 def _text_page(lines, x=72, y0=700, size=12, leading=16):
@@ -52,7 +49,8 @@ def test_image_xobject_flate_roundtrip():
 
 
 def test_image_xobject_dct_roundtrip():
-    from sparkstract.functions.jpeg import decode_gray_jpeg, encode_gray_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_gray_jpeg
+    from sparkstract.functions.jpeg import decode_gray_jpeg
 
     arr = (np.outer(np.arange(16), np.arange(16)) % 251).astype(np.uint8)
     pdf = encode_simple_pdf([[("jpeg", arr, 0, 0, 95)]])
@@ -405,7 +403,7 @@ def _a85_encode(raw: bytes) -> bytes:
 def test_filter_units_roundtrip():
     from sparkstract.functions.pdf import (_ascii85_decode,
                                            _ascii_hex_decode, _rle_decode)
-    from sparkstract.functions.tiff import _packbits_encode
+    from sparkstract.fixtures.encoders.tiff import _packbits_encode
 
     rng = np.random.default_rng(9)
     for n in (0, 1, 3, 4, 5, 100, 1023):
@@ -895,7 +893,7 @@ def test_pdf_ccitt_k0_unaligned_rows():
     # /K 0 default: 1D rows packed back-to-back, NO EOLs, NO byte
     # alignment (§7.4.6 — EncodedByteAlign false)
     from sparkstract.functions.bits import MsbWriter
-    from sparkstract.functions.ccitt import _changes, _emit_run
+    from sparkstract.fixtures.encoders.ccitt import _changes, _emit_run
 
     img = _ccitt_img()
     bits = (img < 128).astype(np.uint8)
@@ -914,8 +912,9 @@ def test_pdf_ccitt_k0_unaligned_rows():
 
 def test_pdf_ccitt_k0_with_eol_and_k_positive():
     from sparkstract.functions.bits import MsbWriter
-    from sparkstract.functions.ccitt import (
-        _EOL, _changes, _emit, _emit_run, g3_encode)
+    from sparkstract.fixtures.encoders.ccitt import (
+        _EOL, _changes, _emit, _emit_run, g3_encode,
+    )
 
     img = _ccitt_img()
     bits = (img < 128).astype(np.uint8)
@@ -941,7 +940,7 @@ def test_pdf_ccitt_k0_with_eol_and_k_positive():
 
 
 def test_pdf_ccitt_decode_array_inverts():
-    from sparkstract.functions.ccitt import g4_encode
+    from sparkstract.fixtures.encoders.ccitt import g4_encode
 
     img = _ccitt_img()
     raw = g4_encode((img < 128).astype(np.uint8))
@@ -955,7 +954,8 @@ def test_pdf_ccitt_byte_align_g4():
     boundary — the aligned decoder drops the pad bits per row. An
     UNALIGNED decode of the same bytes must fail or mismatch (proving
     the alignment is real, not vacuous)."""
-    from sparkstract.functions.ccitt import g4_decode, g4_encode
+    from sparkstract.fixtures.encoders.ccitt import g4_encode
+    from sparkstract.functions.ccitt import g4_decode
 
     img = _ccitt_img()
     ink = (img < 128).astype(np.uint8)
@@ -972,7 +972,7 @@ def test_pdf_ccitt_byte_align_g4():
 def test_pdf_ccitt_byte_align_k0_mh():
     """/EncodedByteAlign with K=0 selects byte-aligned MH rows (TIFF
     compression-2 layout)."""
-    from sparkstract.functions.ccitt import mh_encode
+    from sparkstract.fixtures.encoders.ccitt import mh_encode
 
     img = _ccitt_img()
     raw = mh_encode((img < 128).astype(np.uint8))

@@ -8,14 +8,14 @@ end-to-end decryption of writer-encrypted documents through parse_pdf.
 import numpy as np
 import pytest
 
-from sparkstract.functions.pdf import encode_simple_pdf, parse_pdf
+from sparkstract.fixtures.encoders.pdf import encode_simple_pdf
+from sparkstract.functions.pdf import parse_pdf
+from sparkstract.fixtures.encoders.pdfcrypt import make_encryption, owner_entry
 from sparkstract.functions.pdfcrypt import (
     PAD,
     check_user_password,
     file_key,
-    make_encryption,
     object_key,
-    owner_entry,
     rc4,
     user_entry,
 )

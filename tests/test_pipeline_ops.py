@@ -497,8 +497,8 @@ def test_html_metadata_fields(spark):
 
 
 def test_media_decode_report(spark, fixture_set):
-    from sparkstract.functions.raster import encode_gray_ico
-    from sparkstract.functions.webp import encode_gray_webp
+    from sparkstract.fixtures.encoders.raster import encode_gray_ico
+    from sparkstract.fixtures.encoders.webp import encode_gray_webp
 
     _, media, _ = fixture_set.to_spark(spark)
     media = media.limit(4)

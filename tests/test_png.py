@@ -87,7 +87,7 @@ def _luma_ref(rgb: np.ndarray) -> np.ndarray:
 
 
 def test_rgb_roundtrip_luma():
-    from sparkstract.functions.png import encode_rgb
+    from sparkstract.fixtures.encoders.png import encode_rgb
 
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, (40, 60, 3), dtype=np.uint8)

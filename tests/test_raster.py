@@ -6,12 +6,11 @@ import numpy as np
 import pytest
 
 from sparkstract.functions.codecs import decode_gray_any, decode_pages
-from sparkstract.functions.raster import (
-    decode_gray_bmp,
-    decode_gray_pnm,
+from sparkstract.fixtures.encoders.raster import (
     encode_gray_bmp,
     encode_gray_pnm,
 )
+from sparkstract.functions.raster import decode_gray_bmp, decode_gray_pnm
 
 
 def _img(seed: int, h: int = 30, w: int = 45) -> np.ndarray:
@@ -305,7 +304,7 @@ def test_pnm_16bit_truncated_raises():
 
 def test_ico_all_entry_shapes_roundtrip():
     from sparkstract.functions.codecs import decode_gray_any
-    from sparkstract.functions.raster import encode_gray_ico
+    from sparkstract.fixtures.encoders.raster import encode_gray_ico
 
     rng = np.random.default_rng(5)
     img = rng.integers(0, 256, (48, 64)).astype(np.uint8)
@@ -316,7 +315,8 @@ def test_ico_all_entry_shapes_roundtrip():
 
 
 def test_ico_and_mask_composites_white():
-    from sparkstract.functions.raster import decode_gray_ico, encode_gray_ico
+    from sparkstract.fixtures.encoders.raster import encode_gray_ico
+    from sparkstract.functions.raster import decode_gray_ico
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 200, (48, 64)).astype(np.uint8)
@@ -331,7 +331,8 @@ def test_ico_and_mask_composites_white():
 def test_ico_alpha_channel_wins_over_mask():
     """A 32-bit entry with live alpha uses it (the empty-AND-mask shape
     modern editors write)."""
-    from sparkstract.functions.raster import decode_gray_ico, encode_gray_ico
+    from sparkstract.fixtures.encoders.raster import encode_gray_ico
+    from sparkstract.functions.raster import decode_gray_ico
 
     img = np.full((8, 8), 0, np.uint8)
     d = bytearray(encode_gray_ico(img, entry="dib32"))
@@ -344,7 +345,8 @@ def test_ico_alpha_channel_wins_over_mask():
 
 
 def test_ico_fuzz_never_hangs():
-    from sparkstract.functions.raster import decode_gray_ico, encode_gray_ico
+    from sparkstract.fixtures.encoders.raster import encode_gray_ico
+    from sparkstract.functions.raster import decode_gray_ico
 
     rng = np.random.default_rng(11)
     base = bytearray(encode_gray_ico(

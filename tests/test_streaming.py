@@ -227,7 +227,8 @@ def test_stream_warc_ingest_matches_batch_reader(spark, tmp_path):
     streaming plumbing (file listing, trigger batching, parquet append).
     Includes a corrupt member so the tolerant path is part of parity."""
     from tests.test_warc import _recs
-    from sparkstract.sources.warc import encode_warc, read_warc
+    from sparkstract.fixtures.encoders.warc import encode_warc
+    from sparkstract.sources.warc import read_warc
     from sparkstract.streaming.stream import stream_warc_ingest
 
     warc_dir = tmp_path / "segments"

@@ -9,7 +9,8 @@ import pytest
 from sparkstract.functions.bits import lzw_decode, lzw_encode
 from sparkstract.functions.codecs import decode_gray_any, decode_pages
 from sparkstract.functions.png import encode_gray
-from sparkstract.functions.tiff import decode_gray_tiff, encode_gray_tiff
+from sparkstract.fixtures.encoders.tiff import encode_gray_tiff
+from sparkstract.functions.tiff import decode_gray_tiff
 
 
 def _img(seed: int, h: int = 40, w: int = 60) -> np.ndarray:
@@ -130,7 +131,8 @@ def test_exif_orientation_unknown_value_passthrough():
 def test_packbits_roundtrip():
     """Compression 32773 (the other common scan compression besides LZW):
     runs, literals, and the 128-byte batch limits all roundtrip."""
-    from sparkstract.functions.tiff import _packbits_decode, _packbits_encode
+    from sparkstract.fixtures.encoders.tiff import _packbits_encode
+    from sparkstract.functions.tiff import _packbits_decode
 
     rng = np.random.default_rng(13)
     cases = [
@@ -429,7 +431,7 @@ def test_tiled_lzw_with_predictor_per_tile():
 
 
 def test_tiled_g4_bilevel():
-    from sparkstract.functions.ccitt import g4_encode
+    from sparkstract.fixtures.encoders.ccitt import g4_encode
 
     rng = np.random.default_rng(24)
     bits = (rng.random((40, 60)) < 0.25).astype(np.uint8)
@@ -699,7 +701,8 @@ def test_old_style_jpeg_interchange_format():
     fragment layout stays a named error."""
     import struct
 
-    from sparkstract.functions.jpeg import decode_gray_jpeg, encode_gray_jpeg
+    from sparkstract.fixtures.encoders.jpeg import encode_gray_jpeg
+    from sparkstract.functions.jpeg import decode_gray_jpeg
 
     img = (np.outer(np.arange(24), np.arange(32)) % 251).astype(np.uint8)
     jstream = encode_gray_jpeg(img, quality=95)

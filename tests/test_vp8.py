@@ -16,18 +16,15 @@ import pytest
 from sparkstract.functions import vp8 as V
 from sparkstract.functions import vp8_tables as T
 from sparkstract.functions.codecs import decode_gray_any
-from sparkstract.functions.vp8 import (
-    _BoolReader,
+from sparkstract.fixtures.encoders.vp8 import (
     _BoolWriter,
-    decode_vp8,
     encode_gray_vp8,
     encode_webp_vp8,
     encode_webp_vp8x,
     fdct4x4,
     fwht4x4,
-    idct4x4,
-    iwht4x4,
 )
+from sparkstract.functions.vp8 import _BoolReader, decode_vp8, idct4x4, iwht4x4
 from sparkstract.functions.webp import SHAPE_COUNTS, decode_webp
 
 
@@ -270,7 +267,9 @@ def test_vp8x_alpha_composites_onto_white():
 
 
 def test_anim_first_frame_is_the_still():
-    from sparkstract.functions.vp8 import encode_webp_anim, encode_webp_vp8
+    from sparkstract.fixtures.encoders.vp8 import (
+        encode_webp_anim, encode_webp_vp8,
+    )
 
     img = _test_img()
     still = decode_gray_any(encode_webp_vp8(img, qi=8))
@@ -280,7 +279,9 @@ def test_anim_first_frame_is_the_still():
 
 
 def test_anim_offset_frame_on_background():
-    from sparkstract.functions.vp8 import encode_webp_anim, encode_webp_vp8
+    from sparkstract.fixtures.encoders.vp8 import (
+        encode_webp_anim, encode_webp_vp8,
+    )
 
     img = _test_img()
     still = decode_gray_any(encode_webp_vp8(img, qi=8))
@@ -294,7 +295,9 @@ def test_anim_offset_frame_on_background():
 
 
 def test_anim_first_frame_alpha_composites_on_background():
-    from sparkstract.functions.vp8 import encode_webp_anim, encode_webp_vp8
+    from sparkstract.fixtures.encoders.vp8 import (
+        encode_webp_anim, encode_webp_vp8,
+    )
 
     img = _test_img()
     still = decode_gray_any(encode_webp_vp8(img, qi=8))
@@ -306,7 +309,7 @@ def test_anim_first_frame_alpha_composites_on_background():
 
 
 def test_anim_frame_outside_canvas_rejected():
-    from sparkstract.functions.vp8 import encode_webp_anim
+    from sparkstract.fixtures.encoders.vp8 import encode_webp_anim
 
     img = _test_img()
     data = encode_webp_anim([img], offsets=[(10, 10)],

@@ -7,12 +7,8 @@ import io
 import numpy as np
 import pytest
 
-from sparkstract.sources.warc import (
-    encode_warc,
-    parse_warc,
-    read_warc,
-    warc_responses,
-)
+from sparkstract.fixtures.encoders.warc import encode_warc
+from sparkstract.sources.warc import parse_warc, read_warc, warc_responses
 
 
 def _recs():

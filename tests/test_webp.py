@@ -11,20 +11,22 @@ import numpy as np
 import pytest
 
 from sparkstract.functions.bits import LsbWriter, canonical_codes
+from sparkstract.fixtures.encoders.webp import (
+    _huffman_lengths,
+    _write_full_code,
+    _write_simple_code,
+    encode_gray_webp,
+)
 from sparkstract.functions.webp import (
     _DIST_MAP,
     _LsbReader,
     _Prefix,
-    _huffman_lengths,
     _inv_color_transform,
     _inv_predictor,
     _lz77_value,
     _read_prefix_code,
-    _write_full_code,
-    _write_simple_code,
     decode_vp8l,
     decode_webp,
-    encode_gray_webp,
 )
 
 # ---------------------------------------------------------------- bit I/O
@@ -558,12 +560,83 @@ def test_fast_loop_bit_exact_with_generic(monkeypatch):
         assert (f == sl).all()
 
 
+def _avg2(a, b):
+    return (a.astype(np.int64) + b.astype(np.int64)) // 2
+
+
+def _inv_predictor_ref(argb: np.ndarray, modes: np.ndarray,
+                       size_bits: int) -> np.ndarray:
+    """Reference semantics of the predictor inverse (per-pixel numpy) —
+    kept as the fuzz ground truth for _inv_predictor."""
+    h, w, _ = argb.shape
+    out = argb.astype(np.int64)
+
+    def px(y, x):
+        return out[y, x]
+
+    for y in range(h):
+        for x in range(w):
+            if x == 0 and y == 0:
+                pred = np.array([255, 0, 0, 0])
+            elif y == 0:
+                pred = px(0, x - 1)
+            elif x == 0:
+                pred = px(y - 1, 0)
+            else:
+                mode = int(modes[y >> size_bits, x >> size_bits])
+                lf = px(y, x - 1)
+                tp = px(y - 1, x)
+                tl = px(y - 1, x - 1)
+                # linear addressing (libwebp: TR = data[i - width + 1]):
+                # at the last column TR wraps to the CURRENT row's first,
+                # already-reconstructed pixel
+                tr = px(y - 1, x + 1) if x + 1 < w else px(y, 0)
+                if mode == 0:
+                    pred = np.array([255, 0, 0, 0])
+                elif mode == 1:
+                    pred = lf
+                elif mode == 2:
+                    pred = tp
+                elif mode == 3:
+                    pred = tr
+                elif mode == 4:
+                    pred = tl
+                elif mode == 5:
+                    pred = _avg2(_avg2(lf, tr), tp)
+                elif mode == 6:
+                    pred = _avg2(lf, tl)
+                elif mode == 7:
+                    pred = _avg2(lf, tp)
+                elif mode == 8:
+                    pred = _avg2(tl, tp)
+                elif mode == 9:
+                    pred = _avg2(tp, tr)
+                elif mode == 10:
+                    pred = _avg2(_avg2(lf, tl), _avg2(tp, tr))
+                elif mode == 11:
+                    p = lf + tp - tl
+                    # strict <: on a tie libwebp's Select returns TOP
+                    if np.abs(p - lf).sum() < np.abs(p - tp).sum():
+                        pred = lf
+                    else:
+                        pred = tp
+                elif mode == 12:
+                    pred = np.clip(lf + tp - tl, 0, 255)
+                else:  # 13 ClampAddSubtractHalf
+                    avg = _avg2(lf, tp)
+                    diff = avg - tl
+                    # C-style (a - b) / 2: truncation toward zero, so a
+                    # negative odd diff halves to the SMALLER magnitude
+                    half = np.sign(diff) * (np.abs(diff) // 2)
+                    pred = np.clip(avg + half, 0, 255)
+            out[y, x] = (out[y, x] + pred) & 0xFF
+    return out.astype(np.uint8)
+
+
 def test_inv_predictor_fast_equals_reference():
     """The scalar-int predictor inverse must equal the per-pixel numpy
     reference on random residuals and ALL-mode grids (the decoder's
     crawl-media hot path vs the semantic ground truth)."""
-    from sparkstract.functions.webp import _inv_predictor_ref
-
     rng = np.random.default_rng(55)
     for trial in range(25):
         h, w = int(rng.integers(1, 33)), int(rng.integers(1, 33))
@@ -624,13 +697,14 @@ def test_shape_counter_tracks_decode_path():
 def test_alpha_filter_roundtrip_all_methods():
     """Forward filter then scan-order inverse is the identity — every
     container-spec method, degenerate shapes included."""
+    from sparkstract.fixtures.encoders.webp import _fwd_alpha_filter
     from sparkstract.functions import webp as W
 
     rng = np.random.default_rng(11)
     for method in range(4):
         for shape in [(1, 1), (1, 9), (9, 1), (23, 17), (64, 48)]:
             plane = rng.integers(0, 256, shape).astype(np.uint8)
-            delta = W._fwd_alpha_filter(plane, method)
+            delta = _fwd_alpha_filter(plane, method)
             assert (W._inv_alpha_filter(delta.copy(), method)
                     == plane).all(), (method, shape)
 
@@ -664,6 +738,7 @@ def test_alpha_gradient_inverse_pinned_against_naive():
 
 
 def test_alpha_body_roundtrip_compressed_and_raw():
+    from sparkstract.fixtures.encoders.webp import encode_alpha_body
     from sparkstract.functions import webp as W
 
     alpha = np.full((40, 56), 255, np.uint8)
@@ -671,8 +746,8 @@ def test_alpha_body_roundtrip_compressed_and_raw():
     alpha[10:14, 20:30] = 128
     for method in range(4):
         for compressed in (False, True):
-            body = W.encode_alpha_body(alpha, compressed=compressed,
-                                       filt=method)
+            body = encode_alpha_body(alpha, compressed=compressed,
+                                     filt=method)
             got = W._decode_alpha(body, 56, 40)
             assert (got == alpha).all(), (method, compressed)
 
@@ -682,7 +757,7 @@ def test_alpha_substream_does_not_pollute_shape_telemetry():
     image's decode shape may reach SHAPE_COUNTS — the report key for a
     lossy-with-alpha file stays 'vp8-lossy'."""
     from sparkstract.functions import webp as W
-    from sparkstract.functions.vp8 import encode_webp_vp8x
+    from sparkstract.fixtures.encoders.vp8 import encode_webp_vp8x
 
     img = np.tile(np.arange(64, dtype=np.uint8), (16, 1))
     alpha = np.full(img.shape, 255, np.uint8)
