@@ -6,7 +6,9 @@ constant-bounded, but a noisy corpus pays an AVERAGE multiplier that
 should be a measured number, not a hope (VERDICT r3 item 7). This renders
 every fixture family (plus deliberately-hostile noisy/rotated mixes),
 runs analyse_page single-process, and reports passes/page per family —
-recorded in BENCH/BASELINE.md.
+recorded in BENCH/BASELINE.md. Passes are counted by wrapping
+page._analyse_ink: analyse_page resolves that name at call time, so the
+wrapper sees every pass.
 
 Usage: python scripts/bench_retry_multiplier.py
 """
@@ -35,14 +37,27 @@ _SKIP = {
 }
 
 
+_PASSES = 0
+_analyse_ink = page_mod._analyse_ink
+
+
+def _counted_analyse_ink(*args, **kwargs):
+    global _PASSES
+    _PASSES += 1
+    return _analyse_ink(*args, **kwargs)
+
+
+page_mod._analyse_ink = _counted_analyse_ink
+
+
 def measure(family: str, reps: int = 4) -> float:
     rng = np.random.default_rng(1234)
     total = 0
     for _ in range(reps):
         img, _ = render_page(page_spec(family, rng))
-        before = page_mod.INK_PASSES
+        before = _PASSES
         analyse_page(img)
-        total += page_mod.INK_PASSES - before
+        total += _PASSES - before
     return total / reps
 
 
@@ -60,9 +75,9 @@ def main() -> None:
     total = 0
     for fam in hostile_fams:
         img, _ = render_page(page_spec(fam, rng))
-        before = page_mod.INK_PASSES
+        before = _PASSES
         analyse_page(np.ascontiguousarray(np.rot90(img, 3)))
-        total += page_mod.INK_PASSES - before
+        total += _PASSES - before
     per_family["rotated90_mix"] = total / len(hostile_fams)
 
     vals = sorted(per_family.items(), key=lambda kv: -kv[1])

@@ -3,6 +3,8 @@ entry on Spark AND its oracle_sql() on DuckDB at sf0.01, compare row count,
 column names, and order-insensitive values (columns sorted by name).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+Named queries are read from the driver registry, so only their oracles are
+built; with no names every query runs, in queries() order.
 """
 
 from __future__ import annotations
@@ -85,7 +87,20 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
+    from driver import REGISTRY
     from sparkstract.session import get_spark
+
+    unknown = sorted(only - set(REGISTRY))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+    if only:
+        names = [n for n in entry_mod.RUN_ORDER if n in only]
+        qs = {n: REGISTRY[n].build for n in names}
+        oracles = {n: REGISTRY[n].oracle() for n in names}
+    else:
+        qs = entry_mod.queries()
+        oracles = entry_mod.oracle_sql()
 
     spark = get_spark("local[8]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -96,20 +111,13 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             got = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
-            continue
-        if name not in oracles:
-            print(f"SKIP  {name}: rows-only ({len(got)} rows)")
             continue
         try:
             want = con.execute(oracles[name]).df()

@@ -11,7 +11,7 @@ signal pair, computed per BLOCK-level line:
 
 Everything is pyspark.sql column expressions (split / transform / filter /
 aggregate higher-order functions + regexp) — JVM-side, no Python in the hot
-path — with a DuckDB twin in `__spark_entry__.oracle_sql` built from the
+path — with a DuckDB twin in `driver/text.py` built from the
 SAME pattern constants. Patterns avoid backreferences (RE2 has none) and
 stick to (?is)-style inline flags both engines accept.
 """

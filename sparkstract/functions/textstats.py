@@ -2,8 +2,9 @@
 
 All pure `pyspark.sql.functions` column expressions — JVM-side, whole-stage
 codegen, zero Python in the hot path. Each has an exact DuckDB-SQL twin in
-`__spark_entry__.oracle_sql` (portability rule: only md5, regexp, and basic
-string/number functions, identical semantics in both engines).
+the driver registry (`driver/text.py`, `driver/curation.py`; portability
+rule: only md5, regexp, and basic string/number functions, identical
+semantics in both engines).
 """
 
 from __future__ import annotations

@@ -1121,14 +1121,6 @@ def _split_shiro_rekha(ink: np.ndarray, tl: np.ndarray, tt: np.ndarray,
             np.concatenate([tr[keep], ar]), np.concatenate([tb[keep], ab]))
 
 
-# diagnostic counter: total _analyse_ink invocations in this process.
-# The OSD/retry ladder in analyse_page is quality-gated and constant-
-# bounded (≤ ~10 passes on a hostile page), but its AVERAGE multiplier on
-# a real corpus is a cost knob — scripts/bench_retry_multiplier.py reads
-# this to record passes/page per fixture family in BENCH/BASELINE.md.
-INK_PASSES = 0
-
-
 def _analyse_ink(ink: np.ndarray, skew_bin_div: float = 4.0,
                  rtl: bool = False, psm: str = "auto",
                  rec=None,
@@ -1144,8 +1136,6 @@ def _analyse_ink(ink: np.ndarray, skew_bin_div: float = 4.0,
     column/table finding but keeps block/heading structure; 'single_block'
     also skips block splitting (one uniform text block); 'single_line'
     additionally skips row clustering (all glyphs one row)."""
-    global INK_PASSES
-    INK_PASSES += 1
     blobs: Blobs = label_blobs(ink)
     if len(blobs) == 0:
         return [], 0.0

@@ -47,7 +47,7 @@ _U32_MOD = 1 << 32
 
 def _u32(key: Column) -> Column:
     """Uniform uint32 from a string key: first 8 hex chars of md5.
-    DuckDB twin: the _DD_HEX2LONG construction in __spark_entry__.py."""
+    DuckDB twin: DD_HEX2LONG in driver/common.py."""
     return hex_prefix_to_long(F.md5(key), 8)
 
 
