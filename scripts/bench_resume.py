@@ -18,7 +18,9 @@ its steps, which make the same calls with the same arguments as
 Every repetition's output is checked with the workload's own `check`; a
 wrong output fails the script. The table gives each step's median over the
 repetitions and its time on the first one, the cold run the benchmark
-times.
+times, and next to them the Spark jobs, stages and tasks the step ran on
+that first repetition (each step runs under its own job group, counted
+from the status tracker; skipped stages are not counted).
 
 Usage: python scripts/bench_resume.py [--seed 7] [--reps 4] [--json out.json]
 """
@@ -42,33 +44,57 @@ STEPS = ("run_job", "render_text", "minhash_pairs", "curate_corpus",
          "verdict_write")
 
 
-def _run(spark, wl, path: str, out: str) -> dict[str, float]:
-    """One job, step by step; returns each step's seconds."""
+def _work(sc, group: str) -> dict[str, int]:
+    """Jobs, stages run and tasks run under one job group."""
+    st = sc.statusTracker()
+    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+    stages = [st.getStageInfo(s) for j in jobs if j for s in j.stageIds]
+    ran = [s for s in stages if s and s.numCompletedTasks]
+    return {"jobs": len(jobs), "stages": len(ran),
+            "tasks": sum(s.numCompletedTasks for s in ran)}
+
+
+def _run(spark, wl, path: str, out: str, rep: int) -> tuple[dict, dict]:
+    """One job, step by step; returns each step's seconds and its Spark
+    work (jobs, stages, tasks)."""
     from sparkstract.operators.curate import curate_corpus
     from sparkstract.operators.dedup import minhash_lsh_pairs
     from sparkstract.plans.checkpoint import run_job
     from sparkstract.sinks import render_text
 
+    sc = spark.sparkContext
+    steps = iter(STEPS)
+
+    def step():
+        """Stamp the time and open the next step's job group."""
+        t.append(time.perf_counter())
+        name = next(steps, None)
+        if name:
+            sc.setJobGroup(f"rep{rep}-{name}", name)
+
     docs, media = wl._frames(spark, path)
-    t = [time.perf_counter()]
+    t: list[float] = []
+    step()
     committed = run_job(spark, docs, media, out)
-    t.append(time.perf_counter())
+    step()
     corpus = render_text(committed).persist()
     corpus.count()
-    t.append(time.perf_counter())
+    step()
     pairs = minhash_lsh_pairs(corpus, num_hashes=8, bands=4).persist()
     try:
         pairs.count()
-        t.append(time.perf_counter())
+        step()
         verdict = curate_corpus(corpus, pairs, min_tokens=20, langs=("en",),
                                 min_quality=0.1)
-        t.append(time.perf_counter())
+        step()
         verdict.write.parquet(os.path.join(out, "verdicts"))
-        t.append(time.perf_counter())
+        step()
     finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
         pairs.unpersist()
         corpus.unpersist()
-    return {s: b - a for s, a, b in zip(STEPS, t, t[1:])}
+    return ({s: b - a for s, a, b in zip(STEPS, t, t[1:])},
+            {s: _work(sc, f"rep{rep}-{s}") for s in STEPS})
 
 
 def main() -> int:
@@ -91,10 +117,12 @@ def main() -> int:
         spark.sparkContext.setLogLevel("ERROR")
         cores = spark.sparkContext.defaultParallelism
         wl.warmup(spark, path, os.path.join(run_dir, "warmup"))
-        reps = []
+        reps, work = [], None
         for i in range(args.reps):
             out = os.path.join(run_dir, f"out{i}")
-            reps.append(_run(spark, wl, path, out))
+            secs, w = _run(spark, wl, path, out, i)
+            reps.append(secs)
+            work = work or w
             matched, total = wl.check(path, out)
             if matched != total:
                 print(f"rep {i}: {total - matched} of {total} docs wrong",
@@ -107,15 +135,15 @@ def main() -> int:
         shutil.rmtree(run_dir, ignore_errors=True)
 
     table = {s: {"median_s": statistics.median(r[s] for r in reps),
-                 "first_s": reps[0][s]} for s in STEPS}
-    print(f"{'step':<16} {'median s':>9} {'first s':>9}   "
-          f"(seed {args.seed}, {args.reps} reps, "
-          f"{cores} cores)")
-    for s, t in table.items():
-        print(f"{s:<16} {t['median_s']:>9.2f} {t['first_s']:>9.2f}")
-    total = {k: sum(t[k] for t in table.values()) for k in ("median_s",
-                                                           "first_s")}
-    print(f"{'total':<16} {total['median_s']:>9.2f} {total['first_s']:>9.2f}")
+                 "first_s": reps[0][s], **work[s]} for s in STEPS}
+    print(f"{'step':<16} {'median s':>9} {'first s':>9} {'jobs':>5} "
+          f"{'stages':>6} {'tasks':>6}   (seed {args.seed}, {args.reps} "
+          f"reps, {cores} cores; work of the first rep)")
+    cols = ("median_s", "first_s", "jobs", "stages", "tasks")
+    for s, t in {**table, "total": {k: sum(t[k] for t in table.values())
+                                    for k in cols}}.items():
+        print(f"{s:<16} {t['median_s']:>9.2f} {t['first_s']:>9.2f} "
+              f"{t['jobs']:>5} {t['stages']:>6} {t['tasks']:>6}")
     if args.json:
         with open(args.json, "w") as f:
             json.dump({"seed": args.seed, "reps": args.reps, "steps": table},

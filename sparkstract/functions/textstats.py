@@ -37,6 +37,24 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
+def word_grams(toks: Column, n: int) -> Column:
+    """Space-joined word n-grams of a token array, in start order; empty
+    when it holds fewer than n tokens (or is NULL). `toks` must be a
+    projected column, not the `tokens(...)` expression itself: Catalyst
+    never lifts an expression out of a higher-order-function lambda, so an
+    inline tokenizer would re-run at every n-gram position. Explode the
+    result inline too: a generator over a projected gram column gets an
+    inferred `size(...) > 0` filter that is pushed below the projection,
+    which rebuilds the grams from the text."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 # BPE-ish pre-tokenizer pattern (the GPT-2 pre-split shape, ASCII-restricted
 # so Java regex and DuckDB/RE2 agree byte-for-byte): letter runs, digit runs,
 # and single punctuation marks each count as one token — the standard
@@ -61,13 +79,11 @@ def punct_ratio(col: Column) -> Column:
 def stopword_ratio(col: Column) -> Column:
     """Fraction of tokens that are English stopwords."""
     toks = tokens(F.lower(col))
-    hits = F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in STOPWORDS_EN])))
     # count occurrences, not distinct: filter the token array
     hit_count = F.size(
         F.filter(toks, lambda t: t.isin(STOPWORDS_EN))
     )
     n = F.size(toks)
-    _ = hits  # distinct-hit variant kept for reference
     return F.when(n > 0, hit_count / n).otherwise(F.lit(0.0))
 
 
@@ -94,8 +110,11 @@ def bigram_coherence(col: Column) -> Column:
     count membership. Short texts (< 2 letters) score 0."""
     letters = F.regexp_replace(F.lower(col), "[^a-z]", "")
     n = F.length(letters)
-    grams = F.transform(F.sequence(F.lit(1), n - 1),
-                        lambda i: F.substr(letters, i, F.lit(2)))
+    # each letter paired with the next: both slices are lambda ARGUMENTS,
+    # evaluated once per row (a lambda body re-runs per position)
+    chars = F.split(letters, "")
+    grams = F.zip_with(F.slice(chars, 1, n - 1), F.slice(chars, 2, n - 1),
+                       lambda a, b: F.concat(a, b))
     hits = F.size(F.filter(
         grams, lambda g: g.isin(*COMMON_BIGRAMS)))
     return F.when(n >= 2, F.round(hits / (n - 1), 6)).otherwise(F.lit(0.0))
@@ -112,15 +131,26 @@ def quality_score(col: Column) -> Column:
 
 def lang_id(col: Column) -> Column:
     """Argmax of per-language marker-token hit counts; deterministic
-    tie-break by language code order; 'und' when no marker hits."""
-    toks = tokens(F.lower(col))
-    expr = F.lit("und")
-    best = F.lit(0)
-    for code in sorted(LANG_MARKERS):
-        hits = F.size(F.filter(toks, lambda t: t.isin(LANG_MARKERS[code])))
-        expr = F.when(hits > best, F.lit(code)).otherwise(expr)
-        best = F.when(hits > best, hits).otherwise(best)
-    return expr
+    tie-break by language code order; 'und' when no marker hits or the
+    text is NULL. One fold over one token array counts every language."""
+    codes = sorted(LANG_MARKERS)
+
+    def count(acc, t):
+        return F.struct(*[
+            (acc[c] + F.when(t.isin(LANG_MARKERS[c]), 1).otherwise(0)).alias(c)
+            for c in codes])
+
+    def argmax(acc):
+        # max of (hits, -code index): most hits, then the first code
+        best = F.array_max(F.array(*[
+            F.struct(acc[c].alias("hits"), F.lit(-i).alias("i"))
+            for i, c in enumerate(codes)]))
+        return F.when(best["hits"] > 0, F.element_at(
+            F.array(*map(F.lit, codes)), 1 - best["i"]))
+
+    zero = F.struct(*[F.lit(0).alias(c) for c in codes])
+    return F.coalesce(F.aggregate(tokens(F.lower(col)), zero, count, argmax),
+                      F.lit("und"))
 
 
 def fingerprint(col: Column) -> Column:

@@ -6,10 +6,13 @@ md5 so every step has a bit-identical DuckDB oracle.
 
 Scale notes (100 TB):
   * exact: one shuffle on the fingerprint — map-side partial agg applies.
-  * minhash-lsh: shuffles on (ngram) then (band_key); band buckets bound the
-    candidate join fan-out, so no O(n^2) pair blow-up. Hot shingles are the
-    skew risk → the ngram explode carries doc-salt in the groupBy key space
-    already (doc_id, ngram distinct), and AQE skew-join covers the bucket join.
+  * minhash-lsh: shuffles on (doc_id) for the signature min, then on
+    (band, key); band buckets bound the pair fan-out, so no O(n^2) pair
+    blow-up. ONE signature pass: the bucket cap is a count(1) window over
+    (band, key) ahead of collect_list, on the same exchange, not a
+    semi-join whose build side re-runs shingle→md5→min. The window buffer
+    spills; the collect buffer sees only capped buckets. Each doc is
+    tokenized once (`word_grams` over a projected token column).
   * simhash: per-doc bit aggregation, one shuffle; near-dup candidates by
     banding the 32-bit signature into 4 bytes (Hamming <= r guarantee).
   * ngram-jaccard: exact verifier for candidate pairs (the expensive path —
@@ -18,7 +21,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textstats import (
@@ -26,6 +29,7 @@ from ..functions.textstats import (
     hex_prefix_to_long,
     hex_slice_to_long,
     tokens,
+    word_grams,
 )
 
 _HASH_MOD = 1 << 32
@@ -58,6 +62,13 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+def doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, toks): each doc's lowercase tokens, projected once for the
+    shingle builders (see `word_grams`)."""
+    return spread(docs).select(F.col(id_col).alias("doc_id"),
+                               tokens(F.lower(F.col(text_col))).alias("toks"))
+
+
 def word_ngrams(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per doc: (doc_id, ngram).
@@ -66,35 +77,17 @@ def word_ngrams(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
     each doc arrives as ONE input row — so `array_distinct` before the
     explode dedups row-locally and the corpus-wide `.distinct()` shuffle
     a (doc_id, ngram) Exchange would cost is never paid."""
-    toks = tokens(F.lower(F.col(text_col)))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return spread(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(grams)).alias("ngram"),
-    )
+    return doc_tokens(docs, id_col, text_col).select(
+        "doc_id", F.explode(F.array_distinct(word_grams(F.col("toks"), n)))
+        .alias("ngram"))
 
 
 def word_ngrams_with_dups(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
     """Like word_ngrams but WITHOUT the distinct: min-aggregations are
     idempotent over duplicates, so minhash skips that whole shuffle."""
-    toks = tokens(F.lower(F.col(text_col)))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return spread(docs).select(
-        F.col(id_col).alias("doc_id"), F.explode(grams).alias("ngram")
-    )
+    return doc_tokens(docs, id_col, text_col).select(
+        "doc_id", F.explode(word_grams(F.col("toks"), n)).alias("ngram"))
 
 
 def minhash_signatures(docs: DataFrame, num_hashes: int = 16, n: int = 3) -> DataFrame:
@@ -135,6 +128,24 @@ def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
              F.col("bk.key").alias("key"))
 
 
+def _capped_buckets(banded: DataFrame, item, max_bucket: int) -> DataFrame:
+    """(band, key, ids): the sorted `item`s of every (band, key) bucket of
+    2..max_bucket rows. The cap is COUNT-FIRST: a count window over
+    (band, key) filters the rows before `collect_list` sees them, so a
+    degenerate bucket's full array never sits in one aggregation buffer
+    (executor OOM at exactly the corpus the cap exists for), and the
+    window's row buffer spills. Window and collect share one exchange, and
+    the banded frame is computed once (a semi-join of a count aggregate
+    back onto it would run its whole signature pipeline twice)."""
+    n = F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
+    return (
+        banded.withColumn("_n", n)
+        .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket))
+        .groupBy("band", "key")
+        .agg(F.array_sort(F.collect_list(item)).alias("ids"))
+    )
+
+
 def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
                       n: int = 3, max_bucket: int = 64) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any LSH band (rows = hashes per
@@ -153,27 +164,12 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
     dropped, not truncated — use `lsh_bucket_stats` to audit what was
     dropped before trusting a run on a new corpus.
 
-    Buffer discipline: the cap is applied COUNT-FIRST — aggregate a plain
-    count per (band, key), filter by the cap, semi-join the survivors back,
-    and only then collect the bucket arrays. Filtering on size(collect_list)
-    would materialize a degenerate bucket's full array in one aggregation
-    buffer before dropping it (executor OOM at exactly the corpus the cap
-    exists for); count-first costs one extra small shuffle and bounds every
-    buffer by max_bucket.
+    Buffer discipline: the cap is applied COUNT-FIRST (`_capped_buckets`),
+    so no aggregation buffer ever holds an oversized bucket's array.
     """
     sig = minhash_signatures(docs, num_hashes=num_hashes, n=n)
-    banded = _band_keys(sig, num_hashes, bands)
-    ok = (
-        banded.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-        .select("band", "key")
-    )
-    buckets = (
-        banded.join(ok, ["band", "key"], "left_semi")
-        .groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-    )
+    buckets = _capped_buckets(_band_keys(sig, num_hashes, bands),
+                              F.col("doc_id"), max_bucket)
     # all ordered pairs within a bucket via a row-local cartesian (two
     # Generate nodes — stays in whole-stage codegen, unlike nested
     # higher-order slice/transform expressions)
@@ -182,9 +178,10 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
         .select("band", "doc_a", F.explode("ids").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
     )
+    # a doc has one key per band, so a pair meets at most once per band
     return (
         pairs.groupBy("doc_a", "doc_b")
-        .agg(F.countDistinct("band").alias("n_bands"))
+        .agg(F.count(F.lit(1)).alias("n_bands"))
     )
 
 
@@ -195,20 +192,9 @@ def lsh_bucket_stats(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
     was dropped" side channel. A non-empty result means exact dedup was not
     run first (those docs are byte-identical clusters) or the corpus has a
     degenerate shingle distribution worth inspecting."""
-    rows = num_hashes // bands
     sig = minhash_signatures(docs, num_hashes=num_hashes, n=n)
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"mh{b * rows + r}").cast("string") for r in range(rows)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.md5(F.concat_ws("|", *cols)).alias("key"))
-        )
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select(F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     return (
-        banded.groupBy("band", "key")
+        _band_keys(sig, num_hashes, bands).groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .filter(F.col("bucket_size") > max_bucket)
     )
@@ -280,20 +266,8 @@ def simhash_near_dup_pairs(docs: DataFrame, bits: int = 32, bands: int = 4,
         "doc_id", "simhash", F.explode(F.array(*band_cols)).alias("bk")
     ).select("doc_id", "simhash",
              F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # count-first cap (see minhash_lsh_pairs): never materialize an
-    # oversized bucket's struct array in an aggregation buffer
-    ok = (
-        banded.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-        .select("band", "key")
-    )
-    buckets = (
-        banded.join(ok, ["band", "key"], "left_semi")
-        .groupBy("band", "key")
-        .agg(F.array_sort(
-            F.collect_list(F.struct("doc_id", "simhash"))).alias("ids"))
-    )
+    buckets = _capped_buckets(banded, F.struct("doc_id", "simhash"),
+                              max_bucket)
     pairs = (
         buckets.select("band", F.explode("ids").alias("a"), "ids")
         .select("band", "a", F.explode("ids").alias("b"))
@@ -319,23 +293,13 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, window: int = 4,
     Returns distinct (doc_id, fp). One posexplode + one doc-partitioned
     window pass: at 100 TB the only shuffle is on doc_id and the window is
     partition-local."""
-    from pyspark.sql import Window as W
-
-    toks = tokens(F.lower(F.col(text_col)))
-    grams = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     pos = (
-        spread(docs)
-        .select(F.col(id_col).alias("doc_id"),
-                F.posexplode(grams).alias("i", "ngram"))
+        doc_tokens(docs, id_col, text_col)
+        .select("doc_id",
+                F.posexplode(word_grams(F.col("toks"), k)).alias("i", "ngram"))
         .select("doc_id", "i", hex_prefix_to_long(F.md5("ngram"), 8).alias("h"))
     )
-    w = W.partitionBy("doc_id").orderBy("i").rowsBetween(0, window - 1)
+    w = Window.partitionBy("doc_id").orderBy("i").rowsBetween(0, window - 1)
     return (
         pos.select("doc_id",
                    F.min("h").over(w).alias("fp"),

@@ -19,18 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textstats import tokens
+from ..functions.textstats import tokens, word_grams
 
 
 def _bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    toks = tokens(F.lower(F.col(text_col)))
-    pairs = F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       F.explode(pairs).alias("bigram"))
+    return docs.select(
+        F.col(id_col).alias("doc_id"),
+        tokens(F.lower(F.col(text_col))).alias("toks"),
+    ).select("doc_id", F.explode(word_grams(F.col("toks"), 2)).alias("bigram"))
 
 
 def lm_doc_nll(docs: DataFrame, k: float = 0.1,

@@ -15,10 +15,10 @@ per-doc rollup row. Each stat has a bit-identical DuckDB twin.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.textstats import tokens
+from ..functions.textstats import tokens, word_grams
 from .dedup import spread
 
 
@@ -50,19 +50,12 @@ def repetition_stats(docs: DataFrame, n: int = 2, id_col: str = "doc_id",
                 .alias("dup_line_frac"))
     )
 
-    toks = tokens(F.lower(F.col("text")))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     chars = base.select(
         "doc_id",
         F.length(F.regexp_replace(F.lower("text"), "\\s", "")).alias("n_chars"))
     gram_counts = (
-        base.select("doc_id", F.explode(grams).alias("gram"))
+        base.select("doc_id", tokens(F.lower("text")).alias("toks"))
+        .select("doc_id", F.explode(word_grams(F.col("toks"), n)).alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -114,18 +107,6 @@ GOPHER_THRESHOLDS: tuple = (
     ("dup_9gram_char_frac", 0.11),
     ("dup_10gram_char_frac", 0.10),
 )
-
-
-def _grams(toks_low: Column, n: int) -> Column:
-    """Array of space-joined word n-grams aligned with start position
-    (empty when the doc has < n tokens)."""
-    return F.when(
-        F.size(toks_low) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks_low) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks_low, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def _dup_unit_stats(base: DataFrame, split_pattern: str,
@@ -193,18 +174,19 @@ def gopher_stats(docs: DataFrame, id_col: str = "doc_id",
     line_stats = _dup_unit_stats(base, "\n", "dup_line")
     para_stats = _dup_unit_stats(base, "\\n\\s*\\n", "dup_para")
 
-    toks_low = tokens(F.lower(F.col("text")))
+    # each doc's lowercase tokens, projected once (see `word_grams`)
+    toks = base.select("doc_id", tokens(F.lower("text")).alias("toks"))
     # total token chars — the one denominator every n-gram stat shares
-    tchars = base.select(
+    tchars = toks.select(
         "doc_id",
-        F.aggregate(tokens(F.lower(F.col("text"))), F.lit(0).cast("long"),
+        F.aggregate("toks", F.lit(0).cast("long"),
                     lambda acc, t: acc + F.length(t)).alias("tot"))
 
     # --- top n-gram char fraction, n = 2..4 (one union, one exchange) ---
     top_rows = None
     for n in (2, 3, 4):
-        r = base.select("doc_id", F.lit(n).alias("n"),
-                        F.explode(_grams(toks_low, n)).alias("gram"))
+        r = toks.select("doc_id", F.lit(n).alias("n"),
+                        F.explode(word_grams(F.col("toks"), n)).alias("gram"))
         top_rows = r if top_rows is None else top_rows.unionByName(r)
     top = (
         top_rows.groupBy("doc_id", "n", "gram")
@@ -222,9 +204,9 @@ def gopher_stats(docs: DataFrame, id_col: str = "doc_id",
     ns = (5, 6, 7, 8, 9, 10)
     gram_rows = None
     for n in ns:
-        r = base.select(
+        r = toks.select(
             "doc_id", F.lit(n).alias("n"),
-            F.posexplode(_grams(toks_low, n)).alias("pos", "gram"))
+            F.posexplode(word_grams(F.col("toks"), n)).alias("pos", "gram"))
         gram_rows = r if gram_rows is None else gram_rows.unionByName(r)
     gram_rows = gram_rows.select(
         "doc_id", "n", "pos", F.md5("gram").alias("g"))
@@ -237,8 +219,9 @@ def gopher_stats(docs: DataFrame, id_col: str = "doc_id",
                    .alias(f"hit{n}") for n in ns])
             .select("doc_id", "pos", F.lit(0).alias("len"),
                     *[f"hit{n}" for n in ns]))
+    # posexplode the tokenizer itself, not "toks" by name (see word_grams)
     tok_rows = base.select(
-        "doc_id", F.posexplode(toks_low).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens(F.lower("text"))).alias("pos", "tok")
     ).select("doc_id", "pos", F.length("tok").alias("len"),
              *[F.lit(0).alias(f"hit{n}") for n in ns])
     merged = tok_rows.unionByName(hits)

@@ -42,19 +42,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.textstats import tokens
-from .dedup import spread
+from ..functions.textstats import tokens, word_grams
+from .dedup import doc_tokens, spread
 
 
-def _gram_hashes(toks_low: Column, k: int) -> Column:
-    """Array of md5(k-gram) aligned with start position (empty if < k)."""
-    return F.when(
-        F.size(toks_low) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks_low) - k),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks_low, i + 1, k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def _gram_hashes(k: int) -> Column:
+    """md5 of every k-gram of a `doc_tokens` row, aligned with start
+    position (empty if < k tokens)."""
+    return F.transform(word_grams(F.col("toks"), k), F.md5)
 
 
 def repeated_gram_hashes(docs: DataFrame, k: int = 50, min_docs: int = 2,
@@ -64,11 +59,8 @@ def repeated_gram_hashes(docs: DataFrame, k: int = 50, min_docs: int = 2,
     distinct documents. Count-first: the aggregation sees one row per
     (doc, distinct gram) built row-locally, so count(*) = distinct-doc
     count and no doc-id list is ever buffered."""
-    toks_low = tokens(F.lower(F.col(text_col)))
-    per_doc_distinct = spread(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(_gram_hashes(toks_low, k))).alias("h"),
-    )
+    per_doc_distinct = doc_tokens(docs, id_col, text_col).select(
+        "doc_id", F.explode(F.array_distinct(_gram_hashes(k))).alias("h"))
     return (per_doc_distinct.groupBy("h")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .filter(F.col("n_docs") >= min_docs)
@@ -92,11 +84,8 @@ def strip_repeated_substrings(docs: DataFrame, k: int = 50,
                                id_col=id_col, text_col=text_col)
     # hit starts: gram rows are (doc_id, pos, hash) — token text never
     # rides the skewed gram-key shuffle; AQE broadcasts dup when small
-    gram_rows = spread(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(_gram_hashes(tokens(F.lower(F.col(text_col))), k))
-         .alias("pos", "h"),
-    )
+    gram_rows = doc_tokens(docs, id_col, text_col).select(
+        "doc_id", F.posexplode(_gram_hashes(k)).alias("pos", "h"))
     hits = (gram_rows.join(dup, "h", "left_semi")
             .select("doc_id", "pos",
                     F.lit(None).cast("string").alias("tok"),

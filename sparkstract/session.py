@@ -15,6 +15,13 @@ def get_spark(master: str | None = None, app: str = "sparkstract",
         .appName(app)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE right-size the last shuffle of a persisted plan too, as it
+        # does every other shuffle: a cached few-row groupBy otherwise keeps
+        # all spark.sql.shuffle.partitions partitions, and every later stage
+        # over it (and every write of it) pays one task or file per empty
+        # slice. Explicit-count repartitions (the kernel's salt) keep theirs
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch sizing bounds the bytes a mapInPandas worker holds:
         # batch bytes ~= records x media row size (maxBytesPerBatch is NOT
